@@ -5,10 +5,8 @@
 ``nyc_taxi_dataset_analysis_apache_hive_spark.registry`` (one entry per
 SURVEY.md §2 operator plus the training-data-pipeline extensions).
 
-The same surface is also available in declarative SQL-text mode
-(``registry_sql.run_sql`` over the temp-view catalog; the reference's own
-HiveQL workload in ``taxi_sql``) -- equality-gated against these
-DataFrame programs in tests/test_sql_mode.py and
+The reference's own HiveQL workload also runs as Spark SQL text in
+``taxi_sql``, equality-gated against the DataFrame operators in
 tests/test_taxi_sql_mode.py.
 """
 

@@ -80,7 +80,7 @@ def z_expr(n: str = "n", sum_n: str = "sum_n", sum_sq: str = "sum_sq",
 
 
 #: the overflow-safe square for the window sum -- ONE spelling for the
-#: DataFrame scorers and both SQL surfaces
+#: DataFrame scorers and the e1 DuckDB oracle
 SUM_SQ_EXPR = "CAST(n AS DECIMAL(38,0)) * n"
 
 
@@ -340,13 +340,12 @@ def robust_zscores(daily: DataFrame, densify: bool = True) -> DataFrame:
 #: days since the (Thursday) Unix epoch, mod 7 -- 0=Thursday.  Pure
 #: integer arithmetic, so no cross-engine weekday-numbering convention
 #: (Spark dayofweek is 1=Sunday, DuckDB dayofweek 0=Sunday) can leak
-#: into the value hash.  The integer-division spelling differs per
-#: engine (Spark ``div`` vs DuckDB ``//``); epoch seconds are positive
-#: for any modern dataset, so plain ``%`` is safe in both.
+#: into the value hash.  The e1 DuckDB oracle spells the same integer
+#: division with ``//``; epoch seconds are positive for any modern
+#: dataset, so plain ``%`` is safe in both.
 DOW_EXPR_SPARK = (
     "CAST((CAST(unix_timestamp(day) AS BIGINT) div 86400) % 7 AS INT)"
 )
-DOW_EXPR_DUCK = "CAST((CAST(epoch(day) AS BIGINT) // 86400) % 7 AS INT)"
 
 
 def weekday_zscores(daily: DataFrame, densify: bool = True) -> DataFrame:

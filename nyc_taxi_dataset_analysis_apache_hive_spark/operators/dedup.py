@@ -1817,9 +1817,9 @@ def _merged_cut_intervals(runs: DataFrame, min_span: int) -> DataFrame:
 
 def _merge_intervals_sql(src: str, out: str) -> str:
     """The ONE SQL spelling of :func:`_merge_intervals` (dialect-neutral:
-    windows + CASE only), shared by the d4 scrub and rep chains on both
-    the DuckDB-oracle and Spark-SQL-text surfaces -- four call sites,
-    one merge semantics.  ``src`` must provide (doc_id, s, e)."""
+    windows + CASE only), shared by the d4 scrub and rep chains of the
+    DuckDB oracle -- two call sites, one merge semantics.  ``src`` must
+    provide (doc_id, s, e)."""
     return f"""{out} AS (
       SELECT doc_id, min(s) AS s, max(e) AS e
       FROM (
@@ -2115,8 +2115,8 @@ def bloom_geometry(n_docs: int, target_fp: float = 0.01) -> tuple[int, int]:
 def bloom_bit_positions(fp: Column, k: int = BLOOM_K, m: int = BLOOM_M) -> Column:
     """array<long> of the ``k`` bloom bit positions for a fingerprint:
     position_i = md5('bloom{i}:' || fp) 60-bit prefix mod m.  Unrolled
-    literal prefixes, so the same expression spells identically in
-    Spark SQL text and the DuckDB oracle."""
+    literal prefixes, so the same expression spells identically in the
+    DataFrame operator and the DuckDB oracle."""
     return F.array(
         *[
             (

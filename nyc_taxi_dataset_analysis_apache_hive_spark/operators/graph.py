@@ -55,7 +55,8 @@ from pyspark.sql import DataFrame, functions as F
 #: convention), damping factor, and the per-node base mass
 #: (1 - damping) * SCALE.  BASE is a literal, not a float product --
 #: (1 - 0.85) * 1e6 evaluates to 150000.00000000003 in binary floats,
-#: and the two SQL surfaces must embed the same exact integer.
+#: and the DataFrame operator and the DuckDB oracle must embed the same
+#: exact integer.
 PAGERANK_SCALE = 1_000_000
 PAGERANK_DAMPING = 0.85
 PAGERANK_BASE = 150_000
@@ -63,8 +64,8 @@ PAGERANK_ITERS = 5
 
 #: per-edge share: the mass vertex ``pr`` pushes along one of its
 #: ``deg`` edges.  ONE spelling, evaluated verbatim by the DataFrame
-#: program, the Spark-SQL twin, and the DuckDB oracle (identical
-#: IEEE double division + floor on both engines -> identical BIGINT).
+#: operator and the DuckDB oracle (identical IEEE double division +
+#: floor on both engines -> identical BIGINT).
 PR_SHARE_EXPR = "CAST(floor(CAST(pr AS DOUBLE) / deg) AS BIGINT)"
 
 #: per-node update from the summed incoming shares (column ``contrib``).
@@ -262,10 +263,10 @@ def pagerank_keepers(
 
 
 # ---------------------------------------------------------------------------
-# Shared SQL surface: the same computation as engine-neutral CTE text,
-# assuming CTEs/relations ``edges(a, b)`` (symmetric, distinct) and
-# ``verts(v)`` already exist.  Both the DuckDB oracle and the Spark
-# SQL-mode twin embed this text verbatim (the PMI_EXPR discipline).
+# Oracle SQL: the same computation as CTE text, assuming
+# CTEs/relations ``edges(a, b)`` (symmetric, distinct) and ``verts(v)``
+# already exist.  The d6 DuckDB oracle embeds this text verbatim (the
+# PMI_EXPR discipline).
 # ---------------------------------------------------------------------------
 
 
@@ -318,25 +319,17 @@ def graph_sql_ctes(iters: int = PAGERANK_ITERS) -> str:
     return ",\n    ".join(ctes)
 
 
-def pr_keeper_sql(
-    comp: str,
-    id_col: str,
-    cluster_col: str,
-    iters: int = PAGERANK_ITERS,
-) -> str:
-    """The :func:`pagerank_keepers` election as engine-neutral SQL over
-    a components relation ``comp(id_col, cluster_col)`` and the
-    ``gpr{iters}`` CTE from :func:`graph_sql_ctes`: one row per
-    cluster, ``(doc_id, cluster_id)`` = the max-pr member (ties -> min
-    id; LEFT join + explicit NULLS LAST so unranked members elect by
-    min id, mirroring the DataFrame operator).  Parameterized on
-    relation/column names because the two SQL surfaces spell their
-    components relation differently; the election itself is this ONE
-    text."""
+def pr_keeper_sql(iters: int = PAGERANK_ITERS) -> str:
+    """The :func:`pagerank_keepers` election as SQL over a components
+    relation ``comp(doc_id, cluster_id)`` and the ``gpr{iters}`` CTE
+    from :func:`graph_sql_ctes`: one row per cluster, ``(doc_id,
+    cluster_id)`` = the max-pr member (ties -> min id; LEFT join +
+    explicit NULLS LAST so unranked members elect by min id, mirroring
+    the DataFrame operator)."""
     return f"""SELECT doc_id, cluster_id FROM (
-      SELECT {comp}.{id_col} AS doc_id, {comp}.{cluster_col} AS cluster_id,
-             row_number() OVER (PARTITION BY {comp}.{cluster_col}
+      SELECT comp.doc_id AS doc_id, comp.cluster_id AS cluster_id,
+             row_number() OVER (PARTITION BY comp.cluster_id
                                 ORDER BY p.pr DESC NULLS LAST,
-                                         {comp}.{id_col}) AS rn
-      FROM {comp} LEFT JOIN gpr{iters} p ON p.v = {comp}.{id_col}
+                                         comp.doc_id) AS rn
+      FROM comp LEFT JOIN gpr{iters} p ON p.v = comp.doc_id
     ) WHERE rn = 1"""

@@ -47,7 +47,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: a blocking key: either a SQL expression string over the column
-#: identifier ``name`` (shared verbatim with the SQL-mode twin), or a
+#: identifier ``name`` (the x3 DuckDB oracle spells the same keys), or a
 #: Column callable applied to the name column (r17 -- no textual
 #: rewrite, so string literals in the key are unrestricted)
 BlockKey = str | Callable[[Column], Column]

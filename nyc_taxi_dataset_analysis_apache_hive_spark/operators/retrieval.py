@@ -33,7 +33,7 @@ multi-signal version a training-data pipeline needs.  Driver-gated as
 the tv1 ``dense`` + ``dense_ivf`` + ``hybrid`` legs
 (registry/sampling_pipeline.py) with the dense cosine rankings (brute
 AND IVF-probed) and the fused rank all oracled (the fusion on raw
-micro sums) in both SQL surfaces; direct unit tests in
+micro sums) in the DuckDB oracle; direct unit tests in
 tests/test_hybrid.py.
 """
 
@@ -51,7 +51,7 @@ from .textops import BM25_B, BM25_K1, BM25_TOPK_QUERIES, bm25_topk
 #: each retrieval query carries BOTH a term set (the bm25_topk queries,
 #: ONE definition -- lexical surface) and a seed vector id (dense
 #: surface; the seed document's embedding, "more like this").  Shared
-#: by the DataFrame leg, the Spark-SQL text, and the DuckDB oracle.
+#: by the DataFrame leg and the DuckDB oracle.
 HYBRID_QUERY_VECS: dict[str, int] = {
     "q_dedup": 0,
     "q_scan": 1,
@@ -94,7 +94,7 @@ def dense_topk(
     id that is NULL-embedded or zero-norm has no unit vector and
     produces NO rows for its query (the normalize-stage drop policy,
     operators/similarity.py) -- callers fusing legs degrade to the
-    surviving legs, which both SQL surfaces mirror via the same inner
+    surviving legs, which the DuckDB oracle mirrors via the same inner
     join against the normalized relation.
 
     ``method='ivf'`` (r12) is the billion-vector scale path: each seed

@@ -35,8 +35,8 @@ def stratified_sample(
 def cumulative_split_bounds(weights: tuple[float, ...]) -> list[float]:
     """The EXACT float boundaries :func:`hash_split` compares ``u`` against
     (``acc += w / total`` over all but the last weight) -- THE single
-    definition, also formatted into the registry's DuckDB oracle and the
-    SQL-mode statement so all three stay bit-identical.  Float-exactness
+    definition, also formatted into the registry's DuckDB oracle so both
+    stay bit-identical.  Float-exactness
     matters: two independently-derived 0.9-ish bounds can differ in the
     last ulp and flip a document's split across surfaces."""
     total = sum(weights)
@@ -52,7 +52,7 @@ def _md5_uniform(id_col: str, salt: str):
     """The ONE md5-uniform draw every sampling operator shares:
     ``conv(first 15 md5 hex chars of "salt:id", 16, 10) / 16^15`` -- a
     deterministic U[0,1) per (salt, id), bit-identical in the DuckDB
-    oracles and SQL texts that mirror the same expression.  A single
+    oracles that mirror the same expression.  A single
     definition because the parity scheme depends on every copy staying
     identical: an edit to the prefix width or separator applied to one
     operator but not its mirrors would silently flip Bernoulli verdicts
@@ -416,8 +416,8 @@ def split_leakage_report(
 
 
 #: Default serving-shard count for :func:`shuffle_shards` -- THE single
-#: definition; the s6 registry oracle and the SQL-mode text format this
-#: into their floor(u * N) legs so all three surfaces cut the same chunks.
+#: definition; the s6 registry oracle formats this into its floor(u * N)
+#: legs so the operator and the oracle cut the same chunks.
 DEFAULT_N_SHARDS = 8
 
 
@@ -885,8 +885,8 @@ def dsir_select(
     perturbation for without-replacement resampling (the paper's
     sampling step) is ``-ln(-ln(u))`` of the shared md5-uniform,
     micro-quantized the same way; and the selection key is their BIGINT
-    sum with ``id`` as the total-order tie-break.  The DuckDB oracle and
-    SQL-text mode replay the selection id-for-id.
+    sum with ``id`` as the total-order tie-break.  The DuckDB oracle
+    replays the selection id-for-id.
 
     ``model``: an already-trained (bucket, lr_micro) table from
     :func:`dsir_fit` (same n_buckets) skips the inline fit -- the

@@ -49,9 +49,9 @@ def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
 RRF_K = 60
 
 #: BIGINT micro-unit scale for RRF contributions -- ONE definition that
-#: the k2/tv1 Spark-SQL texts and DuckDB oracles interpolate (the
-#: bm25_constants repr-roundtrip discipline), so changing the scale can
-#: never desynchronize the three surfaces.
+#: the k2/tv1 DuckDB oracles interpolate (the bm25_constants
+#: repr-roundtrip discipline), so changing the scale can never
+#: desynchronize the DataFrame operator and the oracle.
 RRF_MICRO = 1_000_000
 
 
@@ -78,10 +78,10 @@ def rrf_fuse(
     fused rank orders on the RAW micro sum (ties by id), and
     ``rrf_score`` is the micro sum divided by 1e6 -- the same integer
     in, the same double out.  The micro SCALE is deliberately not a
-    parameter: :data:`RRF_MICRO` is the cross-surface contract the
-    k2/tv1 Spark-SQL texts and DuckDB oracles interpolate, so only
-    ``rrf_k`` (which those surfaces also interpolate from
-    :data:`RRF_K`) is caller-tunable here.
+    parameter: :data:`RRF_MICRO` is the cross-engine contract the
+    k2/tv1 DuckDB oracles interpolate, so only ``rrf_k`` (which those
+    oracles also interpolate from :data:`RRF_K`) is caller-tunable
+    here.
 
     Scale: the input rank tables are k-bounded per group by
     construction, so everything here is tiny regardless of corpus size
@@ -146,8 +146,8 @@ def cosine_topk_bruteforce(
 
 
 #: semi-hard band width (cosine units) for contrastive_mining -- ONE
-#: definition feeding the DataFrame leg, the DuckDB oracle, and the
-#: Spark-SQL text (the bm25_constants repr-roundtrip discipline)
+#: definition feeding the DataFrame leg and the DuckDB oracle (the
+#: bm25_constants repr-roundtrip discipline)
 MINING_MARGIN = 0.3
 
 
@@ -906,8 +906,8 @@ def kmeans_train(
     from one ``orderBy(...).limit(n_centroids)`` (TakeOrdered -- no
     global sort shuffle), dead slots pair with them by rank over two
     <= n_centroids-row frames.  OFF by default: the gated trained-index
-    surfaces replay exact Lloyd (empty clusters carried) in DuckDB /
-    Spark-SQL, and re-seeding is the research-path option for corpora
+    oracles replay exact Lloyd (empty clusters carried) in DuckDB, and
+    re-seeding is the research-path option for corpora
     where the dead_cells report shows a degenerating index.
     Driver-local fast path (r17, guide §1.2 "fix the distributed
     algorithm"): a training input of at most KMEANS_DRIVER_MAX_ROWS rows
@@ -1860,8 +1860,8 @@ def pq_encode(
     # code 0 (NULL sorts first inside a struct ordering), letting a
     # garbage vector consume candidate slots with a bogus ADC total and
     # surface as a NULL-cosine neighbour -- the filter makes the
-    # documented drop-out semantics real (mirrored in the SQL text and
-    # the DuckDB oracle; no such vectors exist in the driver tables)
+    # documented drop-out semantics real (mirrored in the DuckDB
+    # oracle; no such vectors exist in the driver tables)
     emb = step1.filter(F.col("_nrm") > 0).select(
         "vec_id",
         F.transform(
@@ -1914,7 +1914,7 @@ def pq_encode(
         formulations of this same arithmetic measured 4-8 s; as plain
         projected columns over the pair relation the distance pass
         codegens and the whole leg drops under a second.  The chain
-        order matches the SQL text and the DuckDB oracle term for term."""
+        order matches the DuckDB oracle term for term."""
         terms = None
         for i in range(1, dsub + 1):
             diff = F.element_at(vcol, j * dsub + i) - F.element_at(

@@ -57,8 +57,8 @@ def _trunc4(col):
     would otherwise truncate to 0.2999, not 0.3000).  1e-7 is three
     decimal orders below the bucket width, so it can never promote a
     value that is genuinely inside a bucket; it must appear IDENTICALLY
-    in every engine surface (this function, registry_sql's SQL text,
-    registry's DuckDB oracles) or parity breaks."""
+    in this function and in the registry's DuckDB oracles or parity
+    breaks."""
     return F.floor(col * 10000.0 + 1e-7) / 10000.0
 
 
@@ -93,7 +93,7 @@ def quality_scores(docs: DataFrame) -> DataFrame:
     """
     # Tokenize ONCE in its own projection (PERF note on ngrams_from_tokens);
     # every feature below reads the materialized array/counts.  NULL text
-    # scores as '' (0 tokens, 0 chars) on all three parity surfaces.
+    # scores as '' (0 tokens, 0 chars) here and in the DuckDB oracles.
     toked = docs.select(
         "doc_id",
         F.coalesce(F.col("text"), F.lit("")).alias("text"),
@@ -302,7 +302,7 @@ def tfidf_top_terms(
 #: claims it (an IPv4 is n_ip=1, never also n_phone=1).
 #:
 #: Every pattern runs VERBATIM on both regex engines in play -- Java
-#: (Spark DataFrame + SQL mode) and RE2 (the DuckDB driver oracle) -- so
+#: (the Spark DataFrame operator) and RE2 (the DuckDB driver oracle) -- so
 #: no lookarounds (RE2 lacks them).  Entries are
 #: ``(name, pattern, replacement, count_group)``: counts take
 #: ``regexp_extract_all(text, pattern, count_group)`` and redaction
@@ -705,8 +705,8 @@ def ngram_lm_scores(
 
 
 #: the probe's feature/label definitions -- ONE definition shared by the
-#: Spark operator and mirrored verbatim in the registry oracle / SQL text
-#: so the three surfaces cannot drift.
+#: Spark operator and mirrored verbatim in the registry oracle so the
+#: two cannot drift.
 PROBE_LABEL_SOURCE = "src0"
 
 
@@ -920,8 +920,8 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 #: The fixed query-term set the driver-gated tv1 ``bm25`` leg scores
-#: against -- one definition shared by the DataFrame leg, the Spark-SQL
-#: text, and the DuckDB oracle.  Three common terms plus one rare term
+#: against -- one definition shared by the DataFrame leg and the DuckDB
+#: oracle.  Three common terms plus one rare term
 #: ("dup", ~5% document frequency in the synthetic corpus) so the idf
 #: leg of the formula is exercised across its range, not just at the
 #: near-stopword end.
@@ -948,7 +948,7 @@ def bm25_scores(
 
     Cross-engine exactness: the float constants ``k1+1`` / ``k1*(1-b)``
     / ``k1*b`` are computed ONCE (here, in Python) and reused verbatim
-    by the SQL surfaces, and each per-term partial score is truncated to
+    by the DuckDB oracle, and each per-term partial score is truncated to
     BIGINT micro-units BEFORE the per-document sum (:func:`_micro6` --
     the ngram_lm_scores precedent), so the aggregate is exact integer
     arithmetic: partitioning- and engine-independent.
@@ -975,8 +975,8 @@ def bm25_scores(
     (REF:349-361 rank trip segments by a derived score and read off
     shares) -- here the score is retrieval relevance and the slice is
     query-targeted corpus selection.  Driver-gated as the tv1 ``bm25``
-    leg (registry/sampling_pipeline.py) with the SQL-mode text and
-    DuckDB oracle embedding :func:`bm25_constants` repr-roundtripped.
+    leg (registry/sampling_pipeline.py) with the DuckDB oracle embedding
+    :func:`bm25_constants` repr-roundtripped.
     """
     if not query_terms:
         raise ValueError("bm25_scores needs at least one query term")
@@ -1158,8 +1158,8 @@ def bm25_term_scores(
 
 
 #: The fixed named-query set the driver-gated tv1 ``bm25_topk`` leg
-#: retrieves for -- ONE definition shared by the DataFrame leg, the
-#: SQL-mode text, and the DuckDB oracle.  Each query mixes the rare
+#: retrieves for -- ONE definition shared by the DataFrame leg and the
+#: DuckDB oracle.  Each query mixes the rare
 #: "dup" / distinct common terms so per-query rankings differ.
 BM25_TOPK_QUERIES: dict[str, tuple[str, ...]] = {
     "q_dedup": ("dup", "hash", "group"),
@@ -1253,9 +1253,9 @@ def bm25_constants(
     k1: float = BM25_K1, b: float = BM25_B
 ) -> tuple[float, float, float]:
     """The three derived BM25 float constants (k1+1, k1*(1-b), k1*b),
-    computed ONCE here so the DataFrame operator, the SQL-mode text, and
-    the DuckDB oracle all embed bit-identical doubles (repr-roundtripped
-    into the SQL surfaces)."""
+    computed ONCE here so the DataFrame operator and the DuckDB oracle
+    embed bit-identical doubles (repr-roundtripped into the oracle
+    SQL)."""
     return (float(k1) + 1.0, float(k1) * (1.0 - float(b)), float(k1) * float(b))
 
 
@@ -1265,14 +1265,13 @@ def bm25_constants(
 
 #: PMI is unstable below this bigram count (a hapax pair maxes the
 #: score by construction); the pmi/npmi rankings filter on it.  ONE
-#: definition, embedded into every SQL surface.  (Collocation mining is
+#: definition, embedded into the tv1 oracle.  (Collocation mining is
 #: beyond-the-reference extension surface -- the reference HiveQL
 #: script has no text processing at all.)
 COLLOCATION_MIN_COUNT = 5
 
-#: the bigram -> struct(w1, w2) extraction as a Spark SQL expression --
-#: shared verbatim by the DataFrame operator (F.expr) and the SQL-mode
-#: twin so the two Spark surfaces cannot drift.  The indexed-lambda
+#: the bigram -> struct(w1, w2) extraction as a Spark SQL expression,
+#: evaluated by the DataFrame operator through F.expr.  The indexed-lambda
 #: spelling (transform over the first n-1 slots, element_at i+2 for the
 #: right neighbor) keeps the struct fields NAMED, which arrays_zip's
 #: positional "0"/"1" fields would not.
@@ -1298,7 +1297,7 @@ NPMI_EXPR = f"({PMI_EXPR}) / (-ln(CAST(c_ab AS DOUBLE) / nb))"
 #: adjacency (a +-k symmetric window is this directional table plus its
 #: swap, so the directional table is the primitive; word2vec-style
 #: skip-gram co-occurrence uses exactly this shape).  ONE definition,
-#: embedded into every SQL surface.
+#: embedded into the tv1 oracle.
 COLLOCATION_WINDOW = 3
 
 
@@ -1306,8 +1305,8 @@ def window_pair_expr(window: int) -> str:
     """The (w1, w2) forward-window pair extraction as a Spark SQL
     expression over a token-array column ``t`` -- one row per
     (position, offset<=window) slot, the windowed generalization of
-    BIGRAM_EXPR (window=1 is exactly the bigram table).  Shared
-    verbatim by the DataFrame operator and the SQL-mode twin."""
+    BIGRAM_EXPR (window=1 is exactly the bigram table), evaluated by
+    the DataFrame operator through F.expr."""
     return (
         "explode(flatten(transform(slice(t, 1, size(t) - 1),"
         f" (x, i) -> transform(slice(t, i + 2, {int(window)}),"
@@ -1390,8 +1389,7 @@ def unigram_counts(
     pass; callers scoring several pair streams (the tv1 bigram +
     windowed legs) compute it once, checkpoint, and pass it to each
     scorer (r17 review: the DataFrame path was re-running the corpus
-    unigram aggregate per scorer while the SQL surfaces shared one
-    CTE).  ``toks=`` (r18): a precomputed token table skips the
+    unigram aggregate per scorer while the oracle shared one CTE).  ``toks=`` (r18): a precomputed token table skips the
     tokenize projection."""
     if toks is not None and docs is not None:
         raise ValueError(

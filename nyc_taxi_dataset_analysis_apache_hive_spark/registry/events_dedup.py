@@ -36,26 +36,22 @@ from .base import (
 # design (integer window sums -> one shared double expression).
 # ---------------------------------------------------------------------------
 
-#: the two window shapes as shared SQL fragments (identical text in both
-#: engines); the z expression itself comes from anomaly.z_expr()
+#: the two window shapes of the e1 oracle; the z expression itself comes
+#: from anomaly.z_expr()
 _E1_ROLL_W = (
     "(PARTITION BY key ORDER BY day "
     "ROWS BETWEEN {d} PRECEDING AND 1 PRECEDING)"
 ).format(d=anomaly.ROLLING_DAYS)
 _E1_GLOB_W = "(PARTITION BY key)"
 
-def _e1_ctes(seq_expr: str, dow_expr: str) -> str:
-    """The anomaly CTE block, parameterized ONLY on the two spellings
-    the engines do not share: the calendar-grid generator (Spark
-    ``explode(sequence(...))`` vs DuckDB ``unnest(generate_series(...))``
-    -- _E1_SEQ_SPARK/_E1_SEQ_DUCK) and the integer-division day-of-week
-    (anomaly.DOW_EXPR_SPARK/_DUCK).  ``daily0`` is the OBSERVED count
-    series (the daily leg); ``daily`` zero-fills each key's
-    [first, last] calendar so an outage day gets a row and a score
-    (operators/anomaly.densify_daily -- the r16 review's outage-blind
-    finding); the window squares run in DECIMAL(38,0)
-    (anomaly.SUM_SQ_EXPR) so nothing wraps at deployment volumes."""
-    return f"""
+#: the anomaly CTE block of the e1 oracle.  ``daily0`` is the OBSERVED
+#: count series (the daily leg); ``daily`` zero-fills each key's
+#: [first, last] calendar so an outage day gets a row and a score
+#: (operators/anomaly.densify_daily); the weekday is the integer-division
+#: day-of-week of anomaly.DOW_EXPR_SPARK in DuckDB spelling; the window
+#: squares run in DECIMAL(38,0) (anomaly.SUM_SQ_EXPR) so nothing wraps
+#: at deployment volumes.
+_E1_CTES = f"""
     daily0 AS (
       -- CAST: DuckDB date_trunc('day') yields DATE, Spark TIMESTAMP;
       -- the cast makes both engines emit TIMESTAMP (no-op in Spark)
@@ -66,7 +62,7 @@ def _e1_ctes(seq_expr: str, dow_expr: str) -> str:
     ),
     dspan AS (SELECT key, min(day) AS d0, max(day) AS d1
               FROM daily0 GROUP BY key),
-    dgrid AS (SELECT key, {seq_expr} AS day FROM dspan),
+    dgrid AS (SELECT key, unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS day FROM dspan),
     daily AS (
       -- IS NOT DISTINCT FROM: a NULL key is a legitimate series; plain
       -- equality would zero-fill it while dropping its real counts
@@ -102,7 +98,7 @@ def _e1_ctes(seq_expr: str, dow_expr: str) -> str:
              sum({anomaly.SUM_SQ_EXPR}) OVER (PARTITION BY key, dow)
                AS sum_sq,
              count(*) OVER (PARTITION BY key, dow) AS c
-      FROM (SELECT key, day, n, {dow_expr} AS dow FROM daily) dowd
+      FROM (SELECT key, day, n, CAST((CAST(epoch(day) AS BIGINT) // 86400) % 7 AS INT) AS dow FROM daily) dowd
     ),
     whist AS (
       SELECT key, day, n, round({anomaly.z_expr()}, 6) AS score
@@ -134,11 +130,8 @@ def _e1_ctes(seq_expr: str, dow_expr: str) -> str:
 """
 
 
-_E1_SEQ_SPARK = "explode(sequence(d0, d1, interval 1 day))"
-_E1_SEQ_DUCK = "unnest(generate_series(d0, d1, INTERVAL 1 DAY))"
-
 #: the five anomaly legs (daily/zscore/global/weekday/robust) in e1's
-#: column names, shared by both SQL surfaces
+#: column names
 _E1_ANOMALY_SELECTS = f"""
     SELECT 'daily' AS op, day AS window_start, key AS event_type,
            n AS n_events, CAST(NULL AS DOUBLE) AS sum_value,
@@ -167,7 +160,7 @@ _E1_ANOMALY_SELECTS = f"""
 @register(
     "e1_tumbling_window_counts",
     f"""
-    WITH {_e1_ctes(_E1_SEQ_DUCK, anomaly.DOW_EXPR_DUCK)}
+    WITH {_E1_CTES}
     SELECT 'tumbling' AS op, date_trunc('hour', ts) AS window_start,
            event_type, CAST(count(*) AS BIGINT) AS n_events,
            round(sum(value), 2) AS sum_value, CAST(NULL AS BIGINT) AS flag

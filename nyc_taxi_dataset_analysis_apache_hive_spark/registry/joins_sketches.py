@@ -144,9 +144,9 @@ def x2_salted_join_agg(spark, sf):
     )
 
 
-#: CMS geometry interpolated into the a10 oracle and the Spark-SQL text
-#: (one definition: operators.sketches) -- plus the e literal both
-#: engines fold for the in-plane bound.
+#: CMS geometry interpolated into the a10 oracle (one definition:
+#: operators.sketches) -- plus the e literal both engines fold for the
+#: in-plane bound.
 _CMS_D = int(sketches.CMS_DEPTH)
 _CMS_W = int(sketches.CMS_WIDTH)
 
@@ -702,10 +702,8 @@ def a10_distinct_counts(spark, sf):
 #: surface (the _SPLIT_BOUNDS precedent)
 _X3_MAX_DIST = 3
 
-#: shared DuckDB/Spark-SQL CTE block (both engines accept this text
-#: verbatim: split_part with -1, levenshtein, windowed row_number are
-#: identical surfaces) -- ONE spelling so the oracle and the Spark-SQL
-#: twin cannot drift
+#: the x3 DuckDB oracle's CTE block (split_part with -1, levenshtein,
+#: windowed row_number)
 _X3_CTES = f"""
     dict AS (
       SELECT p_name AS name, CAST(count(*) AS BIGINT) AS n_records
@@ -762,9 +760,8 @@ _X3_CTES = f"""
 
 #: the three fuzzy legs in j5's (op, key, name, val) schema -- the pair
 #: rides as 'left>right' in the name column, the edit distance in key,
-#: the record mass in val.  Shared-verbatim SQL (both engines accept the
-#: text), interpolated into BOTH j5 SQL surfaces; the j5 DataFrame
-#: builds the same rows from operators/linkage.py.
+#: the record mass in val, interpolated into the j5 oracle; the j5
+#: DataFrame builds the same rows from operators/linkage.py.
 X3_LEG_SELECTS = """
     SELECT 'fuzzy_pairs' AS op, lev AS key,
            name_a || '>' || name_b AS name, pair_mass AS val

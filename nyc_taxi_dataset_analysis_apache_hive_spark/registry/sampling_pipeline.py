@@ -51,7 +51,7 @@ _SPLIT_CASE = (
     f"WHEN u < {_SPLIT_BOUNDS[1]!r} THEN 1 ELSE 2 END"
 )
 
-#: BM25 constants + fixed term list embedded into BOTH SQL surfaces
+#: BM25 constants + fixed term list embedded into the DuckDB oracle
 #: (repr-roundtripped, the _SPLIT_BOUNDS precedent) so the doubles are
 #: bit-identical to the ones the DataFrame leg folds into its plan.
 _BM25_C1, _BM25_C2, _BM25_C3 = textops.bm25_constants()
@@ -164,7 +164,7 @@ _TV1_LEX_GROUPED = f"""
     -- canonical-member election (r17): each cluster's max-PageRank
     -- member, the keeper verb the module's ranking exists for
     SELECT 'pr_keeper' AS op, doc_id, cluster_id AS v
-    FROM ({graph.pr_keeper_sql('comp', 'doc_id', 'cluster_id')})
+    FROM ({graph.pr_keeper_sql()})
     UNION ALL
     -- leakage-safe split (r7): the split draw hashes the CLUSTER
     -- representative (min reachable id; singletons hash their own id),
@@ -240,8 +240,8 @@ def d6_dup_clusters(spark, sf):
     counts via the degree-ordered orientation (every triangle counted
     once at its (deg, id)-minimal apex; exact integers).
     ``pr_keeper`` (r17) = the canonical-member election: each
-    cluster's max-PageRank member, ties -> min id (pr_keeper_sql, the
-    one shared election text)."""
+    cluster's max-PageRank member, ties -> min id (the oracle spells
+    it with graph.pr_keeper_sql)."""
     docs = _t(spark, sf, "documents")
     # the pair list (tiny) feeds BOTH the CC legs and the r10 leakage
     # audit: materialize it once, or the whole gram-join pair pipeline
@@ -1814,7 +1814,7 @@ def tv1_text_stats(spark, sf):
     to BIGINT micro-units before the per-doc sum so the aggregate is
     exact integer arithmetic in both engines; the k1/b-derived float
     constants come from ONE definition (textops.bm25_constants),
-    repr-roundtripped into both SQL surfaces.  ``bm25_topk`` (r10) =
+    repr-roundtripped into the oracle.  ``bm25_topk`` (r10) =
     multi-query BM25 retrieval (textops.bm25_topk): top-10 documents
     per named query of BM25_TOPK_QUERIES from ONE corpus pass over the
     union of query terms -- the broadcast (query, term) map joined on
@@ -1835,7 +1835,7 @@ def tv1_text_stats(spark, sf):
     and ``hybrid_ivf`` (r13) the SAME fusion over the checkpointed
     IVF-probed dense ranks instead -- the deployment-path pair a
     billion-vector corpus actually serves; every fused rank is oracled
-    on the raw micro sums in both SQL surfaces."""
+    on the raw micro sums in the oracle."""
     docs = _t(spark, sf, "documents")
     nulll = F.lit(None).cast("long")
     # ONE corpus tokenize (r18, guide §2.4/§6 one-scan discipline; the
@@ -2162,7 +2162,7 @@ _TV1_COLLOC_WIN_SCORE_CTES = f"""
 """
 
 #: the three collocation legs in tv1's (op, doc_id, token, n, m, score)
-#: schema -- shared verbatim by both SQL surfaces
+#: schema, as the tv1 oracle spells them
 _TV1_COLLOC_SELECTS = f"""
     SELECT 'colloc' AS op, CAST(NULL AS BIGINT) AS doc_id,
            w1 || ' ' || w2 AS token, c_ab AS n, rank AS m,
@@ -2238,7 +2238,7 @@ def _tv1_colloc_legs(spark, sf, toks=None, scored_tables=None):
     # Checkpointing the tiny scored relations makes every leg a
     # row_number over a cached ~900-row table instead.
     # ONE corpus unigram pass shared by the bigram and windowed scorers
-    # (r17 review: the SQL surfaces already shared the cucnt CTE; the
+    # (r17 review: the oracle already shared the cucnt CTE; the
     # DataFrame path now checkpoints the vocabulary-sized count table
     # and hands it to both, so each scorer adds only its own pair scan)
     if scored_tables is not None:

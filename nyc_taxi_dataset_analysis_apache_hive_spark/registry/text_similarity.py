@@ -38,10 +38,10 @@ from .base import (
 #: vector once instead of recomputing norms per pair)
 _COS = "round(list_dot_product(q.emb_n, c.emb_n), 6)"
 
-#: RRF constants interpolated into the k2 oracle (and, via registry_sql,
-#: the Spark-SQL text) from their ONE definition in operators.similarity
-#: -- the bm25_constants repr-roundtrip discipline, so changing RRF_K /
-#: the micro scale / the fused depth can never desynchronize surfaces.
+#: RRF constants interpolated into the k2 oracle from their ONE
+#: definition in operators.similarity -- the bm25_constants
+#: repr-roundtrip discipline, so changing RRF_K / the micro scale / the
+#: fused depth can never desynchronize the operator and the oracle.
 _RRF_K_F = float(similarity.RRF_K)
 _RRF_MICRO_F = float(similarity.RRF_MICRO)
 #: fused top-k depth of the k2 ``rrf`` leg (the same k the ANN legs use)
@@ -241,10 +241,9 @@ def k1_knn_bruteforce(spark, sf):
 
 
 #: trained-centroid gate parameters (the k3 ``semdedup_trained`` leg):
-#: ONE definition feeding the DataFrame leg, the DuckDB oracle's
-#: unrolled-Lloyd CTEs, and registry_sql's temp-view replay -- the
-#: bm25_constants repr-roundtrip discipline, so retuning the trained
-#: index can never desynchronize the three surfaces.
+#: ONE definition feeding the DataFrame leg and the DuckDB oracle's
+#: unrolled-Lloyd CTEs -- the bm25_constants repr-roundtrip discipline,
+#: so retuning the trained index can never desynchronize the two.
 K3_KMEANS_N = 16
 K3_KMEANS_ITER = 5
 K3_KMEANS_Q = 6

@@ -2,9 +2,8 @@
 
 The reference is one HiveQL script (REF =
 ``Surabhi_Srinath_NYC_Taxi_Assignment_FInal.txt``: 39 SELECTs + 1 INSERT
-OVERWRITE + 2 DDLs).  ``registry_sql`` proves SQL-mode parity for the
-engine's operator surface on the synthetic tables; THIS module proves it
-for the reference user's literal workflow: every REF SELECT re-spelled as
+OVERWRITE + 2 DDLs).  This module proves SQL-mode parity for the
+reference user's literal workflow: every REF SELECT re-spelled as
 Spark SQL (same subquery shapes, same aliases the DataFrame operators
 emit) over two temp views --
 

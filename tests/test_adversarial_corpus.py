@@ -6,14 +6,13 @@ sf0.001 corpus with an adversarial slice appended to ``documents`` and
 single-rare-token docs, beyond-ASCII text (accents, emoji, CJK,
 Cyrillic), NULL lang/source (source IS the domain key), NULL
 event_type/value/user_id, NULL and malformed JSON props -- and replays
-BOTH parity gates over it for every registry entry that reads the
-mutated tables: the DuckDB oracle (the driver's cross-engine gate) and
-the SQL-text mode (the Spark-vs-Spark usage-mode gate).
+the DuckDB oracle parity gate over it for every registry entry that
+reads the mutated tables.
 
 Entries over the TPC-H tables only are excluded: those tables are
 byte-identical copies here, so re-running them would re-verify an
 identical input (the full-table sweep already runs in
-test_oracle_parity.py / test_sql_mode.py).
+test_oracle_parity.py).
 
 Deliberate exclusion, pinned by test_unicode_lowercase_boundary below:
 Turkish dotted capital I (U+0130).  Spark/Java and Python lower() apply
@@ -32,9 +31,9 @@ import shutil
 import duckdb
 import pytest
 
-from nyc_taxi_dataset_analysis_apache_hive_spark import registry, registry_sql
+from nyc_taxi_dataset_analysis_apache_hive_spark import registry
 from nyc_taxi_dataset_analysis_apache_hive_spark.schema import TESTDATA_TABLES
-from tests.parity import canon, compare, duckdb_conn
+from tests.parity import compare, duckdb_conn
 
 #: opt-in heavy suite (driver default-run budget): run via `pytest -m scale`
 pytestmark = pytest.mark.scale
@@ -182,13 +181,11 @@ def _build_adversarial_corpus(src_dir: str, dst_dir: str) -> None:
 
 
 def _touched_entries() -> list[str]:
-    """Registry entries whose oracle or SQL text reads any mutated table
+    """Registry entries whose oracle reads any mutated table
     (documents / events / embeddings)."""
     out = []
     for name in sorted(registry.QUERIES):
-        txt = registry.ORACLES.get(name, "") + " " + registry_sql.SQL_QUERIES.get(
-            name, ""
-        )
+        txt = registry.ORACLES.get(name, "")
         if (
             re.search(r"\bdocuments\b", txt)
             or re.search(r"\bevents\b", txt)
@@ -245,18 +242,10 @@ def test_touched_set_is_the_expected_surface():
 
 @pytest.mark.parametrize("name", TOUCHED)
 def test_adversarial_parity(name, spark, adv_dir, adv_con):
-    """Both gates over the adversarial corpus: DataFrame vs DuckDB
-    oracle, then SQL-text mode vs DataFrame (where a SQL form exists)."""
+    """DataFrame vs DuckDB oracle over the adversarial corpus."""
     df = registry.QUERIES[name](spark, adv_dir)
     problems = compare(df, adv_con, registry.ORACLES[name], name)
     assert not problems, "\n".join(problems)
-    if name in registry_sql.SQL_QUERIES or name in registry_sql.SQL_PROGRAMS:
-        sql_schema, sql_rows = canon(
-            registry_sql.run_sql(spark, adv_dir, name)
-        )
-        api_schema, api_rows = canon(df)
-        assert sql_schema == api_schema, f"{name}: schema drift SQL vs DF"
-        assert sql_rows == api_rows, f"{name}: value drift SQL vs DF"
 
 
 def test_unicode_lowercase_boundary(spark):

@@ -484,6 +484,46 @@ def test_connected_components_hand_graph(spark):
     assert comp == {1: 1, 5: 1, 9: 1, 12: 1, 20: 20, 21: 20, 30: 30, 31: 30, 32: 30}
 
 
+@pytest.mark.scale
+def test_connected_components_matches_union_find_on_random_graphs(spark):
+    """Three seeded random multigraphs (self-loops, duplicate and
+    reversed edges included): the DataFrame loop and a pure-Python
+    union-find agree on every component label."""
+    import random
+
+    from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup
+
+    rnd = random.Random(7)
+    for trial in range(3):
+        edges = [
+            (rnd.randrange(40), rnd.randrange(40)) for _ in range(60)
+        ]
+        parent = list(range(40))
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        touched = set()
+        for a, b in edges:
+            touched.update((a, b))
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        expected = {v: find(v) for v in touched}
+
+        df = spark.createDataFrame(edges, "a long, b long")
+        got = {
+            r["doc_id"]: r["cluster_id"]
+            for r in dedup.connected_components(
+                df, a_col="a", b_col="b"
+            ).collect()
+        }
+        assert got == expected, f"trial {trial}"
+
+
 def test_connected_components_nonconvergence_surfaced(spark):
     """A path graph of diameter > max_iter cannot converge: the partial
     labels are never returned silently -- raise by default, RuntimeWarning

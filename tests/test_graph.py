@@ -2,7 +2,7 @@
 degree-oriented triangle counting.
 
 Cross-engine value parity for the d6 ``pagerank``/``triangles`` legs
-rides the oracle gates (all three surfaces); these pin the operator
+rides the DuckDB oracle gates; these pin the operator
 contract: hand-derived goldens on canonical graphs, the python-replay
 parity discipline on randomized graphs, the hub-proof orientation
 bound, and the no-cartesian plan shape.

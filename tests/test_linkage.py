@@ -1,10 +1,10 @@
 """Fuzzy entity resolution (operators/linkage.py) semantics + plan shape.
 
 Cross-engine value parity for the x3 entry rides the auto-parametrized
-oracle gates (test_oracle_parity*.py) and the SQL-mode twin equality
-(test_sql_mode.py); these tests pin the operator-level CONTRACT on a
-hand-built corpus where every answer is checkable by eye, plus the
-no-cartesian plan shape the 100 TB posture depends on.
+oracle gates (test_oracle_parity*.py); these tests pin the
+operator-level CONTRACT on a hand-built corpus where every answer is
+checkable by eye, plus the no-cartesian plan shape the 100 TB posture
+depends on.
 """
 
 from __future__ import annotations

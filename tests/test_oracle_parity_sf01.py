@@ -15,8 +15,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entry_mod
-from nyc_taxi_dataset_analysis_apache_hive_spark import registry_sql
-from tests.parity import canon, compare, duckdb_conn
+from tests.parity import compare, duckdb_conn
 
 #: opt-in heavy suite (driver default-run budget): run via `pytest -m scale`
 pytestmark = pytest.mark.scale
@@ -74,26 +73,6 @@ def con():
 def test_query_matches_oracle_at_sf01(name, spark, con):
     problems = compare(QUERIES[name](spark, SF01), con, ORACLES[name], name)
     assert not problems, "\n".join(problems)
-
-
-#: the SQL-text surface was only parity-gated at sf0.001, which is exactly
-#: the scale where the s7 sequence(0, n_copies-1) phantom-row defect stayed
-#: latent (every mix ratio >= 1.2 there, so n_copies was never 0).  Pin the
-#: scale-sensitive entries that ALSO ship SQL text to the bigger decade.
-SCALE_SENSITIVE_SQL = [
-    n
-    for n in SCALE_SENSITIVE
-    if n in registry_sql.SQL_QUERIES or n in registry_sql.SQL_PROGRAMS
-]
-
-
-@pytest.mark.parametrize("name", SCALE_SENSITIVE_SQL)
-def test_sql_text_matches_dataframe_at_sf01(name, spark):
-    sql_schema, sql_rows = canon(registry_sql.run_sql(spark, SF01, name))
-    api_schema, api_rows = canon(QUERIES[name](spark, SF01))
-    assert sql_schema == api_schema, f"{name}: schema drift SQL vs DataFrame"
-    assert sql_rows == api_rows, f"{name}: value drift SQL vs DataFrame"
-    assert len(sql_rows) > 0, f"{name}: empty result proves nothing"
 
 
 #: Opt-in NIGHTLY insurance (r8): the r6 full sf0.1 sweep caught two

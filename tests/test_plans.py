@@ -200,39 +200,6 @@ def test_pipeline_python_stages_are_arrow_batched(spark):
     assert "FlatMapGroupsInPandas" in plan  # the packing applyInPandas
 
 
-def test_sql_mode_keeps_scale_safe_plans(spark):
-    """The declarative surface must get the SAME scale-critical physical
-    shapes as the DataFrame programs -- SQL text and DataFrame calls build
-    the same logical plan, so pushdown / pruning / broadcast / top-k /
-    window-above-agg all carry over (a regression here would mean the SQL
-    mode silently loses the 100-TB plan guarantees)."""
-    from nyc_taxi_dataset_analysis_apache_hive_spark import registry_sql
-
-    def sq(name):
-        return registry_sql.run_sql(spark, SF, name)
-
-    # filter pushdown reaches the scan
-    assert has_pushed_filters(sq("p3_filter_compare"), "LessThan(l_discount")
-    # column pruning: 1-column aggregate scans 1 column
-    m = re.search(r"ReadSchema: struct<([^>]*)>", explain_str(sq("a1_group_count")))
-    assert m and {c.split(":")[0] for c in m.group(1).split(",") if c} == {
-        "l_returnflag"
-    }
-    # small dim side broadcasts
-    strategies = join_strategies(sq("p7_derived_duration_join"))
-    assert strategies and all(s == "BroadcastHashJoin" for s in strategies)
-    # sort+limit is top-k, never a global sort
-    assert "TakeOrderedAndProject" in explain_str(sq("o3_topk_multi_sort"))
-    # pct-share window consumes aggregated rows, not raw rows
-    plan = explain_str(sq("w1_pct_share"), "simple")
-    win = plan.index("Window")
-    assert win < min(m.start() for m in re.finditer(r"HashAggregate", plan))
-    # zero Python row crossings anywhere in SQL mode
-    for name in ("p456_predicate_surface", "f9_case_segmentation", "a9_percentile"):
-        p = explain_str(sq(name), "simple")
-        assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, name
-
-
 def test_runtime_bloom_filter_semi_join_reduces_probe_side(spark):
     """Spark's runtime bloom-filter join (default-on in 4.x) builds a
     DISTRIBUTED bloom over a selectively-filtered creation side and

@@ -57,9 +57,9 @@ def test_expected_rate_matches_mean_quality(spark, sf0001_dir):
 
 
 def test_null_text_scores_as_empty(spark):
-    """NULL text scores exactly like '' (coalesced at tokenization on all
-    three parity surfaces -- Spark DataFrame, Spark SQL mode, DuckDB
-    oracle -- so a NULL-text document can never diverge the hash gate)."""
+    """NULL text scores exactly like '' (coalesced at tokenization in
+    both the Spark DataFrame operator and the DuckDB oracle, so a
+    NULL-text document can never diverge the hash gate)."""
     docs = spark.createDataFrame(
         [Row(doc_id=1, text=None), Row(doc_id=2, text="")],
         "doc_id bigint, text string",

@@ -6,7 +6,7 @@ modes loud at test time instead of silent at round end."""
 
 from __future__ import annotations
 
-from nyc_taxi_dataset_analysis_apache_hive_spark import registry, registry_sql
+from nyc_taxi_dataset_analysis_apache_hive_spark import registry
 
 
 def test_registry_holds_exactly_the_driver_budget():
@@ -24,7 +24,3 @@ def test_every_entry_is_oracled():
         "entry carries one (approx paths self-validate in-plane)"
     )
 
-
-def test_sql_surface_is_a_subset_with_breadth():
-    assert set(registry_sql.SQL_QUERIES) <= set(registry.QUERIES)
-    assert len(registry_sql.SQL_QUERIES) >= 40

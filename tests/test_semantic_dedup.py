@@ -293,7 +293,7 @@ def test_partitioned_components_hot_group_raises(spark):
 def test_kmeans_init_skips_null_vectors(spark):
     """A NULL embedding inside the init prefix must not occupy a dead
     centroid slot: the init pool is the n smallest NON-NULL ids (the
-    contract all three k3 surfaces replay, r13)."""
+    contract the k3 operator and its DuckDB oracle replay, r13)."""
     from pyspark.sql.types import (
         ArrayType,
         FloatType,

@@ -32,7 +32,7 @@ from __future__ import annotations
 import inspect
 import re
 
-from nyc_taxi_dataset_analysis_apache_hive_spark import registry, registry_sql
+from nyc_taxi_dataset_analysis_apache_hive_spark import registry
 from nyc_taxi_dataset_analysis_apache_hive_spark.operators import sampling
 
 #: tokenize-of-raw-text marker: ``lower(text)`` / ``lower(text,`` with
@@ -67,13 +67,8 @@ def count_of_raw_tokenize(sql: str) -> list[str]:
 
 
 def test_no_count_of_raw_tokenize_in_any_sql_surface():
-    """Rule 1 over BOTH SQL surfaces: the Spark SQL-text mode and the
-    DuckDB oracle of every registry entry."""
+    """Rule 1 over the DuckDB oracle of every registry entry."""
     bad = {}
-    for name, sql in sorted(registry_sql.SQL_QUERIES.items()):
-        hits = count_of_raw_tokenize(sql)
-        if hits:
-            bad[f"sql:{name}"] = hits
     for name, sql in sorted(registry.ORACLES.items()):
         hits = count_of_raw_tokenize(sql)
         if hits:
@@ -165,7 +160,6 @@ def test_every_operator_module_is_wired_to_a_surface_or_test():
     consumers: set[str] = set()
     surfaces = (
         list((_PKG / "registry").glob("*.py"))
-        + [_PKG / "registry_sql.py"]
         + [_REPO / "__spark_entry__.py", _REPO / "bench.py"]
         + list((_REPO / "tests").glob("test_*.py"))
         + list(_PKG.glob("streaming/*.py"))
