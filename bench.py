@@ -2,26 +2,21 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE compact JSON line (the driver's round-over-round artifact --
-kept small on purpose: round 4's full-detail line overflowed the driver's
-stdout capture and the round lost perf tracking):
+Prints ONE compact JSON line (small on purpose: a full-detail line once
+overflowed the stdout capture):
   {"metric": "total_query_seconds", "value": N, "unit": "sec",
    "queries": {name: sec, ...},            # 19 headline queries at sf
    "runs": 3, "sf": 0.1, "detail": "BENCH_DETAIL.local.json",
-   "probe": {"py4j_rtt_us": ..., "trivial_job_sec": ...}}  # r18: machine calibration
+   "probe": {"py4j_rtt_us": ..., "trivial_job_sec": ...}}  # machine calibration
 
 The headline set runs $SPARK_GRAFT_BENCH_RUNS times (default 3) and the
-reported per-query number is the MEDIAN -- the r9 lesson: single-shot
-captures under driver/judge machine load repeatedly flagged phantom
-regressions (the d3, then d6/k2 stories) that an idle re-run dissolved;
-the median of 3 passes absorbs a one-off loaded pass without hiding a
-real slowdown.  Per-query min/med/max lands in the detail file.
+reported per-query number is the MEDIAN: it absorbs a one-off loaded
+pass without hiding a real slowdown.  Per-query min/med/max lands in
+the detail file.
 
 The full measurement set -- the all-entry sweep and the sec-vs-sf scale
-curve -- is written to BENCH_DETAIL.local.json next to this script
-(UNTRACKED, r14: every driver/judge re-run used to rewrite the tracked
-BENCH_DETAIL.json and leave the repo perpetually dirty post-capture;
-now captures land untracked and committing one is a deliberate
+curve -- is written to the UNTRACKED BENCH_DETAIL.local.json next to
+this script (committing one is a deliberate
 ``cp BENCH_DETAIL.local.json BENCH_DETAIL.json`` snapshot step):
 
 * ``sweep`` -- every registry entry, so a regression in any of the
@@ -35,9 +30,9 @@ now captures land untracked and committing one is a deliberate
   across 100x of data (tests/test_scale_curve.py gates the growth bound).
 * ``first_exec`` -- the one-off first-execution timings of the
   checkpoint-heavy sweep entries (CHECKPOINT_HEAVY): the sweep reports
-  their WARM re-run and the cold number lands here, never against a
-  band (the r12 pl1 phantom-regression lesson).  Headline entries carry
-  the analogous ``first`` field in ``run_stats``.
+  their WARM re-run and the cold number lands here (the r12 pl1
+  phantom-regression lesson).  Headline entries carry the analogous
+  ``first`` field in ``run_stats``.
 * ``leg_timings`` (r15) -- per-leg breakdown of every tagged-union
   entry (registry.LEGS): the entry function is called once (``build``
   -- pays the shared eager checkpoints/training) and each leg is then
@@ -48,23 +43,14 @@ now captures land untracked and committing one is a deliberate
   explicit builder (registry.LEG_BUILDERS) whose thunks own their
   eager work instead.  This exists because multi-leg entries carry up
   to 13 legs behind one sweep number -- a single-leg regression could
-  hide inside a 3x-wide entry band; BASELINE.md states per-leg bands
-  for the >=1 s legs.
+  hide inside the entry's total.
 
-Band check (r16): the capture is compared against the machine-readable
-BASELINE bands (nyc_taxi_dataset_analysis_apache_hive_spark/bands.py -- the same tables BASELINE.md
-states in prose) and every entry/leg/build exceeding its band's HIGH
-edge is NAMED: the compact stdout line carries the violating names
-under ``out_of_band`` (empty list on a clean capture) and the detail
-file carries the full {sec, band} records.  The r15 judge verified 16
-leg bands by hand-carried arithmetic; this makes the next capture
-self-checking.  Below-band numbers never flag (a faster machine is not
-a regression), and the check only runs at sf0.1 (the bands' sf).
+Seconds are reported, not gated: the regression check is the structural
+budget of tests/budget.py, held in tests/test_oracle_parity.py.
 
-Sweep single-shots vs medians (r15): any sweep entry whose first
-timing exceeds SWEEP_MEDIAN_THRESHOLD runs twice more and reports the
-MEDIAN of 3 -- the same r9 anti-phantom treatment the headline block
-gets.  Sub-threshold entries stay single-shot (cheap, low phantom
+Sweep single-shots vs medians: any sweep entry whose first timing
+exceeds SWEEP_MEDIAN_THRESHOLD runs twice more and reports the MEDIAN
+of 3, as the headline block does.  Sub-threshold entries stay single-shot (cheap, low phantom
 risk: a loaded 0.4 s entry cannot be mistaken for a regression worth
 re-timing).
 
@@ -81,7 +67,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from nyc_taxi_dataset_analysis_apache_hive_spark import bands, registry  # noqa: E402
+from nyc_taxi_dataset_analysis_apache_hive_spark import registry  # noqa: E402
 from nyc_taxi_dataset_analysis_apache_hive_spark.session import get_spark  # noqa: E402
 
 HEADLINE = [
@@ -110,16 +96,11 @@ HEADLINE = [
 #: expensive sf is measured last, after the JVM is thoroughly warm)
 CURVE_SFS = ["0.001", "0.01", "0.1"]
 
-#: sweep entries whose cold-vs-warm gap is large enough to flag phantom
-#: regressions (the r12 pl1-at-8.48 story).  Causal note (r14, corrected
-#: from the r13 wording): each invocation builds FRESH DataFrames and
-#: re-executes its eager localCheckpoints, so the warm re-run pays the
-#: checkpoint materialization AGAIN -- the cold/warm delta is
-#: first-execution overhead (codegen/JIT compilation of these entries'
-#: unusually wide plans, page-cache warmth), NOT one-off checkpoint
-#: cost.  These are timed twice in the sweep -- the first pass is
-#: recorded separately under ``first_exec`` and the SWEEP carries the
-#: warm re-run, so BASELINE.md bands state the steady-state cost.
+#: sweep entries with a large cold-vs-warm gap.  Each invocation builds
+#: FRESH DataFrames and re-executes its eager localCheckpoints, so the
+#: gap is first-execution overhead (codegen/JIT of these wide plans,
+#: page-cache warmth), not one-off checkpoint cost.  The first pass is
+#: recorded under ``first_exec``; the sweep carries the warm re-run.
 CHECKPOINT_HEAVY = [
     "pl1_curation_funnel",
     "tv1_text_stats",
@@ -127,11 +108,10 @@ CHECKPOINT_HEAVY = [
 ]
 
 #: sweep entries slower than this (seconds, first pass) are re-run and
-#: reported as a median of 3 -- the r14 judge sweep flagged tv1 at 18.9
-#: under ambient load (band 3.9-12.5) and only a manual controlled
-#: re-time dissolved it; above ~3 s a loaded single shot is
-#: indistinguishable from a real regression, so the harness re-times
-#: structurally instead of depending on judge labor.
+#: reported as a median of 3 -- one loaded single shot once put tv1 at
+#: 18.9 s against a usual 3.9-12.5, and only a controlled re-time
+#: dissolved it; above ~3 s a loaded single shot is indistinguishable
+#: from a real regression, so the harness re-times structurally.
 SWEEP_MEDIAN_THRESHOLD = 3.0
 
 
@@ -143,8 +123,7 @@ def time_legs(spark, sf_dir: str) -> dict[str, dict]:
     (tag-filter branch pruning, or the entry's LEG_BUILDERS thunks when
     the generic filter cannot isolate a leg).  Single-shot by design:
     these are DIAGNOSTIC attributions for locating which leg moved when
-    an entry's (median-of-3) sweep number leaves its band -- the entry
-    totals remain the banded numbers."""
+    an entry's (median-of-3) sweep number moves."""
     from pyspark.sql import functions as F
 
     out: dict[str, dict] = {}
@@ -230,8 +209,7 @@ def median_of_runs(
             # first = pass-1 timing: checkpoint/codegen materialization
             # lands here; an odd n_runs >= 3 median excludes it by
             # construction (n_runs < 3 is the quick-look mode -- its
-            # "median" still tastes the cold pass and must not be
-            # compared against bands)
+            # "median" still tastes the cold pass)
             "first": passes[0][name],
         }
     return med, stats
@@ -279,23 +257,13 @@ def main() -> None:
     # slow non-headline entries: re-run twice, report the median of 3
     # (the r9/r14 anti-phantom treatment -- the pass-1 number for a
     # checkpoint-heavy entry is its COLD execution, which the median
-    # excludes whenever the warm re-runs are faster).  The per-entry
-    # MIN is kept alongside (r17): the band check flags on the min of
-    # the passes, because a steal burst on this round's machine was
-    # observed inflating warm medians past the cold first execution
-    # while a genuine regression is slow in EVERY pass (bands.py
-    # out_of_band docstring).
-    sweep_mins: dict[str, float] = {
-        name: run_stats[name]["min"] for name in timings
-    }
+    # excludes whenever the warm re-runs are faster)
     for name in rest:
         if sweep[name] > SWEEP_MEDIAN_THRESHOLD:
             more = [
                 time_queries(spark, [name], sf_dir)[name] for _ in range(2)
             ]
-            passes = sorted([sweep[name], *more])
-            sweep[name] = passes[1]
-            sweep_mins[name] = passes[0]
+            sweep[name] = sorted([sweep[name], *more])[1]
 
     # 3) per-leg breakdown of the tagged-union entries (JVM fully warm
     # by now, so leg numbers are steady-state marginals)
@@ -313,18 +281,6 @@ def main() -> None:
         registry.QUERIES["a1_group_count"](spark, ddir).collect()  # warm dir
         scale_curve[dec] = time_queries(spark, HEADLINE, ddir)
 
-    # 5) band check (r16): compare this capture against the
-    # machine-readable BASELINE bands so violations are NAMED in the
-    # artifact instead of hand-carried from the markdown tables.  Only
-    # slow-side misses flag; a sweep entry at full sf only (bands are
-    # sf0.1 numbers -- a quick-look run at another sf skips the check).
-    at_band_sf = sf == 0.1
-    out_of_band = (
-        bands.out_of_band(sweep, leg_timings, mins=sweep_mins)
-        if at_band_sf
-        else {"entries": {}, "legs": {}, "builds": {}, "skipped": "sf != 0.1"}
-    )
-
     # untracked capture target (r14): committing a snapshot is a
     # deliberate copy to BENCH_DETAIL.json, so driver/judge re-runs
     # stop dirtying the tree
@@ -336,11 +292,9 @@ def main() -> None:
         "run_stats": run_stats,
         "runs": n_runs,
         "sweep": sweep,
-        "sweep_mins": sweep_mins,
         "first_exec": first_exec,
         "leg_timings": leg_timings,
         "scale_curve": scale_curve,
-        "out_of_band": out_of_band,
         "probe": probe,
         "sf": sf,
     }
@@ -359,24 +313,6 @@ def main() -> None:
         # two fixed-cost calibration numbers (see machine_probe): lets
         # the next round normalize this capture against another machine
         "probe": probe,
-        # violations only (empty lists on a clean capture) -- the full
-        # {sec, band} records live in the detail file; the compact line
-        # stays small (the r4 stdout-overflow lesson).  A skipped check
-        # (sf != 0.1) is NAMED here too, so an empty list always means
-        # "banded and clean", never "not checked" (r16 review).
-        # soft entries (r18: median >1.5x top while the min stayed
-        # in-band -- burst-vs-regression ambiguity, re-time idle) are
-        # suffixed so a hard flag never hides behind one
-        "out_of_band": ["(band check skipped: sf != 0.1)"]
-        if not at_band_sf
-        else sorted(
-            [
-                f"{n} (soft)" if rec.get("soft") else n
-                for n, rec in out_of_band["entries"].items()
-            ]
-            + [*out_of_band["legs"]]
-            + [f"{n}.build" for n in out_of_band["builds"]]
-        ),
     }
     print(json.dumps(out))
 

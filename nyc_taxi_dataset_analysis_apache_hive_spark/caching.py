@@ -23,6 +23,9 @@ session), which is fine for short-lived jobs and the bench/driver sweeps.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 
@@ -79,6 +82,14 @@ def maybe_persist(
     return df.persist()
 
 
+#: the caller's job labels that run_overlapped carries into its workers
+_JOB_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
 def run_overlapped(*thunks):
     """Run independent eager Spark actions from a small thread pool so
     their jobs overlap (optimization guide §2.6: the scheduler happily
@@ -96,24 +107,28 @@ def run_overlapped(*thunks):
     materialize concurrently, which also back-fills the straggler tail
     of each job with the next job's tasks at ANY core count.
 
-    CONSTRAINT (r18, ADVICE): overlapped thunks must not mutate
+    CONSTRAINT (ADVICE): overlapped thunks must not mutate
     SparkContext-GLOBAL state -- ``setCheckpointDir`` (so no
     ``connected_components(checkpoint_dir=...)`` / ``_checkpoint_subdir``
     users), ``conf.set``, catalog names they don't own.  Every current
     call site uses ``localCheckpoint`` or distinct catalog names; the
     set-and-restore pattern those helpers use is only safe run
-    SEQUENTIALLY.  Job groups/descriptions are fine (thread-local).
+    SEQUENTIALLY.  Job groups and descriptions are thread-local, so a
+    pool worker would run its jobs outside the caller's group: each
+    worker copies the caller's values (``_JOB_PROPS``) before its thunk.
     """
-    import os
+    if len(thunks) == 1:
+        return [thunks[0]()]
+    sc = SparkContext._active_spark_context
+    props = {k: sc.getLocalProperty(k) for k in _JOB_PROPS}
 
-    if len(thunks) == 1 or os.environ.get("SPARK_GRAFT_NO_OVERLAP") == "1":
-        # kill switch (also the knob for saturated clusters where
-        # back-filling buys nothing): sequential, same results
-        return [t() for t in thunks]
-    from concurrent.futures import ThreadPoolExecutor
+    def run(thunk):
+        for k, v in props.items():
+            sc.setLocalProperty(k, v)
+        return thunk()
 
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(run, t) for t in thunks]
         return [f.result() for f in futures]
 
 

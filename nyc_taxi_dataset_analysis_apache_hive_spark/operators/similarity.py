@@ -14,7 +14,6 @@ vec_id, so results (and the DuckDB oracle) are stable across engines.
 
 from __future__ import annotations
 
-import os
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame
@@ -582,7 +581,7 @@ def _kmeans_training_table(
     )
 
 
-#: kmeans_train (r17): training inputs at or below this many rows are
+#: kmeans_train: training inputs at or below this many rows are
 #: collected to the driver and Lloyd runs locally (same arithmetic, same
 #: results -- see _lloyd_local); larger inputs keep the distributed loop.
 #: Rationale (guide §1.2: fix the distributed algorithm first): the
@@ -592,11 +591,9 @@ def _kmeans_training_table(
 #: posture this operator documents is train-on-a-bounded-sample anyway,
 #: so at ANY corpus scale the training input is driver-sized by contract.
 #: Scale-adaptive by construction: the threshold is on the actual row
-#: count, env-overridable (SPARK_GRAFT_KMEANS_DRIVER_ROWS; 0 disables),
-#: and oversized inputs fall back to the distributed loop unchanged.
-KMEANS_DRIVER_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_KMEANS_DRIVER_ROWS", "8192")
-)
+#: count, and oversized inputs fall back to the distributed loop
+#: unchanged (tests set it to 0 to force that loop).
+KMEANS_DRIVER_MAX_ROWS = 8192
 
 
 def _jround(x: float | None, scale: int) -> float | None:

@@ -435,10 +435,13 @@ def exact_ks_pairs(
             ),
         )
     )
+    # broadcast the tiny grid explicitly: left to AQE, this self-join of
+    # one reused exchange turned sort-merge or broadcast depending on
+    # which side's stats landed first, so its job count moved per call
     a, b = fr.alias("a"), fr.alias("b")
     return (
         a.join(
-            b,
+            F.broadcast(b),
             (F.col(f"a.{value_col}") == F.col(f"b.{value_col}"))
             & (F.col(f"a.{group_col}") < F.col(f"b.{group_col}")),
         )
@@ -496,10 +499,12 @@ def ks_drift(
         group_col,
         F.explode(F.expr(f"array({grid_items})")).alias("x"),
     ).select(group_col, F.col("x.v").alias("v"), F.col("x.r").alias("_r"))
+    # grid points x groups rows, and one row per group pair below:
+    # broadcast both, as in exact_ks_pairs
     a, b = ranks.alias("a"), ranks.alias("b")
     sketch_ks = (
         a.join(
-            b,
+            F.broadcast(b),
             (F.col("a.v") == F.col("b.v"))
             & (F.col(f"a.{group_col}") < F.col(f"b.{group_col}")),
         )
@@ -509,7 +514,7 @@ def ks_drift(
         )
         .agg(F.max(F.abs(F.col("a._r") - F.col("b._r"))).alias("ks_sketch"))
     )
-    return exact.join(sketch_ks, on=["g1", "g2"]).select(
+    return exact.join(F.broadcast(sketch_ks), on=["g1", "g2"]).select(
         "g1",
         "g2",
         "ks",

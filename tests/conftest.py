@@ -13,10 +13,14 @@ SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"
 
 
+def make_spark():
+    """The test session; ``tests/budget.py`` measures its budget on the same."""
+    return get_spark("tests", master="local[4]", shuffle_partitions=4)
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", master="local[4]", shuffle_partitions=4)
-    yield s
+    yield make_spark()
 
 
 @pytest.fixture(scope="session")

@@ -9,7 +9,7 @@ earlier tests' unreferenced caches mid-assertion."""
 
 from __future__ import annotations
 
-from nyc_taxi_dataset_analysis_apache_hive_spark.caching import CacheScope
+from nyc_taxi_dataset_analysis_apache_hive_spark.caching import CacheScope, run_overlapped
 from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup, textops
 from nyc_taxi_dataset_analysis_apache_hive_spark.sources.readers import load_table
 
@@ -71,3 +71,19 @@ def test_no_scope_keeps_round2_behaviour(spark, sf0001_dir):
     assert not _cache_manager_empty(spark)
     spark.catalog.clearCache()
     assert _cache_manager_empty(spark)
+
+
+def test_overlapped_jobs_keep_the_callers_job_group(spark):
+    """Local properties are per thread: without the copy in
+    run_overlapped, pool workers run their jobs outside the group."""
+    sc = spark.sparkContext
+    group = "test-overlapped-group"
+    sc.setJobGroup(group, "overlapped build")
+    try:
+        run_overlapped(
+            lambda: sc.parallelize(range(4), 2).count(),
+            lambda: sc.parallelize(range(4), 2).count(),
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
