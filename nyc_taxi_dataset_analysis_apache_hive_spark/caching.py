@@ -1,11 +1,11 @@
 """Cache-lifecycle management for operators that ``persist()`` intermediates.
 
 Several operators cache an intermediate frame that their plan references
-twice (MinHash shingle sets, SimHash signatures, the TF relation in
-TF-IDF).  ``DataFrame.persist`` is lazy and session-global: nothing can be
-unpersisted *inside* the operator (the returned DataFrame has not run yet),
-so without lifecycle help a long-lived session running many corpora
-accumulates cache entries until ``spark.catalog.clearCache()``.
+twice (SimHash signatures, the TF relation in TF-IDF, the scored relation
+of contrastive mining).  ``DataFrame.persist`` is lazy and session-global:
+nothing can be unpersisted *inside* the operator (the returned DataFrame
+has not run yet), so without lifecycle help a long-lived session running
+many corpora accumulates cache entries until ``spark.catalog.clearCache()``.
 
 :class:`CacheScope` closes that gap: operators register every frame they
 persist with the caller's scope, and the scope unpersists them all when it
@@ -13,8 +13,8 @@ exits -- after the caller's terminal action, which is the earliest moment
 unpersisting is safe::
 
     with CacheScope() as cs:
-        pairs = minhash_lsh_pairs(docs, persist_shingles=True, cache=cs)
-        pairs.write.parquet(out)          # terminal action runs cached
+        top = tfidf_top_terms(docs, k=3, cache=cs)
+        top.write.parquet(out)            # terminal action runs cached
     # <- every intermediate unpersisted here (blocking)
 
 Passing no scope keeps the round-2 behaviour (persist and leave to the
@@ -69,14 +69,10 @@ class CacheScope:
         return False
 
 
-def maybe_persist(
-    df: DataFrame, flag: bool, cache: CacheScope | None
-) -> DataFrame:
-    """The one persist decision shared by the flagged operators: no-op when
-    ``flag`` is off, scope-tracked when a :class:`CacheScope` is given,
-    plain session-lifetime ``persist()`` otherwise."""
-    if not flag:
-        return df
+def maybe_persist(df: DataFrame, cache: CacheScope | None) -> DataFrame:
+    """The one persist decision shared by the persisting operators:
+    scope-tracked when a :class:`CacheScope` is given, plain
+    session-lifetime ``persist()`` otherwise."""
     if cache is not None:
         return cache.persist(df)
     return df.persist()
@@ -107,15 +103,19 @@ def run_overlapped(*thunks):
     materialize concurrently, which also back-fills the straggler tail
     of each job with the next job's tasks at ANY core count.
 
-    CONSTRAINT (ADVICE): overlapped thunks must not mutate
-    SparkContext-GLOBAL state -- ``setCheckpointDir`` (so no
-    ``connected_components(checkpoint_dir=...)`` / ``_checkpoint_subdir``
-    users), ``conf.set``, catalog names they don't own.  Every current
-    call site uses ``localCheckpoint`` or distinct catalog names; the
-    set-and-restore pattern those helpers use is only safe run
-    SEQUENTIALLY.  Job groups and descriptions are thread-local, so a
-    pool worker would run its jobs outside the caller's group: each
-    worker copies the caller's values (``_JOB_PROPS``) before its thunk.
+    CONSTRAINT: overlapped thunks must not mutate SparkContext-GLOBAL
+    state -- the checkpoint directory, session confs, catalog names they
+    don't own -- because every pool thread shares it and a
+    set-and-restore is only safe run sequentially.  No engine module
+    writes that state: lineage cuts are ``localCheckpoint``, confs are
+    set only in ``session.py``, and the only ``setLocalProperty`` is the
+    one below.  ``tests/test_surface_conventions.py::
+    test_no_sparkcontext_global_writes_outside_their_owner`` fails on any
+    new call that sets the checkpoint directory, on ``conf.set`` outside
+    ``session.py`` and on ``setLocalProperty`` outside this function.
+    Job groups and descriptions are thread-local, so a pool worker would
+    run its jobs outside the caller's group: each worker copies the
+    caller's values (``_JOB_PROPS``) before its thunk.
     """
     if len(thunks) == 1:
         return [thunks[0]()]

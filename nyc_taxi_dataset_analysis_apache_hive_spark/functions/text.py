@@ -81,13 +81,6 @@ def ngrams_from_tokens(toks: Column, n: int = 3) -> Column:
     )
 
 
-def word_ngrams(text: str | Column = "text", n: int = 3) -> Column:
-    """Inline convenience form of :func:`ngrams_from_tokens` (tokenizes and
-    shingles in one expression).  Prefer the two-step form in hot paths --
-    see the PERF note above."""
-    return ngrams_from_tokens(tokens(text), n)
-
-
 def normalized_text(text: str | Column = "text") -> Column:
     """Canonical form for fingerprinting: lowercase, collapsed whitespace."""
     t = F.col(text) if isinstance(text, str) else text
@@ -114,8 +107,3 @@ def stopword_hits_from_tokens(toks: Column, lang: str = "en") -> Column:
     """
     sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
     return F.size(F.filter(toks, lambda x: F.array_contains(sw, x))).cast("long")
-
-
-def stopword_hits(text: str | Column = "text", lang: str = "en") -> Column:
-    """Inline convenience form of :func:`stopword_hits_from_tokens`."""
-    return stopword_hits_from_tokens(tokens(text), lang)

@@ -22,7 +22,6 @@ oracle can reproduce signatures exactly (md5 is identical everywhere).
 from __future__ import annotations
 
 import weakref
-from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -248,8 +247,6 @@ def minhash_lsh_pairs(
     n_bands: int = 4,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
-    persist_shingles: bool = False,
-    cache: CacheScope | None = None,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash LSH + exact-Jaccard verification.
@@ -259,28 +256,18 @@ def minhash_lsh_pairs(
     shingle-set Jaccard on candidates only.  Returns
     (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard >= threshold.
 
-    ``persist_shingles``: the shingle sets feed both the signature pass and
-    the Jaccard verify.  Default (False) recomputes them -- measured cheaper
-    at sf0.1 on local[32], where materializing 260k string arrays costs more
-    than re-running the tokenize+shingle projection.  On a cluster at
-    100-TB scale, tokenize+shingle dominates CPU and the recompute doubles
-    it, so pass True to cache the set frame (MEMORY_AND_DISK) and share it
-    between the two passes.  Same results either way (bench numbers in
-    BASELINE.md).  Cache lifetime: pass a :class:`~..caching.CacheScope` as
-    ``cache`` and the shingle frame unpersists when the scope exits (after
-    the caller's terminal action); without a scope the frame stays cached
-    for the session -- fine for one-shot jobs, but a long-lived
-    many-corpora application should use the scope (or the default
-    recompute path).
+    The shingle sets feed both the signature pass and the Jaccard verify,
+    and are recomputed for each rather than persisted -- measured cheaper
+    at sf0.1 on local[32], where materializing 260k string arrays costs
+    more than re-running the tokenize+shingle projection (bench numbers
+    in BASELINE.md).
 
     ``signatures``: an already-materialized :func:`minhash_signatures`
     frame (same n_hashes/shingle_n) skips the internal signature
     derivation -- the sharing hook for callers that also feed the same
     signatures to the admission path (the d3 registry entry).
     """
-    shingle_frame = maybe_persist(
-        _shingle_sets(docs, shingle_n), persist_shingles, cache
-    )
+    shingle_frame = _shingle_sets(docs, shingle_n)
     sigs = (
         signatures
         if signatures is not None
@@ -497,7 +484,6 @@ def simhash_64(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def simhash_near_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
-    persist_signatures: bool = True,
     cache: CacheScope | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs with Hamming distance <= max_hamming.
@@ -510,7 +496,7 @@ def simhash_near_pairs(
     means more, narrower chunks -- wider buckets, more candidates: the
     usual recall/cost dial.
 
-    ``persist_signatures`` (default True): the chunk self-join references
+    The signature frame is persisted: the chunk self-join references
     the signature table twice, and recomputing it re-runs the whole
     tokenize+hash+bit-sum pipeline (measured ~half of d5's runtime at
     sf0.1).  The signature frame is tiny -- (doc_id, long) per document,
@@ -530,7 +516,7 @@ def simhash_near_pairs(
     base_w, extra = divmod(SIMHASH_BITS, n_chunks)
     widths = [base_w + (1 if i < extra else 0) for i in range(n_chunks)]
     offsets = [sum(widths[:i]) for i in range(n_chunks)]
-    sh = maybe_persist(simhash_64(docs), persist_signatures, cache)
+    sh = maybe_persist(simhash_64(docs), cache)
     chunks = sh.select(
         "doc_id",
         "simhash",
@@ -570,44 +556,11 @@ def simhash_near_pairs(
     ).filter(F.col("hamming") <= max_hamming)
 
 
-@_contextmanager
-def _checkpoint_subdir(sc, checkpoint_dir: str, prefix: str):
-    """Point the SparkContext's GLOBAL checkpoint location at a fresh
-    ``checkpoint_dir/<prefix>-<uuid>`` for the duration of the block and
-    restore the previous location (set or unset) exactly on exit.
-
-    The unique subdirectory keeps this caller's checkpoint bookkeeping
-    from ever touching checkpoints written by other users of the context;
-    the exact restore matters because ``getCheckpointDir()`` returns the
-    RESOLVED location (Spark's ``setCheckpointDir`` appends its own
-    random-UUID subdirectory), so restoring through the public setter
-    would nest the app-global location one directory deeper per call.
-    The faithful restore writes the Scala var directly
-    (``checkpointDir_$eq`` with the saved Option -- internal API, present
-    in Spark 3.x-4.x but unguaranteed); the public-setter fallback is
-    lossy-but-safe."""
-    import uuid
-
-    prev_ck = sc.getCheckpointDir()
-    ck_sub = f"{checkpoint_dir.rstrip('/')}/{prefix}-{uuid.uuid4().hex}"
-    sc.setCheckpointDir(ck_sub)
-    try:
-        yield ck_sub
-    finally:
-        try:
-            # scala.Option.apply(null) is None, so this restores "unset"
-            # exactly as well as a previously-resolved directory.
-            getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-                sc._jvm.scala.Option.apply(prev_ck)
-            )
-        except Exception:
-            try:
-                if prev_ck is not None:
-                    # lossy fallback: re-resolves one extra UUID level, but
-                    # later checkpoints still land under the user's tree
-                    sc.setCheckpointDir(prev_ck)
-            except Exception:
-                pass  # best-effort; never mask the real result/error
+#: auto mode flips pointer doubling on from this round if labels are
+#: still moving: clique-ish dup graphs (diameter 2-3) converge well
+#: before it, so they never pay the extra join; anything still
+#: unconverged is diameter > ~6 -- exactly doubling's territory
+_SHORTCUT_AUTO_AT = 6
 
 
 def connected_components(
@@ -615,7 +568,6 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
     on_nonconvergence: str = "raise",
     shortcut: bool | None = None,
 ) -> DataFrame:
@@ -635,31 +587,9 @@ def connected_components(
     (one 1-row aggregate per round) proves the fixpoint without joining
     old labels against new.
 
-    ``checkpoint_dir``: by default lineage is truncated with
-    ``localCheckpoint`` -- executor-local storage, fine on local[*] but
-    NON-RELIABLE on a cluster (an executor loss mid-iteration kills the job
-    because the lineage was already cut).  For cluster runs pass a reliable
-    (HDFS/S3) directory: iterations then use ``checkpoint()``, which
-    survives executor loss.  Each iteration's reliable checkpoint is
-    best-effort deleted once it is two checkpoints stale (Spark's own
-    cleaner, ``spark.cleaner.referenceTracking.cleanCheckpoints``, is off
-    by default and GC-driven), so at most ~2 label snapshots + the edge
-    list live on disk instead of max_iter copies.  The loop checkpoints
-    into a UNIQUE per-call subdirectory of ``checkpoint_dir``, so its
-    directory-diff bookkeeping (and deletions) can never touch checkpoints
-    written by other users of the SparkContext.  Note ``setCheckpointDir``
-    is SparkContext-global: the PREVIOUS checkpoint directory (set or
-    unset) is restored in a ``finally`` once the loop finishes, so later
-    ``checkpoint()`` users in the same app land back in their own
-    location; callers concurrent WITH the loop still write into this
-    subdirectory (their files are left alone -- only dirs this loop
-    observed being created by its own eager checkpoints are ever deleted,
-    and the race window of a foreign checkpoint landing inside one of this
-    loop's before/after snapshots is the known sharp edge of a global
-    checkpoint location).
-
     ``shortcut``: add a pointer-doubling step per round (label <-
-    label(label(v))), turning O(diameter) rounds into O(log diameter)
+    label(label(v)), the large-star idea of Kiveris et al., MapReduce
+    CC), turning O(diameter) rounds into O(log diameter)
     for one extra equi-join per round -- measured a wash-to-slight-loss
     on clique-ish near-dup graphs (diameter 2-3) and the difference
     between converging and NOT converging on long-chain graphs
@@ -687,124 +617,19 @@ def connected_components(
         raise ValueError(
             f"on_nonconvergence must be 'raise' or 'warn', got {on_nonconvergence!r}"
         )
-    if checkpoint_dir is None:
-        return _propagate_min_labels(
-            pairs, a_col, b_col, max_iter, _lazy_local_ckpt,
-            on_nonconvergence, shortcut,
-        )
-
-    sc = pairs.sparkSession.sparkContext
-    with _checkpoint_subdir(sc, checkpoint_dir, "cc") as ck_sub:
-
-        def _hadoop_fs():
-            hpath = sc._jvm.org.apache.hadoop.fs.Path(ck_sub)
-            return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath
-
-        def _list_rdd_dirs() -> set[str]:
-            """rdd-* checkpoint dirs under checkpoint_dir/<uuid>/."""
-            try:
-                fs, base = _hadoop_fs()
-                out = set()
-                for st in fs.listStatus(base):
-                    if st.isDirectory():
-                        for sub in fs.listStatus(st.getPath()):
-                            out.add(str(sub.getPath()))
-                return out
-            except Exception:
-                return set()
-
-        # Deletion lags TWO checkpoints behind: at iteration N the loop
-        # still joins labels_{N-1} (for messages and the convergence count)
-        # after new_labels_N is checkpointed, so labels_{N-1} must survive
-        # call N and is deleted at call N+1.  The edge-list checkpoint
-        # (first call) is joined every iteration and is never deleted.
-        pinned: set[str] = set()
-        pending: list[list[str]] = []  # [..., dirs(call N-1)] newest last
-        first_call = True
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            nonlocal first_call
-            before = _list_rdd_dirs()
-            out = df.checkpoint(eager=True)
-            created = sorted(_list_rdd_dirs() - before)
-            if first_call:
-                pinned.update(created)
-                first_call = False
-                return out
-            pending.append(created)
-            if len(pending) > 2:
-                # best-effort delete (Spark's own cleaner is off by default
-                # and GC-driven)
-                try:
-                    fs, _ = _hadoop_fs()
-                    for path in pending.pop(0):
-                        if path not in pinned:
-                            fs.delete(
-                                sc._jvm.org.apache.hadoop.fs.Path(path), True
-                            )
-                except Exception:
-                    pass  # cleanup only; never fail the job over it
-            return out
-
-        # The loop materializes every checkpoint eagerly (and the returned
-        # labels frame is itself checkpointed), so nothing still needs
-        # ck_sub after this returns.
-        return _propagate_min_labels(
-            pairs, a_col, b_col, max_iter, _ckpt, on_nonconvergence,
-            shortcut,
-        )
-
-
-#: auto mode flips pointer doubling on from this round if labels are
-#: still moving: clique-ish dup graphs (diameter 2-3) converge well
-#: before it, so they never pay the extra join; anything still
-#: unconverged is diameter > ~6 -- exactly doubling's territory
-_SHORTCUT_AUTO_AT = 6
-
-
-def _lazy_local_ckpt(df: DataFrame) -> DataFrame:
-    """The local-checkpoint spelling of the CC loop's lineage cut,
-    NON-eager (r18, guide §2.6 job-count discipline): the loop's own
-    1-row convergence probe is the next action on every frame this
-    wraps, so it both materializes the checkpoint AND reads the label
-    sum in ONE job -- the eager spelling paid a separate count() job
-    per round (2 jobs/round -> 1; ~4-10 scheduling round-trips saved
-    per clustering call).  The RELIABLE checkpoint()'s wrapper stays
-    eager: its directory-diff bookkeeping brackets the write."""
-    return df.localCheckpoint(eager=False)
-
-
-def _propagate_min_labels(
-    pairs: DataFrame,
-    a_col: str,
-    b_col: str,
-    max_iter: int,
-    _ckpt,
-    on_nonconvergence: str = "raise",
-    shortcut: bool | None = None,
-) -> DataFrame:
-    """Min-label-propagation loop shared by the local- and
-    reliable-checkpoint paths of :func:`connected_components`.
-
-    ``shortcut=True`` adds a pointer-doubling step per round (the
-    large-star idea of Kiveris et al., MapReduce CC): after the edge
-    propagation, each vertex re-reads its LABEL's label
-    (``label <- label(label(v))``, one labels-to-labels equi-join --
-    sound because a label is always a graph vertex and labels are
-    monotone non-increasing, so composing can only shrink).  Path
-    halving turns O(diameter) rounds into O(log diameter) at the price
-    of one extra shuffle join per round -- the right trade exactly when
-    the graph has long chains (each round's fixed cost is the cluster
-    bottleneck), and a measured wash on clique-ish near-dup graphs
-    whose diameter is already 2-3 (capture in BASELINE.md)."""
     # Materialize the edge list ONCE: every iteration's join re-evaluates
     # its inputs, and `pairs` is typically the whole LSH/Jaccard pipeline --
     # without this checkpoint each round would recompute it from scratch
-    # (measured 5x slower at sf0.1).
-    edges = _ckpt(
+    # (measured 5x slower at sf0.1).  Every cut in the loop is NON-eager
+    # (guide §2.6 job-count discipline): the 1-row convergence probe is
+    # the next action on every cut frame, so it materializes the
+    # checkpoint AND reads the label sum in ONE job -- the eager spelling
+    # paid a separate count() job per round.
+    edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
         .distinct()
+        .localCheckpoint(eager=False)
     )
     labels = (
         edges.select(F.col("src").alias("id"))
@@ -855,7 +680,7 @@ def _propagate_min_labels(
             propagated = propagated.join(
                 par, F.col("label") == F.col("_pid")
             ).select("id", F.col("_plabel").alias("label"))
-        new_labels = _ckpt(propagated)
+        new_labels = propagated.localCheckpoint(eager=False)
         new_sum = _label_sum(new_labels)
         labels = new_labels
         if new_sum == prev_sum:
@@ -875,7 +700,7 @@ def _propagate_min_labels(
             raise RuntimeError(msg)
         import warnings
 
-        warnings.warn(msg, RuntimeWarning, stacklevel=3)
+        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -1140,7 +965,6 @@ def winnow_near_pairs(
     threshold: float = 0.35,
     max_doc_freq: int | None = 50,
     text_col: str = "text",
-    checkpoint_dir: str | None = None,
     prints_impl: str = "arrow",
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) pairs whose winnowed RARE-print sets
@@ -1170,54 +994,14 @@ def winnow_near_pairs(
     subtrees cannot share an exchange -- without the cut the per-char
     md5 + winnow pass re-runs four times.
 
-    ``checkpoint_dir``: by default the cuts are ``localCheckpoint`` --
-    executor-local, fine on local[*] but lost on executor failure.  Pass
-    a reliable (HDFS/S3) directory for cluster runs: the cuts become
-    ``checkpoint()`` into a unique per-call subdirectory, surviving
-    executor loss.  The checkpointed print/index frames BACK the
-    returned DataFrame, so the subdirectory must outlive its
-    consumption -- cleanup of ``checkpoint_dir`` is the caller's
-    (typically the job teardown's), exactly as with any
-    ``sc.setCheckpointDir`` workload.
-    """
-    if checkpoint_dir is None:
-        def _cut(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
-        return _winnow_near_pairs_body(
-            docs, k, window, threshold, max_doc_freq, text_col, _cut,
-            prints_impl,
-        )
-    with _checkpoint_subdir(
-        docs.sparkSession.sparkContext, checkpoint_dir, "winnow"
-    ):
-        # checkpoint() is eager here, so both cuts materialize inside the
-        # managed block; the restored global location never sees them
-        return _winnow_near_pairs_body(
-            docs, k, window, threshold, max_doc_freq, text_col,
-            lambda df: df.checkpoint(eager=True), prints_impl,
-        )
-
-
-def _winnow_near_pairs_body(
-    docs: DataFrame,
-    k: int,
-    window: int,
-    threshold: float,
-    max_doc_freq: int | None,
-    text_col: str,
-    _cut,
-    prints_impl: str = "arrow",
-) -> DataFrame:
-    """Shared plan of :func:`winnow_near_pairs` over either cut flavor.
-
     ``prints_impl``: "arrow" (default -- the measured 2.5x-faster
-    Arrow-batched gram-hash pass, r8 capture in BASELINE.md) or "hof"
-    (the pure-JVM form, zero Python workers; byte-identical output)."""
+    Arrow-batched gram-hash pass, capture in BASELINE.md) or "hof"
+    (the pure-JVM form, zero Python workers; byte-identical output).
+    """
     prints_fn = {"arrow": winnow_prints_arrow, "hof": winnow_prints}[
         prints_impl
     ]
-    ps = _cut(prints_fn(docs, k, window, text_col))
+    ps = prints_fn(docs, k, window, text_col).localCheckpoint(eager=True)
     inv = ps.select("doc_id", F.explode("prints").alias("p"))
     if max_doc_freq is not None:
         hot = (
@@ -1226,7 +1010,7 @@ def _winnow_near_pairs_body(
             .filter(F.col("df") > max_doc_freq)
             .select("p")
         )
-        inv = _cut(inv.join(hot, "p", "left_anti"))
+        inv = inv.join(hot, "p", "left_anti").localCheckpoint(eager=True)
     sizes = inv.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_p"))
     a = inv.select(F.col("doc_id").alias("doc_a"), "p")
     b = inv.select(F.col("doc_id").alias("doc_b"), "p")

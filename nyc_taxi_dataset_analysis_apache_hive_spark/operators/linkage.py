@@ -354,19 +354,3 @@ def apply_canonical(
         )
         .drop(f"{_LINK_PREFIX}name", f"{_LINK_PREFIX}canon")
     )
-
-
-def linkage_report(
-    records: DataFrame,
-    name_col: str,
-    id_col: str,
-    max_dist: int = 3,
-    block_keys: tuple[BlockKey, ...] = DEFAULT_BLOCK_KEYS,
-    max_block: int | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Convenience bundle: (pairs, best, canon) over one dictionary."""
-    d = name_dictionary(records, name_col, id_col)
-    p = blocked_pairs(
-        d, max_dist=max_dist, block_keys=block_keys, max_block=max_block
-    )
-    return p, best_match(p), canonical_map(p, d)

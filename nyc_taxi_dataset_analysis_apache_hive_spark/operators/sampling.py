@@ -546,7 +546,6 @@ def global_rank(
     rank_col: str = "rank",
     n_partitions: int | None = None,
     total_col: str | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact 0-based global rank under a TOTAL order, at scale: the
     distributed materialization of ``row_number() OVER (ORDER BY ...)``
@@ -595,33 +594,12 @@ def global_rank(
     must NOT re-aggregate the corpus for it).  The 33-bit local index
     caps a range partition at ~8.5e9 rows -- size ``n_partitions`` so a
     partition is one task's worth of rows and the cap never binds.
-
-    ``checkpoint_dir``: the default barrier is ``localCheckpoint`` --
-    executor-local storage, fine on local[*] but NON-RELIABLE on a
-    cluster (an executor loss invalidates the cut lineage and kills the
-    job mid-materialization).  For cluster runs pass a reliable
-    (HDFS/S3) directory: the ranged corpus is then ``checkpoint()``-ed
-    there EAGERLY (construction runs the range job immediately -- the
-    same posture as ``dedup.connected_components(checkpoint_dir=)``),
-    into a unique per-call subdirectory so no other checkpoint user of
-    the SparkContext is disturbed; the caller owns cleanup of that
-    subdirectory after the downstream write lands.
     """
     from pyspark.sql.window import Window
 
-    staged = _ranged_with_mid(df, order_cols, n_partitions)
-    if checkpoint_dir is None:
-        ranged = staged.localCheckpoint(eager=False)
-    else:
-        from .dedup import _checkpoint_subdir
-
-        # eager inside the block: a lazy reliable checkpoint would
-        # resolve the directory at first ACTION, after the previous
-        # location was restored
-        with _checkpoint_subdir(
-            df.sparkSession.sparkContext, checkpoint_dir, "grank"
-        ):
-            ranged = staged.checkpoint(eager=True)
+    ranged = _ranged_with_mid(df, order_cols, n_partitions).localCheckpoint(
+        eager=False
+    )
     local = ranged.withColumn(
         "__gr_pid", F.shiftrightunsigned(F.col("__gr_mid"), 33).cast("int")
     ).withColumn(
@@ -668,7 +646,6 @@ def curriculum_shards(
     n_shards: int = DEFAULT_N_SHARDS,
     id_col: str = "doc_id",
     descending: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Curriculum-ordered serving shards: where :func:`shuffle_shards`
     randomizes, this materializes the corpus in SCORE order (best first
@@ -698,7 +675,6 @@ def curriculum_shards(
         df,
         [score, F.col(id_col).asc_nulls_last()],
         total_col="__cs_total",
-        checkpoint_dir=checkpoint_dir,
     )
     return ranked.withColumn(
         "shard_id",

@@ -312,7 +312,7 @@ def contrastive_mining(
     # Cache LIFETIME follows the house rule (caching.py): pass a
     # CacheScope to unpersist after the terminal action; no scope =
     # session-lifetime persist (the bench/driver-sweep posture).
-    scored = maybe_persist(scored, True, cache)
+    scored = maybe_persist(scored, cache)
     neg = scored.filter(F.col("q_label") != F.col("n_label"))
     pos = scored.filter(F.col("q_label") == F.col("n_label"))
     w_desc = Window.partitionBy("query_id").orderBy(
@@ -819,7 +819,6 @@ def kmeans_train(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     quantize: int | None = None,
-    dead_cells: list | None = None,
     reseed_dead: bool = False,
     return_report: bool = False,
 ) -> DataFrame | tuple[DataFrame, dict[str, list[int]]]:
@@ -888,13 +887,6 @@ def kmeans_train(
     the PRE-reseed deads, so the report shows how often re-seeding had
     to fire.)
 
-    ``dead_cells`` (r14, DEPRECATED since r15 -- accepted for one more
-    round): the prior out-parameter spelling of the same per-iteration
-    dead counts; pass a list to have the counts appended to it.  A
-    mutable out-list is easy to misuse from wrappers that discard it
-    silently -- prefer ``return_report=True`` and read the counts from
-    the returned report.
-
     ``reseed_dead`` (r14): instead of carrying a dead cluster's
     centroid forward, re-seed it from the FURTHEST assigned point --
     the standard k-means empty-cluster repair (lowest elected cosine,
@@ -923,7 +915,6 @@ def kmeans_train(
     from ..functions.vectors import as_double_array, dot, l2_norm
 
     report: dict[str, list[int]] = {"dead_cells": [], "reseeds": []}
-    want_dead = return_report or dead_cells is not None
     if KMEANS_DRIVER_MAX_ROWS > 0:
         head = (
             embeddings.select(
@@ -940,10 +931,8 @@ def kmeans_train(
             cent_rows, rep = _lloyd_local(
                 rows, n_centroids, n_iter, quantize, reseed_dead
             )
-            if want_dead:
+            if return_report:
                 report = rep
-                if dead_cells is not None:
-                    dead_cells.extend(rep["dead_cells"])
             spark = embeddings.sparkSession
             if cent_rows:
                 out = inline_rows(
@@ -1044,7 +1033,7 @@ def kmeans_train(
                 assigned = assigned.localCheckpoint(eager=True)
             means = vector_mean_by_key(assigned, "cent_id", "v")
             n_live = None
-            if want_dead or reseed_dead:
+            if return_report or reseed_dead:
                 # dead-cell visibility / reseed (r14): a cluster absent
                 # from the mean table received no vectors this round.
                 # The mean table is <= n_centroids rows, so
@@ -1053,10 +1042,8 @@ def kmeans_train(
                 # of the assignment pass
                 means = means.coalesce(1).localCheckpoint(eager=True)
                 n_live = means.count()
-            if want_dead:
+            if return_report:
                 report["dead_cells"].append(n_centroids - n_live)
-                if dead_cells is not None:
-                    dead_cells.append(n_centroids - n_live)
             nxt = F.coalesce("centroid", "cent_emb")
             if quantize is not None:
                 # quantize AFTER the empty-cluster coalesce so
@@ -1107,7 +1094,7 @@ def kmeans_train(
                 paired = dead_slots.join(far, "__r").select(
                     "cent_id", "__reseed"
                 )
-                if want_dead:
+                if return_report:
                     # exact reseed count: a dead slot only changes if a
                     # furthest candidate exists (fewer assigned vectors
                     # than dead slots leaves the tail carried forward).
@@ -1119,7 +1106,7 @@ def kmeans_train(
                     "cent_id",
                     F.coalesce(reseed, F.col("cent_emb")).alias("cent_emb"),
                 )
-            if want_dead:
+            if return_report:
                 report["reseeds"].append(n_reseeded)
             cents = (
                 nxt_cents.coalesce(1)
@@ -1179,7 +1166,7 @@ class IVFIndex(NamedTuple):
     7.5-8.6 s vs 7.2-8.0 s unshared -- materializing 2k
     payload-carrying rows plus the extra stage costs MORE than the
     ~0.5 s recompute it saves, so the k2 entry deliberately does NOT
-    use this (the persist_shingles recompute-by-default posture).  At
+    use this (the minhash_lsh_pairs shingle-recompute posture).  At
     deployment scale the assignment is a full corpus scan +
     map-side-combined shuffle, and paying it once is the right
     default -- that is what this artifact is for."""
@@ -1510,7 +1497,6 @@ def semantic_dedup(
     n_centroids: int = 16,
     centroids: DataFrame | None = None,
     centroid_offset: int = 100,
-    checkpoint_dir: str | None = None,
     assigned: DataFrame | None = None,
     components: DataFrame | None = None,
 ) -> DataFrame:
@@ -1531,10 +1517,10 @@ def semantic_dedup(
     comments for each).  ``threshold`` defaults to 0.9.  With
     ``components=`` the label table DEFINES the dedup semantics and
     the output needs nothing but it, so passing ANY other
-    configuration parameter (``centroids``/``assigned``/``threshold``/
-    ``checkpoint_dir``) alongside raises -- it would be silently
-    ignored while implying the labels came from that configuration
-    (the curate_corpus ``pairs=`` guard, applied here).
+    configuration parameter (``centroids``/``assigned``/``threshold``)
+    alongside raises -- it would be silently ignored while implying the
+    labels came from that configuration (the curate_corpus ``pairs=``
+    guard, applied here).
 
     Returns (vec_id, sem_cluster, keep) for EVERY input vector; vectors
     in no near-pair are their own singleton cluster and keep themselves.
@@ -1556,14 +1542,13 @@ def semantic_dedup(
 
     if components is not None and (
         threshold is not None
-        or checkpoint_dir is not None
         or assigned is not None
         or centroids is not None
     ):
         raise ValueError(
             "semantic_dedup: components= supplies the precomputed "
             "cluster labels, which makes every stage-1/2/3 parameter "
-            "(centroids/assigned/threshold/checkpoint_dir) dead -- "
+            "(centroids/assigned/threshold) dead -- "
             "passing any of them alongside suggests the labels came "
             "from THAT configuration, which nothing checks; drop them"
         )
@@ -1585,13 +1570,7 @@ def semantic_dedup(
 
     if components is None:
         pairs = semantic_near_pairs(assigned, threshold)
-        # checkpoint_dir (reliable HDFS/S3 checkpoints for cluster
-        # runs, vs the local[*] default of executor-local
-        # localCheckpoint) flows to the one iterative stage, the CC
-        # label loop
-        comp = _dedup.connected_components(
-            pairs, a_col="id_a", b_col="id_b", checkpoint_dir=checkpoint_dir
-        )
+        comp = _dedup.connected_components(pairs, a_col="id_a", b_col="id_b")
     else:
         # components= (r13): precomputed (doc_id, cluster_id) labels --
         # the compute-once hook for the ITERATIVE stage.  The k3 entry

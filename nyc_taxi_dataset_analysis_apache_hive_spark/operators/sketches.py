@@ -231,18 +231,20 @@ def rank_over_range(
     """One row (n, rank_est, n_le_est) for [start, end): the estimated
     fraction (and count) of values ≤ ``value``.  ``n`` is exact -- KLL
     tracks the true item count -- so ``n_le_est = round(rank*n)`` is
-    directly comparable to an exact filter-count."""
+    directly comparable to an exact filter-count.
+
+    An empty range merges to an empty sketch, whose rank Spark refuses
+    (``KLL_INVALID_INPUT_SKETCH_BUFFER``): there ``rank_est`` is NULL
+    (no fraction of nothing) and ``n_le_est`` is 0.  CASE WHEN evaluates
+    the rank only on the branch that takes it."""
     merged = _merged_kll(sketches, start, end)
+    n = F.kll_sketch_get_n_double("merged")
+    rank = F.kll_sketch_get_rank_double("merged", F.lit(float(value)))
     return merged.select(
-        F.kll_sketch_get_n_double("merged").alias("n"),
-        F.kll_sketch_get_rank_double("merged", F.lit(float(value))).alias(
-            "rank_est"
-        ),
-        F.round(
-            F.kll_sketch_get_rank_double("merged", F.lit(float(value)))
-            * F.kll_sketch_get_n_double("merged")
-        )
-        .cast("long")
+        n.alias("n"),
+        F.when(n > 0, rank).alias("rank_est"),
+        F.when(n > 0, F.round(rank * n).cast("long"))
+        .otherwise(F.lit(0).cast("long"))
         .alias("n_le_est"),
     )
 

@@ -226,7 +226,6 @@ def vocabulary(
 def tfidf_top_terms(
     docs: DataFrame | None = None,
     k: int = 5,
-    persist_tf: bool = True,
     cache: CacheScope | None = None,
     *,
     toks: DataFrame | None = None,
@@ -243,10 +242,10 @@ def tfidf_top_terms(
     join is linear in corpus tokens -- stop-token skew degrades to a large
     (AQE-splittable) hash join, never a product.
 
-    ``persist_tf`` (default True): doc-frequencies derive from the tf
-    frame, so the join would otherwise re-run the dominant tokenize +
-    explode + (doc, token) aggregation a second time (column pruning makes
-    the two subtrees non-identical, so exchange reuse does not apply).
+    The tf frame is persisted: doc-frequencies derive from it, so the
+    join would otherwise re-run the dominant tokenize + explode +
+    (doc, token) aggregation a second time (column pruning makes the two
+    subtrees non-identical, so exchange reuse does not apply).
     The tf frame is the compact (doc, token, count) relation -- far
     smaller than the corpus text.  Pass a :class:`~..caching.CacheScope`
     as ``cache`` to unpersist it when the caller's scope exits; without a
@@ -255,9 +254,9 @@ def tfidf_top_terms(
     ``toks=`` / ``tf=`` (r18): a precomputed token table skips the
     tokenize projection; a precomputed (persisted) :func:`
     term_frequencies` relation replaces the tf subtree entirely (the
-    caller then owns its persistence -- ``persist_tf``/``cache`` are
-    ignored).  The corpus size N comes from whichever of toks/docs is
-    given (both are one row per document).
+    caller then owns its persistence -- ``cache`` is ignored).  The
+    corpus size N comes from whichever of toks/docs is given (both are
+    one row per document).
     """
     if toks is not None and docs is not None:
         raise ValueError(
@@ -267,9 +266,7 @@ def tfidf_top_terms(
     if base is None:
         raise ValueError("either docs or toks= is required")
     if tf is None:
-        tf = maybe_persist(
-            term_frequencies(docs, toks=toks), persist_tf, cache
-        )
+        tf = maybe_persist(term_frequencies(docs, toks=toks), cache)
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("doc_freq"))
     total = base.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (

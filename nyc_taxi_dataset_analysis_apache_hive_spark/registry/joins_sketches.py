@@ -464,8 +464,8 @@ def a10_distinct_counts(spark, sf):
     # costs no wall-clock (an eager materialization measured SLOWER,
     # 4.1 vs 3.6 s single-shot, by serializing them + paying the write).
     # On a saturated 1000-executor cluster the duplicate pass is real
-    # cost: persist() the subtree there (the dedup persist_shingles
-    # precedent -- a wash locally, exists for cluster runs).
+    # cost: persist() the subtree there (minhash_lsh_pairs measured the
+    # same trade for its shingle sets: a wash locally).
     shx = (
         docs.select("source", tokens("text").alias("toks"))
         .select(
@@ -487,7 +487,11 @@ def a10_distinct_counts(spark, sf):
     est_sets = sketches.set_overlap(
         sketches.theta_rollup(shx, "source", "s"), "src0", "src1"
     )
-    both = exact_sets.crossJoin(est_sets)
+    # left join: with no shingles in either source the rollup has no
+    # parts, est_sets no row, and the exact side's one row must survive.
+    # The broadcast hint keeps the cross join's plan: unhinted, the left
+    # join added 4 stages at sf0.001.
+    both = exact_sets.join(F.broadcast(est_sets), how="left")
     theta_legs = []
     # Tolerance base: theta set-algebra error scales with the size of the
     # LARGEST sketch involved, not the result -- intersection error in
@@ -503,8 +507,10 @@ def a10_distinct_counts(spark, sf):
         ("src0&src1", "x_inter", "n_intersection", "x_union"),
         ("src0|src1", "x_union", "n_union", "x_union"),
     ):
-        ok_t = F.abs(F.col(e_col) - F.col(x_col)) <= F.greatest(
-            0.02 * F.col(tol_col), F.lit(2)
+        # no estimate row: exact only when there is nothing to estimate
+        ok_t = F.expr(
+            f"coalesce(abs({e_col} - {x_col}) <= greatest(0.02D * {tol_col}, 2),"
+            " x_union = 0)"
         )
         theta_legs.append(
             both.select(
@@ -525,9 +531,10 @@ def a10_distinct_counts(spark, sf):
     kll = sketches.rank_over_range(
         day_agg.select("period", F.col("ksk").alias("sketch")), 35.0
     )
+    # coalesce: over zero events the sums are NULL, the counts are 0
     ev_exact = day_agg.agg(
-        F.sum("n_val").alias("x_n"),
-        F.sum("n_le").alias("x_le"),
+        F.expr("coalesce(sum(n_val), 0)").alias("x_n"),
+        F.expr("coalesce(sum(n_le), 0)").alias("x_le"),
     )
     kboth = ev_exact.crossJoin(kll)
     kll_legs = [
@@ -612,8 +619,8 @@ def a10_distinct_counts(spark, sf):
         # build and cost the entry 7.5 s vs 5.3-6.1 s lazy (the two
         # consumers' recomputed subtrees run as concurrent stages of
         # one job on the underutilized local[32] -- the same verdict as
-        # the theta shx subtree above, and the persist_shingles
-        # recompute-by-default posture).  On a saturated cluster the
+        # the theta shx subtree above, and minhash_lsh_pairs'
+        # shingle-recompute posture).  On a saturated cluster the
         # duplicate MG pass is real cost: persist() there.
         hh = sketches.heavy_hitters(src_df, col, phi=phi)
         hh_legs.append(

@@ -1910,9 +1910,7 @@ def tv1_text_stats(spark, sf):
     # identical grouping, previously computed twice (textops.
     # term_frequencies); persisted exactly as tfidf_top_terms always
     # persisted its private copy.
-    tf = caching.maybe_persist(
-        textops.term_frequencies(toks=tt), True, None
-    )
+    tf = caching.maybe_persist(textops.term_frequencies(toks=tt), None)
     tfidf = textops.tfidf_top_terms(k=3, toks=tt, tf=tf).select(
         F.lit("tfidf").alias("op"),
         "doc_id",

@@ -768,7 +768,7 @@ def _k2_method_thunks(spark, sf):
     # plus the extra stage costs more than the ~0.5 s recompute it
     # saves at gate scale.  The `index=` overload exists for deployment
     # (where the assignment is a full corpus scan worth paying once);
-    # the persist_shingles recompute-by-default posture applies.
+    # minhash_lsh_pairs' shingle-recompute posture applies.
     def lsh():
         return tag(
             similarity.cosine_topk_lsh(emb, k=5, n_queries=8, n_bits=4), "lsh"

@@ -103,7 +103,6 @@ def write_training_shards(
     layout: str = "shuffle",
     score_col: str | None = None,
     tiebreak_cols: tuple[str, ...] = (),
-    checkpoint_dir: str | None = None,
 ) -> None:
     """Materialize the corpus as ``n_shards`` serving shards
     (``path/shard_id=K/``), each shard's files in serve order -- the
@@ -157,7 +156,6 @@ def write_training_shards(
             score_col=score_col,
             n_shards=n_shards,
             id_col=id_col,
-            checkpoint_dir=checkpoint_dir,
         )
     else:
         raise ValueError(f"unknown layout {layout!r}")

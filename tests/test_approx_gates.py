@@ -231,22 +231,3 @@ def test_tfidf_top_terms_match_python(spark):
         gt, gc, gw = got[key]
         assert (gt, gc) == (t, c), key
         assert gw == pytest.approx(w, abs=1e-6), key
-
-
-def test_minhash_persist_flag_same_results(spark, sf0001_dir):
-    """persist_shingles=True (the cluster-scale path: one tokenize+shingle
-    pass shared between signatures and verify) returns the identical pair
-    set as the default recompute path."""
-    from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup
-
-    docs = load_table(spark, sf0001_dir, "documents")
-    kw = dict(n_hashes=16, n_bands=4, shingle_n=3, jaccard_threshold=0.5)
-    plain = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in dedup.minhash_lsh_pairs(docs, **kw).collect()
-    }
-    persisted = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in dedup.minhash_lsh_pairs(docs, persist_shingles=True, **kw).collect()
-    }
-    assert plain == persisted and plain

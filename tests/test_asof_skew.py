@@ -574,46 +574,6 @@ def test_asof_salt_from_without_n_salts_raises(spark):
                   right_cols=[], salt_from="ts")
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """Cluster-durable mode: a reliable checkpoint dir swaps localCheckpoint
-    for checkpoint() (survives executor loss); results are identical and
-    checkpoint files actually land in the directory."""
-    import os
-
-    from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup
-
-    pairs = spark.createDataFrame(
-        [(1, 5), (5, 9), (9, 12), (20, 21)], "doc_a long, doc_b long"
-    )
-    ckdir = str(tmp_path / "ck")
-    prev_ck = spark.sparkContext.getCheckpointDir()
-    comp = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.connected_components(pairs, checkpoint_dir=ckdir).collect()
-    }
-    # the app-global checkpoint dir is restored EXACTLY (not re-resolved
-    # through setCheckpointDir, which would nest a fresh UUID level).
-    # The exact restore rides the Spark-internal Scala setter
-    # (checkpointDir_$eq); if a future Spark drops it, the operator falls
-    # back to the lossy public setter -- so the exact-equality assertion
-    # is gated on the private API being present (the fallback still keeps
-    # later checkpoints under the user's tree).
-    exact_restore_available = "checkpointDir_$eq" in dir(
-        spark.sparkContext._jsc.sc()
-    )
-    if exact_restore_available:
-        assert spark.sparkContext.getCheckpointDir() == prev_ck
-    assert comp == {1: 1, 5: 1, 9: 1, 12: 1, 20: 20, 21: 20}
-    assert any(files for _, _, files in os.walk(ckdir)), "no checkpoint files"
-    # storage is bounded: superseded label snapshots are deleted, so at most
-    # the pinned edge list + 2 pending label snapshots remain even though
-    # the 3-hop chain takes several iterations
-    rdd_dirs = [
-        d for _, dirs, _ in os.walk(ckdir) for d in dirs if d.startswith("rdd-")
-    ]
-    assert 1 <= len(rdd_dirs) <= 3, rdd_dirs
-
-
 def test_dedup_keep_list_covers_all_docs(spark):
     from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup
 
@@ -849,32 +809,3 @@ def test_connected_components_auto_shortcut_needs_no_flag(spark):
         for r in dedup.connected_components(mixed, shortcut=False).collect()
     }
     assert auto == plain
-
-
-def test_connected_components_reliable_checkpoint_with_auto_doubling(
-    spark, tmp_path
-):
-    """A diameter-100 chain under checkpoint_dir=: the auto pointer-
-    doubling rounds (round 6 onward) run through the RELIABLE checkpoint
-    path too, converge inside the default budget, and the superseded-
-    snapshot deletion still bounds storage to the pinned edge list + ~2
-    label snapshots."""
-    import os
-
-    from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(100)], "doc_a long, doc_b long"
-    )
-    ckdir = str(tmp_path / "ck_chain")
-    comp = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.connected_components(
-            chain, checkpoint_dir=ckdir
-        ).collect()
-    }
-    assert comp == {i: 0 for i in range(101)}
-    rdd_dirs = [
-        d for _, dirs, _ in os.walk(ckdir) for d in dirs if d.startswith("rdd-")
-    ]
-    assert 1 <= len(rdd_dirs) <= 3, rdd_dirs

@@ -32,11 +32,8 @@ def test_cache_scope_unpersists_and_never_accumulates(spark, sf0001_dir):
     # run each persisting operator TWICE: frames must be cached while the
     # scope is open (the persist is real) and gone after each exit
     ops = [
-        lambda cs: textops.tfidf_top_terms(docs, k=3, persist_tf=True, cache=cs),
-        lambda cs: dedup.simhash_near_pairs(
-            docs, max_hamming=3, persist_signatures=True, cache=cs
-        ),
-        lambda cs: dedup.minhash_lsh_pairs(docs, persist_shingles=True, cache=cs),
+        lambda cs: textops.tfidf_top_terms(docs, k=3, cache=cs),
+        lambda cs: dedup.simhash_near_pairs(docs, max_hamming=3, cache=cs),
     ]
     for op in ops:
         for _ in range(2):
@@ -53,7 +50,7 @@ def test_cache_scope_unpersists_on_error(spark, sf0001_dir):
     spark.catalog.clearCache()
     try:
         with CacheScope() as cs:
-            out = textops.tfidf_top_terms(docs, k=3, persist_tf=True, cache=cs)
+            out = textops.tfidf_top_terms(docs, k=3, cache=cs)
             out.count()
             raise RuntimeError("caller failure mid-scope")
     except RuntimeError:
@@ -62,11 +59,11 @@ def test_cache_scope_unpersists_on_error(spark, sf0001_dir):
 
 
 def test_no_scope_keeps_round2_behaviour(spark, sf0001_dir):
-    """Without a scope the flag still persists (session lifetime) -- the
-    one-shot-job default is unchanged."""
+    """Without a scope the operator still persists (session lifetime) --
+    the one-shot-job default is unchanged."""
     docs = load_table(spark, sf0001_dir, "documents")
     spark.catalog.clearCache()
-    out = textops.tfidf_top_terms(docs, k=3, persist_tf=True)
+    out = textops.tfidf_top_terms(docs, k=3)
     out.count()
     assert not _cache_manager_empty(spark)
     spark.catalog.clearCache()

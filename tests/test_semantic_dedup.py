@@ -128,25 +128,6 @@ def test_semantic_dedup_pair_join_is_equi_join(spark, sf0001_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_semantic_dedup_reliable_checkpoint_mode_matches_local(
-    spark, sf0001_dir, tmp_path
-):
-    """checkpoint_dir= flows through to the CC label loop: identical
-    (vec_id, sem_cluster, keep) output in both cut modes."""
-    emb = load_table(spark, sf0001_dir, "embeddings")
-    want = {
-        (r["vec_id"], r["sem_cluster"], r["keep"])
-        for r in similarity.semantic_dedup(emb, threshold=0.9).collect()
-    }
-    got = {
-        (r["vec_id"], r["sem_cluster"], r["keep"])
-        for r in similarity.semantic_dedup(
-            emb, threshold=0.9, checkpoint_dir=str(tmp_path / "sem_ck")
-        ).collect()
-    }
-    assert got == want and want
-
-
 def test_trained_centroids_balance_cells(spark, sf001_dir):
     """The r13 trained-index rationale, measured: kmeans_train centroids
     must spread the corpus across cells more evenly than the fixed
@@ -244,8 +225,8 @@ def test_partitioned_components_long_chain_and_isolation(spark):
 
 def test_components_with_threshold_or_ckdir_raises(spark, sf001_dir):
     """components= supplies precomputed labels, so stating a threshold
-    or checkpoint_dir alongside must raise instead of being silently
-    ignored (the curate_corpus pairs= guard, r13)."""
+    or a stage-1 parameter alongside must raise instead of being
+    silently ignored (the curate_corpus pairs= guard, r13)."""
     from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup
 
     emb = load_table(spark, sf001_dir, "embeddings")
@@ -257,10 +238,6 @@ def test_components_with_threshold_or_ckdir_raises(spark, sf001_dir):
     )
     with pytest.raises(ValueError, match="components="):
         similarity.semantic_dedup(emb, threshold=0.35, components=comp)
-    with pytest.raises(ValueError, match="components="):
-        similarity.semantic_dedup(
-            emb, components=comp, checkpoint_dir="/tmp/x"
-        )
     with pytest.raises(ValueError, match="components="):
         # stage-1 parameters are dead with components= too
         similarity.semantic_dedup(emb, assigned=assigned, components=comp)
@@ -391,28 +368,22 @@ def test_kmeans_train_unpersists_on_failure(spark):
 
 
 def test_kmeans_dead_cell_report(spark):
-    """return_report= visibility (r15, ex-dead_cells r14): a corpus
-    whose two init vectors are IDENTICAL empties cluster 2 in every
-    iteration (all assignments tie and break to the lowest cent_id),
-    and the report must say so; a corpus with genuinely distinct
-    directions reports zero dead cells.  Carried-forward centroids keep
-    the table at n_centroids rows either way (correct Lloyd behavior,
-    now observable).  The deprecated dead_cells= out-list is exercised
-    alongside for its one-round compatibility window and must agree
-    with the returned report."""
+    """return_report= visibility: a corpus whose two init vectors are
+    IDENTICAL empties cluster 2 in every iteration (all assignments tie
+    and break to the lowest cent_id), and the report must say so; a
+    corpus with genuinely distinct directions reports zero dead cells.
+    Carried-forward centroids keep the table at n_centroids rows either
+    way (correct Lloyd behavior, now observable)."""
     clustered = spark.createDataFrame(
         [(i, [1.0, 0.0]) for i in range(4)],
         "vec_id long, embedding array<double>",
     )
-    dead: list[int] = []
     cents_df, report = similarity.kmeans_train(
-        clustered, n_centroids=2, n_iter=3, dead_cells=dead,
-        return_report=True,
+        clustered, n_centroids=2, n_iter=3, return_report=True
     )
     cents = cents_df.collect()
     assert report["dead_cells"] == [1, 1, 1]
     assert report["reseeds"] == [0, 0, 0]  # reseed off -> never fires
-    assert dead == report["dead_cells"]  # deprecated out-list agrees
     assert len(cents) == 2  # the dead slot is carried, not dropped
 
     spread = spark.createDataFrame(

@@ -649,35 +649,6 @@ def test_append_rejects_curriculum_layout(spark, tmp_path):
         writers.append_training_shards(batch, path, n_shards=2)
 
 
-def test_global_rank_reliable_checkpoint_path(spark, tmp_path):
-    """checkpoint_dir= switches the barrier from localCheckpoint to a
-    reliable checkpoint() in a unique per-call subdirectory (the
-    connected_components posture): ranks stay exact, checkpoint files
-    actually land under the given directory, and the SparkContext's
-    previous checkpoint location is restored."""
-    import glob
-
-    ck = str(tmp_path / "ck")
-    prev = spark.sparkContext.getCheckpointDir()
-    df = spark.range(500).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") * 37 % 101).cast("double").alias("score"),
-    )
-    order = [F.col("score").desc_nulls_last(), F.col("doc_id").asc_nulls_last()]
-    rows = sampling.global_rank(
-        df, order, n_partitions=4, checkpoint_dir=ck
-    ).collect()
-    expect = {
-        r["doc_id"]: i
-        for i, r in enumerate(
-            sorted(rows, key=lambda x: (-x["score"], x["doc_id"]))
-        )
-    }
-    assert all(r["rank"] == expect[r["doc_id"]] for r in rows)
-    assert glob.glob(f"{ck}/grank-*/**/rdd-*", recursive=True)
-    assert spark.sparkContext.getCheckpointDir() == prev
-
-
 import pytest
 
 

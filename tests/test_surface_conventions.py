@@ -197,3 +197,104 @@ def test_unwired_checker_catches_a_fresh_module(tmp_path):
     g = tmp_path / "none.py"
     g.write_text("import os\n")
     assert _imported_operator_modules(g) == set()
+
+
+# ---------------------------------------------------------------------------
+# Rule 4: no writes to SparkContext-global state outside their one owner.
+# caching.run_overlapped runs build thunks on pool threads, which is only
+# sound while no engine code mutates state every thread shares: the
+# checkpoint directory (``setCheckpointDir``, or the Scala setter
+# ``checkpointDir_$eq`` reached through getattr), session confs
+# (``conf.set``, owned by session.py) and thread-local job properties
+# (``setLocalProperty``, owned by run_overlapped, which copies the
+# caller's job labels into each worker).
+# ---------------------------------------------------------------------------
+
+#: call -> (module, enclosing top-level function) allowed to make it;
+#: None = allowed nowhere
+_GLOBAL_WRITERS = {
+    "setCheckpointDir": None,
+    "checkpointDir_$eq": None,
+    "conf.set": ("session.py", None),
+    "setLocalProperty": ("caching.py", "run_overlapped"),
+}
+
+
+def _global_write(call: ast.Call) -> str | None:
+    f = call.func
+    if isinstance(f, ast.Attribute):
+        if f.attr in ("setCheckpointDir", "setLocalProperty"):
+            return f.attr
+        if (
+            f.attr == "set"
+            and isinstance(f.value, ast.Attribute)
+            and f.value.attr == "conf"
+        ):
+            return "conf.set"
+    if (
+        isinstance(f, ast.Name)
+        and f.id == "getattr"
+        and len(call.args) > 1
+        and isinstance(call.args[1], ast.Constant)
+        and call.args[1].value == "checkpointDir_$eq"
+    ):
+        return "checkpointDir_$eq"
+    return None
+
+
+def global_state_writes(source: str, filename: str) -> list[str]:
+    """``file:line call`` for every SparkContext-global write in
+    ``source`` (``filename`` relative to the package) that its owner
+    table does not allow there."""
+    hits = []
+    for top in ast.parse(source).body:
+        fn = top.name if isinstance(top, (ast.FunctionDef, ast.ClassDef)) else None
+        for node in ast.walk(top):
+            if not isinstance(node, ast.Call):
+                continue
+            call = _global_write(node)
+            if call is None:
+                continue
+            owner = _GLOBAL_WRITERS[call]
+            if owner is not None and owner[0] == filename and owner[1] in (None, fn):
+                continue
+            hits.append(f"{filename}:{node.lineno} {call}")
+    return hits
+
+
+def test_no_sparkcontext_global_writes_outside_their_owner():
+    bad = []
+    for p in sorted(_PKG.rglob("*.py")):
+        bad += global_state_writes(p.read_text(), p.relative_to(_PKG).as_posix())
+    assert not bad, (
+        f"SparkContext-global writes outside their owner "
+        f"(caching.run_overlapped's pool threads share this state): {bad}"
+    )
+
+
+def test_global_write_checker_catches_each_call():
+    """Self-test: every forbidden spelling trips the checker, and each
+    owner's own call does not."""
+    checkpoint_restore = (
+        "def _checkpoint_subdir(sc, d):\n"
+        "    sc.setCheckpointDir(d)\n"
+        "    getattr(sc._jsc.sc(), 'checkpointDir_$eq')(None)\n"
+    )
+    assert global_state_writes(checkpoint_restore, "operators/dedup.py") == [
+        "operators/dedup.py:2 setCheckpointDir",
+        "operators/dedup.py:3 checkpointDir_$eq",
+    ]
+    conf = "def f(spark):\n    spark.conf.set('k', 'v')\n"
+    assert global_state_writes(conf, "operators/sampling.py") == [
+        "operators/sampling.py:2 conf.set"
+    ]
+    assert global_state_writes(conf, "session.py") == []
+    prop = "def run_overlapped(sc):\n    def run():\n        sc.setLocalProperty('k', 'v')\n"
+    assert global_state_writes(prop, "caching.py") == []
+    elsewhere = prop.replace("run_overlapped", "checkpoint_overlapped")
+    assert global_state_writes(elsewhere, "caching.py") == [
+        "caching.py:3 setLocalProperty"
+    ]
+    assert global_state_writes(prop, "operators/dedup.py") == [
+        "operators/dedup.py:3 setLocalProperty"
+    ]

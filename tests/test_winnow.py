@@ -109,39 +109,6 @@ def test_winnow_guarantee_holds_for_arbitrary_strings(
     assert set(a) & set(b), (pre1, common, suf1, pre2, suf2)
 
 
-def test_winnow_reliable_checkpoint_mode_matches_local(
-    spark, sf0001_dir, tmp_path
-):
-    """checkpoint_dir= switches the two lineage cuts from localCheckpoint
-    to reliable checkpoint(): identical pair output, checkpoint files
-    land under the given directory, and the app-global checkpoint
-    location is restored afterwards."""
-    import os
-
-    docs = load_table(spark, sf0001_dir, "documents")
-    prev = spark.sparkContext.getCheckpointDir()
-    ckdir = str(tmp_path / "winnow_ck")
-    local = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in dedup.winnow_near_pairs(docs, threshold=0.35).collect()
-    }
-    reliable = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in dedup.winnow_near_pairs(
-            docs, threshold=0.35, checkpoint_dir=ckdir
-        ).collect()
-    }
-    assert reliable == local and local
-    assert spark.sparkContext.getCheckpointDir() == prev
-    rdd_dirs = [
-        d
-        for _root, dirs, _files in os.walk(ckdir)
-        for d in dirs
-        if d.startswith("rdd-")
-    ]
-    assert len(rdd_dirs) == 2  # the print table + the rare-print index
-
-
 def test_arrow_prints_equal_hof_prints(spark, sf0001_dir):
     """The Arrow-batched pass must be byte-identical to the HOF form --
     same hashes (md5 over utf-8), same winnow minima, same
