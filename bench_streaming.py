@@ -121,43 +121,6 @@ def main() -> None:
     return run_bench(spark, sf_dir, n_slices)
 
 
-def stateful_v2_result(spark, events_dir: str) -> dict:
-    """The transformWithStateInPandas bench entry, or its NAMED skip.
-
-    The modern stateful API needs the protobuf worker protocol plus the
-    RocksDB state store; bench it where the runtime deps exist, and
-    RECORD the absence otherwise -- a silently missing row would read as
-    "not benched" rather than "not benchable here".  The posture itself
-    is regression-guarded (tests/test_streaming.py)."""
-    from nyc_taxi_dataset_analysis_apache_hive_spark.streaming import stateful
-
-    if not stateful.tws_available():
-        return {
-            "skipped": "transformWithStateInPandas worker protocol "
-            "needs protobuf, absent in this environment"
-        }
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(
-        conf,
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider",
-    )
-    try:
-        return drain_and_measure(
-            spark,
-            stateful.running_user_totals_tws,
-            events_dir,
-            "stateful_totals_v2",
-            "update",
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
-
-
 def run_anomaly_maintenance(spark, events_dir: str) -> dict:
     """The anomaly-monitor maintenance stream (r16): foreachBatch folds
     each micro-batch into the versioned per-(key, day) count ledger, so
@@ -370,9 +333,6 @@ def run_bench(spark, sf_dir: str, n_slices: int):
         drain_and_measure(spark, sev.tumbling_counts_stream, events_dir, "warmup", "append")
         for name, (fn, mode) in streams.items():
             results[name] = drain_and_measure(spark, fn, events_dir, name, mode)
-        results["stateful_totals_v2"] = stateful_v2_result(
-            spark, events_dir
-        )
         # keeps reporting if the maintenance section fails (the
         # doc-stream posture below)
         try:

@@ -965,7 +965,6 @@ def winnow_near_pairs(
     threshold: float = 0.35,
     max_doc_freq: int | None = 50,
     text_col: str = "text",
-    prints_impl: str = "arrow",
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) pairs whose winnowed RARE-print sets
     overlap at >= ``threshold`` Jaccard -- near-dup detection over
@@ -992,16 +991,13 @@ def winnow_near_pairs(
     The print table is materialized ONCE (the CC-loop idiom): it feeds
     the doc-frequency pass and BOTH sides of the self-join, and those
     subtrees cannot share an exchange -- without the cut the per-char
-    md5 + winnow pass re-runs four times.
-
-    ``prints_impl``: "arrow" (default -- the measured 2.5x-faster
-    Arrow-batched gram-hash pass, capture in BASELINE.md) or "hof"
-    (the pure-JVM form, zero Python workers; byte-identical output).
+    md5 + winnow pass re-runs four times.  The prints come from the
+    Arrow-batched gram-hash pass (:func:`winnow_prints_arrow`, measured
+    2.5x faster than the HOF form it is equality-tested against).
     """
-    prints_fn = {"arrow": winnow_prints_arrow, "hof": winnow_prints}[
-        prints_impl
-    ]
-    ps = prints_fn(docs, k, window, text_col).localCheckpoint(eager=True)
+    ps = winnow_prints_arrow(docs, k, window, text_col).localCheckpoint(
+        eager=True
+    )
     inv = ps.select("doc_id", F.explode("prints").alias("p"))
     if max_doc_freq is not None:
         hot = (
@@ -1928,13 +1924,10 @@ def bloom_filter_build(
     once, broadcast everywhere; merging two filters of the SAME geometry
     is array_union (:func:`bloom_filter_update`).
 
-    The build geometry rides the artifact (r15): every probe surface
-    resolves (k, m) from these columns and raises on a declared-geometry
-    mismatch, so a filter built at :func:`bloom_geometry` sizing can
-    never be silently probed with the default hash family -- the
-    false-negative class the r14 refuse-overrides guard only half
-    closed (it protected the default-built path and made every
-    non-default prebuilt filter unusable)."""
+    The build geometry rides the artifact: every probe surface reads
+    (k, m) from these columns and nowhere else, so a filter built at
+    :func:`bloom_geometry` sizing can never be probed with a different
+    hash family (the silent false-negative class)."""
     pos = (
         _null_safe_text(history, text_col)
         .select(
@@ -1966,11 +1959,6 @@ def bloom_filter_update(
     sketch rollups.  The union is two one-row frames; the only
     data-sized work is hashing the admitted batch once."""
     k, m = _bloom_artifact_geometry(bloom_bits)
-    if k is None:
-        raise ValueError(
-            "bloom_filter_update needs a geometry-carrying artifact "
-            "(bloom_filter_build >= r15); rebuild the filter to update it"
-        )
     new = bloom_filter_build(admitted, text_col, k, m)
     return (
         bloom_bits.select(F.col("bits").alias("_old"))
@@ -2001,13 +1989,7 @@ def bloom_pack_words(bloom_bits: DataFrame) -> DataFrame:
     Every probe surface accepts either representation; pack once and
     persist alongside the positions artifact when the filter is a
     maintained deployment object."""
-    k, m = _bloom_artifact_geometry(bloom_bits)
-    if k is None:
-        raise ValueError(
-            "bloom_pack_words needs a geometry-carrying artifact "
-            "(bloom_filter_build >= r15) -- the dense word count is m/64"
-        )
-    return _pack_words(bloom_bits, k, m)
+    return _pack_words(bloom_bits, *_bloom_artifact_geometry(bloom_bits))
 
 
 def _pack_words(bloom_bits: DataFrame, k: int, m: int) -> DataFrame:
@@ -2062,14 +2044,13 @@ _BLOOM_GEOMETRY_CACHE: "weakref.WeakKeyDictionary[DataFrame, tuple[int, int]]" =
 )
 
 
-def _bloom_artifact_geometry(
-    bloom_bits: DataFrame,
-) -> tuple[int | None, int | None]:
-    """(k, m) carried by a filter artifact, or (None, None) for a
-    legacy bits-only frame.  One-row collect -- the artifact is tiny by
-    construction, and resolving the geometry eagerly is what lets the
-    probe surfaces raise BEFORE planning a silently-false-negative
-    join.
+def _bloom_artifact_geometry(bloom_bits: DataFrame) -> tuple[int, int]:
+    """(k, m) carried by a filter artifact -- the one source of the
+    geometry for every probe, update and pack surface.  A bits-only
+    frame (no k/m columns, or no row) raises: guessing its hash family
+    would silently break the no-false-negative guarantee.  One-row
+    collect -- the artifact is tiny by construction, and resolving the
+    geometry eagerly raises BEFORE planning the probe join.
 
     The resolved pair is MEMOIZED per DataFrame object (r16; held in a
     module-level WeakKeyDictionary since r17 so no attribute is written
@@ -2085,60 +2066,29 @@ def _bloom_artifact_geometry(
     snapshot makes any read through such a handle undefined (stale
     listings or FileNotFound), with or without this memo -- and is the
     one way to observe a stale (k, m) here."""
-    if "k" not in bloom_bits.columns or "m" not in bloom_bits.columns:
-        return None, None
     cached = _BLOOM_GEOMETRY_CACHE.get(bloom_bits)
     if cached is not None:
         return cached
-    row = bloom_bits.select("k", "m").first()
+    row = (
+        bloom_bits.select("k", "m").first()
+        if {"k", "m"} <= set(bloom_bits.columns)
+        else None
+    )
     if row is None:
-        return None, None
+        raise ValueError(
+            "bloom filter artifact carries no (k, m): probing, updating "
+            "or packing needs a geometry-carrying artifact "
+            "(bloom_filter_build); rebuild the filter"
+        )
     geo = (int(row["k"]), int(row["m"]))
     _BLOOM_GEOMETRY_CACHE[bloom_bits] = geo
     return geo
-
-
-def resolve_bloom_geometry(
-    bloom_bits: DataFrame | None,
-    k: int | object = _UNSET,
-    m: int | object = _UNSET,
-) -> tuple[int, int]:
-    """THE (k, m) election shared by every bloom probe surface (the
-    batch operator and both streaming twins -- one definition so the
-    surfaces cannot disagree, the r14 ADVICE item).  Explicit ``k``/``m``
-    declare the build geometry of a prebuilt filter; when the artifact
-    carries its own geometry the declaration is VALIDATED against it
-    (mismatch raises -- probing with a different hash family than the
-    build silently breaks the no-false-negative guarantee); a legacy
-    bits-only artifact trusts the declaration, defaulting to the module
-    constants."""
-    art_k, art_m = (
-        _bloom_artifact_geometry(bloom_bits)
-        if bloom_bits is not None
-        else (None, None)
-    )
-    out_k = art_k if k is _UNSET else k
-    out_m = art_m if m is _UNSET else m
-    if out_k is None:
-        out_k = BLOOM_K
-    if out_m is None:
-        out_m = BLOOM_M
-    if art_k is not None and (out_k != art_k or out_m != art_m):
-        raise ValueError(
-            f"bloom filter artifact was built at (k={art_k}, m={art_m}) "
-            f"but (k={out_k}, m={out_m}) was declared -- probing with a "
-            "different hash family than the build breaks the "
-            "no-false-negative guarantee; drop the overrides or rebuild"
-        )
-    return int(out_k), int(out_m)
 
 
 def bloom_fingerprint_admission(
     history: DataFrame,
     batch: DataFrame,
     text_col: str = "text",
-    k: int | object = _UNSET,
-    m: int | object = _UNSET,
     bloom_bits: DataFrame | None = None,
 ) -> DataFrame:
     """Admit a batch against a document history by exact fingerprint,
@@ -2156,21 +2106,18 @@ def bloom_fingerprint_admission(
     Pass ``bloom_bits=`` (a :func:`bloom_filter_build` result) to reuse
     a prebuilt filter -- the deployment posture, where the filter is a
     maintained artifact (:func:`bloom_filter_update`), not per-batch
-    work.  The probe MUST hash with the geometry the filter was built
-    at: the artifact carries (k, m) since r15 and the shared
-    :func:`resolve_bloom_geometry` election validates any explicit
-    ``k``/``m`` declaration against it (mismatch raises; a legacy
-    bits-only artifact trusts the declaration) -- the same rule as the
-    streaming twins, replacing the r14 refuse-overrides guard that made
-    non-default prebuilt filters unusable."""
-    k, m = resolve_bloom_geometry(bloom_bits, k, m)
+    work.  The probe hashes with the (k, m) the artifact carries; without
+    one, the filter is built here at the module defaults."""
     if bloom_bits is None:
+        k, m = BLOOM_K, BLOOM_M
         # eager checkpoint: the candidate/clean branches below both read
         # the filter row, and without a barrier each branch re-scans the
         # whole history to rebuild it (the d3 shared-signature posture)
         bloom_bits = bloom_filter_build(history, text_col, k, m).localCheckpoint(
             eager=True
         )
+    else:
+        k, m = _bloom_artifact_geometry(bloom_bits)
     return bloom_admission_rows(
         batch,
         bloom_bits,

@@ -8,17 +8,11 @@ North-star extension: the reference is tabular-only (whole of REF), but a
 * decode / feature-extract / resize / frame-sample run as Arrow-batched
   ``mapInPandas`` stages (the sanctioned Python hot path: per *batch*, never
   per row, ~10-100x over row UDFs);
-* the actual codec calls are OPTIONAL-IMPORT: ``use_real_codecs=True``
-  probes for the real library at the marked integration point (Pillow for
-  images, soundfile for audio, PyAV for video) and uses it when
-  importable; when the library is absent it raises ``NotImplementedError``
-  with wiring instructions.  The default (``False``) is a deterministic
-  fake (zlib.crc32-seeded) either way -- this container ships no media
-  libraries, so the fake is what every driver-gated entry runs, and the
-  Spark-side plumbing (schemas, batch iteration, one-to-many frame
-  explode, partitioning) is identical and tested on both paths.  The
-  import probe runs INSIDE each batch generator (executor-side) -- on a
-  cluster the driver's site-packages prove nothing about the executors'.
+* the codecs are deterministic stand-ins (byte histograms, tiling,
+  contiguous slices, crc32-seeded embeddings) -- the Spark-side plumbing
+  (schemas, batch iteration, one-to-many frame explode, partitioning) is
+  what the stages exercise; a real decoder replaces only the per-payload
+  body of a generator.
 
 Scale notes: every stage is a narrow map -- no shuffle, embarrassingly
 parallel, Arrow-vectorized transfer.  Payload bytes stay in the executor;
@@ -86,65 +80,6 @@ RESIZED_SCHEMA = (
 )
 
 
-def _not_implemented_codec(kind: str):
-    raise NotImplementedError(
-        f"real {kind} codec integration point: the required library is not "
-        "importable in this environment; install Pillow (image) / soundfile "
-        "(audio) / av (video) and the surrounding mapInPandas plumbing is "
-        "unchanged"
-    )
-
-
-def codec_support() -> dict[str, bool]:
-    """Which real codec libraries are importable HERE (this interpreter).
-
-    Driver-side callers use it to pick fake vs real; the stages re-probe
-    inside each executor batch regardless, because cluster executors can
-    have different site-packages than the driver.
-    """
-    support = {}
-    try:
-        from PIL import Image  # noqa: F401
-
-        support["image"] = True
-    except ImportError:
-        support["image"] = False
-    try:
-        import soundfile  # noqa: F401
-
-        support["audio"] = True
-    except ImportError:
-        support["audio"] = False
-    try:
-        import av  # noqa: F401
-
-        support["video"] = True
-    except ImportError:
-        support["video"] = False
-    return support
-
-
-def _require_image_codec():
-    """Executor-side probe: PIL.Image or the marked NotImplementedError."""
-    try:
-        from PIL import Image
-
-        return Image
-    except ImportError:
-        _not_implemented_codec("image")
-
-
-def _require_video_codec():
-    """Executor-side probe: the PyAV module or the marked
-    NotImplementedError."""
-    try:
-        import av
-
-        return av
-    except ImportError:
-        _not_implemented_codec("video")
-
-
 def synth_media_from_docs(docs: DataFrame) -> DataFrame:
     """Deterministic media catalog derived from the documents table.
 
@@ -176,27 +111,19 @@ def synth_media_from_docs(docs: DataFrame) -> DataFrame:
     )
 
 
-def media_features(media: DataFrame, use_real_codecs: bool = False) -> DataFrame:
+def media_features(media: DataFrame) -> DataFrame:
     """Decode/feature-extract stage: (media_id, kind, n_bytes, crc32,
     byte_entropy, first_byte) via Arrow-batched mapInPandas.
 
-    ``byte_entropy`` is a byte-histogram Shannon entropy.  Default (fake)
-    path: computed over the raw payload bytes -- the deterministic
-    stand-in for decoded-content features.  ``use_real_codecs=True``:
-    image rows are DECODED with Pillow and entropy/first_byte come from
-    the decoded pixel bytes (container-level n_bytes/crc32 stay
-    payload-facts); kinds without a wired library raise the marked
-    ``NotImplementedError`` -- filter to ``kind == 'image'`` first when
-    only Pillow is installed.
+    ``byte_entropy`` is a byte-histogram Shannon entropy over the raw
+    payload bytes -- the deterministic stand-in for decoded-content
+    features.
     """
 
     def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import io
         import math
 
         import pandas as pd
-
-        image_mod = None
 
         def entropy(b: bytes) -> float:
             if not b:
@@ -215,7 +142,7 @@ def media_features(media: DataFrame, use_real_codecs: bool = False) -> DataFrame
             # accounting the m2 oracle derives (r9 adversarial sweep:
             # bytes(None) raised inside the batch before this guard)
             ent, first, n_bytes, crc = [], [], [], []
-            for p, kind in zip(pdf["payload"], pdf["kind"]):
+            for p in pdf["payload"]:
                 if p is None:
                     ent.append(None)
                     first.append(None)
@@ -225,13 +152,6 @@ def media_features(media: DataFrame, use_real_codecs: bool = False) -> DataFrame
                 b = bytes(p)
                 n_bytes.append(len(b))
                 crc.append(zlib.crc32(b) & 0xFFFFFFFF)
-                if use_real_codecs:
-                    if kind != "image":
-                        _not_implemented_codec(kind)
-                    if image_mod is None:
-                        image_mod = _require_image_codec()
-                    with image_mod.open(io.BytesIO(b)) as img:
-                        b = img.convert("RGB").tobytes()
                 ent.append(entropy(b))
                 first.append(b[0] if b else -1)
             yield pd.DataFrame(
@@ -248,18 +168,12 @@ def media_features(media: DataFrame, use_real_codecs: bool = False) -> DataFrame
     return media.mapInPandas(gen, FEATURES_SCHEMA)
 
 
-def resize_images(
-    media: DataFrame, width: int, height: int, use_real_codecs: bool = False
-) -> DataFrame:
+def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     """Resize stage for image rows.
 
-    Default (fake) 'resampler' tiles/truncates the payload to exactly
-    ``width*height`` bytes (deterministic).  ``use_real_codecs=True``
-    decodes with Pillow, bilinear-resizes to (width, height), and
-    re-encodes as PNG (so output payload length is the compressed size,
-    not width*height); Pillow absent -> the marked NotImplementedError.
-    Non-image rows are filtered JVM-side either way, so the Python stage
-    only ever sees image batches.
+    The stand-in 'resampler' tiles/truncates the payload to exactly
+    ``width*height`` bytes (deterministic).  Non-image rows are filtered
+    JVM-side, so the Python stage only ever sees image batches.
 
     NULL payloads follow the stage-wide NULL-propagation policy
     (media_features / sample_frames): every derived column comes back
@@ -270,39 +184,18 @@ def resize_images(
     target = width * height
 
     def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import io
-
         import pandas as pd
 
-        image_mod = None
         for pdf in batches:
             out_payload = []
             resized_flags = [p is not None for p in pdf["payload"]]
-            if use_real_codecs:
-                if image_mod is None:
-                    image_mod = _require_image_codec()
-                for p in pdf["payload"]:
-                    if p is None:  # NULL payload passes through as NULL
-                        out_payload.append(None)
-                        continue
-                    with image_mod.open(io.BytesIO(bytes(p))) as img:
-                        resample = getattr(
-                            image_mod, "Resampling", image_mod
-                        ).BILINEAR
-                        resized = img.convert("RGB").resize(
-                            (width, height), resample
-                        )
-                    buf = io.BytesIO()
-                    resized.save(buf, format="PNG")
-                    out_payload.append(buf.getvalue())
-            else:
-                for p in pdf["payload"]:
-                    if p is None:  # NULL payload passes through as NULL
-                        out_payload.append(None)
-                        continue
-                    b = bytes(p) or b"\x00"
-                    reps = -(-target // len(b))  # ceil
-                    out_payload.append((b * reps)[:target])
+            for p in pdf["payload"]:
+                if p is None:  # NULL payload passes through as NULL
+                    out_payload.append(None)
+                    continue
+                b = bytes(p) or b"\x00"
+                reps = -(-target // len(b))  # ceil
+                out_payload.append((b * reps)[:target])
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -322,70 +215,33 @@ def resize_images(
     return media.filter(F.col("kind") == "image").mapInPandas(gen, RESIZED_SCHEMA)
 
 
-def sample_frames(
-    media: DataFrame, n_frames: int = 4, use_real_codecs: bool = False
-) -> DataFrame:
+def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     """Frame-sampling stage for video rows: one input row -> ``n_frames``
     output rows (media_id, frame_idx, frame_payload, n_bytes).
 
     Demonstrates the one-to-many mapInPandas shape (a video decoder emits
-    frame batches); the fake splits the payload into n contiguous slices.
-    ``use_real_codecs=True`` decodes the payload as a media container with
-    PyAV and emits ``n_frames`` evenly-spaced frames as raw rgb24 bytes
-    (decode-all-then-pick -- a production cut would keyframe-seek instead
-    of decoding every frame, but the Spark-side plumbing is identical);
-    PyAV absent -> the marked NotImplementedError.
+    frame batches); the stand-in splits the payload into n contiguous
+    slices.
     """
 
     def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import io
-
         import pandas as pd
 
-        av_mod = None
         for pdf in batches:
             ids, idxs, frames = [], [], []
-            if use_real_codecs:
-                if av_mod is None:
-                    av_mod = _require_video_codec()
-                for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                    if p is None:  # NULL payload -> n_frames NULL frames
-                        for i in range(n_frames):
-                            ids.append(mid)
-                            idxs.append(i)
-                            frames.append(None)
-                        continue
-                    with av_mod.open(io.BytesIO(bytes(p))) as container:
-                        decoded = [
-                            fr.to_ndarray(format="rgb24").tobytes()
-                            for fr in container.decode(video=0)
-                        ]
-                    if not decoded:  # container with no decodable frames
-                        decoded = [b""]
-                    n = len(decoded)
-                    # evenly-spaced sample (repeat-pad when the clip is
-                    # shorter than n_frames so the 1->n_frames row contract
-                    # holds for every input row)
+            for mid, p in zip(pdf["media_id"], pdf["payload"]):
+                if p is None:  # NULL payload -> n_frames NULL frames
                     for i in range(n_frames):
                         ids.append(mid)
                         idxs.append(i)
-                        frames.append(decoded[min(i * n // n_frames, n - 1)])
-            else:
-                for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                    if p is None:  # NULL payload -> n_frames NULL frames
-                        for i in range(n_frames):
-                            ids.append(mid)
-                            idxs.append(i)
-                            frames.append(None)
-                        continue
-                    b = bytes(p)
-                    n = len(b)
-                    for i in range(n_frames):
-                        ids.append(mid)
-                        idxs.append(i)
-                        frames.append(
-                            b[n * i // n_frames : n * (i + 1) // n_frames]
-                        )
+                        frames.append(None)
+                    continue
+                b = bytes(p)
+                n = len(b)
+                for i in range(n_frames):
+                    ids.append(mid)
+                    idxs.append(i)
+                    frames.append(b[n * i // n_frames : n * (i + 1) // n_frames])
             yield pd.DataFrame(
                 {
                     "media_id": pd.Series(ids, dtype="int64"),

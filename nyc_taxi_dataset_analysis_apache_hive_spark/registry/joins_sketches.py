@@ -414,13 +414,14 @@ def a10_distinct_counts(spark, sf):
     # kll_sketch_agg_double over the same rows -- mixing in
     # countDistinct only adds Catalyst's Expand around the partial
     # aggregation (the exact_by_flag posture: one scan + Expand beats
-    # N scans at 100 TB).  persist(), NOT an eager localCheckpoint
-    # (r18 follow-up): the checkpoint's barrier job cost ~+0.7 s warm
-    # / +2 s cold at sf0.1 in order-alternating paired A/Bs -- the
-    # lazy cache materializes INSIDE the one union job on first touch
-    # and the other consumers read it there, so the scan sharing keeps
-    # its 100-TB story without the extra scheduling round-trip (the
-    # tfidf tf posture).
+    # N scans at 100 TB).  A LAZY localCheckpoint: an eager cut's
+    # barrier job cost 0.7-1.3 s per call at sf0.1 (32- and 4-core
+    # boxes), the lazy one measured flat against persist().  Not
+    # persist(): AQE plans each of the six readers of a cached frame as
+    # its own table-cache stage, and each submits a build job unless
+    # the cache has already loaded, so the job count raced (70 or 65 at
+    # sf0.001).  The lazy cut's readers are plain RDD scans: the same
+    # jobs and stages on every call.
     day_agg = ev.groupBy(F.date_trunc("day", "ts").alias("period")).agg(
         F.countDistinct("user_id").alias("n_exact"),
         F.hll_sketch_agg(F.col("user_id"), F.lit(12)).alias("sketch"),
@@ -429,7 +430,7 @@ def a10_distinct_counts(spark, sf):
         ).alias("ksk"),
         F.count("value").alias("n_val"),
         F.count(F.when(F.col("value") <= 35.0, 1)).alias("n_le"),
-    ).persist()
+    ).localCheckpoint(eager=False)
     exact_day = day_agg.select("period", "n_exact")
     ok_day = F.abs(F.col("n_distinct_est") - F.col("n_exact")) <= F.greatest(
         0.05 * F.col("n_exact"), F.lit(2)
@@ -1009,9 +1010,11 @@ def _bucketed_join_leg(spark, sf) -> tuple[DataFrame, DataFrame]:
     The bucketed tables are (re)written per call -- idempotent overwrite
     into an sf-keyed external location + catalog name, so concurrent
     sf_dirs never collide and a repeated driver call just rewrites the
-    same files.  Projection keeps the write tiny (2 columns a side).  The
-    plan probe inspects the JOIN subtree only (the aggregate above it
-    legitimately exchanges on its own grouping key)."""
+    same files.  They are NOT deleted on return: the returned counts
+    frame reads them lazily, so they must outlive the call (one pair per
+    distinct sf_dir).  Projection keeps the write tiny (2 columns a
+    side).  The plan probe inspects the JOIN subtree only (the aggregate
+    above it legitimately exchanges on its own grouping key)."""
     import hashlib
     import tempfile
 
@@ -1065,7 +1068,9 @@ def _zorder_skip_leg(spark, sf) -> DataFrame:
     by luck of equal counts.
 
     Same idempotent-overwrite conventions as the bucket leg (sf-keyed
-    temp location, tiny projection, eager per call).  The box bounds
+    temp location, tiny projection, eager per call), but the written
+    dir is deleted before returning: the output is a literal row, so
+    nothing reads the files later.  The box bounds
     derive from the FOOTER global min/max (driver-side metadata, no
     extra Spark scans).  footer decoding is pyarrow (local paths) --
     matching the bench/driver environment; the production listing path
@@ -1074,72 +1079,77 @@ def _zorder_skip_leg(spark, sf) -> DataFrame:
     import os
     import tempfile
 
-    from ..sources import layout
+    from ..sources import fs, layout
 
     tag = hashlib.md5(sf.encode()).hexdigest()[:8]
     path = f"{tempfile.gettempdir()}/spark_graft_j5_zorder_{tag}"
-    cols = ["l_partkey", "l_suppkey"]
-    li = _t(spark, sf, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
-    )
-    # slice keeps the write tiny; bits_per_col=4 (16 buckets/col) is
-    # plenty of resolution for 8 files and cuts the approxQuantile work
-    # that dominates the leg (256 cuts/col at the default 8 bits)
-    sub = li.filter(F.col("l_orderkey") % 20 == 0)
-    layout.write_zordered(sub, path, cols, n_files=8, bits_per_col=4)
-    stats = layout.file_stats(spark, path, cols)
-    import math
+    try:
+        cols = ["l_partkey", "l_suppkey"]
+        li = _t(spark, sf, "lineitem").select(
+            "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
+        )
+        # slice keeps the write tiny; bits_per_col=4 (16 buckets/col) is
+        # plenty of resolution for 8 files and cuts the approxQuantile work
+        # that dominates the leg (256 cuts/col at the default 8 bits)
+        sub = li.filter(F.col("l_orderkey") % 20 == 0)
+        layout.write_zordered(sub, path, cols, n_files=8, bits_per_col=4)
+        stats = layout.file_stats(spark, path, cols)
+        import math
 
-    box = {}
-    for c in cols:
-        los = [rec[c][0] for rec in stats if rec[c][0] is not None]
-        his = [rec[c][1] for rec in stats if rec[c][1] is not None]
-        if not los:
-            # no footer stats: an empty slice has no file to skip and no
-            # row to miss, so the claim holds vacuously; stats missing on
-            # written rows fail it
-            return _zorder_skip_row(spark, spark.read.parquet(path).isEmpty())
-        lo, hi = min(los), max(his)
-        # floor/ceil the mid-range box outward: on a narrow integer
-        # domain (suppkey 0..9 at sf0.001) the raw 45-55% box can land
-        # strictly BETWEEN integers and match zero rows, making the
-        # full-scan side vacuous
-        box[c] = (
-            math.floor(lo + 0.45 * (hi - lo)),
-            math.ceil(lo + 0.55 * (hi - lo)),
-        )
-    hits = layout.candidate_files(stats, box)
-    skipped = len(stats) - len(hits)
-    pred = None
-    for c, (blo, bhi) in box.items():
-        term = (F.col(c) >= blo) & (F.col(c) <= bhi)
-        pred = term if pred is None else pred & term
-    chk = [
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.crc32(
-                F.concat_ws(
-                    "|", "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
+        box = {}
+        for c in cols:
+            los = [rec[c][0] for rec in stats if rec[c][0] is not None]
+            his = [rec[c][1] for rec in stats if rec[c][1] is not None]
+            if not los:
+                # no footer stats: an empty slice has no file to skip and no
+                # row to miss, so the claim holds vacuously; stats missing on
+                # written rows fail it
+                return _zorder_skip_row(
+                    spark, spark.read.parquet(path).isEmpty()
                 )
+            lo, hi = min(los), max(his)
+            # floor/ceil the mid-range box outward: on a narrow integer
+            # domain (suppkey 0..9 at sf0.001) the raw 45-55% box can land
+            # strictly BETWEEN integers and match zero rows, making the
+            # full-scan side vacuous
+            box[c] = (
+                math.floor(lo + 0.45 * (hi - lo)),
+                math.ceil(lo + 0.55 * (hi - lo)),
             )
-        ).alias("s"),
-    ]
-    full = spark.read.parquet(path).filter(pred).agg(*chk).first()
-    ok = False
-    if hits:
-        pruned = (
-            spark.read.parquet(*[os.path.join(path, h) for h in hits])
-            .filter(pred)
-            .agg(*chk)
-            .first()
-        )
-        ok = (
-            skipped > 0
-            and pruned["n"] == full["n"]
-            and pruned["s"] == full["s"]
-            and full["n"] > 0
-        )
-    return _zorder_skip_row(spark, ok)
+        hits = layout.candidate_files(stats, box)
+        skipped = len(stats) - len(hits)
+        pred = None
+        for c, (blo, bhi) in box.items():
+            term = (F.col(c) >= blo) & (F.col(c) <= bhi)
+            pred = term if pred is None else pred & term
+        chk = [
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                F.crc32(
+                    F.concat_ws(
+                        "|", "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
+                    )
+                )
+            ).alias("s"),
+        ]
+        full = spark.read.parquet(path).filter(pred).agg(*chk).first()
+        ok = False
+        if hits:
+            pruned = (
+                spark.read.parquet(*[os.path.join(path, h) for h in hits])
+                .filter(pred)
+                .agg(*chk)
+                .first()
+            )
+            ok = (
+                skipped > 0
+                and pruned["n"] == full["n"]
+                and pruned["s"] == full["s"]
+                and full["n"] > 0
+            )
+        return _zorder_skip_row(spark, ok)
+    finally:
+        fs.delete_recursive(spark, path)
 
 
 def _zorder_skip_row(spark, ok: bool) -> DataFrame:

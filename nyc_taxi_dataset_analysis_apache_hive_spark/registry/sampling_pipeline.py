@@ -2072,11 +2072,7 @@ def tv1_text_stats(spark, sf):
         .unionByName(dense_ivf)
         .unionByName(hybrid)
         .unionByName(hybrid_ivf)
-        .unionByName(
-            _tv1_colloc_legs(
-                spark, sf, scored_tables=(colloc_scored, colloc_wscored)
-            )
-        )
+        .unionByName(_tv1_colloc_legs(colloc_scored, colloc_wscored))
     )
 
 
@@ -2205,7 +2201,7 @@ _TV1_COLLOC_DUCK_CTES = f"""
 """
 
 
-def _tv1_colloc_legs(spark, sf, toks=None, scored_tables=None):
+def _tv1_colloc_legs(scored, wscored):
     """Collocation mining over the document corpus (tv1's phrase legs):
     ``colloc`` = top bigrams by raw count; ``colloc_pmi`` /
     ``colloc_npmi`` = top bigrams by (normalized) pointwise mutual
@@ -2217,43 +2213,13 @@ def _tv1_colloc_legs(spark, sf, toks=None, scored_tables=None):
     tokenizer/vocab pipeline runs before merging multiword units; count
     tables are vocabulary-sized (SF-invariant ~900 bigrams here), so
     the scoring join broadcasts at any corpus scale
-    (operators/textops.collocation_scores).  ``toks``: tv1's shared
-    checkpointed token table (r18) -- the three pair/unigram corpus
-    passes read it instead of re-tokenizing the documents scan.
-    ``scored_tables``: the two checkpointed scored relations (bigram,
-    windowed) prebuilt in tv1's overlapped build batch; when given,
+    (operators/textops.collocation_scores).
+
+    ``scored`` / ``wscored``: the bigram and windowed scored relations,
+    checkpointed in tv1's overlapped build batch -- vocabulary-sized
+    (~900 bigrams at every sf) over two corpus-sized hash aggregates
+    each, so every ranking leg is a row_number over a cached table and
     this function does no corpus work at all."""
-    docs = (
-        None
-        if toks is not None or scored_tables is not None
-        else _t(spark, sf, "documents")
-    )
-    # ONE corpus pass per pair stream: the scored tables are
-    # vocabulary-sized (~900 bigrams at every sf), but their upstream
-    # is two corpus-sized hash aggregates each -- without the barrier
-    # the union re-runs that upstream once per ranking leg (the r16
-    # shape paid it 3x; with the windowed leg it would be 4x).
-    # Checkpointing the tiny scored relations makes every leg a
-    # row_number over a cached ~900-row table instead.
-    # ONE corpus unigram pass shared by the bigram and windowed scorers
-    # (r17 review: the oracle already shared the cucnt CTE; the
-    # DataFrame path now checkpoints the vocabulary-sized count table
-    # and hands it to both, so each scorer adds only its own pair scan)
-    if scored_tables is not None:
-        scored, wscored = scored_tables
-    else:
-        ucnt = textops.unigram_counts(docs, toks=toks).localCheckpoint(
-            eager=True
-        )
-        # the bigram and windowed scorers both hang off the
-        # checkpointed ucnt but not off each other: their two
-        # materialization jobs overlap (r18, guide §2.6)
-        scored, wscored = caching.checkpoint_overlapped(
-            textops.collocation_scores(docs, unigrams=ucnt, toks=toks),
-            textops.windowed_collocation_scores(
-                docs, unigrams=ucnt, toks=toks
-            ),
-        )
     w_freq = Window.orderBy(
         F.col("c_ab").desc(), F.col("w1").asc(), F.col("w2").asc()
     )

@@ -65,11 +65,11 @@ def _enable_py4j_nodelay(spark: SparkSession) -> None:
     the same -- so patch the existing client connections and the
     connection factory for ones not yet opened.  Driver-side only; no
     effect on any query plan or result."""
+    import socket as _socket
+
+    import py4j.clientserver as _cs
+
     try:
-        import socket as _socket
-
-        import py4j.clientserver as _cs
-
         def _nodelay(sock) -> None:
             try:
                 sock.setsockopt(

@@ -830,8 +830,6 @@ def _bloom_probe_rows(
     docs: DataFrame,
     bloom_bits: DataFrame,
     history_fps: DataFrame,
-    k: int,
-    m: int,
     text_col: str,
     ts_col: str | None,
     materialize_probe: bool,
@@ -840,8 +838,9 @@ def _bloom_probe_rows(
     (operators.dedup.bloom_admission_rows) -- the stream and the batch
     operator must never re-spell the dup/fp/clean classification
     independently.  This only normalizes the ts passthrough."""
-    from ..operators.dedup import bloom_admission_rows
+    from ..operators.dedup import _bloom_artifact_geometry, bloom_admission_rows
 
+    k, m = _bloom_artifact_geometry(bloom_bits)
     if ts_col:
         docs = docs.withColumn("ts", F.col(ts_col))
     return bloom_admission_rows(
@@ -857,25 +856,10 @@ def _bloom_probe_rows(
     )
 
 
-def _resolved_bloom_geometry(bloom_bits, k, m):
-    """None-signature adapter over the one shared election
-    (operators.dedup.resolve_bloom_geometry): the stream surfaces spell
-    unset as None, the batch operator as its _UNSET sentinel."""
-    from ..operators.dedup import _UNSET, resolve_bloom_geometry
-
-    return resolve_bloom_geometry(
-        bloom_bits,
-        _UNSET if k is None else k,
-        _UNSET if m is None else m,
-    )
-
-
 def bloom_admission_stream(
     docs: DataFrame,
     bloom_bits: DataFrame,
     history_fps: DataFrame,
-    k: int | None = None,
-    m: int | None = None,
     text_col: str = "text",
     ts_col: str = "ts",
 ) -> DataFrame:
@@ -886,24 +870,18 @@ def bloom_admission_stream(
     and ``history_fps`` (dedup.history_fingerprints -- use the helper:
     it pins the NULL-text coalesce the filter build applies, and any
     other spelling silently diverges the class partition) are the
-    maintained static artifacts; (k, m) resolve through the SAME
-    :func:`..operators.dedup.resolve_bloom_geometry` election as the
-    batch operator -- the artifact's carried geometry wins, an explicit
-    declaration is validated against it (mismatch raises at setup, not
-    as silent false negatives), and a legacy bits-only artifact trusts
-    the declaration.
+    maintained static artifacts; (k, m) come from the artifact, as in
+    the batch operator (a bits-only artifact raises at setup, not as
+    silent false negatives).
 
     The history join broadcasts here because the candidate slice is
     tiny; at a history too large to broadcast, drop the hint and let
     the candidates shuffle -- the bloom's job is precisely that the
     CLEAN majority never reaches that join either way."""
-    rk, rm = _resolved_bloom_geometry(bloom_bits, k, m)
     return _bloom_probe_rows(
         docs,
         bloom_bits,
         history_fps,
-        rk,
-        rm,
         text_col,
         ts_col,
         # streaming frames cannot checkpoint; the micro-batch's narrow
@@ -916,20 +894,15 @@ def bloom_admission_batch(
     docs: DataFrame,
     bloom_bits: DataFrame,
     history_fps: DataFrame,
-    k: int | None = None,
-    m: int | None = None,
     text_col: str = "text",
 ) -> DataFrame:
     """Batch analog: the same expressions with no ts column --
     equality-gated against the stream AND the batch operator
     (dedup.bloom_fingerprint_admission) in tests."""
-    rk, rm = _resolved_bloom_geometry(bloom_bits, k, m)
     return _bloom_probe_rows(
         docs,
         bloom_bits,
         history_fps,
-        rk,
-        rm,
         text_col,
         ts_col=None,
         materialize_probe=True,

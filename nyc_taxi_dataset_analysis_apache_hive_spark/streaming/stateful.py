@@ -107,84 +107,3 @@ def run_stateful_to_memory_sink(stream_df: DataFrame, query_name: str):
         .start()
     )
 
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-state API)
-# ---------------------------------------------------------------------------
-
-def tws_available() -> bool:
-    """Whether transformWithStateInPandas can RUN here: the Python worker
-    side of the new state protocol speaks protobuf, which this container
-    does not ship -- same optional-dependency posture as the multimodal
-    codecs (operators/multimodal.py): the operator below is real and the
-    parity test skips with a named reason when the runtime dependency is
-    absent."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-def running_user_totals_tws(
-    events: DataFrame, anomaly_threshold: float = 190.0
-) -> DataFrame:
-    """The same running per-user totals operator on the MODERN stateful
-    API (``transformWithStateInPandas``, Spark 4): a StatefulProcessor
-    with a named ValueState slot instead of the single opaque GroupState
-    tuple.  Functionally identical to
-    :func:`running_user_totals_stream`; operationally the new API is the
-    forward path at scale -- multiple named state variables, state TTL,
-    processing/event-time timers, and schema evolution of state, none of
-    which ``applyInPandasWithState`` offers.
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...state.RocksDBStateStoreProvider``) -- the HDFS-backed default
-    does not implement the new operator's column-family state layout.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s, mx = (
-                self._state.get()
-                if self._state.exists()
-                else (0, 0.0, float("-inf"))
-            )
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-                mx = max(mx, float(pdf["value"].max()))
-            self._state.update((n, s, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [round(s, 6)],
-                    "max_value": [mx],
-                    "anomaly": [mx >= anomaly_threshold],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_Totals(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )

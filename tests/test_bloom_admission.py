@@ -1,7 +1,7 @@
 """Portable Bloom-filter dedup admission (dedup.bloom_fingerprint_
 admission): the no-false-negative law, forced false positives at a tiny
-geometry, prebuilt-filter reuse with the geometry guard, and position
-parity against a python md5 reference."""
+geometry, prebuilt-filter reuse with the artifact-geometry guard, and
+position parity against a python md5 reference."""
 
 from __future__ import annotations
 
@@ -70,18 +70,22 @@ def test_tiny_geometry_forces_false_positives_but_never_negatives(spark):
         {1000: "doc 3 alpha beta", 2000: "completely new text here"},
     )
     rep = {r.doc_id: r for r in
-           dedup.bloom_fingerprint_admission(hist, batch, k=2, m=16).collect()}
+           dedup.bloom_fingerprint_admission(
+               hist, batch, bloom_bits=dedup.bloom_filter_build(hist, k=2, m=16)
+           ).collect()}
     assert rep[1000].bloom_candidate and rep[1000].duplicate_exact
     assert rep[2000].bloom_candidate  # saturated filter: FP
     assert not rep[2000].duplicate_exact and rep[2000].admitted
 
 
 def test_prebuilt_bits_reuse_and_geometry_guard(spark):
-    """r15 (ADVICE): the artifact carries its (k, m); a MATCHING
-    explicit declaration is accepted (it no longer raises -- the r14
-    guard made every non-default prebuilt filter unusable), a
-    MISMATCHED one raises, and a legacy bits-only artifact trusts the
-    declaration."""
+    """A prebuilt artifact probes exactly like the operator's own build,
+    a non-default prebuilt filter is usable through its carried (k, m),
+    and a bits-only artifact raises on every surface that reads the
+    geometry: guessing its hash family would break the no-false-negative
+    guarantee."""
+    from nyc_taxi_dataset_analysis_apache_hive_spark.streaming import curation
+
     hist = _docs(spark, {i: f"doc {i}" for i in range(20)})
     batch = _docs(spark, {100: "doc 7", 200: "fresh"})
     bits = dedup.bloom_filter_build(hist)
@@ -96,20 +100,6 @@ def test_prebuilt_bits_reuse_and_geometry_guard(spark):
         ).collect()
     }
     assert got == want
-    # matching declaration: accepted, same rows
-    declared = {
-        r.doc_id: (r.bloom_candidate, r.duplicate_exact)
-        for r in dedup.bloom_fingerprint_admission(
-            hist, batch, bloom_bits=bits, k=dedup.BLOOM_K, m=dedup.BLOOM_M
-        ).collect()
-    }
-    assert declared == want
-    # mismatched declaration: raises before planning the probe
-    with pytest.raises(ValueError, match="built at"):
-        dedup.bloom_fingerprint_admission(
-            hist, batch, bloom_bits=bits, m=dedup.BLOOM_M * 2
-        )
-    # non-default prebuilt filter: usable when its declaration matches
     nd = dedup.bloom_filter_build(hist, k=2, m=1 << 10)
     nd_rows = {
         r.doc_id: r.duplicate_exact
@@ -118,33 +108,34 @@ def test_prebuilt_bits_reuse_and_geometry_guard(spark):
         ).collect()
     }
     assert nd_rows[100] and not nd_rows[200]
-    # legacy bits-only artifact: the declaration is trusted
-    legacy = nd.select("bits")
-    lg = {
-        r.doc_id: r.duplicate_exact
-        for r in dedup.bloom_fingerprint_admission(
-            hist, batch, bloom_bits=legacy, k=2, m=1 << 10
-        ).collect()
-    }
-    assert lg == nd_rows
+    bits_only = nd.select("bits")
+    fps = dedup.history_fingerprints(hist)
+    surfaces = [
+        lambda: dedup.bloom_fingerprint_admission(
+            hist, batch, bloom_bits=bits_only
+        ),
+        lambda: curation.bloom_admission_batch(batch, bits_only, fps),
+        lambda: curation.bloom_admission_stream(batch, bits_only, fps),
+        lambda: dedup.bloom_filter_update(bits_only, batch),
+        lambda: dedup.bloom_pack_words(bits_only),
+    ]
+    for surface in surfaces:
+        with pytest.raises(ValueError, match="geometry-carrying"):
+            surface()
 
 
 def test_streaming_surfaces_share_the_geometry_election(spark):
-    """The stream twins resolve (k, m) through the same election: a
-    geometry-carrying artifact probed with a mismatched declaration
-    raises at setup on the BATCH-ANALOG surface too."""
+    """The stream twins read (k, m) off the artifact, as the batch
+    operator does: a non-default filter probes with its own geometry."""
     from nyc_taxi_dataset_analysis_apache_hive_spark.streaming import curation
 
     hist = _docs(spark, {i: f"doc {i}" for i in range(10)})
-    batch = _docs(spark, {100: "doc 7"})
+    batch = _docs(spark, {100: "doc 7", 200: "fresh"})
     bits = dedup.bloom_filter_build(hist, k=3, m=1 << 12)
     fps = dedup.history_fingerprints(hist)
-    # artifact geometry wins with no declaration
     got = {r.doc_id: r.duplicate_exact
            for r in curation.bloom_admission_batch(batch, bits, fps).collect()}
-    assert got == {100: True}
-    with pytest.raises(ValueError, match="built at"):
-        curation.bloom_admission_batch(batch, bits, fps, k=dedup.BLOOM_K)
+    assert got == {100: True, 200: False}
 
 
 def test_bloom_geometry_sizing_holds_target_fp_rate(spark):
@@ -163,7 +154,9 @@ def test_bloom_geometry_sizing_holds_target_fp_rate(spark):
         (F.col("id") + 1_000_000).alias("doc_id"),
         F.concat(F.lit("novel body "), F.col("id")).alias("text"),
     )
-    rep = dedup.bloom_fingerprint_admission(hist, clean, k=k, m=m)
+    rep = dedup.bloom_fingerprint_admission(
+        hist, clean, bloom_bits=dedup.bloom_filter_build(hist, k=k, m=m)
+    )
     agg = rep.agg(
         F.avg(F.col("bloom_candidate").cast("double")).alias("rate"),
         F.sum(F.col("duplicate_exact").cast("long")).alias("dups"),
@@ -221,9 +214,6 @@ def test_bloom_filter_update_roundtrips_to_fresh_build(spark):
     }
     assert v_upd == v_fresh
     assert v_upd[300][1] and v_upd[301][1] and v_upd[302][2]
-    # a legacy bits-only artifact cannot be updated (no carried geometry)
-    with pytest.raises(ValueError, match="geometry-carrying"):
-        dedup.bloom_filter_update(bits1.select("bits"), admitted)
 
 
 def test_packed_words_equal_positions_artifact(spark):
@@ -258,8 +248,6 @@ def test_packed_words_equal_positions_artifact(spark):
         ).collect()
     }
     assert via_packed == via_positions
-    with pytest.raises(ValueError, match="geometry-carrying"):
-        dedup.bloom_pack_words(bits.select("bits"))
 
 
 def test_bloom_geometry_formula_and_bounds():

@@ -108,126 +108,6 @@ def test_embeddings_stable_and_normalized(media):
     assert sum(x * x for x in v) == pytest.approx(1.0, rel=1e-9)
 
 
-def test_real_codec_path_is_marked_not_implemented(media):
-    """Kinds whose library is not importable raise the marked
-    integration-point error (every stage is optional-import wired:
-    Pillow/image, soundfile/audio, PyAV/video)."""
-    if not multimodal.codec_support()["video"]:
-        with pytest.raises(Exception, match="codec integration point"):
-            multimodal.sample_frames(media, use_real_codecs=True).collect()
-    if not multimodal.codec_support()["image"]:
-        with pytest.raises(Exception, match="codec integration point"):
-            multimodal.media_features(
-                media.filter(F.col("kind") == "image"), use_real_codecs=True
-            ).collect()
-
-
-def test_real_codec_contract_all_stages(media):
-    """Wiring real codecs must be a drop-in: every Python stage exposes the
-    same marked integration point, and flipping the flag cannot change the
-    Spark-side plumbing (schema, filtered input kind, batch shape).  The
-    raise-assertion is gated per stage on the required library being
-    ABSENT -- with Pillow installed the image stages run for real instead
-    (covered by the feature tests below)."""
-    support = multimodal.codec_support()
-    stages = [
-        ("image", lambda m, real: multimodal.media_features(m, use_real_codecs=real)),
-        ("image", lambda m, real: multimodal.resize_images(m, 8, 8, use_real_codecs=real)),
-        ("video", lambda m, real: multimodal.sample_frames(m, 2, use_real_codecs=real)),
-    ]
-    for needs, stage in stages:
-        fake_df = stage(media, False)
-        real_df = stage(media, True)
-        # plumbing invariant: identical schema either way (analysis-time,
-        # no execution needed)
-        assert real_df.schema == fake_df.schema
-        if support[needs]:
-            continue
-        # the integration point raises ONE message carrying both the marker
-        # and the wiring instructions (single job launch per stage)
-        with pytest.raises(Exception, match="codec integration point") as ei:
-            real_df.collect()
-        assert "mapInPandas plumbing" in str(ei.value)
-
-
-@pytest.mark.skipif(
-    not multimodal.codec_support()["image"], reason="Pillow not installed"
-)
-def test_real_image_codecs_feature(spark):
-    """Runs only where Pillow imports: real PNG payloads decode, resize to
-    the requested pixel dims, and feature-extract over DECODED pixel bytes
-    (not the compressed container)."""
-    import io
-
-    from PIL import Image
-
-    def png_bytes(w, h, color):
-        buf = io.BytesIO()
-        Image.new("RGB", (w, h), color).save(buf, format="PNG")
-        return buf.getvalue()
-
-    rows = [
-        (1, "image", bytearray(png_bytes(16, 8, (255, 0, 0))), None),
-        (2, "image", bytearray(png_bytes(4, 4, (0, 128, 255))), None),
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-
-    feats = {
-        r["media_id"]: r
-        for r in multimodal.media_features(media, use_real_codecs=True).collect()
-    }
-    # solid-color image -> decoded pixel stream has <=3 distinct byte
-    # values -> entropy <= log2(3); the PNG container bytes would not
-    assert feats[1]["byte_entropy"] <= 1.585
-    assert feats[1]["first_byte"] == 255  # first decoded byte: R of red
-    assert feats[1]["n_bytes"] == len(bytes(rows[0][2]))  # container fact
-
-    resized = {
-        r["media_id"]: r
-        for r in multimodal.resize_images(
-            media, 6, 5, use_real_codecs=True
-        ).collect()
-    }
-    for mid, r in resized.items():
-        with Image.open(io.BytesIO(bytes(r["payload"]))) as img:
-            assert img.size == (6, 5)
-
-
-@pytest.mark.skipif(
-    not multimodal.codec_support()["video"], reason="PyAV not installed"
-)
-def test_real_video_codec_feature(spark):
-    """Runs only where PyAV imports: a real encoded container decodes and
-    frame-samples to n_frames rgb24 payloads of w*h*3 bytes each."""
-    import io
-
-    import av
-    import numpy as np
-
-    w, h, total = 8, 6, 10
-    buf = io.BytesIO()
-    with av.open(buf, mode="w", format="mp4") as container:
-        stream = container.add_stream("mpeg4", rate=5)
-        stream.width, stream.height, stream.pix_fmt = w, h, "yuv420p"
-        for i in range(total):
-            arr = np.full((h, w, 3), i * 20, dtype=np.uint8)
-            frame = av.VideoFrame.from_ndarray(arr, format="rgb24")
-            for packet in stream.encode(frame):
-                container.mux(packet)
-        for packet in stream.encode():
-            container.mux(packet)
-
-    media = spark.createDataFrame(
-        [(1, "video", bytearray(buf.getvalue()), None)], multimodal.MEDIA_SCHEMA
-    )
-    frames = multimodal.sample_frames(media, n_frames=4, use_real_codecs=True)
-    rows = frames.collect()
-    assert len(rows) == 4
-    assert sorted(r["frame_idx"] for r in rows) == [0, 1, 2, 3]
-    for r in rows:
-        assert r["n_bytes"] == w * h * 3  # decoded rgb24, not container bytes
-
-
 def test_resize_null_payload_propagates_null_dims(spark):
     """NULL-payload image rows follow the stage NULL policy everywhere:
     payload, width, AND height come back NULL with resized=False (r9

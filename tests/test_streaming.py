@@ -615,98 +615,6 @@ def test_hll_maintenance_mid_stream_attach_replay(spark, events_dir, tmp_path):
         mnt.fold_batch_into_hll(first, 5, state)
 
 
-@pytest.mark.skipif(
-    not __import__(
-        "nyc_taxi_dataset_analysis_apache_hive_spark.streaming.stateful",
-        fromlist=["tws_available"],
-    ).tws_available(),
-    reason="transformWithStateInPandas worker protocol needs protobuf, "
-    "not shipped in this container (same optional-dep posture as the "
-    "multimodal codecs)",
-)
-def test_tws_running_totals_match_batch(spark, events_dir, events_batch):
-    """transformWithStateInPandas parity: the modern-API operator's final
-    per-user rows equal the batch lifetime aggregates, exactly like its
-    applyInPandasWithState sibling."""
-    from pyspark.sql.window import Window
-
-    from nyc_taxi_dataset_analysis_apache_hive_spark.streaming import stateful
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = stateful.running_user_totals_tws(
-            sev.read_events_stream(spark, events_dir).filter(
-                F.col("event_type") != SENTINEL
-            ),
-            anomaly_threshold=190.0,
-        )
-        q = stateful.run_stateful_to_memory_sink(stream, "tws_totals_sink")
-        q.awaitTermination(120)
-        sink = spark.table("tws_totals_sink")
-        final = {
-            r["user_id"]: r
-            for r in sink.withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("user_id").orderBy(
-                        F.col("n_events").desc()
-                    )
-                ),
-            )
-            .filter("rn = 1")
-            .collect()
-        }
-        expected = {
-            r["user_id"]: r
-            for r in events_batch.groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.round(F.sum("value"), 6).alias("sum_value"),
-                F.max("value").alias("max_value"),
-            )
-            .collect()
-        }
-        assert set(final) == set(expected)
-        for uid, exp in expected.items():
-            got = final[uid]
-            assert got["n_events"] == exp["n_events"], uid
-            assert got["sum_value"] == pytest.approx(
-                exp["sum_value"], abs=1e-6
-            )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-
-
-def test_tws_operator_builds_with_expected_schema(spark, events_dir):
-    """The transformWithStateInPandas plumbing (plan construction, state
-    schema, output schema) is container-independent even though worker
-    EXECUTION needs protobuf -- mirror of the multimodal stub posture:
-    plumbing tested always, runtime gated."""
-    from nyc_taxi_dataset_analysis_apache_hive_spark.streaming import stateful
-
-    stream = stateful.running_user_totals_tws(
-        sev.read_events_stream(spark, events_dir)
-    )
-    assert stream.isStreaming
-    assert [f.name for f in stream.schema.fields] == [
-        "user_id",
-        "n_events",
-        "sum_value",
-        "max_value",
-        "anomaly",
-    ]
-
-
 def test_hll_maintenance_refuses_delta_rebuild_of_oldest_retained(
     spark, events_dir, tmp_path
 ):
@@ -771,19 +679,3 @@ def test_backfill_ledger_floor_migrates_legacy_dir(
     # a second backfill is refused: the marker is provenance, not config
     with pytest.raises(RuntimeError, match="refusing"):
         mnt.backfill_ledger_floor(spark, state, 5)
-
-
-def test_stateful_v2_bench_records_named_skip(spark, monkeypatch):
-    """The bench posture for transformWithStateInPandas is itself
-    regression-guarded: where the worker protocol deps are absent, the
-    bench entry must be a NAMED skip (not a silently missing row) -- and
-    if protobuf ever appears in the container, the real measurement
-    lights up through the same entry point."""
-    import bench_streaming as bs  # conftest puts the repo root on sys.path
-    from nyc_taxi_dataset_analysis_apache_hive_spark.streaming import (
-        stateful,
-    )
-
-    monkeypatch.setattr(stateful, "tws_available", lambda: False)
-    entry = bs.stateful_v2_result(spark, events_dir="unused")
-    assert "skipped" in entry and "protobuf" in entry["skipped"]

@@ -298,3 +298,71 @@ def test_global_write_checker_catches_each_call():
     assert global_state_writes(prop, "operators/dedup.py") == [
         "operators/dedup.py:3 setLocalProperty"
     ]
+
+
+# ---------------------------------------------------------------------------
+# Rule 5: one path per operator -- no optional-import forks.  A handler
+# that catches ImportError/ModuleNotFoundError (or any handler of a try
+# whose body imports) is how a second code path for an absent library is
+# written: no workload runs it, and its tests can only skip here.
+# ---------------------------------------------------------------------------
+
+_IMPORT_ERRORS = {"ImportError", "ModuleNotFoundError"}
+
+
+def _caught_names(handler: ast.ExceptHandler) -> set[str]:
+    t = handler.type
+    elts = t.elts if isinstance(t, ast.Tuple) else [t]
+    return {e.id for e in elts if isinstance(e, ast.Name)}
+
+
+def optional_import_forks(source: str, filename: str) -> list[str]:
+    """``file:line`` for every except handler in ``source`` that catches
+    an import failure: by naming ImportError/ModuleNotFoundError, or by
+    guarding a try body that imports."""
+    hits = []
+    for node in ast.walk(ast.parse(source)):
+        if not isinstance(node, ast.Try):
+            continue
+        imports = any(
+            isinstance(n, (ast.Import, ast.ImportFrom))
+            for stmt in node.body
+            for n in ast.walk(stmt)
+        )
+        for h in node.handlers:
+            if imports or _caught_names(h) & _IMPORT_ERRORS:
+                hits.append(f"{filename}:{h.lineno}")
+    return hits
+
+
+def test_no_optional_import_forks_in_the_package():
+    bad = []
+    for p in sorted(_PKG.rglob("*.py")):
+        bad += optional_import_forks(p.read_text(), p.relative_to(_PKG).as_posix())
+    assert not bad, f"optional-import fork (a second code path): {bad}"
+
+
+def test_optional_import_checker_catches_each_spelling():
+    """Self-test: each way of writing the fork trips the checker, and a
+    try that neither imports nor catches an import error does not."""
+    named = (
+        "def f():\n"
+        "    try:\n"
+        "        x = 1\n"
+        "    except ImportError:\n"
+        "        pass\n"
+    )
+    assert optional_import_forks(named, "operators/m.py") == ["operators/m.py:4"]
+    tupled = named.replace("ImportError", "(ValueError, ModuleNotFoundError)")
+    assert optional_import_forks(tupled, "operators/m.py") == ["operators/m.py:4"]
+    broad = (
+        "def f():\n"
+        "    try:\n"
+        "        from google.protobuf import descriptor\n"
+        "        return True\n"
+        "    except Exception:\n"
+        "        return False\n"
+    )
+    assert optional_import_forks(broad, "streaming/s.py") == ["streaming/s.py:5"]
+    clean = named.replace("ImportError", "ValueError")
+    assert optional_import_forks(clean, "operators/m.py") == []
