@@ -439,7 +439,7 @@ def run_doc_streams(spark, sf_dir: str, n_slices: int):
     # protected set + importance model: even split / src0-target, the
     # test-suite shapes, materialized eagerly before the clock starts
     c_grams = dedup.corpus_gram_set(
-        docs.filter(F.col("doc_id") % 2 == 0), ngram_n=8
+        dedup.token_table(docs.filter(F.col("doc_id") % 2 == 0)), ngram_n=8
     ).localCheckpoint(eager=True)
     span_idx = curation.protected_span_index(
         docs.filter(F.col("doc_id") % 2 == 0)

@@ -13,7 +13,7 @@ exits -- after the caller's terminal action, which is the earliest moment
 unpersisting is safe::
 
     with CacheScope() as cs:
-        top = tfidf_top_terms(docs, k=3, cache=cs)
+        top = tfidf_top_terms(token_table(docs), k=3, cache=cs)
         top.write.parquet(out)            # terminal action runs cached
     # <- every intermediate unpersisted here (blocking)
 

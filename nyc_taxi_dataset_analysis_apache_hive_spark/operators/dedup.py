@@ -35,28 +35,39 @@ from ..functions.text import (
 )
 
 
-def _shingle_sets(
-    docs: DataFrame | None,
-    shingle_n: int,
-    text_col: str = "text",
-    *,
-    toks: DataFrame | None = None,
+def token_table(
+    docs: DataFrame, text_col: str = "text", keep: tuple[str, ...] = ()
 ) -> DataFrame:
-    """(doc_id, sh: array<string>) distinct word n-gram sets.
+    """(doc_id, toks): the null-safe word-token arrays (NULL text
+    tokenizes to an empty array, the scrub-leg convention) -- the one
+    input of every word-token operator in this package.  A caller
+    running several of them over one corpus materializes this frame
+    once and feeds it to each.  Whether the materialization wins is a
+    MEASURED question that flipped with consumer count: with two
+    consumers (minhash signature + jaccard verify) recompute was
+    cheaper at sf0.1 on local[32] (materializing 100k string arrays
+    cost more than one extra split+filter pass), but with FOUR token
+    consumers (d4's ngram index, span grams, rep grams, rep lengths)
+    the shared eager checkpoint measured 9.5-10.9 s vs 10.0-11.9 s
+    independent (5 interleaved reps, ~7%) -- adopted in the d4 entry.
+    At 100-TB scale tokenization dominates CPU and sharing is the right
+    default regardless.
 
-    Two projections on purpose: the token array materializes first so the
-    n-gram lambda reads a concrete array instead of re-running the tokenizer
+    ``keep=``: extra payload columns carried alongside the token array
+    (e.g. ``("source",)`` for the tv1 probe legs whose label rides the
+    shared checkpoint)."""
+    text = F.coalesce(F.col(text_col), F.lit(""))
+    return docs.select("doc_id", *keep, tokens(text).alias("toks"))
+
+
+def _shingle_sets(toks: DataFrame, shingle_n: int) -> DataFrame:
+    """(doc_id, sh: array<string>) distinct word n-gram sets of a
+    :func:`token_table` frame.
+
+    The token array is its own projection on purpose, so the n-gram
+    lambda reads a concrete array instead of re-running the tokenizer
     per element (see PERF note on ngrams_from_tokens -- 23x at sf0.1).
-
-    ``toks=`` (r15): a precomputed ``(doc_id, toks)`` frame (e.g.
-    :func:`token_table`) skips the tokenize projection.  Note
-    token_table's null-safe empty array yields an EMPTY shingle set for
-    NULL text where the direct path yields NULL -- equivalent for every
-    consumer here (both explode to no index rows, and set sizes are
-    only read for docs that produced index rows).
     """
-    if toks is None:
-        toks = docs.select("doc_id", tokens(text_col).alias("toks"))
     return toks.select(
         "doc_id",
         F.array_distinct(ngrams_from_tokens(F.col("toks"), shingle_n)).alias("sh"),
@@ -140,7 +151,7 @@ def minhash_signatures(
     aggregation collapses everything map-side; the shuffle carries
     n_hashes longs per document.
     """
-    sets = _shingle_sets(docs, shingle_n)
+    sets = _shingle_sets(token_table(docs), shingle_n)
     return _signatures_from_sets(sets, n_hashes)
 
 
@@ -150,7 +161,7 @@ def _signatures_from_sets(sets: DataFrame, n_hashes: int) -> DataFrame:
     between the signature and verify passes."""
     sh = sets.select("doc_id", F.explode("sh").alias("s"))
     rows = sh.select("doc_id", minhash_reduced_hash(F.col("s")).alias("h"))
-    # expr-string spelling (r18, guide §7 construction altitude): the
+    # expr-string spelling (guide §7 construction altitude): the
     # Column-algebra form paid ~6 py4j round-trips per permutation
     # (~100 for 16 hashes) at ~0.5-0.7 ms each on this gateway; one
     # parsed string per aggregate is 2.  Identical expression -- SQL
@@ -169,7 +180,7 @@ def minhash_band_buckets(
     """LSH banding: rows (doc_id, band, bucket), bucket = '|'-joined band
     signature components -- n_bands rows per doc via one explode."""
     rows_per_band = n_hashes // n_bands
-    # expr-string spelling (r18, guide §7): the nested
+    # expr-string spelling (guide §7): the nested
     # array(struct(concat_ws(cast...))) Column build was ~50 py4j
     # round-trips per call (and this is called once per side per
     # consumer -- d3, d7, the incremental admit leg); one parsed
@@ -267,7 +278,7 @@ def minhash_lsh_pairs(
     derivation -- the sharing hook for callers that also feed the same
     signatures to the admission path (the d3 registry entry).
     """
-    shingle_frame = _shingle_sets(docs, shingle_n)
+    shingle_frame = _shingle_sets(token_table(docs), shingle_n)
     sigs = (
         signatures
         if signatures is not None
@@ -280,34 +291,13 @@ def minhash_lsh_pairs(
     )
 
 
-def _two_sided_toks(corpus, probes, corpus_toks, probe_toks) -> None:
-    """Validate the two-sided ``*_toks=`` overload: each side takes the
-    raw frame or its token table, never both, and the two token tables
-    come together (a half-shared pass is a smell, not a feature)."""
-    if (corpus_toks is None) != (probe_toks is None):
-        raise ValueError(
-            "corpus_toks= and probe_toks= come together; pass both "
-            "sides of the shared tokenize or neither"
-        )
-    if corpus_toks is not None and (corpus is not None or probes is not None):
-        raise ValueError(
-            "corpus_toks=/probe_toks= already fix the sides; pass "
-            "either the token tables or the raw frames, not both"
-        )
-    if corpus_toks is None and (corpus is None or probes is None):
-        raise ValueError("either corpus+probes or both *_toks= are required")
-
-
 def cross_corpus_minhash_pairs(
-    corpus: DataFrame | None = None,
-    probes: DataFrame | None = None,
+    corpus_toks: DataFrame,
+    probe_toks: DataFrame,
     n_hashes: int = 16,
     n_bands: int = 4,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
-    *,
-    corpus_toks: DataFrame | None = None,
-    probe_toks: DataFrame | None = None,
 ) -> DataFrame:
     """Decontamination: near-duplicate pairs ACROSS two corpora (e.g. does
     any training document match an eval/benchmark document?).
@@ -323,12 +313,11 @@ def cross_corpus_minhash_pairs(
     shuffled; with a large probe side Catalyst falls back to a shuffled
     equi-join on (band, bucket), still never an all-pairs product.
 
-    ``corpus_toks=`` / ``probe_toks=`` (r18): precomputed token-table
-    slices (the d7 shared tokenize) skip both sides' tokenize passes.
+    Both sides are :func:`token_table` frames (d7 slices one shared
+    tokenize into the two sides).
     """
-    _two_sided_toks(corpus, probes, corpus_toks, probe_toks)
-    c_sets = _shingle_sets(corpus, shingle_n, toks=corpus_toks)
-    p_sets = _shingle_sets(probes, shingle_n, toks=probe_toks)
+    c_sets = _shingle_sets(corpus_toks, shingle_n)
+    p_sets = _shingle_sets(probe_toks, shingle_n)
     c_buckets = minhash_band_buckets(
         _signatures_from_sets(c_sets, n_hashes), n_hashes, n_bands
     )
@@ -342,14 +331,13 @@ def cross_corpus_minhash_pairs(
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame | None = None,
+    toks: DataFrame,
     shingle_n: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
-    *,
-    toks: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact n-gram-Jaccard near-dup pairs via an inverted-index join.
+    """Exact n-gram-Jaccard near-dup pairs via an inverted-index join
+    over a :func:`token_table` frame.
 
     explode distinct shingles -> self-join on shingle (doc_a < doc_b) ->
     common-shingle count per pair -> jaccard = common / (|A| + |B| - common).
@@ -370,22 +358,8 @@ def ngram_jaccard_pairs(
     bound and pairs overlapping ONLY in boilerplate fall away -- which is
     the desired behaviour.  Default None = exact (the oracle-parity path);
     AQE skew-join splitting covers moderate skew either way.
-
-    ``toks=`` (r15): a precomputed :func:`token_table` frame skips the
-    tokenize projection; ``docs`` is then already baked in and passing
-    it raises (the ``runs=`` discipline).
     """
-    if toks is not None:
-        if docs is not None:
-            raise ValueError(
-                "toks= already fixes docs; pass either toks= or docs, "
-                "not both"
-            )
-        sets = _shingle_sets(None, shingle_n, toks=toks)
-    else:
-        if docs is None:
-            raise ValueError("either docs or toks= is required")
-        sets = _shingle_sets(docs, shingle_n)
+    sets = _shingle_sets(toks, shingle_n)
     sizes = sets.select("doc_id", F.size("sh").alias("n_sh"))
     # join key is the portable 60-bit md5 hash, not the shingle string: the
     # shuffle carries 8-byte longs instead of ~20-char strings, and the
@@ -593,7 +567,7 @@ def connected_components(
     for one extra equi-join per round -- measured a wash-to-slight-loss
     on clique-ish near-dup graphs (diameter 2-3) and the difference
     between converging and NOT converging on long-chain graphs
-    (BASELINE.md).  Default ``None`` = AUTO (r9): start with plain
+    (BASELINE.md).  Default ``None`` = AUTO: start with plain
     propagation, and flip doubling on from round
     ``_SHORTCUT_AUTO_AT`` (6) if the labels have not converged by then
     -- a convergence-stall probe that needs no diameter estimate.
@@ -756,7 +730,7 @@ def partitioned_components(
     :func:`connected_components`; this operator trusts the caller's
     confinement guarantee and never checks it.
 
-    Investigated and REJECTED (r14, the pl1 question): routing the
+    Investigated and REJECTED (the pl1 question): routing the
     curation funnel's MinHash-LSH pair graph through this fast path by
     keying on the colliding band.  Confinement requires the key to
     PARTITION the vertex set -- every vertex in exactly ONE group --
@@ -898,7 +872,7 @@ def winnow_prints_arrow(
     same schema, equality-tested (tests/test_winnow.py).
 
     Why this exists: the HOF form's cost is NOT the md5 digest but the
-    ~1M-per-sf0.1 interpreted lambda evaluations (measured r7: a
+    ~1M-per-sf0.1 interpreted lambda evaluations (measured: a
     polynomial hash swap moved 5.12 -> 5.07 s; a relational
     explode+window-min rewrite LOST, 7.3 vs 6.1 s).  Per-gram hashing is
     exactly the sanctioned per-batch-Python shape (the heavy_hitters
@@ -1037,12 +1011,7 @@ def winnow_near_pairs(
 
 
 def boilerplate_scrub(
-    docs: DataFrame | None = None,
-    ngram_n: int = 5,
-    min_docs: int = 3,
-    text_col: str = "text",
-    *,
-    toks: DataFrame | None = None,
+    toks: DataFrame, ngram_n: int = 5, min_docs: int = 3
 ) -> DataFrame:
     """Remove word n-gram spans that repeat across >= ``min_docs`` distinct
     documents; per-doc scrub report ``(doc_id, n_tokens, n_kept,
@@ -1080,30 +1049,12 @@ def boilerplate_scrub(
 
     Token order is load-bearing: kept tokens rejoin in document order, so
     ``scrub_fp`` is the md5 of the text a downstream trainer would
-    actually see (value-verified against the DuckDB oracle).  The token
-    pass runs twice (gram pass + rebuild) -- a deliberate recompute of a
-    cheap codegen'd split, same trade as ngram_jaccard_pairs; at 100 TB
-    both consumers pipeline over one scan of the parquet column each.
+    actually see (value-verified against the DuckDB oracle).  Both the
+    gram pass and the rebuild read the :func:`token_table` frame; its
+    NULL-to-empty convention keeps Spark's size(NULL) = -1 out of
+    n_tokens (the DuckDB oracle's len(NULL) stays NULL).
     """
-    # NULL text coalesces to '' BEFORE tokenizing: split(NULL) is a NULL
-    # array, and Spark's size(NULL) = -1 would leak into n_tokens while
-    # the DuckDB oracle's len(NULL) stays NULL -- the same null-edge
-    # discipline as winnow_prints.  toks= (r18): a precomputed
-    # token_table frame (identical null-safe convention) skips the
-    # tokenize; both the gram pass and the rebuild then read the shared
-    # materialization instead of re-running the split twice.
-    if toks is not None:
-        if docs is not None:
-            raise ValueError(
-                "toks= already fixes docs; pass either toks= or docs, "
-                "not both"
-            )
-        toks = toks.select("doc_id", F.col("toks").alias("ws"))
-    else:
-        toks = docs.select(
-            "doc_id",
-            tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("ws"),
-        )
+    toks = toks.select("doc_id", F.col("toks").alias("ws"))
     starts_seq = F.when(
         F.size("ws") >= ngram_n,
         F.sequence(F.lit(1), F.size("ws") - (ngram_n - 1)),
@@ -1165,45 +1116,27 @@ def _null_safe_text(df: DataFrame, text_col: str) -> DataFrame:
     return df.withColumn(text_col, F.coalesce(F.col(text_col), F.lit("")))
 
 
-def corpus_gram_set(
-    corpus: DataFrame | None = None,
-    ngram_n: int = 8,
-    text_col: str = "text",
-    *,
-    toks: DataFrame | None = None,
-) -> DataFrame:
-    """The corpus's DISTINCT word n-grams as a one-column frame ``(g)``
-    -- the static side of every decontamination join (batch:
+def corpus_gram_set(toks: DataFrame, ngram_n: int = 8) -> DataFrame:
+    """The DISTINCT word n-grams of a :func:`token_table` frame as a
+    one-column frame ``(g)`` -- the static side of every
+    decontamination join (batch:
     :func:`ngram_overlap_contamination`; continuous ingest:
     ``streaming.curation.decontam_stream``).  One hash-aggregate with
     map-side partial dedup; at scale this is the table a deployment
     materializes once per protected set and re-reads per batch/trigger.
-    ``toks=`` (r18): a precomputed token table skips the tokenize.
     """
-    if toks is not None and corpus is not None:
-        raise ValueError(
-            "toks= already fixes corpus; pass either toks= or corpus, "
-            "not both"
-        )
-    sets = (
-        _shingle_sets(None, ngram_n, toks=toks)
-        if toks is not None
-        else _shingle_sets(
-            _null_safe_text(corpus, text_col), ngram_n, text_col
-        )
+    return (
+        _shingle_sets(toks, ngram_n)
+        .select(F.explode("sh").alias("g"))
+        .distinct()
     )
-    return sets.select(F.explode("sh").alias("g")).distinct()
 
 
 def ngram_overlap_contamination(
-    corpus: DataFrame | None = None,
-    probes: DataFrame | None = None,
+    corpus_toks: DataFrame,
+    probe_toks: DataFrame,
     ngram_n: int = 8,
     threshold: float = 0.2,
-    text_col: str = "text",
-    *,
-    corpus_toks: DataFrame | None = None,
-    probe_toks: DataFrame | None = None,
 ) -> DataFrame:
     """Direct n-gram-collision decontamination: for every probe (eval)
     document, the fraction of its distinct word n-grams that occur
@@ -1232,21 +1165,12 @@ def ngram_overlap_contamination(
     Returns (probe_id, n_grams, n_hits, overlap_frac, contaminated) --
     overlap_frac is an exact integer ratio (NULL when the probe has no
     n-grams), rounded to 6 decimals; contaminated = frac >= threshold.
-
-    ``corpus_toks=`` / ``probe_toks=`` (r18): precomputed token-table
-    slices (the d7 shared tokenize) skip both sides' tokenize passes
-    (the direct path null-safes text to '' first, exactly
-    token_table's convention, so the gram sets are identical).
+    Both sides are :func:`token_table` frames.
     """
-    _two_sided_toks(corpus, probes, corpus_toks, probe_toks)
-    c_grams = corpus_gram_set(corpus, ngram_n, text_col, toks=corpus_toks)
-    p_grams = (
-        _shingle_sets(None, ngram_n, toks=probe_toks)
-        if probe_toks is not None
-        else _shingle_sets(
-            _null_safe_text(probes, text_col), ngram_n, text_col
-        )
-    ).select(F.col("doc_id").alias("probe_id"), "sh")
+    c_grams = corpus_gram_set(corpus_toks, ngram_n)
+    p_grams = _shingle_sets(probe_toks, ngram_n).select(
+        F.col("doc_id").alias("probe_id"), "sh"
+    )
     hits = (
         p_grams.select("probe_id", F.explode("sh").alias("g"))
         .join(c_grams, on="g")
@@ -1308,68 +1232,13 @@ SPAN_WINDOW = 6
 SPAN_MIN_TOKENS = 12
 SPAN_MAX_GRAM_DOCS = 50
 
-#: None-sentinel distinguishing "caller passed nothing" from an explicit
-#: value, so precomputed-input overloads can reject shadowed tuning
-#: parameters instead of silently ignoring them (the r13 dead-parameter
-#: review class: curate_corpus(pairs=) / semantic_dedup(components=)).
-_UNSET = object()
-
-
-def token_table(
-    docs: DataFrame, text_col: str = "text", keep: tuple[str, ...] = ()
-) -> DataFrame:
-    """(doc_id, toks): the null-safe word-token arrays -- the sharable
-    tokenization base for the span family (NULL text tokenizes to an
-    empty array, the scrub-leg convention).  Exists as a named frame so
-    a caller running several token-consuming operators over one corpus
-    can materialize the tokenize pass once and feed it to each via
-    their ``toks=`` overloads.  Whether that wins is a MEASURED
-    question that flipped with consumer count: the r7 two-consumer
-    measurement (minhash signature + jaccard verify) found recompute
-    cheaper at sf0.1 on local[32] (materializing 100k string arrays
-    cost more than one extra split+filter pass), but the r15 re-run
-    with FOUR token consumers (d4's ngram index, span grams, rep
-    grams, rep lengths) measured the shared eager checkpoint at
-    9.5-10.9 s vs 10.0-11.9 s independent (5 interleaved reps, ~7%) --
-    adopted in the d4 entry.  At 100-TB scale tokenization dominates
-    CPU and sharing is the right default regardless.
-
-    ``keep=`` (r18): extra payload columns carried alongside the token
-    array (e.g. ``("source",)`` for the tv1 probe legs whose label
-    rides the shared checkpoint)."""
-    return _null_safe_text(docs, text_col).select(
-        "doc_id", *keep, tokens(text_col).alias("toks")
-    )
-
-
-def positional_ngrams(
-    docs: DataFrame | None = None,
-    window: int = SPAN_WINDOW,
-    text_col: str | object = _UNSET,
-    *,
-    toks: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, pos, g): word ``window``-grams with their 0-based start
-    position in the token stream.  Unlike :func:`_shingle_sets` the grams
-    are NOT distinct'd -- position matters, and a gram repeated inside one
-    document seeds one diagonal per occurrence.  Documents shorter than
-    ``window`` tokens emit nothing (posexplode of the guarded empty
-    array).
-
-    ``toks=`` (r15): a precomputed :func:`token_table` frame skips the
-    tokenize projection; ``text_col`` is then already baked in and
-    passing it (or ``docs``) explicitly raises instead of being
-    silently ignored (the ``runs=`` discipline)."""
-    if toks is not None:
-        if docs is not None or text_col is not _UNSET:
-            raise ValueError(
-                "toks= already fixes docs/text_col; pass either toks= "
-                "or the raw inputs, not both"
-            )
-    else:
-        if docs is None:
-            raise ValueError("either docs or toks= is required")
-        toks = token_table(docs, "text" if text_col is _UNSET else text_col)
+def positional_ngrams(toks: DataFrame, window: int = SPAN_WINDOW) -> DataFrame:
+    """(doc_id, pos, g): word ``window``-grams of a :func:`token_table`
+    frame with their 0-based start position in the token stream.
+    Unlike :func:`_shingle_sets` the grams are NOT distinct'd --
+    position matters, and a gram repeated inside one document seeds one
+    diagonal per occurrence.  Documents shorter than ``window`` tokens
+    emit nothing (posexplode of the guarded empty array)."""
     return toks.select(
         "doc_id",
         F.posexplode(ngrams_from_tokens(F.col("toks"), window)).alias(
@@ -1423,12 +1292,9 @@ def _diagonal_runs(
 
 
 def span_runs(
-    docs: DataFrame | None = None,
+    grams: DataFrame,
     window: int = SPAN_WINDOW,
     max_gram_docs: int = SPAN_MAX_GRAM_DOCS,
-    text_col: str | object = _UNSET,
-    *,
-    grams: DataFrame | None = None,
 ) -> DataFrame:
     """All maximal shared spans between document pairs (doc_a < doc_b):
     (doc_a, doc_b, pa0, pb0, span_tokens), UNFILTERED by a minimum span
@@ -1442,24 +1308,10 @@ def span_runs(
     diagonals and miscounts their runs.  The driver tables satisfy this
     by construction; dedupe ids first when they might not.
 
-    ``grams=`` (r15): a precomputed :func:`positional_ngrams` frame
-    (built at the SAME ``window`` -- the island arithmetic reads
-    ``window`` to state span lengths, so the caller declares the grams'
-    geometry) skips the tokenize+gram pass; ``docs``/``text_col`` are
-    then already baked in and passing them raises.  The doc-frequency
-    cap still applies to the provided grams."""
-    if grams is not None:
-        if docs is not None or text_col is not _UNSET:
-            raise ValueError(
-                "grams= already fixes docs/text_col; pass either grams= "
-                "or the raw inputs, not both"
-            )
-    else:
-        if docs is None:
-            raise ValueError("either docs or grams= is required")
-        grams = positional_ngrams(
-            docs, window, "text" if text_col is _UNSET else text_col
-        )
+    ``grams`` is a :func:`positional_ngrams` frame built at the SAME
+    ``window`` (the island arithmetic reads ``window`` to state span
+    lengths, so the caller declares the grams' geometry); the
+    doc-frequency cap applies to it here."""
     cold = _cold_positional_grams(grams, max_gram_docs)
     a = cold.select(
         F.col("doc_id").alias("doc_a"), F.col("pos").alias("pa"), "g"
@@ -1476,38 +1328,11 @@ def span_runs(
 
 
 def shared_span_pairs(
-    docs: DataFrame | None = None,
-    *,
-    runs: DataFrame | None = None,
-    window: int | object = _UNSET,
-    min_span: int = SPAN_MIN_TOKENS,
-    max_gram_docs: int | object = _UNSET,
-    text_col: str | object = _UNSET,
+    runs: DataFrame, min_span: int = SPAN_MIN_TOKENS
 ) -> DataFrame:
-    """Per-pair exact-span report: (doc_a, doc_b, n_spans,
-    max_span_tokens) for pairs sharing at least one verbatim token span
-    >= ``min_span``.  Pass ``runs=`` (a :func:`span_runs` result) to
-    reuse a precomputed span table; ``window``/``max_gram_docs``/
-    ``text_col`` are then already baked in and passing them explicitly
-    raises instead of being silently ignored."""
-    if runs is not None:
-        if (
-            docs is not None
-            or window is not _UNSET
-            or max_gram_docs is not _UNSET
-            or text_col is not _UNSET
-        ):
-            raise ValueError(
-                "runs= already fixes docs/window/max_gram_docs/text_col; "
-                "pass either runs= or the raw inputs, not both"
-            )
-    else:
-        if docs is None:
-            raise ValueError("either docs or runs= is required")
-        w = SPAN_WINDOW if window is _UNSET else window
-        cap = SPAN_MAX_GRAM_DOCS if max_gram_docs is _UNSET else max_gram_docs
-        tc = "text" if text_col is _UNSET else text_col
-        runs = span_runs(docs, w, cap, tc)
+    """Per-pair exact-span report over a :func:`span_runs` table:
+    (doc_a, doc_b, n_spans, max_span_tokens) for pairs sharing at least
+    one verbatim token span >= ``min_span``."""
     return (
         runs.filter(F.col("span_tokens") >= min_span)
         .groupBy("doc_a", "doc_b")
@@ -1519,13 +1344,7 @@ def shared_span_pairs(
 
 
 def span_scrub_stats(
-    docs: DataFrame,
-    *,
-    runs: DataFrame | None = None,
-    window: int | object = _UNSET,
-    min_span: int = SPAN_MIN_TOKENS,
-    max_gram_docs: int | object = _UNSET,
-    text_col: str = "text",
+    toks: DataFrame, runs: DataFrame, min_span: int = SPAN_MIN_TOKENS
 ) -> DataFrame:
     """Span REMOVAL report under the keep-first policy: every span
     >= ``min_span`` is cut from the HIGHER doc_id of its pair (the
@@ -1540,13 +1359,12 @@ def span_scrub_stats(
     (new interval when start > running max end), and both engines do the
     whole thing in exact integers.  The rewritten TEXT itself is one
     ``filter(tokens, ...)`` + ``array_join`` away; the stats row is what
-    the correctness gate can value-hash.
+    the correctness gate can value-hash.  ``toks`` is the
+    :func:`token_table` frame ``runs`` (a :func:`span_runs` table) was
+    built from.
     """
-    runs = _resolve_runs(docs, runs, window, max_gram_docs, text_col)
     merged = _merged_cut_intervals(runs, min_span)
-    lens = _null_safe_text(docs, text_col).select(
-        "doc_id", F.size(tokens(text_col)).cast("long").alias("n_tokens")
-    )
+    lens = toks.select("doc_id", F.size("toks").cast("long").alias("n_tokens"))
     return (
         merged.groupBy("doc_id")
         .agg(
@@ -1563,22 +1381,6 @@ def span_scrub_stats(
             .alias("n_tokens_after"),
         )
     )
-
-
-def _resolve_runs(docs, runs, window, max_gram_docs, text_col):
-    """Shared precomputed-runs guard for the scrub operators: reject
-    shadowed tuning knobs, or derive the runs table from the raw
-    inputs."""
-    if runs is not None:
-        if window is not _UNSET or max_gram_docs is not _UNSET:
-            raise ValueError(
-                "runs= already fixes window/max_gram_docs; pass either "
-                "runs= or the tuning knobs, not both"
-            )
-        return runs
-    w = SPAN_WINDOW if window is _UNSET else window
-    cap = SPAN_MAX_GRAM_DOCS if max_gram_docs is _UNSET else max_gram_docs
-    return span_runs(docs, w, cap, text_col)
 
 
 def _merged_cut_intervals(runs: DataFrame, min_span: int) -> DataFrame:
@@ -1652,13 +1454,7 @@ def _merge_intervals(cuts: DataFrame) -> DataFrame:
 
 
 def span_scrub_text(
-    docs: DataFrame,
-    *,
-    runs: DataFrame | None = None,
-    window: int | object = _UNSET,
-    min_span: int = SPAN_MIN_TOKENS,
-    max_gram_docs: int | object = _UNSET,
-    text_col: str = "text",
+    toks: DataFrame, runs: DataFrame, min_span: int = SPAN_MIN_TOKENS
 ) -> DataFrame:
     """The span rewrite itself: (doc_id, text_scrubbed, n_tokens_after)
     for every AFFECTED document -- the token stream with all keep-first
@@ -1672,15 +1468,12 @@ def span_scrub_text(
     Tokenization is the canonical lowercase/non-alnum split, so
     ``text_scrubbed`` is normalized text -- fingerprint it (md5) for
     cross-engine comparison rather than diffing against the raw input.
+    Inputs as :func:`span_scrub_stats`.
     """
-    runs = _resolve_runs(docs, runs, window, max_gram_docs, text_col)
     ivs = (
         _merged_cut_intervals(runs, min_span)
         .groupBy("doc_id")
         .agg(F.collect_list(F.struct("s", "e")).alias("ivs"))
-    )
-    toks = _null_safe_text(docs, text_col).select(
-        "doc_id", tokens(text_col).alias("toks")
     )
     kept = F.filter(
         F.col("toks"),
@@ -1696,15 +1489,11 @@ def span_scrub_text(
 
 
 def cross_corpus_span_contamination(
-    corpus: DataFrame | None = None,
-    probes: DataFrame | None = None,
+    corpus_toks: DataFrame,
+    probe_toks: DataFrame,
     window: int = SPAN_WINDOW,
     min_span: int = SPAN_MIN_TOKENS,
     max_gram_docs: int = SPAN_MAX_GRAM_DOCS,
-    text_col: str = "text",
-    *,
-    corpus_toks: DataFrame | None = None,
-    probe_toks: DataFrame | None = None,
 ) -> DataFrame:
     """Benchmark decontamination by VERBATIM span: (corpus_id, probe_id,
     n_spans, max_span_tokens) for cross-side pairs sharing an exact
@@ -1714,17 +1503,10 @@ def cross_corpus_span_contamination(
     grams).  The document-frequency cap counts BOTH sides: a gram that
     is boilerplate anywhere is boilerplate everywhere.  Sides never
     self-join, so a probe set small enough to broadcast keeps the
-    corpus side shuffle-free on the hit join.
-
-    ``corpus_toks=`` / ``probe_toks=`` (r18): precomputed token-table
-    slices (the d7 shared tokenize) skip both sides' tokenize passes."""
-    _two_sided_toks(corpus, probes, corpus_toks, probe_toks)
-    if corpus_toks is not None:
-        grams_c = positional_ngrams(window=window, toks=corpus_toks)
-        grams_p = positional_ngrams(window=window, toks=probe_toks)
-    else:
-        grams_c = positional_ngrams(corpus, window, text_col)
-        grams_p = positional_ngrams(probes, window, text_col)
+    corpus side shuffle-free on the hit join.  Both sides are
+    :func:`token_table` frames."""
+    grams_c = positional_ngrams(corpus_toks, window)
+    grams_p = positional_ngrams(probe_toks, window)
     # the df count tags each side before the union: corpus and probe ids
     # come from separate keyspaces, so a bare count_distinct(doc_id)
     # would undercount a gram shared by colliding ids and let
@@ -1762,11 +1544,7 @@ def cross_corpus_span_contamination(
 
 
 def intradoc_repetition(
-    docs: DataFrame | None = None,
-    window: int = SPAN_WINDOW,
-    text_col: str | object = _UNSET,
-    *,
-    toks: DataFrame | None = None,
+    toks: DataFrame, window: int = SPAN_WINDOW
 ) -> DataFrame:
     """Gopher-style duplicated-n-gram fraction (Rae et al. 2021, table
     A1: "fraction of characters in duplicate n-grams", here in tokens):
@@ -1786,32 +1564,13 @@ def intradoc_repetition(
     Returns (doc_id, dup_span_tokens, n_tokens, dup_frac) for EVERY
     document (a screen needs the clean ones too): zero coverage for
     repeat-free or sub-window docs, NULL fraction for token-less ones.
-
-    ``toks=`` (r15): a precomputed :func:`token_table` frame feeds both
-    the gram pipeline AND the per-document token counts (one tokenize
-    pass instead of two); ``docs``/``text_col`` are then already baked
-    in and passing them raises (the ``runs=`` discipline).
+    The :func:`token_table` frame feeds both the gram pipeline and the
+    per-document token counts.
     """
     from pyspark.sql.window import Window
 
-    if toks is not None:
-        if docs is not None or text_col is not _UNSET:
-            raise ValueError(
-                "toks= already fixes docs/text_col; pass either toks= "
-                "or the raw inputs, not both"
-            )
-        grams = positional_ngrams(window=window, toks=toks)
-        lens = toks.select(
-            "doc_id", F.size("toks").cast("long").alias("n_tokens")
-        )
-    else:
-        if docs is None:
-            raise ValueError("either docs or toks= is required")
-        tc = "text" if text_col is _UNSET else text_col
-        grams = positional_ngrams(docs, window, tc)
-        lens = _null_safe_text(docs, tc).select(
-            "doc_id", F.size(tokens(tc)).cast("long").alias("n_tokens")
-        )
+    grams = positional_ngrams(toks, window)
+    lens = toks.select("doc_id", F.size("toks").cast("long").alias("n_tokens"))
     occ = Window.partitionBy("doc_id", "g")
     repeated = (
         grams.withColumn("occ", F.count(F.lit(1)).over(occ))
@@ -1849,7 +1608,7 @@ def intradoc_repetition(
 
 
 # --------------------------------------------------------------------------
-# Portable Bloom-filter dedup admission (r14): the 100-TB pre-screen.
+# Portable Bloom-filter dedup admission: the 100-TB pre-screen.
 # Admitting a batch against a multi-billion-document history with an
 # exact anti-join shuffles the HISTORY's fingerprints every batch; the
 # standard fix is a Bloom filter built once over the history and
@@ -2034,11 +1793,9 @@ def load_bloom_filter(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-#: memoized (k, m) per artifact DataFrame (r17: a WeakKeyDictionary
-#: keyed by the frame object, replacing the r16 attribute write into
-#: the DataFrame -- same identity-keyed contract, but nothing is
-#: grafted onto a library object and an unreferenced artifact's entry
-#: is collected with it)
+#: memoized (k, m) per artifact DataFrame: a WeakKeyDictionary keyed
+#: by the frame object, so nothing is grafted onto a library object
+#: and an unreferenced artifact's entry is collected with it
 _BLOOM_GEOMETRY_CACHE: "weakref.WeakKeyDictionary[DataFrame, tuple[int, int]]" = (
     weakref.WeakKeyDictionary()
 )
@@ -2052,9 +1809,9 @@ def _bloom_artifact_geometry(bloom_bits: DataFrame) -> tuple[int, int]:
     collect -- the artifact is tiny by construction, and resolving the
     geometry eagerly raises BEFORE planning the probe join.
 
-    The resolved pair is MEMOIZED per DataFrame object (r16; held in a
-    module-level WeakKeyDictionary since r17 so no attribute is written
-    into the DataFrame and the entry dies with the frame): a
+    The resolved pair is MEMOIZED per DataFrame object (held in a
+    module-level WeakKeyDictionary, so no attribute is written into the
+    DataFrame and the entry dies with the frame): a
     foreachBatch stream holds ONE static artifact frame and calls a
     probe surface per trigger, and without the cache every trigger paid
     a driver round-trip to re-read two constants off an immutable row.
@@ -2179,7 +1936,7 @@ def bloom_admission_rows(
     base = _null_safe_text(docs, text_col).select(
         "doc_id", *passthrough, fingerprint_md5(text_col).alias("fp")
     )
-    # probe the PACKED words form (r15): element_at + getbit is O(1)
+    # probe the PACKED words form: element_at + getbit is O(1)
     # per hash, vs array_contains' O(set bits) linear scan -- the
     # difference between a 512-word lookup and a 50M-long scan per
     # position at deployment geometry.  A positions artifact is packed

@@ -16,7 +16,7 @@ or driver-side state exists.  Cross-shard packing efficiency loss is the
 usual trade: with budget B and mean doc length L, expected waste per bin is
 O(L/B) regardless of shard count.
 
-r15 adds the two CLOSED-FORM layouts alongside the greedy packer -- both
+The two CLOSED-FORM layouts sit alongside the greedy packer -- both
 pure window arithmetic over the same shards, JVM-side end to end, and
 therefore value-hashable against a DuckDB oracle (the s9 registry entry),
 which the greedy fold structurally cannot be (its bin state threads
@@ -109,8 +109,8 @@ def pack_sequences(
     # A caller-supplied token_col can carry NULLs or negatives -- both
     # pack as 0-token docs (still atomic rows) so they cannot corrupt
     # later offsets in the shard.  (token_count_ws itself needs no
-    # guard: since r9 it coalesces NULL text to 0 internally.)
-    # NULL ids drop (r16): md5(NULL) -> NULL shard would pack them into
+    # guard: it coalesces NULL text to 0 internally.)
+    # NULL ids drop: md5(NULL) -> NULL shard would pack them into
     # a phantom shard; the closed-form layouts drop them too, so the
     # two layout families keep the SAME row membership on a
     # contract-violating corpus.
@@ -304,9 +304,9 @@ def packing_audit(
 
 
 # ---------------------------------------------------------------------------
-# Closed-form layouts (r15): window-expressible packings that value-hash
-# against the DuckDB oracle.  Both consume the same (doc_id, n_tokens,
-# shard) projection; `counts=` shares an existing tokenize pass.
+# Closed-form layouts: window-expressible packings that value-hash
+# against the DuckDB oracle.  Both take one (doc_id, n_tokens) count
+# table, so a caller computes it once and feeds both.
 # ---------------------------------------------------------------------------
 
 #: gate-sized context window (tokens per training sequence) for the
@@ -318,11 +318,6 @@ DEFAULT_CONTEXT_LEN = 256
 #: this is the output-file count (thousands): the per-shard windows are
 #: the ONLY sorts anywhere, so n_shards is the parallelism knob.
 DEFAULT_PACK_SHARDS = 8
-
-#: raise-if-both sentinel of the precomputed-input overloads (the
-#: dedup.py ``runs=``/``toks=`` discipline)
-_UNSET = object()
-
 
 def doc_token_counts(
     docs: DataFrame,
@@ -341,36 +336,18 @@ def doc_token_counts(
     )
 
 
-def _sharded_counts(
-    docs: DataFrame | None,
-    text_col: str | object,
-    counts: DataFrame | None,
-    n_shards: int,
-) -> DataFrame:
+def _sharded_counts(counts: DataFrame, n_shards: int) -> DataFrame:
     """Shared front half of both closed-form layouts: positive token
     counts tagged with their deterministic shard (the module's one
     ``_shard_col`` hash, so greedy and closed-form layouts of the same
-    corpus agree on shard membership).  Resolves the ``counts=``
-    precomputed-input overload (raise-if-both)."""
+    corpus agree on shard membership)."""
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    if counts is not None:
-        if docs is not None or text_col is not _UNSET:
-            raise ValueError(
-                "counts= already fixes docs/text_col; pass either "
-                "counts= or the raw inputs, not both"
-            )
-    else:
-        if docs is None:
-            raise ValueError("either docs or counts= is required")
-        counts = doc_token_counts(
-            docs, "text" if text_col is _UNSET else text_col
-        )
-    # doc_id IS NOT NULL mirrors the n_tokens > 0 exclusion (r16,
-    # ADVICE): the layouts' contract is unique NON-NULL ids, but a
-    # violating NULL id used to flow through to a NULL shard whose
-    # per-shard orderBy('doc_id') then DIVERGES between engines (Spark
-    # sorts NULLS FIRST, DuckDB NULLS LAST) -- silently breaking the
+    # doc_id IS NOT NULL mirrors the n_tokens > 0 exclusion: the
+    # layouts' contract is unique NON-NULL ids, but a violating NULL id
+    # would flow through to a NULL shard whose per-shard
+    # orderBy('doc_id') then DIVERGES between engines (Spark sorts
+    # NULLS FIRST, DuckDB NULLS LAST) -- silently breaking the
     # value-hash.  Dropping the row degrades a contract violation to
     # the same row-drop on both engines.
     return counts.filter(
@@ -383,14 +360,12 @@ def _sharded_counts(
 
 
 def pack_concat(
-    docs: DataFrame | None = None,
+    counts: DataFrame,
     context_len: int = DEFAULT_CONTEXT_LEN,
     n_shards: int = DEFAULT_PACK_SHARDS,
-    text_col: str | object = _UNSET,
-    *,
-    counts: DataFrame | None = None,
 ) -> DataFrame:
-    """Concat-and-chunk placements: where each document's tokens land
+    """Concat-and-chunk placements of a :func:`doc_token_counts`-shaped
+    frame ((doc_id, n_tokens)): where each document's tokens land
     when the shard's documents are concatenated in doc_id order and the
     stream is cut into ``context_len``-token chunks.
 
@@ -413,16 +388,10 @@ def pack_concat(
     ids (the driver tables' contract; the span_runs unique-id discipline
     applies: a duplicated id would give two documents one offset).
     Zero-token documents are excluded -- they would otherwise alias
-    their successor's offset.
-
-    ``counts=``: a precomputed :func:`doc_token_counts`-shaped frame
-    ((doc_id, n_tokens)) skips the tokenize pass -- the sharing hook for
-    pipelines that already tokenized (d4's token_table, t1's profile);
-    ``docs``/``text_col`` are then baked in and passing them raises
-    (the ``runs=`` discipline)."""
+    their successor's offset."""
     if context_len < 1:
         raise ValueError(f"context_len must be >= 1, got {context_len}")
-    sc = _sharded_counts(docs, text_col, counts, n_shards)
+    sc = _sharded_counts(counts, n_shards)
     w = (
         Window.partitionBy("shard")
         .orderBy("doc_id")
@@ -468,12 +437,9 @@ def _bucket_len(n, context_len: int):
 
 
 def pack_bucketed(
-    docs: DataFrame | None = None,
+    counts: DataFrame,
     context_len: int = DEFAULT_CONTEXT_LEN,
     n_shards: int = DEFAULT_PACK_SHARDS,
-    text_col: str | object = _UNSET,
-    *,
-    counts: DataFrame | None = None,
 ) -> DataFrame:
     """Length-bucketed no-split bins: documents never cross sequence
     boundaries (:func:`pack_sequences`' constraint), but unlike the
@@ -502,12 +468,11 @@ def pack_bucketed(
     bin_seq)) so a writer emits shard files of consecutively-numbered
     sequences; both windows ride ONE shard exchange (row_number within
     bucket, dense_rank across buckets) -- still no global sort.
-
-    ``counts=``: same precomputed-input overload as :func:`pack_concat`.
+    ``counts``: as :func:`pack_concat`.
     """
     if context_len < 1:
         raise ValueError(f"context_len must be >= 1, got {context_len}")
-    sc = _sharded_counts(docs, text_col, counts, n_shards)
+    sc = _sharded_counts(counts, n_shards)
     L = int(context_len)
     b = sc.select(
         "doc_id",

@@ -24,7 +24,7 @@ from ..caching import CacheScope, maybe_persist
 from ..functions.vectors import cosine, sign_bucket
 
 #: sentinel distinguishing "not passed" from an explicit value on the
-#: precomputed-input overloads (the dedup.py `runs=`/`toks=` discipline)
+#: precomputed-input overloads, so a shadowed parameter raises
 _UNSET: object = object()
 
 
@@ -1293,7 +1293,7 @@ def cosine_topk_ivf(
     sharing hook for callers running several IVF-routed searches over
     one corpus (the k2 entry assigns once for ivf + ivfpq).  The
     centroid parameters are then already baked in and passing them
-    raises (the ``runs=`` discipline); per-SEARCH knobs (k, n_queries,
+    raises; per-SEARCH knobs (k, n_queries,
     n_probe) remain caller-settable, and the probe side still routes
     against ``index.cents`` so assignment and probing can never use
     different centroid sets.
@@ -2074,8 +2074,7 @@ def cosine_topk_pq(
     corpus (the k2 entry encodes once, with the code table
     checkpointed, instead of twice).  ``embeddings`` and every geometry
     parameter are then already baked into the artifact and passing them
-    raises instead of being silently ignored (the ``runs=``
-    discipline); per-SEARCH knobs (k, n_queries, n_candidates,
+    raises instead of being silently ignored; per-SEARCH knobs (k, n_queries, n_candidates,
     allowed_pairs) remain caller-settable.
     """
     if encoding is not None:

@@ -23,6 +23,7 @@ from ..functions.text import (
     token_count_ws,
     tokens,
 )
+from .dedup import token_table
 
 
 def _composite_quality(n_tok_d, sw_ratio, pr):
@@ -141,81 +142,37 @@ def fingerprints(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", fingerprint_md5("text").alias("fingerprint"))
 
 
-def term_frequencies(
-    docs: DataFrame | None = None,
-    text_col: str = "text",
-    *,
-    toks: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, token, tf): per-document term counts -- the sharable
-    stage-1 aggregate of :func:`vocabulary` AND the tf relation of
-    :func:`tfidf_top_terms` (identical grouping, one spelling).  A
-    caller running both over one corpus computes this once (persisted),
-    then feeds ``tfidf_top_terms(tf=...)`` and ``vocabulary(per_doc=
-    ...)`` -- one tokenize+explode+aggregate instead of two (the tv1
-    r18 shared pass).
-
-    ``toks=``: a precomputed :func:`~..operators.dedup.token_table`
-    frame skips the tokenize projection (equivalent rows: NULL text
-    tokenizes to NULL in the direct path and to an empty array in the
-    token table -- explode drops the document either way)."""
-    if toks is not None:
-        if docs is not None:
-            raise ValueError(
-                "toks= already fixes docs; pass either toks= or docs, "
-                "not both"
-            )
-        tok = toks.select("doc_id", F.explode("toks").alias("token"))
-    else:
-        tok = docs.select(
-            F.col("doc_id"), F.explode(tokens(text_col)).alias("token")
-        )
-    return tok.groupBy("doc_id", "token").agg(
-        F.count(F.lit(1)).alias("tf")
+def term_frequencies(toks: DataFrame) -> DataFrame:
+    """(doc_id, token, tf): per-document term counts of a
+    :func:`~..operators.dedup.token_table` frame -- the input of
+    :func:`vocabulary` AND the tf relation of :func:`tfidf_top_terms`
+    (identical grouping, one spelling).  A caller running both over one
+    corpus computes this once (persisted) and feeds it to each -- one
+    explode+aggregate instead of two (the tv1 shared pass)."""
+    return (
+        toks.select("doc_id", F.explode("toks").alias("token"))
+        .groupBy("doc_id", "token")
+        .agg(F.count(F.lit(1)).alias("tf"))
     )
 
 
-def vocabulary(
-    docs: DataFrame | None = None,
-    min_count: int = 1,
-    text_col: str = "text",
-    *,
-    per_doc: DataFrame | None = None,
-) -> DataFrame:
-    """Corpus vocabulary: (token, count, doc_freq) sorted by count desc.
+def vocabulary(tf: DataFrame, min_count: int = 1) -> DataFrame:
+    """Corpus vocabulary: (token, count, doc_freq) sorted by count desc,
+    from a :func:`term_frequencies` relation (doc_id, token, tf).
 
     Two hash-aggregates because doc_freq needs per-document distinctness:
-    stage 1 groups by (doc_id, token) -- partial aggregation collapses
-    within-document repeats map-side, so the shuffle carries O(distinct
-    (doc, token) pairs), the same volume a countDistinct(doc_id) rewrite
-    would shuffle; stage 2 re-aggregates by token alone (tiny).  This is
-    the upstream stats pass for stop-token lists and the ``max_doc_freq``
-    heavy-hitter cap in dedup.ngram_jaccard_pairs.
-
-    ``per_doc=`` (r18): a precomputed :func:`term_frequencies` relation
-    (doc_id, token, tf) replaces stage 1 outright -- the tv1 entry
-    shares ONE persisted tf frame between this and tfidf_top_terms.
+    stage 1 (the tf relation) groups by (doc_id, token) -- partial
+    aggregation collapses within-document repeats map-side, so the
+    shuffle carries O(distinct (doc, token) pairs), the same volume a
+    countDistinct(doc_id) rewrite would shuffle; stage 2 (here)
+    re-aggregates by token alone (tiny).  This is the upstream stats
+    pass for stop-token lists and the ``max_doc_freq`` heavy-hitter cap
+    in dedup.ngram_jaccard_pairs.
     """
-    if per_doc is not None:
-        if docs is not None:
-            raise ValueError(
-                "per_doc= already fixes docs; pass either per_doc= or "
-                "docs, not both"
-            )
-        per_doc = per_doc.select(
-            "doc_id", "token", F.col("tf").alias("n_in_doc")
-        )
-    else:
-        tok = docs.select(
-            F.col("doc_id"), F.explode(tokens(text_col)).alias("token")
-        )
-        per_doc = tok.groupBy("doc_id", "token").agg(
-            F.count(F.lit(1)).alias("n_in_doc")
-        )
     return (
-        per_doc.groupBy("token")
+        tf.groupBy("token")
         .agg(
-            F.sum("n_in_doc").alias("count"),
+            F.sum("tf").alias("count"),
             F.count(F.lit(1)).alias("doc_freq"),
         )
         .filter(F.col("count") >= min_count)
@@ -224,11 +181,10 @@ def vocabulary(
 
 
 def tfidf_top_terms(
-    docs: DataFrame | None = None,
+    toks: DataFrame,
     k: int = 5,
     cache: CacheScope | None = None,
     *,
-    toks: DataFrame | None = None,
     tf: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k characteristic terms per document by TF-IDF:
@@ -251,24 +207,16 @@ def tfidf_top_terms(
     as ``cache`` to unpersist it when the caller's scope exits; without a
     scope the cache lives for the session.
 
-    ``toks=`` / ``tf=`` (r18): a precomputed token table skips the
-    tokenize projection; a precomputed (persisted) :func:`
-    term_frequencies` relation replaces the tf subtree entirely (the
-    caller then owns its persistence -- ``cache`` is ignored).  The
-    corpus size N comes from whichever of toks/docs is given (both are
-    one row per document).
+    ``toks`` is the :func:`~..operators.dedup.token_table` frame (one
+    row per document, so it also gives the corpus size N).  ``tf=``: a
+    precomputed (persisted) :func:`term_frequencies` relation replaces
+    the tf subtree entirely (the caller then owns its persistence --
+    ``cache`` is ignored).
     """
-    if toks is not None and docs is not None:
-        raise ValueError(
-            "toks= already fixes docs; pass either toks= or docs, not both"
-        )
-    base = toks if toks is not None else docs
-    if base is None:
-        raise ValueError("either docs or toks= is required")
     if tf is None:
-        tf = maybe_persist(term_frequencies(docs, toks=toks), cache)
+        tf = maybe_persist(term_frequencies(toks), cache)
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("doc_freq"))
-    total = base.agg(F.count(F.lit(1)).alias("n_docs"))
+    total = toks.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
         tf.join(dfreq, "token")
         .crossJoin(F.broadcast(total))
@@ -487,9 +435,9 @@ def text_profile(docs: DataFrame, include_hygiene: bool = False) -> DataFrame:
     langs = sorted(STOPWORDS)
     # NULL text featurizes as the empty document (0 tokens, 0 hits,
     # 'und') while the identity-ish columns (n_chars, fingerprint) stay
-    # NULL-preserving -- the quality_scores policy, applied here after
-    # the r9 adversarial sweep caught size(NULL) = -1 leaking into
-    # n_tokens_ws / lang_pred / quality_score on NULL-text docs.
+    # NULL-preserving -- the quality_scores policy, applied here because
+    # size(NULL) = -1 would otherwise leak into n_tokens_ws / lang_pred /
+    # quality_score on NULL-text docs (the adversarial sweep's find).
     head = [
         "doc_id",
         "lang",
@@ -580,13 +528,9 @@ def _micro6(col: Column) -> Column:
     return F.floor(col * 1000000.0 + 1e-9).cast("long")
 
 
-def ngram_lm_scores(
-    docs: DataFrame | None = None,
-    text_col: str = "text",
-    *,
-    toks: DataFrame | None = None,
-) -> DataFrame:
-    """Bigram language-model scoring: train on the corpus, score every
+def ngram_lm_scores(toks: DataFrame) -> DataFrame:
+    """Bigram language-model scoring: train on the corpus (a
+    :func:`~..operators.dedup.token_table` frame), score every
     document -- the CCNet-style "perplexity as a quality signal" stage
     (Wenzek et al. 2020 use a KenLM 5-gram; the distributed shape --
     count tables + one join per order -- is the same at any order).
@@ -597,8 +541,8 @@ def ngram_lm_scores(
     transition log-probability (higher = more typical of the corpus; a
     perplexity is just ``exp(-score)``).
 
-    Distributed shape, scan to result:
-      1. ONE tokenize pass materializes the token array.
+    Distributed shape, token table to result:
+      1. The token table carries the token array.
       2. Unigram counts ``c1`` and vocab size V: hash-aggregate over the
          exploded tokens (map-side partial combine carries distinct
          tokens per partition).
@@ -622,22 +566,8 @@ def ngram_lm_scores(
 
     Returns (doc_id, n_tokens, n_transitions, avg_logprob); documents
     with fewer than 2 tokens have n_transitions = 0 and NULL score.
-
-    ``toks=`` (r18): a precomputed token table skips the tokenize
-    projection (same null-safe coalesce-to-empty convention).
     """
-    if toks is not None:
-        if docs is not None:
-            raise ValueError(
-                "toks= already fixes docs; pass either toks= or docs, "
-                "not both"
-            )
-        toked = toks.select("doc_id", F.col("toks").alias("t"))
-    else:
-        toked = docs.select(
-            F.col("doc_id"),
-            tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("t"),
-        )
+    toked = toks.select("doc_id", F.col("toks").alias("t"))
     trans = toked.select(
         "doc_id",
         F.size("t").cast("long").alias("n_tokens"),
@@ -707,30 +637,13 @@ def ngram_lm_scores(
 PROBE_LABEL_SOURCE = "src0"
 
 
-def _probe_features(
-    docs: DataFrame | None,
-    text_col: str,
-    toks: DataFrame | None = None,
-) -> DataFrame:
+def _probe_features(toks: DataFrame) -> DataFrame:
     """Per-document (x1, x2, y) for the linear probe, each feature
     truncated to the 1e-4 grid (:func:`_trunc4`) so it is representable
     EXACTLY as DECIMAL(14,4) -- the precondition for the exact-decimal
-    normal-equation sums in :func:`linear_probe_scores`.  ``toks``: a
-    precomputed token table CARRYING ``source`` (token_table's ``keep=``
-    -- the label column rides the checkpoint) skips the tokenize."""
-    if toks is not None:
-        if docs is not None:
-            raise ValueError(
-                "toks= already fixes docs; pass either toks= or docs, "
-                "not both"
-            )
-        toked = toks.select("doc_id", "source", "toks")
-    else:
-        toked = docs.select(
-            "doc_id",
-            "source",
-            tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("toks"),
-        )
+    normal-equation sums in :func:`linear_probe_scores`.  ``toks`` is a
+    token table CARRYING ``source`` (token_table's ``keep=`` -- the
+    label column rides the checkpoint)."""
     n_tok = F.size("toks").cast("long")
     n_tok_d = n_tok.cast("double")
     sw_ratio = F.coalesce(
@@ -738,7 +651,7 @@ def _probe_features(
         / F.nullif(n_tok_d, F.lit(0.0)),
         F.lit(0.0),
     )
-    return toked.select(
+    return toks.select(
         "doc_id",
         n_tok.alias("n_tokens"),
         _trunc4(F.least(n_tok_d / F.lit(100.0), F.lit(1.0))).alias("x1"),
@@ -751,11 +664,7 @@ def _probe_features(
 
 
 def linear_probe_scores(
-    docs: DataFrame | None = None,
-    text_col: str = "text",
-    weights: DataFrame | None = None,
-    *,
-    toks: DataFrame | None = None,
+    toks: DataFrame, weights: DataFrame | None = None
 ) -> DataFrame:
     """Closed-form linear quality probe: least-squares fit of a
     source-membership label on two text features, trained AND applied in
@@ -780,11 +689,9 @@ def linear_probe_scores(
     weights exposed via :func:`linear_probe_weights`.  Pass ``weights``
     (a (w0, w1, w2) one-row frame) to score with an already-fitted
     probe -- the registry does this so training runs once for both the
-    score and weight surfaces.  ``toks=`` (r18): a precomputed token
-    table carrying ``source`` skips the tokenize (see
-    :func:`_probe_features`).
+    score and weight surfaces.  ``toks``: see :func:`_probe_features`.
     """
-    feats = _probe_features(docs, text_col, toks=toks)
+    feats = _probe_features(toks)
     w = _probe_weights_row(feats) if weights is None else weights
     return feats.crossJoin(F.broadcast(w)).select(
         "doc_id",
@@ -839,34 +746,25 @@ def _probe_weights_row(feats: DataFrame) -> DataFrame:
     return sums.select(w0.alias("w0"), w1.alias("w1"), w2.alias("w2"))
 
 
-def linear_probe_weights(
-    docs: DataFrame | None = None,
-    text_col: str = "text",
-    *,
-    toks: DataFrame | None = None,
-) -> DataFrame:
+def linear_probe_weights(toks: DataFrame) -> DataFrame:
     """The fitted probe weights as one (w0, w1, w2) row -- the training
     half of :func:`linear_probe_scores`, exposed for inspection.
-    ``toks=``: see :func:`_probe_features`."""
-    return _probe_weights_row(_probe_features(docs, text_col, toks=toks))
+    ``toks``: see :func:`_probe_features`."""
+    return _probe_weights_row(_probe_features(toks))
 
 
 def chunk_documents(
-    docs: DataFrame | None = None,
-    chunk_tokens: int = 32,
-    stride: int = 24,
-    text_col: str = "text",
-    *,
-    toks: DataFrame | None = None,
+    toks: DataFrame, chunk_tokens: int = 32, stride: int = 24
 ) -> DataFrame:
     """Sliding-window document chunking: the embedding/RAG-pipeline
     primitive that splits long documents into overlapping token windows
     (``stride < chunk_tokens`` overlaps adjacent chunks so no span is
     cut mid-context; ``stride == chunk_tokens`` partitions exactly).
 
-    One narrow pass: tokenize -> ``sequence(1, n, stride)`` of window
-    starts (guarded: Spark's sequence would COUNT DOWN on an empty doc)
-    -> explode -> per-chunk slice/rebuild with array HOFs.  No shuffle,
+    One narrow pass over a :func:`~..operators.dedup.token_table`
+    frame: ``sequence(1, n, stride)`` of window starts (guarded:
+    Spark's sequence would COUNT DOWN on an empty doc) -> explode ->
+    per-chunk slice/rebuild with array HOFs.  No shuffle,
     no UDF; at 100 TB this is a pure map stage whose output feeds the
     embedding encoder.
 
@@ -878,18 +776,7 @@ def chunk_documents(
     """
     if stride < 1:
         raise ValueError(f"stride must be >= 1, got {stride}")
-    if toks is not None:
-        if docs is not None:
-            raise ValueError(
-                "toks= already fixes docs; pass either toks= or docs, "
-                "not both"
-            )
-        toked = toks.select("doc_id", F.col("toks").alias("t"))
-    else:
-        toked = docs.select(
-            "doc_id",
-            tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("t"),
-        )
+    toked = toks.select("doc_id", F.col("toks").alias("t"))
     starts = toked.select(
         "doc_id",
         "t",
@@ -959,8 +846,8 @@ def bm25_scores(
     joined a corpus-sized ``(doc_id, dl)`` relation to the tiny tf
     table; below the broadcast threshold Spark even chose to broadcast
     the CORPUS side, and at scale it would have been a full shuffle a
-    runtime bloom filter only mitigates -- r9 verdict item, closed by
-    removing the join instead of pinning the filter.)  The 1-row
+    runtime bloom filter only mitigates -- closed by removing the join
+    instead of pinning the filter.)  The 1-row
     (N, avgdl) statistics come from one narrow aggregate broadcast
     back, and the score is one groupBy(doc_id) over |terms| rows per
     matching document.  Documents matching no query term are absent
@@ -985,7 +872,9 @@ def bm25_scores(
             F.col("token").isin(sorted(set(query_terms)))
         )
     else:
-        scored = bm25_term_scores(docs, query_terms, k1, b, text_col)
+        scored = bm25_term_scores(
+            token_table(docs, text_col), query_terms, k1, b
+        )
     return (
         scored.groupBy("doc_id", "dl")
         .agg(
@@ -1016,8 +905,8 @@ def _validate_term_scores(
     same constants.  Without this, a stale shared pass -- built before a
     query gained a term, or at different k1/b -- would be silently
     filtered down and score documents WITHOUT the missing terms (the
-    ``isin`` keeps only what exists; nothing errors).  The r10 verdict's
-    one named contract hole; closed by raising loudly here.
+    ``isin`` keeps only what exists; nothing errors).  Closed by
+    raising loudly here.
 
     The check reads schema metadata only -- no job runs, so the guard is
     free even when the relation is a checkpointed multi-query pass."""
@@ -1054,20 +943,17 @@ def _validate_term_scores(
 
 
 def bm25_term_scores(
-    docs: DataFrame | None = None,
-    query_terms=None,
+    toks: DataFrame,
+    query_terms,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    text_col: str = "text",
-    *,
-    toks: DataFrame | None = None,
 ) -> DataFrame:
-    """The shared BM25 core: (doc_id, dl, token, s_micro) per matched
-    (document, query term), with ``s_micro`` the BIGINT micro-unit
-    partial score.  :func:`bm25_scores` sums it per document;
-    :func:`bm25_topk` joins a query-term map and sums it per
-    (query, document).  The scale shape documented on bm25_scores lives
-    here.
+    """The shared BM25 core over a :func:`~..operators.dedup.token_table`
+    frame: (doc_id, dl, token, s_micro) per matched (document, query
+    term), with ``s_micro`` the BIGINT micro-unit partial score.
+    :func:`bm25_scores` sums it per document; :func:`bm25_topk` joins a
+    query-term map and sums it per (query, document).  The scale shape
+    documented on bm25_scores lives here.
 
     Public because it is the compute-once surface (the k2 ``codebook=``
     / probe ``weights=`` precedent): a caller scoring SEVERAL term sets
@@ -1077,24 +963,10 @@ def bm25_term_scores(
     the corpus is tokenized exactly twice total instead of twice per
     term set.  Value-identical to per-set runs: df is per-token
     (independent of which other tokens the filter kept) and (N, avgdl)
-    are corpus-level.  ``toks=`` (r18): a precomputed token table
-    skips the tokenize projection (same null-safe convention)."""
-    if query_terms is None:
-        raise ValueError("query_terms is required")
+    are corpus-level."""
     terms = sorted(set(query_terms))
     c1, c2, c3 = bm25_constants(k1, b)
-    if toks is not None:
-        if docs is not None:
-            raise ValueError(
-                "toks= already fixes docs; pass either toks= or docs, "
-                "not both"
-            )
-        toked = toks.select("doc_id", F.col("toks").alias("t"))
-    else:
-        toked = docs.select(
-            "doc_id",
-            tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("t"),
-        )
+    toked = toks.select("doc_id", F.col("toks").alias("t"))
     stats = toked.select(F.size("t").cast("long").alias("dl")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
@@ -1211,10 +1083,12 @@ def bm25_topk(
         _validate_term_scores(term_scores, universe, k1, b, "bm25_topk")
         per_term = term_scores.filter(F.col("token").isin(universe))
     else:
-        per_term = bm25_term_scores(docs, universe, k1, b, text_col)
+        per_term = bm25_term_scores(
+            token_table(docs, text_col), universe, k1, b
+        )
     # JVM literal, not createDataFrame: a python-backed local relation
     # would put a 32-task python stage inside every tv1 build job
-    # (functions/localrel.py, the r17 lesson)
+    # (see functions/localrel.py)
     qt = inline_rows(
         docs.sparkSession,
         ("query", "token"),
@@ -1257,7 +1131,7 @@ def bm25_constants(
 
 
 # ---------------------------------------------------------------------------
-# Collocation mining (r16): PMI / NPMI over adjacent-token bigrams
+# Collocation mining: PMI / NPMI over adjacent-token bigrams
 # ---------------------------------------------------------------------------
 
 #: PMI is unstable below this bigram count (a hapax pair maxes the
@@ -1311,42 +1185,23 @@ def window_pair_expr(window: int) -> str:
     )
 
 
-def bigram_table(
-    docs: DataFrame | None = None,
-    text_col: str = "text",
-    *,
-    toks: DataFrame | None = None,
-) -> DataFrame:
-    """Adjacent-token bigrams, one row per occurrence: ``(w1, w2)``.
+def bigram_table(toks: DataFrame) -> DataFrame:
+    """Adjacent-token bigrams of a :func:`~..operators.dedup.token_table`
+    frame, one row per occurrence: ``(w1, w2)``.
 
-    Shared tokenizer (functions.text.tokens); docs with fewer than two
-    tokens contribute nothing.  Linear in corpus tokens -- the explode
-    is the scan itself, no join.  ``toks=`` (r18): a precomputed token
-    table skips the tokenize (equivalent: NULL text's NULL array and
-    the table's empty array both fail ``size >= 2``).
+    Docs with fewer than two tokens contribute nothing.  Linear in
+    corpus tokens -- the explode is the scan itself, no join.
     """
-    if toks is not None and docs is not None:
-        raise ValueError(
-            "toks= already fixes docs; pass either toks= or docs, not both"
-        )
-    t = (
-        toks.select(F.col("toks").alias("t"))
-        if toks is not None
-        else docs.select(tokens(text_col).alias("t"))
-    )
     return (
-        t.filter(F.size("t") >= 2)
+        toks.select(F.col("toks").alias("t"))
+        .filter(F.size("t") >= 2)
         .select(F.expr(BIGRAM_EXPR).alias("z"))
         .select("z.w1", "z.w2")
     )
 
 
 def window_pair_table(
-    docs: DataFrame | None = None,
-    window: int = COLLOCATION_WINDOW,
-    text_col: str = "text",
-    *,
-    toks: DataFrame | None = None,
+    toks: DataFrame, window: int = COLLOCATION_WINDOW
 ) -> DataFrame:
     """Forward-window co-occurrence pairs, one row per (position,
     offset) slot: ``(w1, w2)`` with w2 at most ``window`` tokens to the
@@ -1357,58 +1212,31 @@ def window_pair_table(
     """
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
-    if toks is not None and docs is not None:
-        raise ValueError(
-            "toks= already fixes docs; pass either toks= or docs, not both"
-        )
-    t = (
-        toks.select(F.col("toks").alias("t"))
-        if toks is not None
-        else docs.select(tokens(text_col).alias("t"))
-    )
     return (
-        t.filter(F.size("t") >= 2)
+        toks.select(F.col("toks").alias("t"))
+        .filter(F.size("t") >= 2)
         .select(F.expr(window_pair_expr(window)).alias("z"))
         .select("z.w1", "z.w2")
     )
 
 
-def unigram_counts(
-    docs: DataFrame | None = None,
-    text_col: str = "text",
-    *,
-    toks: DataFrame | None = None,
-) -> DataFrame:
-    """Vocabulary-sized unigram count table ``(w, c)`` over the shared
-    tokenizer -- the sharable input to every collocation scorer.  Its
-    sum IS the corpus token total, so scorers derive the P(a)
-    denominator from this table instead of paying a second corpus
-    pass; callers scoring several pair streams (the tv1 bigram +
-    windowed legs) compute it once, checkpoint, and pass it to each
-    scorer (r17 review: the DataFrame path was re-running the corpus
-    unigram aggregate per scorer while the oracle shared one CTE).  ``toks=`` (r18): a precomputed token table skips the
-    tokenize projection."""
-    if toks is not None and docs is not None:
-        raise ValueError(
-            "toks= already fixes docs; pass either toks= or docs, not both"
-        )
-    w = (
-        toks.select(F.explode("toks").alias("w"))
-        if toks is not None
-        else docs.select(F.explode(tokens(text_col)).alias("w"))
-    )
+def unigram_counts(toks: DataFrame) -> DataFrame:
+    """Vocabulary-sized unigram count table ``(w, c)`` of a
+    :func:`~..operators.dedup.token_table` frame -- the sharable input
+    to every collocation scorer.  Its sum IS the corpus token total, so
+    scorers derive the P(a) denominator from this table instead of
+    paying a second corpus pass; callers scoring several pair streams
+    (the tv1 bigram + windowed legs) compute it once, checkpoint, and
+    pass it to each scorer, as the oracle shares one CTE."""
     return (
-        w.groupBy("w")
+        toks.select(F.explode("toks").alias("w"))
+        .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
 
 
 def collocation_scores(
-    docs: DataFrame | None = None,
-    text_col: str = "text",
-    unigrams: DataFrame | None = None,
-    *,
-    toks: DataFrame | None = None,
+    toks: DataFrame, unigrams: DataFrame | None = None
 ) -> DataFrame:
     """Bigram collocation statistics: ``(w1, w2, c_ab, pmi, npmi)``.
 
@@ -1425,22 +1253,13 @@ def collocation_scores(
     relations no matter the corpus size.  ``unigrams``: a precomputed
     :func:`unigram_counts` table to share across scorers.
     """
-    return _score_pair_table(
-        docs,
-        bigram_table(docs, text_col, toks=toks),
-        text_col,
-        unigrams,
-        toks=toks,
-    )
+    return _score_pair_table(toks, bigram_table(toks), unigrams)
 
 
 def windowed_collocation_scores(
-    docs: DataFrame | None = None,
+    toks: DataFrame,
     window: int = COLLOCATION_WINDOW,
-    text_col: str = "text",
     unigrams: DataFrame | None = None,
-    *,
-    toks: DataFrame | None = None,
 ) -> DataFrame:
     """Windowed collocation statistics: ``(w1, w2, c_ab, pmi, npmi)``
     with c_ab counting (w1, w2) co-occurrences where w2 follows w1
@@ -1455,33 +1274,18 @@ def windowed_collocation_scores(
     any corpus scale.  ``unigrams``: a precomputed
     :func:`unigram_counts` table to share across scorers.
     """
-    return _score_pair_table(
-        docs,
-        window_pair_table(docs, window, text_col, toks=toks),
-        text_col,
-        unigrams,
-        toks=toks,
-    )
+    return _score_pair_table(toks, window_pair_table(toks, window), unigrams)
 
 
 def _score_pair_table(
-    docs: DataFrame | None,
-    pairs: DataFrame,
-    text_col: str,
-    unigrams: DataFrame | None = None,
-    *,
-    toks: DataFrame | None = None,
+    toks: DataFrame, pairs: DataFrame, unigrams: DataFrame | None = None
 ) -> DataFrame:
     """Shared PMI/NPMI scoring stage over any (w1, w2) pair stream:
     two hash aggregates (pair counts, unigram counts), the totals
     derived from the count tables themselves (sum of a vocabulary-sized
     table, never a second corpus pass), then the one shared double
     expression (PMI_EXPR) both engines evaluate verbatim."""
-    ucnt = (
-        unigram_counts(docs, text_col, toks=toks)
-        if unigrams is None
-        else unigrams
-    )
+    ucnt = unigram_counts(toks) if unigrams is None else unigrams
     utot = ucnt.agg(F.sum("c").cast("long").alias("nu"))
     bcnt = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_ab"))
     btot = bcnt.agg(F.sum("c_ab").cast("long").alias("nb"))
@@ -1489,7 +1293,7 @@ def _score_pair_table(
     # vocabulary-bounded, but after an aggregate Spark's size estimate
     # is a guess -- at corpus scale a flipped estimate would turn these
     # into shuffle joins of two tiny tables.  (Locked here; the 0-SMJ
-    # plan shape is what the r16 capture showed at gate scale too.)
+    # plan shape is what the plan capture showed at gate scale too.)
     scored = (
         bcnt.join(F.broadcast(ucnt.selectExpr("w AS w1", "c AS ac")), "w1")
         .join(F.broadcast(ucnt.selectExpr("w AS w2", "c AS bc")), "w2")

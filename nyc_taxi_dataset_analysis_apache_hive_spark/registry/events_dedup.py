@@ -912,10 +912,11 @@ def d4_ngram_jaccard_pairs(spark, sf):
     The spans/scrub/scrub_text legs share ONE runs table (eagerly
     checkpointed: three consumers, same posture as d3's shared
     signature table), and the word-token consumers (ngram index, span
-    grams, rep) share ONE checkpointed token_table (r15: measured
-    9.5-10.9 s vs 10.0-11.9 s independent at sf0.1 over 5 interleaved
-    reps -- the r7 two-consumer recompute-wins result flips at four
-    consumers; dedup.token_table's docstring carries both numbers).
+    grams, rep, the two scrub legs) share ONE checkpointed token_table
+    (measured 9.5-10.9 s vs 10.0-11.9 s independent at sf0.1 over 5
+    interleaved reps -- the two-consumer recompute-wins result flips at
+    four consumers; dedup.token_table's docstring carries both
+    numbers).
     winnow stays independent: its grams are character-level."""
     docs = _t(spark, sf, "documents")
     nulll = F.lit(None).cast("long")
@@ -929,17 +930,15 @@ def d4_ngram_jaccard_pairs(spark, sf):
     # entry's build wall-clock without touching any plan
     def _tok_chain():
         tt = dedup.token_table(docs).localCheckpoint(eager=True)
-        rr = dedup.span_runs(
-            grams=dedup.positional_ngrams(toks=tt)
-        ).localCheckpoint(eager=True)
+        rr = dedup.span_runs(dedup.positional_ngrams(tt)).localCheckpoint(
+            eager=True
+        )
         return tt, rr
 
     (tokt, runs), winnow_pairs = caching.run_overlapped(
         _tok_chain, lambda: dedup.winnow_near_pairs(docs, threshold=0.35)
     )
-    ngram = dedup.ngram_jaccard_pairs(
-        shingle_n=3, threshold=0.2, toks=tokt
-    ).select(
+    ngram = dedup.ngram_jaccard_pairs(tokt, shingle_n=3, threshold=0.2).select(
         F.lit("ngram").alias("op"),
         "doc_a",
         "doc_b",
@@ -955,7 +954,7 @@ def d4_ngram_jaccard_pairs(spark, sf):
         nulll.alias("n"),
         nulll.alias("m"),
     )
-    spans = dedup.shared_span_pairs(runs=runs).select(
+    spans = dedup.shared_span_pairs(runs).select(
         F.lit("spans").alias("op"),
         "doc_a",
         "doc_b",
@@ -963,7 +962,7 @@ def d4_ngram_jaccard_pairs(spark, sf):
         F.col("n_spans").alias("n"),
         F.col("max_span_tokens").alias("m"),
     )
-    scrub = dedup.span_scrub_stats(docs, runs=runs).select(
+    scrub = dedup.span_scrub_stats(tokt, runs).select(
         F.lit("scrub").alias("op"),
         F.col("doc_id").alias("doc_a"),
         nulll.alias("doc_b"),
@@ -971,7 +970,7 @@ def d4_ngram_jaccard_pairs(spark, sf):
         F.col("tokens_removed").alias("n"),
         F.col("n_tokens_after").alias("m"),
     )
-    stext = dedup.span_scrub_text(docs, runs=runs).select(
+    stext = dedup.span_scrub_text(tokt, runs).select(
         F.lit("scrub_text").alias("op"),
         F.col("doc_id").alias("doc_a"),
         nulll.alias("doc_b"),
@@ -981,7 +980,7 @@ def d4_ngram_jaccard_pairs(spark, sf):
         .alias("n"),
         F.col("n_tokens_after").alias("m"),
     )
-    rep = dedup.intradoc_repetition(toks=tokt).select(
+    rep = dedup.intradoc_repetition(tokt).select(
         F.lit("rep").alias("op"),
         F.col("doc_id").alias("doc_a"),
         nulll.alias("doc_b"),

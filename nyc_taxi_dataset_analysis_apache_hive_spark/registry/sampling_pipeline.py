@@ -248,7 +248,7 @@ def d6_dup_clusters(spark, sf):
     # runs a second time under the audit subtree (measured d6
     # 4.8 -> 7.2 s at sf0.1 before this checkpoint)
     pairs = dedup.ngram_jaccard_pairs(
-        docs, shingle_n=3, threshold=0.2
+        dedup.token_table(docs), shingle_n=3, threshold=0.2
     ).localCheckpoint(eager=True)
 
     # the CC label loop (eager, O(diameter) checkpoint+probe rounds) and
@@ -567,10 +567,10 @@ def s6_hash_split(spark, sf):
         _t(spark, sf, "documents")
     ).localCheckpoint(eager=True)
     pc = packing.pack_concat(
-        context_len=_S6_PACK_CTX, n_shards=_S6_N_SHARDS, counts=counts
+        counts, context_len=_S6_PACK_CTX, n_shards=_S6_N_SHARDS
     )
     pb = packing.pack_bucketed(
-        context_len=_S6_PACK_CTX, n_shards=_S6_N_SHARDS, counts=counts
+        counts, context_len=_S6_PACK_CTX, n_shards=_S6_N_SHARDS
     )
     pack_concat = pc.select(
         F.lit("pack_concat").alias("op"),
@@ -1867,8 +1867,8 @@ def tv1_text_stats(spark, sf):
         # sequential depth is the longest chain, not the sum
         def _lex_chain():
             w_, ts_ = caching.checkpoint_overlapped(
-                textops.linear_probe_weights(toks=tt),
-                textops.bm25_term_scores(query_terms=union_terms, toks=tt),
+                textops.linear_probe_weights(tt),
+                textops.bm25_term_scores(tt, union_terms),
             )
             # ONE bm25_topk rank table feeds BOTH the bm25_topk output
             # rows and the hybrid legs' lexical side: materialize it
@@ -1880,14 +1880,10 @@ def tv1_text_stats(spark, sf):
             return w_, ts_, tk_
 
         def _colloc_chain():
-            ucnt_ = textops.unigram_counts(toks=tt).localCheckpoint(
-                eager=True
-            )
+            ucnt_ = textops.unigram_counts(tt).localCheckpoint(eager=True)
             sc_, wsc_ = caching.checkpoint_overlapped(
-                textops.collocation_scores(unigrams=ucnt_, toks=tt),
-                textops.windowed_collocation_scores(
-                    unigrams=ucnt_, toks=tt
-                ),
+                textops.collocation_scores(tt, unigrams=ucnt_),
+                textops.windowed_collocation_scores(tt, unigrams=ucnt_),
             )
             return sc_, wsc_
 
@@ -1910,8 +1906,8 @@ def tv1_text_stats(spark, sf):
     # identical grouping, previously computed twice (textops.
     # term_frequencies); persisted exactly as tfidf_top_terms always
     # persisted its private copy.
-    tf = caching.maybe_persist(textops.term_frequencies(toks=tt), None)
-    tfidf = textops.tfidf_top_terms(k=3, toks=tt, tf=tf).select(
+    tf = caching.maybe_persist(textops.term_frequencies(tt), None)
+    tfidf = textops.tfidf_top_terms(tt, k=3, tf=tf).select(
         F.lit("tfidf").alias("op"),
         "doc_id",
         "token",
@@ -1919,7 +1915,7 @@ def tv1_text_stats(spark, sf):
         F.col("rank").alias("m"),
         F.col("tfidf").alias("score"),
     )
-    vocab = textops.vocabulary(min_count=20, per_doc=tf).select(
+    vocab = textops.vocabulary(tf, min_count=20).select(
         F.lit("vocab").alias("op"),
         nulll.alias("doc_id"),
         "token",
@@ -1927,7 +1923,7 @@ def tv1_text_stats(spark, sf):
         F.col("doc_freq").alias("m"),
         F.lit(None).cast("double").alias("score"),
     )
-    scrub = dedup.boilerplate_scrub(ngram_n=5, min_docs=3, toks=tt).select(
+    scrub = dedup.boilerplate_scrub(tt, ngram_n=5, min_docs=3).select(
         F.lit("scrub").alias("op"),
         "doc_id",
         F.col("scrub_fp").alias("token"),
@@ -1936,7 +1932,7 @@ def tv1_text_stats(spark, sf):
         F.lit(None).cast("double").alias("score"),
     )
     nulls = F.lit(None).cast("string")
-    lm = textops.ngram_lm_scores(toks=tt).select(
+    lm = textops.ngram_lm_scores(tt).select(
         F.lit("lm").alias("op"),
         "doc_id",
         nulls.alias("token"),
@@ -1946,7 +1942,7 @@ def tv1_text_stats(spark, sf):
     )
     # the weights row (trained once, in the overlapped build above)
     # feeds two union branches: probe scoring + the probe_w rows
-    probe = textops.linear_probe_scores(weights=w, toks=tt).select(
+    probe = textops.linear_probe_scores(tt, weights=w).select(
         F.lit("probe").alias("op"),
         "doc_id",
         nulls.alias("token"),
@@ -1974,9 +1970,7 @@ def tv1_text_stats(spark, sf):
         nulll.alias("m"),
         F.col("s.score").alias("score"),
     )
-    chunk = textops.chunk_documents(
-        chunk_tokens=32, stride=24, toks=tt
-    ).select(
+    chunk = textops.chunk_documents(tt, chunk_tokens=32, stride=24).select(
         F.lit("chunk").alias("op"),
         "doc_id",
         F.col("chunk_fp").alias("token"),
@@ -2419,7 +2413,7 @@ def d7_cross_corpus_decontam(spark, sf):
     p_toks = tt.filter(F.col("doc_id") % 2 == 1)
     nulll = F.lit(None).cast("long")
     mh = dedup.cross_corpus_minhash_pairs(
-        jaccard_threshold=0.5, corpus_toks=c_toks, probe_toks=p_toks
+        c_toks, p_toks, jaccard_threshold=0.5
     ).select(
         F.lit("minhash").alias("op"),
         "corpus_id",
@@ -2429,7 +2423,7 @@ def d7_cross_corpus_decontam(spark, sf):
         F.col("jaccard").alias("score"),
     )
     ov = dedup.ngram_overlap_contamination(
-        ngram_n=8, threshold=0.2, corpus_toks=c_toks, probe_toks=p_toks
+        c_toks, p_toks, ngram_n=8, threshold=0.2
     ).select(
         F.lit("overlap").alias("op"),
         nulll.alias("corpus_id"),
@@ -2438,9 +2432,7 @@ def d7_cross_corpus_decontam(spark, sf):
         F.col("n_hits").alias("m"),
         F.col("overlap_frac").alias("score"),
     )
-    sp = dedup.cross_corpus_span_contamination(
-        corpus_toks=c_toks, probe_toks=p_toks
-    ).select(
+    sp = dedup.cross_corpus_span_contamination(c_toks, p_toks).select(
         F.lit("spans").alias("op"),
         "corpus_id",
         "probe_id",

@@ -36,7 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import ngrams_from_tokens, tokens
+from ..functions.text import ngrams_from_tokens
+from ..operators.dedup import token_table
 
 
 def read_docs_stream(
@@ -67,14 +68,11 @@ def _doc_gram_rows(
 ) -> DataFrame:
     """(doc_id[, ts], g) with one NULL-gram row per gram-less document
     (explode_outer keeps it, so short/empty docs stay in the report)."""
-    toked = docs.select(
+    return token_table(
+        docs, text_col, keep=(ts_col,) if ts_col else ()
+    ).select(
         "doc_id",
         *([F.col(ts_col).alias("_ts")] if ts_col else []),
-        tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("toks"),
-    )
-    return toked.select(
-        "doc_id",
-        *(["_ts"] if ts_col else []),
         F.explode_outer(
             F.array_distinct(ngrams_from_tokens(F.col("toks"), ngram_n))
         ).alias("g"),
@@ -525,7 +523,9 @@ def protected_span_index(
 
     w = SPAN_WINDOW if span_window is None else span_window
     cap = SPAN_MAX_GRAM_DOCS if max_gram_docs is None else max_gram_docs
-    cold = _cold_positional_grams(positional_ngrams(corpus, w, text_col), cap)
+    cold = _cold_positional_grams(
+        positional_ngrams(token_table(corpus, text_col), w), cap
+    )
     return cold.select(
         F.col("doc_id").alias("corpus_id"), F.col("pos").alias("pa"), "g"
     )
@@ -550,10 +550,12 @@ def _span_hit_rows(
     hits would never close.  One row per document carries ``_ts``
     through unconditionally; its (probe, NULL-corpus) group folds to
     n_spans = 0 and the final filter drops it."""
-    toked = docs.select(
+    toked = token_table(
+        docs, text_col, keep=(ts_col,) if ts_col else ()
+    ).select(
         F.col("doc_id").alias("probe_id"),
         *([F.col(ts_col).alias("_ts")] if ts_col else []),
-        tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("toks"),
+        "toks",
     )
     grams = toked.select(
         "probe_id",

@@ -88,13 +88,14 @@ def test_ngram_doc_freq_cap_drops_boilerplate_pairs(spark):
         "doc_id long, text string",
     )
     kw = dict(shingle_n=3, threshold=0.05)
+    toks = dedup.token_table(docs)
     exact = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dedup.ngram_jaccard_pairs(docs, **kw).collect()
+        for r in dedup.ngram_jaccard_pairs(toks, **kw).collect()
     }
     capped = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dedup.ngram_jaccard_pairs(docs, max_doc_freq=2, **kw).collect()
+        for r in dedup.ngram_jaccard_pairs(toks, max_doc_freq=2, **kw).collect()
     }
     # every pair shares the boilerplate shingles -> all 6 pairs uncapped
     assert set(exact) == {(a, b) for a in (1, 2, 3) for b in (2, 3, 4) if a < b}
@@ -141,7 +142,9 @@ def test_cross_corpus_decontamination(spark, sf0001_dir):
     kw = dict(n_hashes=16, n_bands=4, shingle_n=3, jaccard_threshold=0.5)
     cross = {
         (r["corpus_id"], r["probe_id"], r["jaccard"])
-        for r in dedup.cross_corpus_minhash_pairs(odd, even, **kw).collect()
+        for r in dedup.cross_corpus_minhash_pairs(
+            dedup.token_table(odd), dedup.token_table(even), **kw
+        ).collect()
     }
     self_pairs = {
         (r["doc_a"], r["doc_b"], r["jaccard"])
@@ -160,15 +163,16 @@ def test_vocabulary_counts_match_python(spark):
     import collections
     import re
 
-    from nyc_taxi_dataset_analysis_apache_hive_spark.operators import textops
+    from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup, textops
 
     texts = ["the cat and the hat", "a cat sat", "the end"]
     docs = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
     )
+    tf = textops.term_frequencies(dedup.token_table(docs))
     got = {
         r["token"]: (r["count"], r["doc_freq"])
-        for r in textops.vocabulary(docs).collect()
+        for r in textops.vocabulary(tf).collect()
     }
     counts: collections.Counter = collections.Counter()
     dfreq: collections.Counter = collections.Counter()
@@ -178,7 +182,7 @@ def test_vocabulary_counts_match_python(spark):
         dfreq.update(set(toks))
     assert got == {t: (counts[t], dfreq[t]) for t in counts}
     # min_count filters the tail
-    top = textops.vocabulary(docs, min_count=2).collect()
+    top = textops.vocabulary(tf, min_count=2).collect()
     assert {r["token"] for r in top} == {t for t, c in counts.items() if c >= 2}
     assert top[0]["token"] == "the"  # count-desc ordering
 
@@ -190,7 +194,7 @@ def test_tfidf_top_terms_match_python(spark):
     import math
     import re
 
-    from nyc_taxi_dataset_analysis_apache_hive_spark.operators import textops
+    from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup, textops
 
     texts = [
         "apple banana apple cherry",
@@ -202,7 +206,7 @@ def test_tfidf_top_terms_match_python(spark):
     )
     got = {
         (r["doc_id"], r["rank"]): (r["token"], r["tf"], r["tfidf"])
-        for r in textops.tfidf_top_terms(docs, k=2).collect()
+        for r in textops.tfidf_top_terms(dedup.token_table(docs), k=2).collect()
     }
     # half-boundary rounding can differ between Python round() (half-even
     # on the binary double) and Spark round (HALF_UP on the shortest

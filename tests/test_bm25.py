@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from nyc_taxi_dataset_analysis_apache_hive_spark.operators import textops
+from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup, textops
 
 
 def _docs(spark, texts):
@@ -297,9 +297,9 @@ def test_shared_term_scores_pass_is_value_identical(spark, sf0001_dir):
         set(textops.BM25_QUERY_TERMS)
         | {t for ts in textops.BM25_TOPK_QUERIES.values() for t in ts}
     )
-    shared = textops.bm25_term_scores(docs, union_terms).localCheckpoint(
-        eager=True
-    )
+    shared = textops.bm25_term_scores(
+        dedup.token_table(docs), union_terms
+    ).localCheckpoint(eager=True)
     base_scores = sorted(
         map(
             tuple,
@@ -334,14 +334,16 @@ def test_stale_or_mismatched_term_scores_raise(spark):
     job runs for the check, and the provenance survives
     localCheckpoint (the shared-pass materialization path)."""
     docs = _docs(spark, ["a b dup", "b c", "a x"])
-    small = textops.bm25_term_scores(docs, ["a"]).localCheckpoint(eager=True)
+    small = textops.bm25_term_scores(
+        dedup.token_table(docs), ["a"]
+    ).localCheckpoint(eager=True)
     with pytest.raises(ValueError, match="does not cover"):
         textops.bm25_scores(docs, query_terms=["a", "b"], term_scores=small)
     with pytest.raises(ValueError, match="does not cover"):
         textops.bm25_topk(
             docs, queries={"q": ("a", "b")}, term_scores=small
         )
-    full = textops.bm25_term_scores(docs, ["a", "b"])
+    full = textops.bm25_term_scores(dedup.token_table(docs), ["a", "b"])
     with pytest.raises(ValueError, match="k1="):
         textops.bm25_scores(
             docs, query_terms=["a"], k1=2.0, term_scores=full

@@ -67,7 +67,7 @@ def test_scrub_hand_crafted_spans(spark):
         (5, BOILER),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = _collect(dedup.boilerplate_scrub(docs))
+    got = _collect(dedup.boilerplate_scrub(dedup.token_table(docs)))
     want = _py_scrub(dict(rows))
     assert got == want
     # the semantics the recompute encodes, asserted directly too:
@@ -84,7 +84,7 @@ def test_scrub_short_docs_untouched(spark):
         [(1, "one two three four"), (2, ""), (3, "solo"), (4, None)],
         "doc_id long, text string",
     )
-    got = _collect(dedup.boilerplate_scrub(docs))
+    got = _collect(dedup.boilerplate_scrub(dedup.token_table(docs)))
     assert got == _py_scrub({1: "one two three four", 2: "", 3: "solo", 4: ""})
     assert all(v[2] == 0 for v in got.values())
     assert got[4][0] == 0  # NULL text behaves as the empty document
@@ -95,7 +95,9 @@ def test_scrub_matches_python_on_real_docs(spark, sf0001_dir):
     min_docs=2 so heavy grams exist even in the 60-doc slice."""
     docs = load_table(spark, sf0001_dir, "documents").limit(60)
     texts = {r["doc_id"]: r["text"] for r in docs.collect()}
-    got = _collect(dedup.boilerplate_scrub(docs, min_docs=2))
+    got = _collect(
+        dedup.boilerplate_scrub(dedup.token_table(docs), min_docs=2)
+    )
     assert got == _py_scrub(texts, min_docs=2)
     # the slice genuinely exercises scrubbing (not vacuously green)
     assert any(v[2] > 0 for v in got.values())
@@ -106,7 +108,7 @@ def test_scrub_plan_broadcasts_heavy_set(spark, sf0001_dir):
     tiny by definition); no cartesian anywhere; the scan prunes to the
     two columns the operator reads."""
     docs = load_table(spark, sf0001_dir, "documents")
-    plan = explain_str(dedup.boilerplate_scrub(docs))
+    plan = explain_str(dedup.boilerplate_scrub(dedup.token_table(docs)))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -32,7 +32,9 @@ def test_cache_scope_unpersists_and_never_accumulates(spark, sf0001_dir):
     # run each persisting operator TWICE: frames must be cached while the
     # scope is open (the persist is real) and gone after each exit
     ops = [
-        lambda cs: textops.tfidf_top_terms(docs, k=3, cache=cs),
+        lambda cs: textops.tfidf_top_terms(
+            dedup.token_table(docs), k=3, cache=cs
+        ),
         lambda cs: dedup.simhash_near_pairs(docs, max_hamming=3, cache=cs),
     ]
     for op in ops:
@@ -50,7 +52,7 @@ def test_cache_scope_unpersists_on_error(spark, sf0001_dir):
     spark.catalog.clearCache()
     try:
         with CacheScope() as cs:
-            out = textops.tfidf_top_terms(docs, k=3, cache=cs)
+            out = textops.tfidf_top_terms(dedup.token_table(docs), k=3, cache=cs)
             out.count()
             raise RuntimeError("caller failure mid-scope")
     except RuntimeError:
@@ -63,7 +65,7 @@ def test_no_scope_keeps_round2_behaviour(spark, sf0001_dir):
     the one-shot-job default is unchanged."""
     docs = load_table(spark, sf0001_dir, "documents")
     spark.catalog.clearCache()
-    out = textops.tfidf_top_terms(docs, k=3)
+    out = textops.tfidf_top_terms(dedup.token_table(docs), k=3)
     out.count()
     assert not _cache_manager_empty(spark)
     spark.catalog.clearCache()

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row
 
-from nyc_taxi_dataset_analysis_apache_hive_spark.operators import textops
+from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup, textops
 
 TEXT10 = "t0 t1 t2 t3 t4 t5 t6 t7 t8 t9"
 
@@ -16,7 +16,7 @@ TEXT10 = "t0 t1 t2 t3 t4 t5 t6 t7 t8 t9"
 def _chunks(spark, text, chunk_tokens, stride):
     return sorted(
         textops.chunk_documents(
-            spark.createDataFrame([Row(doc_id=0, text=text)]),
+            dedup.token_table(spark.createDataFrame([Row(doc_id=0, text=text)])),
             chunk_tokens=chunk_tokens,
             stride=stride,
         ).collect(),
@@ -48,7 +48,9 @@ def test_exact_partition_reconstructs_document(spark):
 
 def test_every_token_covered_when_stride_le_chunk(spark, sf0001_dir):
     docs = spark.read.parquet(f"{sf0001_dir}/documents.parquet")
-    chunks = textops.chunk_documents(docs, chunk_tokens=32, stride=24)
+    chunks = textops.chunk_documents(
+        dedup.token_table(docs), chunk_tokens=32, stride=24
+    )
     per_doc = {}
     for r in chunks.collect():
         lo, hi = r["start_token"], r["start_token"] + r["n_tokens"] - 1
@@ -73,9 +75,11 @@ def test_every_token_covered_when_stride_le_chunk(spark, sf0001_dir):
 
 def test_edges_and_validation(spark):
     rows = textops.chunk_documents(
-        spark.createDataFrame(
-            [Row(doc_id=0, text=""), Row(doc_id=1, text=None),
-             Row(doc_id=2, text="one")]
+        dedup.token_table(
+            spark.createDataFrame(
+                [Row(doc_id=0, text=""), Row(doc_id=1, text=None),
+                 Row(doc_id=2, text="one")]
+            )
         ),
         chunk_tokens=8,
         stride=8,
@@ -84,5 +88,6 @@ def test_edges_and_validation(spark):
     assert rows[0]["n_tokens"] == 1 and rows[0]["chunk_text"] == "one"
     with pytest.raises(ValueError):
         textops.chunk_documents(
-            spark.createDataFrame([Row(doc_id=0, text="x")]), stride=0
+            dedup.token_table(spark.createDataFrame([Row(doc_id=0, text="x")])),
+            stride=0,
         )

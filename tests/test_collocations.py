@@ -13,7 +13,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from nyc_taxi_dataset_analysis_apache_hive_spark.operators import textops
+from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup, textops
 
 
 @pytest.fixture(scope="module")
@@ -32,7 +32,7 @@ def docs(spark):
 
 
 def test_bigrams_stay_inside_documents(docs):
-    bg = textops.bigram_table(docs)
+    bg = textops.bigram_table(dedup.token_table(docs))
     got = {(r["w1"], r["w2"]) for r in bg.collect()}
     # last token of doc 2 ("sat") never pairs with first of doc 3 ("the")
     assert ("sat", "the") not in got
@@ -41,7 +41,7 @@ def test_bigrams_stay_inside_documents(docs):
 
 
 def test_bigram_counts_are_occurrence_level(docs):
-    bg = textops.bigram_table(docs)
+    bg = textops.bigram_table(dedup.token_table(docs))
     c = (
         bg.groupBy("w1", "w2").count()
         .filter((F.col("w1") == "neural") & (F.col("w2") == "network"))
@@ -52,7 +52,7 @@ def test_bigram_counts_are_occurrence_level(docs):
 
 def test_pmi_value_and_ordering(docs):
     scored = {(r["w1"], r["w2"]): r for r in
-              textops.collocation_scores(docs).collect()}
+              textops.collocation_scores(dedup.token_table(docs)).collect()}
     nn = scored[("neural", "network")]
     cat = scored[("the", "cat")]
     # hand-computed: P(ab)=c_ab/nb, P(a)=c_a/nu
@@ -73,8 +73,8 @@ def test_pmi_value_and_ordering(docs):
 
 
 def test_window_pairs_reduce_to_bigrams_at_window_1(docs):
-    bg = sorted(map(tuple, textops.bigram_table(docs).collect()))
-    win1 = sorted(map(tuple, textops.window_pair_table(docs, 1).collect()))
+    bg = sorted(map(tuple, textops.bigram_table(dedup.token_table(docs)).collect()))
+    win1 = sorted(map(tuple, textops.window_pair_table(dedup.token_table(docs), 1).collect()))
     assert bg == win1
 
 
@@ -83,7 +83,7 @@ def test_window_pairs_respect_window_and_doc_boundary(spark):
         [(0, "a b c d"), (1, "e f")], "doc_id long, text string"
     )
     got = sorted(
-        map(tuple, textops.window_pair_table(docs, 2).collect())
+        map(tuple, textops.window_pair_table(dedup.token_table(docs), 2).collect())
     )
     # window=2: (a,b),(a,c),(b,c),(b,d),(c,d) + (e,f); never (d,e)
     assert got == sorted(
@@ -94,7 +94,7 @@ def test_window_pairs_respect_window_and_doc_boundary(spark):
 
 def test_window_pair_table_rejects_window_zero(docs):
     with pytest.raises(ValueError):
-        textops.window_pair_table(docs, 0)
+        textops.window_pair_table(dedup.token_table(docs), 0)
 
 
 def test_windowed_pmi_uses_window_slot_total(spark):
@@ -102,7 +102,7 @@ def test_windowed_pmi_uses_window_slot_total(spark):
     docs = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
     got = {
         (r["w1"], r["w2"]): r["pmi"]
-        for r in textops.windowed_collocation_scores(docs, 2).collect()
+        for r in textops.windowed_collocation_scores(dedup.token_table(docs), 2).collect()
     }
     want = round(math.log((1 / 3) / ((1 / 3) * (1 / 3))), 6)
     assert got == {("a", "b"): want, ("a", "c"): want, ("b", "c"): want}
@@ -110,7 +110,7 @@ def test_windowed_pmi_uses_window_slot_total(spark):
 
 def test_single_token_docs_contribute_unigrams_only(docs):
     # "one" appears in unigram totals but yields no bigram rows
-    bg = textops.bigram_table(docs)
+    bg = textops.bigram_table(dedup.token_table(docs))
     assert bg.filter((F.col("w1") == "one") | (F.col("w2") == "one")).count() == 0
 
 
@@ -167,7 +167,10 @@ def _python_collocations(texts):
     for (w1, w2), c_ab in bg.items():
         pab = c_ab / nb
         pmi = math.log(pab / ((uni[w1] / nu) * (uni[w2] / nu)))
-        out[(w1, w2)] = (c_ab, round(pmi, 6), round(pmi / -math.log(pab), 6))
+        # one bigram type (P(ab) = 1): NPMI's -ln P(ab) is 0, and the
+        # operator's double division by zero yields NULL
+        npmi = None if pab == 1 else round(pmi / -math.log(pab), 6)
+        out[(w1, w2)] = (c_ab, round(pmi, 6), npmi)
     return out
 
 
@@ -187,7 +190,7 @@ def test_hypothesis_collocations_match_python(spark, texts):
     )
     got = {
         (r["w1"], r["w2"]): (r["c_ab"], r["pmi"], r["npmi"])
-        for r in textops.collocation_scores(docs).collect()
+        for r in textops.collocation_scores(dedup.token_table(docs)).collect()
     }
     want = _python_collocations(texts)
     assert set(got) == set(want)
@@ -195,7 +198,7 @@ def test_hypothesis_collocations_match_python(spark, texts):
         gc, gp, gn = got[k]
         assert gc == c_ab
         assert gp == pytest.approx(pmi, abs=2e-6)
-        assert gn == pytest.approx(npmi, abs=2e-6)
+        assert gn == (None if npmi is None else pytest.approx(npmi, abs=2e-6))
 
 
 def _python_windowed(texts, window):
@@ -236,7 +239,9 @@ def test_hypothesis_windowed_match_python(spark, texts, window):
     )
     got = {
         (r["w1"], r["w2"]): (r["c_ab"], r["pmi"])
-        for r in textops.windowed_collocation_scores(docs, window).collect()
+        for r in textops.windowed_collocation_scores(
+            dedup.token_table(docs), window
+        ).collect()
     }
     want = _python_windowed(texts, window)
     assert set(got) == set(want)

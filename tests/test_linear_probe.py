@@ -11,11 +11,16 @@ import numpy as np
 import pytest
 from pyspark.sql import Row
 
-from nyc_taxi_dataset_analysis_apache_hive_spark.operators import textops
+from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup, textops
 
 
 def _trunc4(x: float) -> float:
     return math.floor(x * 10_000.0 + 1e-7) / 10_000.0
+
+
+def _toks(docs):
+    """The probe's input: the token table carrying the ``source`` label."""
+    return dedup.token_table(docs, keep=("source",))
 
 
 @pytest.fixture(scope="module")
@@ -24,20 +29,20 @@ def docs(spark, sf0001_dir):
 
 
 def test_weights_match_numpy_lstsq(spark, docs):
-    feats = textops._probe_features(docs, "text").collect()
+    feats = textops._probe_features(_toks(docs)).collect()
     X = np.array([[1.0, r["x1"], r["x2"]] for r in feats])
     y = np.array([float(r["y"]) for r in feats])
     expected, *_ = np.linalg.lstsq(X, y, rcond=None)
-    got = textops.linear_probe_weights(docs).collect()[0]
+    got = textops.linear_probe_weights(_toks(docs)).collect()[0]
     assert abs(got["w0"] - expected[0]) < 1e-9
     assert abs(got["w1"] - expected[1]) < 1e-9
     assert abs(got["w2"] - expected[2]) < 1e-9
 
 
 def test_scores_follow_fitted_plane(spark, docs):
-    w = textops.linear_probe_weights(docs).collect()[0]
-    feats = {r["doc_id"]: r for r in textops._probe_features(docs, "text").collect()}
-    scored = textops.linear_probe_scores(docs).collect()
+    w = textops.linear_probe_weights(_toks(docs)).collect()[0]
+    feats = {r["doc_id"]: r for r in textops._probe_features(_toks(docs)).collect()}
+    scored = textops.linear_probe_scores(_toks(docs)).collect()
     assert len(scored) == len(feats)
     for r in scored:
         f = feats[r["doc_id"]]
@@ -50,9 +55,12 @@ def test_scores_follow_fitted_plane(spark, docs):
 def test_partitioning_invariance(spark, docs):
     """DECIMAL normal-equation sums are exact, so weights and scores must
     be bit-identical under any partitioning."""
-    base = sorted(map(tuple, textops.linear_probe_scores(docs).collect()))
+    base = sorted(map(tuple, textops.linear_probe_scores(_toks(docs)).collect()))
     repart = sorted(
-        map(tuple, textops.linear_probe_scores(docs.repartition(13)).collect())
+        map(
+            tuple,
+            textops.linear_probe_scores(_toks(docs.repartition(13))).collect(),
+        )
     )
     assert base == repart
 
@@ -66,7 +74,9 @@ def test_planted_signal_is_recovered(spark):
         Row(doc_id=100 + i, source="src1", text="zz yy xx qq ww ee rr tt uu ii")
         for i in range(30)
     ]
-    scored = textops.linear_probe_scores(spark.createDataFrame(rows)).collect()
+    scored = textops.linear_probe_scores(
+        _toks(spark.createDataFrame(rows))
+    ).collect()
     pos = [r["yhat"] for r in scored if r["y"] == 1]
     neg = [r["yhat"] for r in scored if r["y"] == 0]
     assert min(pos) > max(neg)

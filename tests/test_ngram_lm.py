@@ -8,7 +8,7 @@ import math
 
 from pyspark.sql import Row
 
-from nyc_taxi_dataset_analysis_apache_hive_spark.operators import textops
+from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup, textops
 
 
 def _docs(spark, texts):
@@ -31,7 +31,7 @@ def test_hand_computed_tiny_corpus(spark):
     out = {
         r["doc_id"]: r
         for r in textops.ngram_lm_scores(
-            _docs(spark, ["a b a b", "a b", "x"])
+            dedup.token_table(_docs(spark, ["a b a b", "a b", "x"]))
         ).collect()
     }
     lp_ab = math.log((3 + 1) / float(3 + 3))
@@ -53,8 +53,10 @@ def test_null_and_empty_text(spark):
     rows = {
         r["doc_id"]: r
         for r in textops.ngram_lm_scores(
-            spark.createDataFrame(
-                [Row(doc_id=0, text=None), Row(doc_id=1, text="!!!")]
+            dedup.token_table(
+                spark.createDataFrame(
+                    [Row(doc_id=0, text=None), Row(doc_id=1, text="!!!")]
+                )
             )
         ).collect()
     }
@@ -69,17 +71,22 @@ def test_partitioning_invariance(spark, sf0001_dir):
     must give IDENTICAL doubles -- the property the oracle hash needs."""
     docs = spark.read.parquet(f"{sf0001_dir}/documents.parquet")
     base = sorted(
-        map(tuple, textops.ngram_lm_scores(docs).collect())
+        map(tuple, textops.ngram_lm_scores(dedup.token_table(docs)).collect())
     )
     repart = sorted(
-        map(tuple, textops.ngram_lm_scores(docs.repartition(13)).collect())
+        map(
+            tuple,
+            textops.ngram_lm_scores(
+                dedup.token_table(docs.repartition(13))
+            ).collect(),
+        )
     )
     assert base == repart
 
 
 def test_scores_are_negative_log_probs(spark, sf0001_dir):
     docs = spark.read.parquet(f"{sf0001_dir}/documents.parquet")
-    rows = textops.ngram_lm_scores(docs).collect()
+    rows = textops.ngram_lm_scores(dedup.token_table(docs)).collect()
     assert rows and all(
         r["avg_logprob"] is not None and r["avg_logprob"] <= 0
         for r in rows

@@ -39,7 +39,10 @@ def test_hand_built_contamination(spark):
     out = {
         r["probe_id"]: r
         for r in dedup.ngram_overlap_contamination(
-            corpus, probes, ngram_n=8, threshold=0.2
+            dedup.token_table(corpus),
+            dedup.token_table(probes),
+            ngram_n=8,
+            threshold=0.2,
         ).collect()
     }
     assert set(out) == {1, 3, 5, 7}
@@ -61,6 +64,7 @@ def test_hand_built_contamination(spark):
 def test_threshold_boundary(spark):
     corpus = _df(spark, [(0, " ".join(WORDS[:8]))])  # exactly one 8-gram
     probes = _df(spark, [(1, " ".join(WORDS[:9]))])  # two 8-grams, one hits
+    corpus, probes = dedup.token_table(corpus), dedup.token_table(probes)
     strict = dedup.ngram_overlap_contamination(
         corpus, probes, ngram_n=8, threshold=0.5
     ).collect()[0]
@@ -72,10 +76,12 @@ def test_threshold_boundary(spark):
 
 
 def test_plan_has_no_cartesian_and_aggregates_corpus_first(spark, sf0001_dir):
-    docs = spark.read.parquet(f"{sf0001_dir}/documents.parquet")
+    toks = dedup.token_table(
+        spark.read.parquet(f"{sf0001_dir}/documents.parquet")
+    )
     plan = (
         dedup.ngram_overlap_contamination(
-            docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")
+            toks.filter("doc_id % 2 = 0"), toks.filter("doc_id % 2 = 1")
         )
         ._jdf.queryExecution()
         .executedPlan()

@@ -94,7 +94,7 @@ def test_pack_concat_matches_python_recompute(spark):
     got = {
         r["doc_id"]: (r["shard"], r["start_offset"])
         for r in packing.pack_concat(
-            docs, context_len=CTX, n_shards=N_SHARDS
+            packing.doc_token_counts(docs), context_len=CTX, n_shards=N_SHARDS
         ).collect()
     }
     assert got == _expected_concat(_doc_counts(spark))
@@ -103,7 +103,7 @@ def test_pack_concat_matches_python_recompute(spark):
 def test_pack_concat_chunk_arithmetic(spark):
     docs = load_table(spark, SF, "documents")
     for r in packing.pack_concat(
-        docs, context_len=CTX, n_shards=N_SHARDS
+        packing.doc_token_counts(docs), context_len=CTX, n_shards=N_SHARDS
     ).collect():
         assert r["start_chunk"] == r["start_offset"] // CTX
         assert r["end_chunk"] == (r["start_offset"] + r["n_tokens"] - 1) // CTX
@@ -122,7 +122,7 @@ def test_pack_bucketed_matches_python_recompute(spark):
             r["truncated"],
         )
         for r in packing.pack_bucketed(
-            docs, context_len=CTX, n_shards=N_SHARDS
+            packing.doc_token_counts(docs), context_len=CTX, n_shards=N_SHARDS
         ).collect()
     }
     assert got == _expected_bucketed(_doc_counts(spark))
@@ -158,9 +158,7 @@ def test_bucketed_capacity_invariant_adversarial(spark):
     -- the closed-form capacity proof, exercised on counts that sit ON
     every boundary."""
     b = packing.pack_bucketed(
-        context_len=CTX,
-        n_shards=3,
-        counts=_counts_df(spark, _ADVERSARIAL),
+        _counts_df(spark, _ADVERSARIAL), context_len=CTX, n_shards=3
     )
     occ = (
         b.groupBy("shard", "bin_id")
@@ -188,7 +186,7 @@ def test_concat_offsets_contiguous_adversarial(spark):
     """Per shard: offsets tile the stream exactly (no gap, no overlap),
     zero/NULL-count docs excluded."""
     c = packing.pack_concat(
-        context_len=CTX, n_shards=3, counts=_counts_df(spark, _ADVERSARIAL)
+        _counts_df(spark, _ADVERSARIAL), context_len=CTX, n_shards=3
     )
     rows = c.collect()
     assert {r["doc_id"] for r in rows} == {
@@ -206,42 +204,30 @@ def test_concat_offsets_contiguous_adversarial(spark):
 
 def test_layouts_deterministic_under_repartition(spark):
     docs = load_table(spark, SF, "documents")
-    base_c = sorted(map(tuple, packing.pack_concat(docs).collect()))
-    base_b = sorted(map(tuple, packing.pack_bucketed(docs).collect()))
-    shuffled = docs.repartition(7)
+    counts = packing.doc_token_counts(docs)
+    base_c = sorted(map(tuple, packing.pack_concat(counts).collect()))
+    base_b = sorted(map(tuple, packing.pack_bucketed(counts).collect()))
+    shuffled = packing.doc_token_counts(docs.repartition(7))
     assert sorted(map(tuple, packing.pack_concat(shuffled).collect())) == base_c
     assert (
         sorted(map(tuple, packing.pack_bucketed(shuffled).collect())) == base_b
     )
 
 
-def test_counts_overload_equals_direct_and_guards(spark):
-    docs = load_table(spark, SF, "documents")
-    counts = packing.doc_token_counts(docs)
-    direct = sorted(map(tuple, packing.pack_concat(docs).collect()))
-    via = sorted(map(tuple, packing.pack_concat(counts=counts).collect()))
-    assert via == direct
-    directb = sorted(map(tuple, packing.pack_bucketed(docs).collect()))
-    viab = sorted(map(tuple, packing.pack_bucketed(counts=counts).collect()))
-    assert viab == directb
-    with pytest.raises(ValueError, match="either counts= or"):
-        packing.pack_concat(docs, counts=counts)
-    with pytest.raises(ValueError, match="either counts= or"):
-        packing.pack_bucketed(docs, counts=counts)
-    with pytest.raises(ValueError, match="docs or counts="):
-        packing.pack_concat()
+def test_layouts_reject_bad_geometry(spark):
+    counts = _counts_df(spark, [(0, 5)])
     with pytest.raises(ValueError, match="context_len"):
-        packing.pack_concat(docs, context_len=0)
+        packing.pack_concat(counts, context_len=0)
     with pytest.raises(ValueError, match="n_shards"):
-        packing.pack_bucketed(docs, n_shards=0)
+        packing.pack_bucketed(counts, n_shards=0)
 
 
 def test_layout_stats_recompute(spark):
     c = packing.pack_concat(
-        context_len=CTX, n_shards=3, counts=_counts_df(spark, _ADVERSARIAL)
+        _counts_df(spark, _ADVERSARIAL), context_len=CTX, n_shards=3
     )
     b = packing.pack_bucketed(
-        context_len=CTX, n_shards=3, counts=_counts_df(spark, _ADVERSARIAL)
+        _counts_df(spark, _ADVERSARIAL), context_len=CTX, n_shards=3
     )
     stats = {
         (r["op"], r["shard"]): r
@@ -277,8 +263,8 @@ def test_layouts_plan_jvm_side_and_shard_partitioned(spark):
     the sanctioned applyInPandas greedy packer) and must window BY
     SHARD -- a single-partition window here would serialize the corpus
     through one task."""
-    docs = load_table(spark, SF, "documents")
-    for df in (packing.pack_concat(docs), packing.pack_bucketed(docs)):
+    counts = packing.doc_token_counts(load_table(spark, SF, "documents"))
+    for df in (packing.pack_concat(counts), packing.pack_bucketed(counts)):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan
         assert "ArrowEvalPython" not in plan
@@ -288,7 +274,7 @@ def test_layouts_plan_jvm_side_and_shard_partitioned(spark):
 
 # ---------------------------------------------------------------------------
 # Hypothesis-randomized parity (the span-family discipline): arbitrary
-# token-count corpora, via the counts= overload, against the plain-Python
+# token-count corpora, as count tables, against the plain-Python
 # replays above.  derandomize=True keeps CI deterministic.
 # ---------------------------------------------------------------------------
 
@@ -309,8 +295,8 @@ from hypothesis import strategies as st  # noqa: E402
 def test_hypothesis_layouts_match_python(spark, counts, ctx):
     rows = [(i, n) for i, n in enumerate(counts)]
     cdf = _counts_df(spark, rows)
-    c = packing.pack_concat(context_len=ctx, n_shards=N_SHARDS, counts=cdf)
-    b = packing.pack_bucketed(context_len=ctx, n_shards=N_SHARDS, counts=cdf)
+    c = packing.pack_concat(cdf, context_len=ctx, n_shards=N_SHARDS)
+    b = packing.pack_bucketed(cdf, context_len=ctx, n_shards=N_SHARDS)
 
     # concat vs python replay (shard + offset pin the whole layout)
     got_c = {

@@ -291,11 +291,11 @@ def test_collocation_scoring_joins_broadcast(spark):
     explicitly in collocation_scores (r16) so a flipped post-aggregate
     size estimate cannot turn tiny-table joins into SortMergeJoins at
     corpus scale."""
-    from nyc_taxi_dataset_analysis_apache_hive_spark.operators import textops
+    from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup, textops
     from nyc_taxi_dataset_analysis_apache_hive_spark.sources.readers import load_table
 
     docs = load_table(spark, SF, "documents")
-    plan = explain_str(textops.collocation_scores(docs))
+    plan = explain_str(textops.collocation_scores(dedup.token_table(docs)))
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 2
 

@@ -21,6 +21,16 @@ def _docs(spark, texts: dict[int, str | None]):
     )
 
 
+def _runs(
+    docs,
+    window: int = dedup.SPAN_WINDOW,
+    max_gram_docs: int = dedup.SPAN_MAX_GRAM_DOCS,
+):
+    """The span_runs table of a raw documents frame."""
+    grams = dedup.positional_ngrams(dedup.token_table(docs), window)
+    return dedup.span_runs(grams, window, max_gram_docs)
+
+
 def _maximal_common_spans(a: list[str], b: list[str]) -> list[tuple[int, int, int]]:
     """Independent reference: every (i, j, length) with a[i:i+L] == b[j:j+L]
     maximal in both directions, via the classic match-matrix diagonal DP."""
@@ -54,7 +64,7 @@ def test_known_shared_span(spark):
             3: "totally unrelated words here " * 5,
         },
     )
-    rows = dedup.shared_span_pairs(docs, max_gram_docs=50).collect()
+    rows = dedup.shared_span_pairs(_runs(docs, max_gram_docs=50)).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.doc_a, r.doc_b, r.n_spans, r.max_span_tokens) == (1, 2, 1, 20)
@@ -63,11 +73,13 @@ def test_known_shared_span(spark):
 def test_identical_docs_full_length_span(spark):
     text = " ".join(f"w{i}" for i in range(30))
     docs = _docs(spark, {1: text, 2: text})
-    rows = dedup.shared_span_pairs(docs).collect()
+    rows = dedup.shared_span_pairs(_runs(docs)).collect()
     assert [(r.doc_a, r.doc_b, r.n_spans, r.max_span_tokens) for r in rows] == [
         (1, 2, 1, 30)
     ]
-    scrub = dedup.span_scrub_stats(docs).collect()
+    scrub = dedup.span_scrub_stats(
+        dedup.token_table(docs), _runs(docs)
+    ).collect()
     # keep-first: doc 2 loses everything
     assert [(r.doc_id, r.tokens_removed, r.n_tokens_after) for r in scrub] == [
         (2, 30, 0)
@@ -84,7 +96,8 @@ def test_scrub_text_rebuild(spark):
         spark,
         {1: "pre " + text, 2: text + " post tail", 3: text},
     )
-    rows = {r.doc_id: r for r in dedup.span_scrub_text(docs).collect()}
+    tokt, runs = dedup.token_table(docs), _runs(docs)
+    rows = {r.doc_id: r for r in dedup.span_scrub_text(tokt, runs).collect()}
     assert set(rows) == {2, 3}
     assert rows[2].text_scrubbed == "post tail"
     assert rows[2].n_tokens_after == 2
@@ -93,7 +106,7 @@ def test_scrub_text_rebuild(spark):
     # n_tokens_after agrees with the stats derivation (one truth)
     stats = {
         r.doc_id: r.n_tokens_after
-        for r in dedup.span_scrub_stats(docs).collect()
+        for r in dedup.span_scrub_stats(tokt, runs).collect()
     }
     assert stats == {d: r.n_tokens_after for d, r in rows.items()}
 
@@ -111,7 +124,7 @@ def test_min_span_boundary(spark):
             4: "t u " + s12 + " v w",
         },
     )
-    rows = dedup.shared_span_pairs(docs).collect()
+    rows = dedup.shared_span_pairs(_runs(docs)).collect()
     assert [(r.doc_a, r.doc_b, r.max_span_tokens) for r in rows] == [(3, 4, 12)]
 
 
@@ -127,11 +140,13 @@ def test_repeated_span_two_diagonals(spark):
             2: "pad " + span + " tail words here now",
         },
     )
-    rows = dedup.shared_span_pairs(docs).collect()
+    rows = dedup.shared_span_pairs(_runs(docs)).collect()
     assert [(r.doc_a, r.doc_b, r.n_spans, r.max_span_tokens) for r in rows] == [
         (1, 2, 2, 15)
     ]
-    scrub = dedup.span_scrub_stats(docs).collect()
+    scrub = dedup.span_scrub_stats(
+        dedup.token_table(docs), _runs(docs)
+    ).collect()
     # both cuts cover the SAME 15 tokens of doc 2 -> merged, removed once
     assert [(r.doc_id, r.tokens_removed) for r in scrub] == [(2, 15)]
 
@@ -140,33 +155,25 @@ def test_hot_gram_cap_drops_boilerplate(spark):
     """A span made of a gram present in > cap documents never pairs."""
     boiler = " ".join(f"b{i}" for i in range(14))
     docs = _docs(spark, {i: "u%d " % i + boiler + " z%d" % i for i in range(8)})
-    assert dedup.shared_span_pairs(docs, max_gram_docs=3).count() == 0
+    assert dedup.shared_span_pairs(_runs(docs, max_gram_docs=3)).count() == 0
     # and with the cap above the df, all 28 pairs report
-    assert dedup.shared_span_pairs(docs, max_gram_docs=50).count() == 28
+    assert dedup.shared_span_pairs(_runs(docs, max_gram_docs=50)).count() == 28
 
 
 def test_short_and_null_docs_are_silent(spark):
     docs = _docs(spark, {1: "a b c", 2: None, 3: "", 4: "a b c"})
-    assert dedup.shared_span_pairs(docs).count() == 0
-    assert dedup.span_scrub_stats(docs).count() == 0
-
-
-def test_runs_reuse_rejects_shadowed_knobs(spark):
-    docs = _docs(spark, {1: "a b c d e f g", 2: "a b c d e f g"})
-    runs = dedup.span_runs(docs)
-    with pytest.raises(ValueError, match="runs="):
-        dedup.shared_span_pairs(docs, runs=runs)
-    with pytest.raises(ValueError, match="runs="):
-        dedup.span_scrub_stats(docs, runs=runs, window=4)
-    with pytest.raises(ValueError, match="docs or runs"):
-        dedup.shared_span_pairs()
+    runs = _runs(docs)
+    assert dedup.shared_span_pairs(runs).count() == 0
+    assert dedup.span_scrub_stats(dedup.token_table(docs), runs).count() == 0
 
 
 def test_cross_corpus_sides_never_self_pair(spark):
     span = " ".join(f"c{i}" for i in range(16))
     corpus = _docs(spark, {2: "x " + span, 4: "y " + span})
     probes = _docs(spark, {1: "z " + span, 3: "unrelated " * 10})
-    rows = dedup.cross_corpus_span_contamination(corpus, probes).collect()
+    rows = dedup.cross_corpus_span_contamination(
+        dedup.token_table(corpus), dedup.token_table(probes)
+    ).collect()
     # (2,1) and (4,1) only -- never (2,4) within-corpus, never (1,3)
     assert sorted((r.corpus_id, r.probe_id) for r in rows) == [(2, 1), (4, 1)]
     assert all(r.max_span_tokens == 16 for r in rows)
@@ -222,14 +229,15 @@ def test_randomized_parity_vs_match_matrix_reference(spark):
         expect_scrub[d] = (covered, len(toks[d]) - covered)
 
     docs = _docs(spark, texts)
-    runs = dedup.span_runs(docs, window=W, max_gram_docs=1000)
+    tokt = dedup.token_table(docs)
+    runs = _runs(docs, window=W, max_gram_docs=1000)
     got_pairs = {
         (r.doc_a, r.doc_b): (r.n_spans, r.max_span_tokens)
-        for r in dedup.shared_span_pairs(runs=runs, min_span=MS).collect()
+        for r in dedup.shared_span_pairs(runs, min_span=MS).collect()
     }
     got_scrub = {
         r.doc_id: (r.tokens_removed, r.n_tokens_after)
-        for r in dedup.span_scrub_stats(docs, runs=runs, min_span=MS).collect()
+        for r in dedup.span_scrub_stats(tokt, runs, min_span=MS).collect()
     }
     assert got_pairs == expect_pairs
     assert got_scrub == expect_scrub
@@ -245,18 +253,19 @@ def test_randomized_parity_vs_match_matrix_reference(spark):
         )
     got_text = {
         r.doc_id: r.text_scrubbed
-        for r in dedup.span_scrub_text(docs, runs=runs, min_span=MS).collect()
+        for r in dedup.span_scrub_text(tokt, runs, min_span=MS).collect()
     }
     assert got_text == expect_text
 
 
 def test_span_plan_has_no_cartesian(spark, sf0001_dir):
     docs = spark.read.parquet(f"{sf0001_dir}/documents.parquet")
+    tokt = dedup.token_table(docs)
     for df in (
-        dedup.shared_span_pairs(docs),
+        dedup.shared_span_pairs(_runs(docs)),
         dedup.cross_corpus_span_contamination(
-            docs.filter(F.col("doc_id") % 2 == 0),
-            docs.filter(F.col("doc_id") % 2 == 1),
+            tokt.filter(F.col("doc_id") % 2 == 0),
+            tokt.filter(F.col("doc_id") % 2 == 1),
         ),
     ):
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -290,7 +299,10 @@ def test_intradoc_repetition_goldens(spark):
             5: " ".join(["loop"] * 20),         # pathological self-repeat
         },
     )
-    rows = {r.doc_id: r for r in dedup.intradoc_repetition(docs).collect()}
+    rows = {
+        r.doc_id: r
+        for r in dedup.intradoc_repetition(dedup.token_table(docs)).collect()
+    }
     assert set(rows) == {1, 2, 3, 4, 5}
     # doc 1: both occurrences of the 8-gram are covered (8 + 8 tokens)
     assert (rows[1].dup_span_tokens, rows[1].n_tokens) == (16, 17)
@@ -314,7 +326,9 @@ def test_intradoc_repetition_randomized_vs_reference(spark):
     docs = _docs(spark, texts)
     got = {
         r.doc_id: (r.dup_span_tokens, r.n_tokens)
-        for r in dedup.intradoc_repetition(docs, window=W).collect()
+        for r in dedup.intradoc_repetition(
+            dedup.token_table(docs), window=W
+        ).collect()
     }
     want = {
         d: (_ref_dup_coverage(t.split(), W), len(t.split()))
@@ -354,7 +368,7 @@ def test_span_pairs_match_dp_reference_hypothesis(spark, docs_toks):
     got = {
         (r.doc_a, r.doc_b): (r.n_spans, r.max_span_tokens)
         for r in dedup.shared_span_pairs(
-            docs, window=W, min_span=MS, max_gram_docs=10**6
+            _runs(docs, window=W, max_gram_docs=10**6), min_span=MS
         ).collect()
     }
     want = {}
@@ -427,62 +441,28 @@ def test_streaming_fold_matches_python_islands(spark, hits, hb_count):
 
 
 def test_shared_token_table_overloads_equal_direct(spark, sf0001_dir):
-    """The r15 precomputed-input overloads (token_table -> toks=/grams=)
-    reproduce the direct-path results exactly: d4's adopted shape (one
-    checkpointed tokenize pass feeding the ngram index, the span grams,
-    and rep) must be a pure plan change, never a result change."""
+    """d4's adopted shape -- one checkpointed token table feeding the
+    ngram index, the span grams, rep and the two scrub legs -- must be
+    a pure plan change: every consumer returns the rows it returns over
+    an inline (unmaterialized) token table."""
     from nyc_taxi_dataset_analysis_apache_hive_spark.sources.readers import (
         load_table,
     )
 
     docs = load_table(spark, sf0001_dir, "documents")
+    inline = dedup.token_table(docs)
     tokt = dedup.token_table(docs).localCheckpoint(eager=True)
 
-    direct_ngram = dedup.ngram_jaccard_pairs(docs, shingle_n=3, threshold=0.2)
-    shared_ngram = dedup.ngram_jaccard_pairs(
-        shingle_n=3, threshold=0.2, toks=tokt
-    )
-    assert sorted(map(tuple, direct_ngram.collect())) == sorted(
-        map(tuple, shared_ngram.collect())
-    )
+    def same(op):
+        assert sorted(map(tuple, op(inline).collect())) == sorted(
+            map(tuple, op(tokt).collect())
+        )
 
-    direct_runs = dedup.span_runs(docs)
-    shared_runs = dedup.span_runs(grams=dedup.positional_ngrams(toks=tokt))
-    assert sorted(map(tuple, direct_runs.collect())) == sorted(
-        map(tuple, shared_runs.collect())
-    )
+    def runs(t):
+        return dedup.span_runs(dedup.positional_ngrams(t))
 
-    direct_rep = dedup.intradoc_repetition(docs)
-    shared_rep = dedup.intradoc_repetition(toks=tokt)
-    assert sorted(map(tuple, direct_rep.collect())) == sorted(
-        map(tuple, shared_rep.collect())
-    )
-
-
-def test_token_overload_guard_discipline(spark):
-    """The _UNSET guard on every precomputed-input overload: passing the
-    precomputed frame ALONGSIDE the raw inputs raises instead of
-    silently ignoring one of them; passing neither raises too."""
-    import pytest
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f g")], "doc_id long, text string"
-    )
-    tokt = dedup.token_table(docs)
-    grams = dedup.positional_ngrams(toks=tokt)
-    with pytest.raises(ValueError):
-        dedup.positional_ngrams(docs, toks=tokt)
-    with pytest.raises(ValueError):
-        dedup.positional_ngrams()
-    with pytest.raises(ValueError):
-        dedup.span_runs(docs, grams=grams)
-    with pytest.raises(ValueError):
-        dedup.span_runs()
-    with pytest.raises(ValueError):
-        dedup.intradoc_repetition(docs, toks=tokt)
-    with pytest.raises(ValueError):
-        dedup.intradoc_repetition()
-    with pytest.raises(ValueError):
-        dedup.ngram_jaccard_pairs(docs, toks=tokt)
-    with pytest.raises(ValueError):
-        dedup.ngram_jaccard_pairs()
+    same(lambda t: dedup.ngram_jaccard_pairs(t, shingle_n=3, threshold=0.2))
+    same(runs)
+    same(dedup.intradoc_repetition)
+    same(lambda t: dedup.span_scrub_stats(t, runs(t)))
+    same(lambda t: dedup.span_scrub_text(t, runs(t)))

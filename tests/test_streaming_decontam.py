@@ -71,7 +71,7 @@ def _report_map(rows):
 
 def test_stream_matches_batch_and_operator(spark, docs_split, probes_dir):
     corpus, _ = docs_split
-    c_grams = dedup.corpus_gram_set(corpus, ngram_n=8)
+    c_grams = dedup.corpus_gram_set(dedup.token_table(corpus), ngram_n=8)
     stream = curation.decontam_stream(
         curation.read_docs_stream(spark, probes_dir),
         c_grams,
@@ -104,7 +104,10 @@ def test_stream_matches_batch_and_operator(spark, docs_split, probes_dir):
             r["contaminated"],
         )
         for r in dedup.ngram_overlap_contamination(
-            corpus, probes_static, ngram_n=8, threshold=0.2
+            dedup.token_table(corpus),
+            dedup.token_table(probes_static),
+            ngram_n=8,
+            threshold=0.2,
         ).collect()
     }
     assert got and got == batch == operator
@@ -115,7 +118,7 @@ def test_batch_analog_keeps_gramless_docs(spark, docs_split):
     report with n_grams = 0, NULL fraction, and an explicit
     contaminated = False (explode_outer, not explode)."""
     corpus, _ = docs_split
-    c_grams = dedup.corpus_gram_set(corpus, ngram_n=8)
+    c_grams = dedup.corpus_gram_set(dedup.token_table(corpus), ngram_n=8)
     from pyspark.sql import Row
 
     small = spark.createDataFrame(
@@ -188,7 +191,7 @@ def test_span_stream_matches_batch_and_operator(spark, docs_split, probes_dir):
             r["max_span_tokens"],
         )
         for r in dedup.cross_corpus_span_contamination(
-            corpus, probes_static
+            dedup.token_table(corpus), dedup.token_table(probes_static)
         ).collect()
     }
     assert got and got == batch == operator
@@ -281,10 +284,11 @@ def test_span_quarantine_stream_matches_batch_and_scrub_decision(
     # the batch keep-first scrub at the same threshold cuts text from
     # exactly the quarantined documents (corpus ids < probe ids, so
     # every cross cut lands probe-side)
+    both = dedup.token_table(corpus.unionByName(probes))
     cut_docs = {
         r["doc_id"]
         for r in dedup.span_scrub_stats(
-            corpus.unionByName(probes), min_span=12
+            both, dedup.span_runs(dedup.positional_ngrams(both)), min_span=12
         ).collect()
         if r["tokens_removed"] > 0 and r["doc_id"] > 100
     }
@@ -293,7 +297,7 @@ def test_span_quarantine_stream_matches_batch_and_scrub_decision(
     # per-probe max over the operator's pair report agrees
     op_max = {}
     for r in dedup.cross_corpus_span_contamination(
-        corpus, probes, min_span=12
+        dedup.token_table(corpus), dedup.token_table(probes), min_span=12
     ).collect():
         op_max[r["probe_id"]] = max(
             op_max.get(r["probe_id"], 0), r["max_span_tokens"]
@@ -447,7 +451,10 @@ def test_span_heartbeat_never_fabricates_runs_at_low_min_span(spark):
     op = {
         (r.probe_id, r.corpus_id): (r.n_spans, r.max_span_tokens)
         for r in dedup.cross_corpus_span_contamination(
-            corpus, probes, window=6, min_span=6
+            dedup.token_table(corpus),
+            dedup.token_table(probes),
+            window=6,
+            min_span=6,
         ).collect()
     }
     assert got == op

@@ -366,3 +366,64 @@ def test_optional_import_checker_catches_each_spelling():
     assert optional_import_forks(broad, "streaming/s.py") == ["streaming/s.py:5"]
     clean = named.replace("ImportError", "ValueError")
     assert optional_import_forks(clean, "operators/m.py") == []
+
+
+# ---------------------------------------------------------------------------
+# Rule 6: one input per text operator.  A word-token operator takes the
+# token table (or a frame derived from it); the caller that holds raw
+# documents builds it with dedup.token_table.  A signature carrying both
+# a raw-text input and a precomputed one is the two-spellings overload,
+# with its raise-if-both guard.
+# ---------------------------------------------------------------------------
+
+_RAW_INPUTS = {"docs", "corpus", "probes", "text_col"}
+_PRECOMPUTED_INPUTS = {
+    "toks", "corpus_toks", "probe_toks", "grams", "runs", "counts", "per_doc"
+}
+
+
+def dual_input_signatures(source: str, filename: str) -> list[str]:
+    """``file:line name`` for every function in ``source`` whose
+    parameters include both a raw-text input and a precomputed one."""
+    hits = []
+    for node in ast.walk(ast.parse(source)):
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        a = node.args
+        names = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+        if names & _RAW_INPUTS and names & _PRECOMPUTED_INPUTS:
+            hits.append(f"{filename}:{node.lineno} {node.name}")
+    return hits
+
+
+def test_text_operators_take_one_input():
+    bad = []
+    for p in sorted(_PKG.rglob("*.py")):
+        bad += dual_input_signatures(p.read_text(), p.relative_to(_PKG).as_posix())
+    assert not bad, (
+        f"raw-text and precomputed inputs on one signature (build the "
+        f"input with dedup.token_table instead): {bad}"
+    )
+
+
+def test_dual_input_checker_catches_each_pairing():
+    """Self-test: a raw input next to a precomputed one trips the
+    checker wherever it sits in the signature; one input does not."""
+    kw_only = "def f(docs=None, n=3, *, toks=None):\n    pass\n"
+    assert dual_input_signatures(kw_only, "operators/m.py") == [
+        "operators/m.py:1 f"
+    ]
+    nested = (
+        "class C:\n"
+        "    def g(self, runs, text_col='text'):\n"
+        "        pass\n"
+    )
+    assert dual_input_signatures(nested, "streaming/s.py") == [
+        "streaming/s.py:2 g"
+    ]
+    two_sided = "def h(corpus, probes, *, corpus_toks=None, probe_toks=None):\n    pass\n"
+    assert dual_input_signatures(two_sided, "operators/m.py") == [
+        "operators/m.py:1 h"
+    ]
+    assert dual_input_signatures("def k(toks, runs, n=1):\n    pass\n", "m.py") == []
+    assert dual_input_signatures("def k(docs, text_col='t'):\n    pass\n", "m.py") == []

@@ -1,9 +1,8 @@
-"""The r18 shared-token-pass overloads: every ``toks=``/``tf=``/
-``per_doc=`` consumer must produce EXACTLY the rows of its direct
-(docs) path -- including on the NULL/empty/short-text edges where the
-token table's null-safe empty array and the direct path's NULL array
-could diverge (size() = 0 vs -1 is exactly the class the r9
-adversarial sweep existed for)."""
+"""The token table is the one input of every word-token operator: NULL,
+empty and whitespace-only text must tokenize to the empty array and
+leave each consumer's rows for those documents exactly as pinned here
+(size() = 0 vs -1 is exactly the class the adversarial sweep exists
+for)."""
 
 from __future__ import annotations
 
@@ -14,7 +13,7 @@ from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup, textops
 
 #: NULL text, empty, whitespace-only, sub-n-gram short docs, repeats
 #: (so the scrub heavy set and colloc min-count legs are non-empty),
-#: and an odd/even doc_id mix for the two-sided d7 overloads.
+#: and an odd/even doc_id mix for the two-sided d7 operators.
 _ROWS = [
     (0, "the quick brown fox jumps over the lazy dog again and again", "src0"),
     (1, "the quick brown fox jumps over the lazy dog again and again", "src1"),
@@ -27,6 +26,10 @@ _ROWS = [
     (8, "dup hash group scan filter column sort merge window dup", "src1"),
     (9, "a b a b a b a b a b a b", "src2"),
 ]
+
+#: the NULL, empty and whitespace-only documents
+_EDGE = (3, 4, 5)
+_MD5_EMPTY = "d41d8cd98f00b204e9800998ecf8427e"
 
 
 @pytest.fixture(scope="module")
@@ -49,139 +52,103 @@ def test_token_table_keep_carries_payload(docs, tt):
     assert _rows(tt.select("doc_id", "source")) == base
 
 
-@pytest.mark.parametrize(
-    "direct, shared",
-    [
-        (
-            lambda d, t: textops.term_frequencies(d),
-            lambda d, t: textops.term_frequencies(toks=t),
-        ),
-        (
-            lambda d, t: textops.vocabulary(d, min_count=2),
-            lambda d, t: textops.vocabulary(
-                min_count=2, per_doc=textops.term_frequencies(toks=t)
-            ),
-        ),
-        (
-            lambda d, t: textops.tfidf_top_terms(d, k=3),
-            lambda d, t: textops.tfidf_top_terms(
-                k=3, toks=t, tf=textops.term_frequencies(toks=t)
-            ),
-        ),
-        (
-            lambda d, t: textops.ngram_lm_scores(d),
-            lambda d, t: textops.ngram_lm_scores(toks=t),
-        ),
-        (
-            lambda d, t: textops.linear_probe_scores(d),
-            lambda d, t: textops.linear_probe_scores(toks=t),
-        ),
-        (
-            lambda d, t: textops.linear_probe_weights(d),
-            lambda d, t: textops.linear_probe_weights(toks=t),
-        ),
-        (
-            lambda d, t: textops.chunk_documents(d, chunk_tokens=4, stride=3),
-            lambda d, t: textops.chunk_documents(
-                chunk_tokens=4, stride=3, toks=t
-            ),
-        ),
-        (
-            lambda d, t: dedup.boilerplate_scrub(d, ngram_n=5, min_docs=2),
-            lambda d, t: dedup.boilerplate_scrub(
-                ngram_n=5, min_docs=2, toks=t
-            ),
-        ),
-        (
-            lambda d, t: textops.bm25_term_scores(d, ["dup", "join", "fox"]),
-            lambda d, t: textops.bm25_term_scores(
-                query_terms=["dup", "join", "fox"], toks=t
-            ),
-        ),
-        (
-            lambda d, t: textops.unigram_counts(d),
-            lambda d, t: textops.unigram_counts(toks=t),
-        ),
-        (
-            lambda d, t: textops.collocation_scores(d),
-            lambda d, t: textops.collocation_scores(toks=t),
-        ),
-        (
-            lambda d, t: textops.windowed_collocation_scores(d, window=3),
-            lambda d, t: textops.windowed_collocation_scores(
-                window=3, toks=t
-            ),
-        ),
-    ],
-    ids=[
-        "term_frequencies",
-        "vocabulary",
-        "tfidf_top_terms",
-        "ngram_lm_scores",
-        "linear_probe_scores",
-        "linear_probe_weights",
-        "chunk_documents",
-        "boilerplate_scrub",
-        "bm25_term_scores",
-        "unigram_counts",
-        "collocation_scores",
-        "windowed_collocation_scores",
-    ],
-)
-def test_toks_overload_matches_direct(docs, tt, direct, shared):
-    assert _rows(shared(docs, tt)) == _rows(direct(docs, tt))
-
-
-@pytest.mark.parametrize(
-    "direct, shared",
-    [
-        (
-            lambda c, p, ct, pt: dedup.cross_corpus_minhash_pairs(
-                corpus=c, probes=p, jaccard_threshold=0.2
-            ),
-            lambda c, p, ct, pt: dedup.cross_corpus_minhash_pairs(
-                jaccard_threshold=0.2, corpus_toks=ct, probe_toks=pt
-            ),
-        ),
-        (
-            lambda c, p, ct, pt: dedup.ngram_overlap_contamination(
-                c, p, ngram_n=5, threshold=0.2
-            ),
-            lambda c, p, ct, pt: dedup.ngram_overlap_contamination(
-                ngram_n=5, threshold=0.2, corpus_toks=ct, probe_toks=pt
-            ),
-        ),
-        (
-            lambda c, p, ct, pt: dedup.cross_corpus_span_contamination(
-                c, p, window=3, min_span=6
-            ),
-            lambda c, p, ct, pt: dedup.cross_corpus_span_contamination(
-                window=3, min_span=6, corpus_toks=ct, probe_toks=pt
-            ),
-        ),
-    ],
-    ids=["minhash", "overlap", "spans"],
-)
-def test_two_sided_toks_matches_direct(docs, tt, direct, shared):
-    corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    probes = docs.filter(F.col("doc_id") % 2 == 1)
-    ct = tt.filter(F.col("doc_id") % 2 == 0)
-    pt = tt.filter(F.col("doc_id") % 2 == 1)
-    assert _rows(shared(corpus, probes, ct, pt)) == _rows(
-        direct(corpus, probes, ct, pt)
+def _sides(op):
+    """A two-sided operator over the even (corpus) / odd (probe) split."""
+    return lambda t: op(
+        t.filter(F.col("doc_id") % 2 == 0), t.filter(F.col("doc_id") % 2 == 1)
     )
 
 
-def test_overload_misuse_raises(docs, tt):
-    with pytest.raises(ValueError, match="not both"):
-        textops.ngram_lm_scores(docs, toks=tt)
-    with pytest.raises(ValueError, match="not both"):
-        dedup.boilerplate_scrub(docs, toks=tt)
-    with pytest.raises(ValueError, match="not both"):
-        textops.vocabulary(docs, per_doc=textops.term_frequencies(toks=tt))
-    with pytest.raises(ValueError, match="come together"):
-        dedup.cross_corpus_span_contamination(
-            corpus_toks=tt, probe_toks=None
-        )
-    with pytest.raises(ValueError, match="required"):
-        textops.tfidf_top_terms(tf=textops.term_frequencies(toks=tt))
+#: (consumer, scope, rows).  scope "doc": the consumer runs over the
+#: whole corpus and the rows are those whose doc_id (or corpus_id /
+#: probe_id) is an edge document.  scope "edge": the consumer has no
+#: doc_id column, so it runs over the three edge documents alone.  The
+#: rows were captured while each consumer still also accepted raw
+#: documents, where both inputs returned exactly these rows.
+_CASES = {
+    "term_frequencies": (textops.term_frequencies, "doc", []),
+    "vocabulary": (
+        lambda t: textops.vocabulary(textops.term_frequencies(t)),
+        "edge",
+        [],
+    ),
+    "tfidf_top_terms": (lambda t: textops.tfidf_top_terms(t, k=3), "doc", []),
+    "ngram_lm_scores": (
+        textops.ngram_lm_scores,
+        "doc",
+        [(3, 0, 0, None), (4, 0, 0, None), (5, 0, 0, None)],
+    ),
+    "linear_probe_scores": (
+        textops.linear_probe_scores,
+        "doc",
+        [(3, 0, 0, 0.2341), (4, 0, 1, 0.2341), (5, 0, 0, 0.2341)],
+    ),
+    "linear_probe_weights": (
+        textops.linear_probe_weights,
+        "edge",
+        [(None, None, None)],
+    ),
+    "chunk_documents": (
+        lambda t: textops.chunk_documents(t, chunk_tokens=4, stride=3),
+        "doc",
+        [],
+    ),
+    "boilerplate_scrub": (
+        lambda t: dedup.boilerplate_scrub(t, ngram_n=5, min_docs=2),
+        "doc",
+        [(d, 0, 0, 0, _MD5_EMPTY) for d in _EDGE],
+    ),
+    "bm25_term_scores": (
+        lambda t: textops.bm25_term_scores(t, ["dup", "join", "fox"]),
+        "doc",
+        [],
+    ),
+    "unigram_counts": (textops.unigram_counts, "edge", []),
+    "collocation_scores": (textops.collocation_scores, "edge", []),
+    "windowed_collocation_scores": (
+        lambda t: textops.windowed_collocation_scores(t, window=3),
+        "edge",
+        [],
+    ),
+    "minhash": (
+        _sides(
+            lambda c, p: dedup.cross_corpus_minhash_pairs(
+                c, p, jaccard_threshold=0.2
+            )
+        ),
+        "doc",
+        [],
+    ),
+    "overlap": (
+        _sides(
+            lambda c, p: dedup.ngram_overlap_contamination(
+                c, p, ngram_n=5, threshold=0.2
+            )
+        ),
+        "doc",
+        [(3, 0, 0, None, False), (5, 0, 0, None, False)],
+    ),
+    "spans": (
+        _sides(
+            lambda c, p: dedup.cross_corpus_span_contamination(
+                c, p, window=3, min_span=6
+            )
+        ),
+        "doc",
+        [],
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(_CASES))
+def test_edge_document_rows_pinned(tt, name):
+    op, scope, want = _CASES[name]
+    if scope == "edge":
+        assert _rows(op(tt.filter(F.col("doc_id").isin(*_EDGE)))) == want
+        return
+    out = op(tt)
+    ids = [c for c in ("doc_id", "corpus_id", "probe_id") if c in out.columns]
+    edge = F.lit(False)
+    for c in ids:
+        edge = edge | F.col(c).isin(*_EDGE)
+    assert _rows(out.filter(edge)) == want
