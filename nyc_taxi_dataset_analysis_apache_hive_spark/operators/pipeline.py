@@ -66,8 +66,7 @@ def curate_corpus(
     still keeps its cleanest duplicate).  ``keep = hygiene_ok AND
     is_canonical``.
 
-    ``pairs=`` is the compute-once hook (the ``term_scores=`` /
-    ``lexical=`` discipline): pass a precomputed near-dup pair table
+    ``pairs=`` is the compute-once hook: pass a precomputed near-dup pair table
     (doc_a, doc_b) -- e.g. one checkpointed ``minhash_lsh_pairs``
     result feeding both this funnel and :func:`curation_report`'s
     leakage audit -- and the LSH stage is skipped.  Because the pair

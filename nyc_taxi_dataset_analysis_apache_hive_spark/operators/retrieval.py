@@ -8,11 +8,10 @@ pipeline selecting corpus slices for a target task runs exactly this
 sparse+dense ensemble -- the lexical leg catches exact-term matches
 dense embeddings smear out, the dense leg catches paraphrases sharing
 no tokens, and RRF combines them without score calibration (ranks are
-scale-free).  Every piece shipped separately in r10
-(``textops.bm25_topk``, ``similarity.rrf_fuse``, the k1/k2 ANN
-rankings); this module is the composition, plus the named-query dense
-ranking the ANN entries (which rank ``vec_id < n_queries``) did not
-expose.
+scale-free).  Every piece ships separately (``textops.bm25_topk``,
+``similarity.rrf_fuse``, the k1/k2 ANN rankings); this module is the
+composition, plus the named-query dense ranking the ANN entries (which
+rank ``vec_id < n_queries``) do not expose.
 
 The two surfaces share one id space: a document's ``doc_id`` is its
 embedding's ``vec_id`` (the driver tables are built that way), so a
@@ -45,7 +44,7 @@ from pyspark.sql.window import Window
 
 from ..functions.localrel import inline_rows
 from .similarity import RRF_K, normalized_with_bucket, rrf_fuse
-from .textops import BM25_B, BM25_K1, BM25_TOPK_QUERIES, bm25_topk
+from .textops import BM25_TOPK_QUERIES
 
 #: The fixed named-query set of the driver-gated tv1 ``hybrid`` leg:
 #: each retrieval query carries BOTH a term set (the bm25_topk queries,
@@ -74,11 +73,7 @@ def dense_topk(
     query_vecs: dict[str, int] | None = None,
     k: int = HYBRID_K,
     method: str = "brute",
-    n_centroids: int = 16,
     n_probe: int = 3,
-    centroid_offset: int = 100,
-    centroids: DataFrame | None = None,
-    assigned: DataFrame | None = None,
 ) -> DataFrame:
     """Exact cosine top-``k`` for NAMED seed vectors: (query, doc_id,
     cosine, rank).  The k1 brute-force posture generalized from
@@ -97,27 +92,17 @@ def dense_topk(
     surviving legs, which the DuckDB oracle mirrors via the same inner
     join against the normalized relation.
 
-    ``method='ivf'`` (r12) is the billion-vector scale path: each seed
-    probes its ``n_probe`` nearest of the ``n_centroids`` index
-    centroids (pass ``centroids`` = (cent_id, cent_emb) for a trained
-    index; default is the deterministic corpus slice) and scores ONLY
-    those cells' members -- the corpus-side assignment is
-    :func:`..operators.similarity.assign_to_centroids` (one narrow
-    max_by pass, the SAME cell table semantic admission persists, so a
-    deployment reads the assignment once for both), and candidate
-    generation becomes a cent_id equi-join scanning ~n_probe/n_centroids
-    of the corpus.  Returned cosines stay exact for the scored
-    candidates; recall vs ``method='brute'`` is pytest-gated
-    (tests/test_hybrid.py).  The brute leg stays the driver-oracled
-    surface.
-
-    ``assigned=`` is the compute-once hook (the ``history_state=`` /
-    ``lexical=`` discipline): pass the persisted
-    (vec_id, cent_id, emb_n) assignment table -- e.g. the ``state`` a
-    semantic admission run maintains -- and the IVF path skips
-    re-assigning the corpus (a full broadcast-argmax pass per retrieval
-    call at billion-vector scale); equivalence of the two paths is
-    pytest-gated.
+    ``method='ivf'`` is the billion-vector scale path: each seed probes
+    its ``n_probe`` nearest of the
+    :func:`..operators.similarity.default_centroids` index centroids
+    and scores ONLY those cells' members -- the corpus-side assignment
+    is :func:`..operators.similarity.assign_to_centroids` (one narrow
+    max_by pass, the SAME cell table semantic admission persists), and
+    candidate generation becomes a cent_id equi-join scanning
+    ~n_probe/n_centroids of the corpus.  Returned cosines stay exact
+    for the scored candidates; recall vs ``method='brute'`` is
+    pytest-gated (tests/test_hybrid.py).  The brute leg stays the
+    driver-oracled surface.
     """
     if query_vecs is None:
         query_vecs = HYBRID_QUERY_VECS
@@ -137,13 +122,8 @@ def dense_topk(
         from .similarity import assign_to_centroids, default_centroids
         from ..functions.vectors import cosine
 
-        cents = default_centroids(
-            embeddings, centroid_offset, n_centroids, centroids
-        )
-        if assigned is None:
-            assigned = assign_to_centroids(embeddings, cents)
-        else:
-            assigned = assigned.select("vec_id", "cent_id", "emb_n")
+        cents = default_centroids(embeddings)
+        assigned = assign_to_centroids(embeddings, cents)
         # the seeds' unit vectors come from the assignment table itself
         # (ONE corpus pass feeds corpus side AND seed pickup -- a
         # separate normalize scan for 3 seed rows would double the
@@ -170,7 +150,7 @@ def dense_topk(
                 "cent_id",
                 F.round(cosine("q_emb", "cent_emb"), 6).alias("cent_sim"),
             )
-            # NULL probe sims filtered BEFORE the rank election (r13):
+            # NULL probe sims filtered BEFORE the rank election:
             # a directionless (NULL-element / zero-norm) centroid must
             # never be probed via engine NULL-ordering defaults -- the
             # assign_to_centroids guard applied to the query side
@@ -225,32 +205,20 @@ def dense_topk(
 
 
 def hybrid_topk(
-    docs: DataFrame | None = None,
-    embeddings: DataFrame | None = None,
-    queries: dict[str, tuple[str, ...]] | None = None,
-    query_vecs: dict[str, int] | None = None,
+    lexical: DataFrame,
+    dense: DataFrame,
     k: int = HYBRID_K,
-    leg_k: int = HYBRID_K,
     rrf_k: int = RRF_K,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    text_col: str = "text",
-    term_scores: DataFrame | None = None,
-    lexical: DataFrame | None = None,
-    dense: DataFrame | None = None,
 ) -> DataFrame:
-    """Hybrid retrieval: per named query, the RRF fusion of its BM25
-    lexical top-``leg_k`` and its dense cosine top-``leg_k`` --
-    (query, doc_id, rrf_score, rank), fused top-``k`` per query.
+    """Hybrid retrieval: per named query, the RRF fusion of a lexical
+    and a dense rank table -- (query, doc_id, rrf_score, rank), fused
+    top-``k`` per query.
 
-    ``lexical=`` / ``dense=`` are the compute-once hooks (the
-    ``term_scores=`` / ``codebook=`` discipline): pass precomputed
-    (query, doc_id, rank) tables -- e.g. the tv1 leg feeds its already
-    checkpointed ``bm25_topk`` output as ``lexical=``, and a
-    billion-vector deployment passes its IVF/LSH rankings as
-    ``dense=`` -- and the corresponding input table is not needed.
-    Extra columns (scores, tags) are ignored by the fusion, which reads
-    only (query, doc_id, rank).
+    ``lexical`` is a :func:`textops.bm25_topk` ranking and ``dense`` a
+    :func:`dense_topk` ranking (or any (query, doc_id, rank) table --
+    a billion-vector deployment passes its IVF/LSH rankings); the tv1
+    leg feeds both already checkpointed.  Extra columns (scores, tags)
+    are ignored by the fusion, which reads only (query, doc_id, rank).
 
     Exactness: fusion arithmetic is :func:`similarity.rrf_fuse`'s
     BIGINT micro-unit contract -- the fused rank orders on the raw
@@ -263,22 +231,6 @@ def hybrid_topk(
     vector was dropped (NULL/zero-norm) or whose terms match nothing
     degrades to the surviving leg's ranking.
     """
-    if lexical is None:
-        if docs is None:
-            raise ValueError("hybrid_topk: pass docs= or lexical=")
-        lexical = bm25_topk(
-            docs,
-            queries=queries,
-            k=leg_k,
-            k1=k1,
-            b=b,
-            text_col=text_col,
-            term_scores=term_scores,
-        )
-    if dense is None:
-        if embeddings is None:
-            raise ValueError("hybrid_topk: pass embeddings= or dense=")
-        dense = dense_topk(embeddings, query_vecs=query_vecs, k=leg_k)
     ranked = lexical.select("query", "doc_id", "rank").unionByName(
         dense.select("query", "doc_id", "rank")
     )

@@ -23,10 +23,6 @@ from pyspark.sql.window import Window
 from ..caching import CacheScope, maybe_persist
 from ..functions.vectors import cosine, sign_bucket
 
-#: sentinel distinguishing "not passed" from an explicit value on the
-#: precomputed-input overloads, so a shadowed parameter raises
-_UNSET: object = object()
-
 
 def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
@@ -202,7 +198,7 @@ def contrastive_mining(
     (or a bigger cache for the shared pass, see below) just grows that
     object.  Full-corpus-anchor mining goes through ``index=``.
 
-    ``index=`` (r16, the routed variant): a precomputed
+    ``index=`` (the routed variant): a precomputed
     :func:`ivf_assign` artifact routes each anchor to its ``n_probe``
     nearest centroid cells (the :func:`cosine_topk_ivf` probe spelling
     verbatim) and mines only those cells' members -- candidate
@@ -297,10 +293,10 @@ def contrastive_mining(
         )
     # ONE scoring pass for all four consumers (hard_neg, hard_pos,
     # semi's neg side, semi's pcos anchor): persist(), NOT a local
-    # checkpoint (r16, ADVICE) -- local checkpoints live on executors
+    # checkpoint -- local checkpoints live on executors
     # with no lineage fallback, so an executor loss mid-query fails the
     # whole job; a persisted relation recomputes gracefully.  MEASURED
-    # at sf0.1 (4 warm reps each way, r15): 1.3-1.9 s cut vs 1.6-1.8 s
+    # at sf0.1 (4 warm reps each way): 1.3-1.9 s cut vs 1.6-1.8 s
     # recomputed -- a wash locally (the branches run as concurrent
     # stages of one job, the a10 hh lesson), adopted because at
     # deployment scale the corpus scoring pass is the dominant cost and
@@ -400,8 +396,8 @@ def normalized_with_bucket(embeddings: DataFrame, n_bits: int = 4) -> DataFrame:
 
     NULL and zero-norm vectors are DROPPED here (``nrm > 0``: NULL norm
     fails the predicate too): they have no direction, so they can be
-    neither queries nor candidates in cosine space.  Before r10 they
-    flowed through with NULL cosines relying on nulls-last ranking --
+    neither queries nor candidates in cosine space.  Letting them flow
+    through with NULL cosines would rely on nulls-last ranking --
     invisible until a bucket had fewer than k valid candidates, and a
     posture DuckDB cannot mirror (its list_dot_product raises on the
     NULL-element lists the normalize-by-zero produces, see
@@ -416,8 +412,8 @@ def _normalized_cols(
     with_bucket: bool = False,
     n_bits: int = 4,
 ) -> DataFrame:
-    """THE normalization projection (r15: extracted so contrastive_mining
-    could not copy it): the zero-norm/NULL drop rule, the two-projection
+    """THE normalization projection (one definition, so contrastive_mining
+    cannot copy it): the zero-norm/NULL drop rule, the two-projection
     norm materialization, and the nullif multiply-referenced-expression
     workaround live HERE and only here.  ``extra_cols`` carry payload
     columns (e.g. ``label``) through; ``with_bucket`` adds the sign-LSH
@@ -601,7 +597,7 @@ def _jround(x: float | None, scale: int) -> float | None:
     Double.toString (the shortest decimal representation == Python
     ``repr``), then setScale(scale, HALF_UP).  NaN/inf pass through.
 
-    The quantize runs under a context sized to the value (r18, ADVICE):
+    The quantize runs under a context sized to the value:
     the default 28-digit context raises InvalidOperation once the
     result needs more digits (|x| >= ~1e22 at scale 6), where Java's
     BigDecimal.setScale is unbounded -- a large-magnitude corpus must
@@ -626,7 +622,7 @@ def _jround(x: float | None, scale: int) -> float | None:
 
 def _vid_key(vid) -> tuple:
     """Sort key replicating Spark's ASC NULLS FIRST on the training id
-    (r18, ADVICE): NULL ids sort BEFORE every value -- the distributed
+    NULL ids sort BEFORE every value -- the distributed
     loop's orderBy("vid", ...) default -- and all NULL ids tie (callers
     break the tie on the next key, exactly where Spark does).  The old
     ``(vid is None, vid)`` spelling sorted NULLs LAST and broke the
@@ -835,7 +831,7 @@ def kmeans_train(
     iteration ends in an eager ``localCheckpoint`` to cut the growing
     lineage (recomputable-on-loss is irrelevant at n_centroids rows).
 
-    ``quantize`` (r13) rounds every centroid element to that many
+    ``quantize`` rounds every centroid element to that many
     decimals at the END of each iteration.  This exists for cross-engine
     replay: a mean over doubles is summation-order-dependent at the last
     ulp, so a DuckDB oracle re-running the same Lloyd iterations would
@@ -847,12 +843,12 @@ def kmeans_train(
     driver-gated k3 ``semdedup_trained`` leg trains with ``quantize=6``;
     pass ``None`` (default) for the unquantized research path.
 
-    Plan shape (r13 rework): the per-iteration election is ONE max_by
+    Plan shape: the per-iteration election is ONE max_by
     aggregate over the broadcast cross product -- map-side partial
     combine, one row per vector on the wire -- replacing the previous
     row_number window's full sort-shuffle of all n_centroids x N
     candidate rows (the assign_to_centroids argument); NULL sims are
-    filtered before the argmax (the r12 NULL-election guard).  This IS
+    filtered before the argmax (the NULL-election guard).  This IS
     a deliberate behavior change for degenerate training vectors: the
     old row_number election (DESC = NULLS LAST) still assigned an
     all-NULL-sim vector to the lowest cent_id, so a ZERO-NORM vector's
@@ -870,7 +866,7 @@ def kmeans_train(
     sample-sized); the centroid table is coalesced to one partition
     before each checkpoint (16 rows do not need 32 tasks).
 
-    ``return_report`` (r15): when True the function returns
+    ``return_report``: when True the function returns
     ``(centroids, report)`` where ``report`` is
     ``{"dead_cells": [int per iteration], "reseeds": [int per
     iteration]}`` -- ``dead_cells[i]`` counts the clusters that
@@ -887,7 +883,7 @@ def kmeans_train(
     the PRE-reseed deads, so the report shows how often re-seeding had
     to fire.)
 
-    ``reseed_dead`` (r14): instead of carrying a dead cluster's
+    ``reseed_dead``: instead of carrying a dead cluster's
     centroid forward, re-seed it from the FURTHEST assigned point --
     the standard k-means empty-cluster repair (lowest elected cosine,
     ties to the lowest vid): the worst-served vector becomes its own
@@ -898,8 +894,8 @@ def kmeans_train(
     oracles replay exact Lloyd (empty clusters carried) in DuckDB, and
     re-seeding is the research-path option for corpora
     where the dead_cells report shows a degenerating index.
-    Driver-local fast path (r17, guide §1.2 "fix the distributed
-    algorithm"): a training input of at most KMEANS_DRIVER_MAX_ROWS rows
+    Driver-local fast path ("fix the distributed algorithm"): a
+    training input of at most KMEANS_DRIVER_MAX_ROWS rows
     is collected once and the whole Lloyd loop runs on the driver
     (:func:`_lloyd_local`, bit-for-bit the same arithmetic), replacing
     ``n_iter`` sequential broadcast-join + aggregate + checkpoint Spark
@@ -985,7 +981,7 @@ def kmeans_train(
             )
             # the elected (vid, sim) only ride the output when re-seeding
             # needs them, so the default path's plan stays byte-identical
-            # to the gated r13 shape
+            # to the gated no-reseed shape
             sel = [
                 F.col("__win.cent_id").alias("cent_id"),
                 F.col("__win.v").alias("v"),
@@ -1034,7 +1030,7 @@ def kmeans_train(
             means = vector_mean_by_key(assigned, "cent_id", "v")
             n_live = None
             if return_report or reseed_dead:
-                # dead-cell visibility / reseed (r14): a cluster absent
+                # dead-cell visibility / reseed: a cluster absent
                 # from the mean table received no vectors this round.
                 # The mean table is <= n_centroids rows, so
                 # materializing it here lets the count, the dead-slot
@@ -1119,7 +1115,7 @@ def kmeans_train(
                 .localCheckpoint(eager=True)
             )
     finally:
-        # unpersist on EVERY exit path (r14): a runtime failure
+        # unpersist on EVERY exit path: a runtime failure
         # mid-Lloyd (poisoned vector column, executor loss surfacing as
         # a job abort) must not leak the persisted training sample for
         # the rest of the session
@@ -1133,17 +1129,16 @@ def default_centroids(
     embeddings: DataFrame,
     centroid_offset: int = 100,
     n_centroids: int = 16,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """(cent_id, cent_emb): resolve a centroid index -- the caller's
-    ``centroids=`` override when given, else the deterministic corpus
-    slice.  ONE definition shared by every cell-assigning operator
-    (cosine_topk_ivf/ivfpq, semantic_dedup, semantic_admit_batch,
+    """(cent_id, cent_emb): the deterministic corpus-slice centroid
+    index.  ONE definition shared by every cell-assigning consumer
+    (the IVF searches through :func:`ivf_assign`, semantic dedup and
+    admission through :func:`assign_to_centroids`,
     retrieval.dense_topk, the k3 registry leg): cells only line up
     across operators and admission batches if every consumer derives
-    the SAME index, and the SQL oracles replay exactly this slice."""
-    if centroids is not None:
-        return centroids.select("cent_id", "cent_emb")
+    the SAME index, and the SQL oracles replay exactly this slice.  A
+    trained index (:func:`kmeans_train`) has the same shape and goes
+    wherever this one does."""
     return embeddings.filter(
         (F.col("vec_id") >= centroid_offset)
         & (F.col("vec_id") < centroid_offset + n_centroids)
@@ -1154,22 +1149,29 @@ def default_centroids(
 
 
 class IVFIndex(NamedTuple):
-    """Shared IVF routing artifacts (r15): the centroid table AND the
+    """Shared IVF routing artifacts: the centroid table AND the
     full-corpus 1-nearest assignment -- the pass every IVF-routed
-    consumer repeats.  Build once (``ivf_assign(..., checkpoint=True)``
-    materializes the assignment) and pass to several searches via
-    ``index=``.  ``cents`` rides along so probe-side routing can never
-    use a different centroid set than the assignment did.
+    consumer would otherwise repeat.  Built by :func:`ivf_assign` and
+    taken by every IVF-routed search (:func:`cosine_topk_ivf`,
+    :func:`cosine_topk_ivfpq`, :func:`contrastive_mining`).  ``cents``
+    rides along so probe-side routing can never use a different
+    centroid set than the assignment did.
 
-    MEASURED at gate scale (r15, sf0.1, 3 interleaved reps): sharing
-    one checkpointed assignment between the k2 ivf and ivfpq legs ran
-    7.5-8.6 s vs 7.2-8.0 s unshared -- materializing 2k
+    Building one index per search is the right default at gate scale:
+    MEASURED at sf0.1 (3 interleaved reps), sharing one checkpointed
+    assignment between the k2 ivf and ivfpq legs ran 7.5-8.6 s vs
+    7.2-8.0 s with one lazy index per leg -- materializing 2k
     payload-carrying rows plus the extra stage costs MORE than the
-    ~0.5 s recompute it saves, so the k2 entry deliberately does NOT
-    use this (the minhash_lsh_pairs shingle-recompute posture).  At
+    ~0.5 s recompute it saves, so the k2 entry builds a lazy index per
+    leg (the minhash_lsh_pairs shingle-recompute posture).  The ivf and
+    ivfpq legs' lazy indexes are the same plan, so inside the entry's
+    union checkpoint Spark's exchange reuse runs their assignment
+    shuffle once, with nothing extra materialized.  At
     deployment scale the assignment is a full corpus scan +
-    map-side-combined shuffle, and paying it once is the right
-    default -- that is what this artifact is for."""
+    map-side-combined shuffle, and paying it once (checkpoint or
+    :func:`save_ivf_index` the ``assigned`` table, then pass the same
+    index to every search) is the right default -- that is what this
+    artifact is for."""
 
     cents: DataFrame
     #: (vec_id, embedding, cent_id) -- payload-riding election (the
@@ -1182,20 +1184,20 @@ class IVFIndex(NamedTuple):
 def _ivf_corpus_assign(cents: DataFrame, emb: DataFrame) -> DataFrame:
     """The corpus-side 1-nearest election.
 
-    PERF (r14): ONE max_by aggregate with map-side partial combine --
-    one row per vector on the wire -- replacing the row_number window's
-    full sort-shuffle of n_centroids x N candidate rows (the
+    PERF: ONE max_by aggregate with map-side partial combine -- one row
+    per vector on the wire -- not a row_number window's full
+    sort-shuffle of n_centroids x N candidate rows (the
     assign_to_centroids/kmeans_train shape).  Same election: struct
     field comparison puts a NULL cent_sim below any value (= the
     window's DESC NULLS LAST), ties break to the lowest cent_id, and a
     vector with ONLY NULL sims still elects the lowest cent_id --
     degenerate vectors stay assigned-but-unscorable (their NULL
     candidate cosines never rank).  The PAYLOAD rides the ordering
-    struct (r15, ADVICE): a duplicated vec_id carrying two different
-    embeddings ties on (cent_sim, -cent_id) when both payloads score
-    alike, and without the third key the elected c_emb would be
-    plan-dependent -- the duplicated-id discipline applies wherever a
-    payload rides an election."""
+    struct: a duplicated vec_id carrying two different embeddings ties
+    on (cent_sim, -cent_id) when both payloads score alike, and
+    without the third key the elected c_emb would be plan-dependent --
+    the duplicated-id discipline applies wherever a payload rides an
+    election."""
     cand = emb.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "embedding",
@@ -1222,22 +1224,13 @@ def _ivf_corpus_assign(cents: DataFrame, emb: DataFrame) -> DataFrame:
     )
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    centroid_offset: int = 100,
-    centroids: DataFrame | None = None,
-    checkpoint: bool = False,
-) -> IVFIndex:
-    """Build the shared IVF routing artifact (see :class:`IVFIndex`).
-    ``checkpoint=True`` eagerly materializes the corpus assignment --
-    the full-scan piece two consumers would otherwise recompute."""
-    emb = embeddings.select("vec_id", "embedding")
-    cents = default_centroids(emb, centroid_offset, n_centroids, centroids)
-    assigned = _ivf_corpus_assign(cents, emb)
-    if checkpoint:
-        assigned = assigned.localCheckpoint(eager=True)
-    return IVFIndex(cents, assigned)
+def ivf_assign(embeddings: DataFrame, cents: DataFrame) -> IVFIndex:
+    """Build the IVF routing artifact (see :class:`IVFIndex`) over the
+    (cent_id, cent_emb) centroid table ``cents`` --
+    :func:`default_centroids` for the fixed corpus slice the oracles
+    replay, or :func:`kmeans_train` for a trained index.  Lazy: the
+    corpus assignment runs inside whichever search consumes it."""
+    return IVFIndex(cents, _ivf_corpus_assign(cents, embeddings))
 
 
 def save_ivf_index(index: IVFIndex, path: str) -> None:
@@ -1264,59 +1257,29 @@ def load_ivf_index(spark, path: str) -> IVFIndex:
 
 def cosine_topk_ivf(
     embeddings: DataFrame,
+    index: IVFIndex,
     k: int = 5,
     n_queries: int = 8,
-    n_centroids: int | object = _UNSET,
     n_probe: int = 3,
-    centroid_offset: int | object = _UNSET,
-    centroids: DataFrame | object = _UNSET,
-    *,
-    index: IVFIndex | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: the list-probing scale path.
 
-    Index build: ``n_centroids`` fixed seed vectors by default (a
-    deterministic slice of the corpus -- the oracle-parity path), or pass
-    ``centroids`` = (cent_id, cent_emb) from :func:`kmeans_train` for a
-    trained index (better recall, pytest-gated); every corpus vector is
-    assigned to its nearest centroid via a broadcast of the tiny centroid
-    set (narrow pass, no corpus shuffle).  Search: each query probes its
-    ``n_probe`` nearest centroids and scores only those centroids'
-    members -- candidate generation is an equi-join on cent_id, scanning
-    ~n_probe/n_centroids of the corpus instead of all of it.
+    Index: an :func:`ivf_assign` artifact -- every corpus vector
+    assigned to its nearest centroid via a broadcast of the tiny
+    centroid set (narrow pass, no corpus shuffle).  Build it over
+    :func:`default_centroids` (the deterministic corpus slice -- the
+    oracle-parity path) or over :func:`kmeans_train` centroids for a
+    trained index (better recall, pytest-gated).  Search: each query
+    probes its ``n_probe`` nearest centroids and scores only those
+    centroids' members -- candidate generation is an equi-join on
+    cent_id, scanning ~n_probe/n_centroids of the corpus instead of all
+    of it.  The probe side routes against ``index.cents``, so
+    assignment and probing can never use different centroid sets.
 
     Probed-list recall vs the exact baseline is pytest-gated; returned
     cosines are exact for the scored candidates.
-
-    ``index=`` (r15): a precomputed :func:`ivf_assign` artifact skips
-    the centroid resolution AND the full-corpus assignment -- the
-    sharing hook for callers running several IVF-routed searches over
-    one corpus (the k2 entry assigns once for ivf + ivfpq).  The
-    centroid parameters are then already baked in and passing them
-    raises; per-SEARCH knobs (k, n_queries,
-    n_probe) remain caller-settable, and the probe side still routes
-    against ``index.cents`` so assignment and probing can never use
-    different centroid sets.
     """
-    emb = embeddings.select("vec_id", "embedding")
-    if index is not None:
-        if (
-            n_centroids is not _UNSET
-            or centroid_offset is not _UNSET
-            or centroids is not _UNSET
-        ):
-            raise ValueError(
-                "index= already fixes n_centroids/centroid_offset/"
-                "centroids; pass either index= or the raw inputs, not both"
-            )
-        cents = index.cents
-    else:
-        cents = default_centroids(
-            emb,
-            100 if centroid_offset is _UNSET else centroid_offset,
-            16 if n_centroids is _UNSET else n_centroids,
-            None if centroids is _UNSET else centroids,
-        )
+    cents = index.cents
 
     def probe_centroids(side: DataFrame, id_col: str, emb_col: str, top: int):
         cand = side.crossJoin(F.broadcast(cents)).select(
@@ -1332,18 +1295,13 @@ def cosine_topk_ivf(
             F.col("crank") <= top
         )
 
-    corpus_assigned = (
-        index.assigned
-        if index is not None
-        else _ivf_corpus_assign(cents, emb)
-    )
-    assigned = corpus_assigned.select(
+    assigned = index.assigned.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_emb"),
         "cent_id",
     )
     probes = probe_centroids(
-        emb.filter(F.col("vec_id") < n_queries).select(
+        embeddings.filter(F.col("vec_id") < n_queries).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
         ),
         "query_id",
@@ -1382,13 +1340,13 @@ def assign_to_centroids(
     centroid id -- the same deterministic pick the oracle replays.
     NULL/zero-norm vectors have no unit vector and get NO row (the
     normalized_with_bucket drop policy).  NULL-similarity candidate
-    rows are dropped BEFORE the argmax (r12): a NULL/zero-norm
+    rows are dropped BEFORE the argmax: a NULL/zero-norm
     CENTROID has no direction, so it must never win an assignment --
     without the filter, a vector whose only candidates are
     directionless centroids would be max_by'd into an arbitrary cell
     (caught by the randomized python-reference parity test).
 
-    PERF (r12): the raw embedding rides THROUGH the aggregate and is
+    PERF: the raw embedding rides THROUGH the aggregate and is
     normalized after it, so the whole operator is ONE corpus scan + one
     map-side-combined shuffle; the previous shape joined a second full
     normalization scan back on vec_id -- an extra corpus scan AND an
@@ -1464,8 +1422,8 @@ def semantic_near_pairs(
     confining ``cell`` key precisely so the label stage can be
     :func:`..operators.dedup.partitioned_components` (per-cell
     union-find, zero iteration) instead of the generic label loop --
-    both graph ends share the cell by construction.
-    :func:`semantic_dedup` composes exactly this function."""
+    both graph ends share the cell by construction; the labels then
+    feed :func:`semantic_dedup`'s keep-list election."""
     from ..functions.vectors import dot
 
     a = assigned.select(
@@ -1491,46 +1449,38 @@ def semantic_near_pairs(
     )
 
 
-def semantic_dedup(
-    embeddings: DataFrame,
-    threshold: float | None = None,
-    n_centroids: int = 16,
-    centroids: DataFrame | None = None,
-    centroid_offset: int = 100,
-    assigned: DataFrame | None = None,
-    components: DataFrame | None = None,
-) -> DataFrame:
+def semantic_dedup(embeddings: DataFrame, components: DataFrame) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540, public): drop documents whose EMBEDDINGS are
     near-identical, restricting the quadratic pair search to cluster
     cells so it never goes all-pairs.
 
-    Stages: (1) assign every vector to its max-cosine centroid via a
-    broadcast of the tiny centroid table (narrow pass -- the corpus is
-    never shuffled for assignment); (2) near-pair self-join WITHIN a cell
-    only (ONE shuffle, on cent_id -- :func:`semantic_near_pairs`);
-    (3) connected components over the near-pair graph
-    (:func:`..operators.dedup.connected_components` -- the checkpointed
-    min-label loop); (4) keep-list election: the min vec_id per component
-    survives.  ``assigned=`` short-circuits stage 1 and ``components=``
-    short-circuits stages 2-3 (compute-once hooks; see the inline
-    comments for each).  ``threshold`` defaults to 0.9.  With
-    ``components=`` the label table DEFINES the dedup semantics and
-    the output needs nothing but it, so passing ANY other
-    configuration parameter (``centroids``/``assigned``/``threshold``)
-    alongside raises -- it would be silently ignored while implying the
-    labels came from that configuration (the curate_corpus ``pairs=``
-    guard, applied here).
+    Stages, each its own operator so the expensive ones can be shared:
+    (1) :func:`assign_to_centroids` -- every vector to its max-cosine
+    centroid via a broadcast of the tiny centroid table (narrow pass,
+    the corpus is never shuffled for assignment); (2)
+    :func:`semantic_near_pairs` -- the near-pair self-join WITHIN a
+    cell only (ONE shuffle, on cent_id); (3) connected components over
+    the near-pair graph (:func:`..operators.dedup.connected_components`,
+    the checkpointed min-label loop, or
+    :func:`..operators.dedup.partitioned_components`, per-cell
+    union-find -- every near pair is within-cell by construction);
+    (4) this function: the keep-list election over the (doc_id,
+    cluster_id) ``components`` labels -- the min vec_id per component
+    survives.  The k3 entry labels the fixed-slice and trained-centroid
+    pair graphs in ONE components pass and hands each leg its slice of
+    the labels here; the caller owns the guarantee that the labels came
+    from THIS corpus's near-pair graph.
 
     Returns (vec_id, sem_cluster, keep) for EVERY input vector; vectors
     in no near-pair are their own singleton cluster and keep themselves.
 
-    Centroids: pass ``centroids`` = (cent_id, cent_emb) from
-    :func:`kmeans_train` for a trained index; the default is the same
-    deterministic corpus slice as :func:`cosine_topk_ivf`, which a SQL
-    oracle can replay exactly (tests/test_semantic_dedup.py pairs it
+    Centroids: :func:`default_centroids` is the same deterministic
+    corpus slice the IVF searches use, which a SQL oracle can replay
+    exactly (tests/test_semantic_dedup.py pairs the composed pipeline
     with a DuckDB recursive-CTE oracle, and the k3 registry fold
-    driver-gates the same pipeline).
+    driver-gates the same pipeline); :func:`kmeans_train` centroids
+    give a trained index.
 
     Scale: the paper's operating point is n_centroids ~ N / target cell
     size, keeping the within-cell join bounded-quadratic per cell; the
@@ -1538,53 +1488,10 @@ def semantic_dedup(
     hot.  Assignment + pairing + CC are all equi-joins -- no stage is
     all-pairs.
     """
-    from . import dedup as _dedup
-
-    if components is not None and (
-        threshold is not None
-        or assigned is not None
-        or centroids is not None
-    ):
-        raise ValueError(
-            "semantic_dedup: components= supplies the precomputed "
-            "cluster labels, which makes every stage-1/2/3 parameter "
-            "(centroids/assigned/threshold) dead -- "
-            "passing any of them alongside suggests the labels came "
-            "from THAT configuration, which nothing checks; drop them"
-        )
-    if threshold is None:
-        threshold = 0.9
-
-    emb = embeddings.select("vec_id", "embedding")
-    cents = default_centroids(emb, centroid_offset, n_centroids, centroids)
-
-    # assigned= is the compute-once hook (the history_state= /
-    # term_scores= discipline): pass ONE checkpointed
-    # assign_to_centroids table when several operators in a session
-    # share it (the k3 entry feeds the same table here, to admission's
-    # history state, and to its batch side)
-    if assigned is None:
-        assigned = assign_to_centroids(emb, cents)
-    else:
-        assigned = assigned.select("vec_id", "cent_id", "emb_n")
-
-    if components is None:
-        pairs = semantic_near_pairs(assigned, threshold)
-        comp = _dedup.connected_components(pairs, a_col="id_a", b_col="id_b")
-    else:
-        # components= (r13): precomputed (doc_id, cluster_id) labels --
-        # the compute-once hook for the ITERATIVE stage.  The k3 entry
-        # labels the fixed-slice and trained-centroid pair graphs in
-        # ONE connected-components loop (the per-round checkpoint +
-        # fixpoint probe dominates the loop's cost, and a union of
-        # disjoint graphs converges in max(rounds) of the parts) and
-        # hands each leg its slice of the labels here.  The caller owns
-        # the guarantee that the labels were computed from THIS
-        # assignment table's near-pair graph at THIS threshold.
-        comp = components.select("doc_id", "cluster_id")
+    emb = embeddings.select("vec_id")
+    comp = components.select("doc_id", "cluster_id")
     return (
-        emb.select("vec_id")
-        .join(comp, emb.vec_id == comp.doc_id, "left")
+        emb.join(comp, emb.vec_id == comp.doc_id, "left")
         .select(
             "vec_id",
             F.coalesce("cluster_id", "vec_id").alias("sem_cluster"),
@@ -1602,14 +1509,10 @@ class SemanticAdmitResult(NamedTuple):
 
 
 def semantic_admit_batch(
-    history: DataFrame | None,
     batch: DataFrame,
+    history_state: DataFrame,
+    batch_state: DataFrame,
     threshold: float = 0.9,
-    n_centroids: int = 16,
-    centroids: DataFrame | None = None,
-    centroid_offset: int = 100,
-    history_state: DataFrame | None = None,
-    batch_state: DataFrame | None = None,
 ) -> SemanticAdmitResult:
     """Incremental SemDeDup admission: is a new embedding batch
     semantically near-identical to something ALREADY in the corpus?
@@ -1622,18 +1525,21 @@ def semantic_admit_batch(
     (vec_id, cent_id, emb_n) -- :func:`assign_to_centroids`'s output,
     written once at each vector's OWN admission (``state`` below is
     exactly that table extended, ready to persist for the next batch).
-    Pass it as ``history_state`` to skip re-deriving assignments -- the
-    production path; otherwise ``history`` raw embeddings are assigned
-    on the fly (equivalence of the two paths is pytest-gated).
+    ``history_state`` is that table; ``batch_state`` is the batch's
+    own :func:`assign_to_centroids` rows under the SAME centroid index
+    (the persisted (cent_id, cent_emb) table the corpus was assigned
+    under -- it must stay the same across batches or cells stop lining
+    up).  ``batch`` itself supplies the report's rows: one per input
+    row, NULL/zero-norm vectors included.
 
     Admission per batch:
 
-    1. assign batch vectors to the SAME centroid cells
-       (:func:`assign_to_centroids` -- one broadcast pass, the corpus
-       state is never shuffled);
+    1. the batch vectors' cells come from ``batch_state`` (one
+       broadcast assignment pass -- the corpus state is never
+       shuffled);
     2. near-dup test ONLY within the batch vector's cell: one cent_id
        equi-join against the state, exact unit-vector dot, rounded to 6
-       (the semantic_dedup pair arithmetic);
+       (the semantic_near_pairs arithmetic);
     3. keep each batch vector's best history match (highest cosine,
        ties to the lowest history id -- the admit_batch_neardup
        min_by idiom) and admit vectors whose best cosine is below
@@ -1648,46 +1554,16 @@ def semantic_admit_batch(
     admit_batch_neardup contract): run :func:`semantic_dedup` over the
     batch first if intra-batch collapse is needed.
 
-    Centroids: pass the persisted (cent_id, cent_emb) index the corpus
-    was assigned under -- REQUIRED to be the same across batches or
-    cells stop lining up; the default derives the deterministic
-    corpus-slice centroids from ``history`` (the semantic_dedup
-    default, for parity testing).
-
-    Scale: stage 1 broadcasts the tiny centroid table; stage 2's only
-    shuffle is the cent_id equi-join (cell-bounded, never all-pairs);
-    stage 3 is a map-side-combined min_by aggregate.  The batch is
-    small by definition; the state participates as a narrow
-    three-column table partitionable by cent_id.
+    Scale: the state participates as a narrow three-column table
+    partitionable by cent_id; the only shuffle is the cent_id
+    equi-join (cell-bounded, never all-pairs); the election is a
+    map-side-combined min_by aggregate.  The batch is small by
+    definition.
     """
     from ..functions.vectors import dot
 
-    if centroids is not None or history is not None:
-        cents = default_centroids(
-            history, centroid_offset, n_centroids, centroids
-        )
-    else:
-        raise ValueError(
-            "semantic_admit_batch: pass centroids= (the persisted index) "
-            "or history raw embeddings to derive the default slice from"
-        )
-    if history_state is not None:
-        state = history_state.select("vec_id", "cent_id", "emb_n")
-    elif history is not None:
-        state = assign_to_centroids(history, cents)
-    else:
-        raise ValueError(
-            "semantic_admit_batch: pass history docs or history_state"
-        )
-
-    # batch_state= mirrors history_state= for the batch side: a caller
-    # already holding the batch's assignment rows (e.g. one shared
-    # full-corpus pass sliced by parity, the k3 entry) skips the
-    # re-assignment; equivalence of the two paths is pytest-gated
-    if batch_state is not None:
-        b_assigned = batch_state.select("vec_id", "cent_id", "emb_n")
-    else:
-        b_assigned = assign_to_centroids(batch, cents)
+    state = history_state.select("vec_id", "cent_id", "emb_n")
+    b_assigned = batch_state.select("vec_id", "cent_id", "emb_n")
     scored = (
         b_assigned.alias("b")
         .join(state.alias("h"), "cent_id")
@@ -1758,7 +1634,7 @@ def semantic_admit_batch(
     # corpus that re-arrives with a changed embedding and admits must
     # not create a second state row for the same id (it would
     # double-count in every candidate join and put duplicate doc_ids
-    # into dense_topk(assigned=) rankings) -- the corpus state is
+    # into any ranking read off the state) -- the corpus state is
     # append-only keyed by vec_id, first admission wins (the
     # fingerprint-history posture).
     admitted_state = (
@@ -1776,16 +1652,14 @@ def semantic_admit_batch(
 
 
 class PQEncoding(NamedTuple):
-    """Shared product-quantization artifacts (r15): ONE encode pass --
-    normalize, codebook resolution, the (vector x codebook-entry)
-    distance relation, and the per-subspace argmin codes -- serving
-    both the direct PQ search and IVFPQ.  Inside one k2 invocation the
-    two legs used to encode the corpus twice with identical parameters;
-    build this once (``pq_encode(..., checkpoint=True)`` materializes
-    the corpus-sized code table) and pass it to both via ``encoding=``.
-    Geometry (m, k_sub, dim) rides the artifact so consumers never
-    probe codes with a mismatched layout (the bloom-filter geometry
-    lesson)."""
+    """Product-quantization artifacts: ONE encode pass -- normalize,
+    codebook resolution, the (vector x codebook-entry) distance
+    relation, and the per-subspace argmin codes -- serving both the
+    direct PQ search and IVFPQ.  Built by :func:`pq_encode`; the k2
+    entry builds it once (``checkpoint=True`` materializes the
+    corpus-sized code table) and passes it to both legs.  Geometry
+    (m, k_sub, dim) rides the artifact so consumers never probe codes
+    with a mismatched layout (the bloom-filter geometry lesson)."""
 
     m: int
     k_sub: int
@@ -1811,11 +1685,53 @@ def pq_encode(
     codebook_prenormalized: bool = False,
     checkpoint: bool = False,
 ) -> PQEncoding:
-    """Build the PQ encode artifacts (see :class:`PQEncoding`).  This is
-    the first half of the original cosine_topk_pq, extracted verbatim so
-    the single- and shared-encoding paths cannot drift; parameter
-    semantics (codebook override, prenormalized opt-out, zero-norm
-    drop-out) are documented on :func:`cosine_topk_pq`.
+    """Build the PQ encode artifacts (see :class:`PQEncoding`) -- the
+    only place PQ geometry is spelled; :func:`cosine_topk_pq` and
+    :func:`cosine_topk_ivfpq` take the result.
+
+    The vector is split into ``m`` subspaces of ``dim // m``
+    dimensions; each subspace gets a ``k_sub``-entry codebook (by
+    default a deterministic corpus slice starting at
+    ``codebook_offset`` -- the fixed-seed convention shared with the
+    IVF leg), and every corpus vector is ENCODED as m small codes.
+    Vectors are L2-NORMALIZED before encoding: the target metric is
+    cosine, and on the unit sphere squared L2 is 2 - 2*cos -- monotone
+    in cosine -- so the ADC ranking approximates the right metric.
+
+    Defaults were MEASURED against the brute-force baseline on the
+    synthetic corpus (10 latent clusters, unit-norm 64-dim): coarse
+    cells produce large ADC ties that tie-break arbitrarily and kill
+    recall (m=4/k_sub=16/cand=32 gave 0.125 at sf0.1); m=16 subspaces
+    of 4 dims x 32 codes with a 128-candidate re-rank gives recall@5 =
+    0.975 (sf0.001) / 0.90 (sf0.1) while still scanning codes 16x
+    smaller than the raw vectors and re-ranking only ~6% of the corpus.
+
+    Zero-norm vectors (none in the driver tables) are FILTERED OUT
+    before encoding -- an explicit ``_nrm > 0`` filter, because the
+    alternative (NULL-element normalization) would NOT drop out: the
+    per-subspace struct-min assigns all-NULL distance rows code 0 (NULL
+    sorts first in struct ordering), letting a garbage vector rank as a
+    NULL-cosine candidate.  Filtered vectors can neither be queries nor
+    neighbours, the same exclusion the sign-LSH leg gets from NULL
+    buckets.
+
+    ``codebook``: any (code_id 0..k_sub-1, cb_emb) table replaces the
+    corpus slice -- the kmeans_train plumbing IVF uses.  Measured
+    honestly: on THIS corpus 32 full-vector k-means centroids sliced
+    per subspace give recall 0.825 at sf0.1, WORSE than the 0.90 of
+    random corpus samples, because k-means collapses onto the ~10
+    latent cluster directions and loses subspace diversity.  The fix is
+    true per-subspace training -- :func:`pq_train_codebook`, the actual
+    PQ recipe -- which restores the ordering: per-subspace-trained
+    1.0 / 0.925 >= slice 0.975 / 0.90 > full-vector 0.825
+    (sf0.001 / sf0.1, pytest-gated).
+
+    ``codebook_prenormalized``: set True for codebooks TRAINED in the
+    normalized space (pq_train_codebook) -- renormalizing such a
+    codebook would divide each code's sub-centroids by that code's own
+    concatenated norm, a different factor per code, distorting the
+    Lloyd assignment geometry (measured: 0.90 renormalized vs 0.925
+    prenormalized at sf0.1).  Leave False for raw corpus vectors.
 
     ``checkpoint=True`` eagerly materializes the code table -- the
     corpus-sized piece two consumers would otherwise recompute."""
@@ -1979,35 +1895,25 @@ def load_pq_encoding(spark, path: str) -> PQEncoding:
 
 
 def cosine_topk_pq(
-    embeddings: DataFrame | None = None,
+    encoding: PQEncoding,
     k: int = 5,
     n_queries: int = 8,
-    m: int | object = _UNSET,
-    k_sub: int | object = _UNSET,
-    codebook_offset: int | object = _UNSET,
     n_candidates: int = 128,
-    dim: int | object = _UNSET,
-    codebook: DataFrame | object = _UNSET,
     allowed_pairs: DataFrame | None = None,
-    codebook_prenormalized: bool | object = _UNSET,
-    *,
-    encoding: PQEncoding | None = None,
 ) -> DataFrame:
     """Product-quantization approximate top-k (Jegou/Douze/Schmid, TPAMI
-    2011): the memory-compression ANN scale path.
+    2011): the memory-compression ANN scale path, searching a
+    :func:`pq_encode` artifact (geometry, codebook and the zero-norm
+    drop-out are documented there).
 
     ``allowed_pairs``: optional (query_id, vec_id) candidate pre-filter
     -- :func:`cosine_topk_ivfpq` passes the IVF probed-list membership
     here, restricting ADC to the probed fraction of the corpus.
 
-    The vector is split into ``m`` subspaces; each subspace gets a
-    ``k_sub``-entry codebook (here a deterministic corpus slice starting
-    at ``codebook_offset`` -- the fixed-seed convention shared with the
-    IVF leg; a trained codebook plugs in the same way kmeans_train does
-    for IVF), and every corpus vector is ENCODED as m small codes.  At
-    100 TB this is the difference between scanning 256 bytes/vector of
-    floats and 4 bytes/vector of codes -- the candidate scan runs over a
-    ~64x smaller table that fits executor memory, which is why PQ is the
+    Every corpus vector is stored as m small codes.  At 100 TB this is
+    the difference between scanning 256 bytes/vector of floats and
+    4 bytes/vector of codes -- the candidate scan runs over a ~64x
+    smaller table that fits executor memory, which is why PQ is the
     de-facto billion-vector format (FAISS IVFPQ).
 
     Search is the standard two-stage ADC (asymmetric distance
@@ -2028,91 +1934,9 @@ def cosine_topk_pq(
     round to 6 decimals with code-id / vec-id tie-breaks; the ADC sum is
     a FIXED-ORDER chain of the m per-subspace partial sums (never a
     float sum in row order, which engines order differently).
-
-    Vectors are L2-NORMALIZED before encoding: the target metric is
-    cosine, and on the unit sphere squared L2 is 2 - 2*cos -- monotone
-    in cosine -- so the ADC ranking approximates the right metric.
-
-    Defaults were MEASURED against the brute-force baseline on the
-    synthetic corpus (10 latent clusters, unit-norm 64-dim): coarse
-    cells produce large ADC ties that tie-break arbitrarily and kill
-    recall (m=4/k_sub=16/cand=32 gave 0.125 at sf0.1); m=16 subspaces
-    of 4 dims x 32 codes with a 128-candidate re-rank gives recall@5 =
-    0.975 (sf0.001) / 0.90 (sf0.1) while still scanning codes 16x
-    smaller than the raw vectors and re-ranking only ~6% of the corpus.
-
-    Zero-norm vectors (none in the driver tables) are FILTERED OUT
-    before encoding -- an explicit ``_nrm > 0`` filter, because the
-    alternative (NULL-element normalization) would NOT drop out: the
-    per-subspace struct-min assigns all-NULL distance rows code 0 (NULL
-    sorts first in struct ordering), letting a garbage vector rank as a
-    NULL-cosine candidate.  Filtered vectors can neither be queries nor
-    neighbours, the same exclusion the sign-LSH leg gets from NULL
-    buckets.
-
-    ``codebook``: any (code_id 0..k_sub-1, cb_emb) table replaces the
-    corpus slice -- the kmeans_train plumbing IVF uses.  Measured
-    honestly: on THIS corpus 32 full-vector k-means centroids sliced
-    per subspace give recall 0.825 at sf0.1, WORSE than the 0.90 of
-    random corpus samples, because k-means collapses onto the ~10
-    latent cluster directions and loses subspace diversity.  The fix is
-    true per-subspace training -- :func:`pq_train_codebook`, the actual
-    PQ recipe -- which restores the ordering: per-subspace-trained
-    1.0 / 0.925 >= slice 0.975 / 0.90 > full-vector 0.825
-    (sf0.001 / sf0.1, pytest-gated).
-
-    ``codebook_prenormalized``: set True for codebooks TRAINED in the
-    normalized space (pq_train_codebook) -- renormalizing such a
-    codebook would divide each code's sub-centroids by that code's own
-    concatenated norm, a different factor per code, distorting the
-    Lloyd assignment geometry (measured: 0.90 renormalized vs 0.925
-    prenormalized at sf0.1).  Leave False for raw corpus vectors.
-
-    ``encoding=`` (r15): a precomputed :func:`pq_encode` artifact skips
-    the normalize/codebook/distance/argmin passes -- the sharing hook
-    for callers running BOTH the direct PQ search and IVFPQ over one
-    corpus (the k2 entry encodes once, with the code table
-    checkpointed, instead of twice).  ``embeddings`` and every geometry
-    parameter are then already baked into the artifact and passing them
-    raises instead of being silently ignored; per-SEARCH knobs (k, n_queries, n_candidates,
-    allowed_pairs) remain caller-settable.
     """
-    if encoding is not None:
-        if (
-            embeddings is not None
-            or m is not _UNSET
-            or k_sub is not _UNSET
-            or codebook_offset is not _UNSET
-            or dim is not _UNSET
-            or codebook is not _UNSET
-            or codebook_prenormalized is not _UNSET
-        ):
-            raise ValueError(
-                "encoding= already fixes embeddings/m/k_sub/"
-                "codebook_offset/dim/codebook/codebook_prenormalized; "
-                "pass either encoding= or the raw inputs, not both"
-            )
-        enc = encoding
-    else:
-        if embeddings is None:
-            raise ValueError("either embeddings or encoding= is required")
-        enc = pq_encode(
-            embeddings,
-            m=16 if m is _UNSET else m,
-            k_sub=32 if k_sub is _UNSET else k_sub,
-            codebook_offset=(
-                200 if codebook_offset is _UNSET else codebook_offset
-            ),
-            dim=64 if dim is _UNSET else dim,
-            codebook=None if codebook is _UNSET else codebook,
-            codebook_prenormalized=(
-                False
-                if codebook_prenormalized is _UNSET
-                else codebook_prenormalized
-            ),
-        )
-    m = enc.m
-    raw, dcols, codes_long = enc.raw, enc.dcols, enc.codes_long
+    m = encoding.m
+    raw, dcols, codes_long = encoding.raw, encoding.dcols, encoding.codes_long
 
     # query distance tables: the same relation restricted to the queries,
     # unpivoted and broadcast (n_queries * m * k_sub tiny rows)
@@ -2216,146 +2040,63 @@ def cosine_topk_pq(
 
 def cosine_topk_ivfpq(
     embeddings: DataFrame,
+    index: IVFIndex,
+    encoding: PQEncoding,
     k: int = 5,
     n_queries: int = 8,
-    n_centroids: int | object = _UNSET,
     n_probe: int = 3,
-    centroid_offset: int | object = _UNSET,
-    m: int | object = _UNSET,
-    k_sub: int | object = _UNSET,
-    codebook_offset: int | object = _UNSET,
     n_candidates: int = 128,
-    dim: int | object = _UNSET,
-    codebook: DataFrame | object = _UNSET,
-    centroids: DataFrame | object = _UNSET,
-    codebook_prenormalized: bool | object = _UNSET,
-    *,
-    encoding: PQEncoding | None = None,
-    index: IVFIndex | None = None,
 ) -> DataFrame:
     """IVF + PQ combined (the FAISS ``IVFPQ`` index, Jegou et al. TPAMI
     2011 sec. V): coarse quantizer routes, product quantizer scores.
-    ``codebook_prenormalized`` passes through to :func:`cosine_topk_pq`
-    -- set it with a pq_train_codebook-trained codebook, exactly as on
-    the direct PQ path.
+    ``index`` is an :func:`ivf_assign` artifact and ``encoding`` a
+    :func:`pq_encode` artifact over the same corpus.
 
     The two approximations compose multiplicatively at scale: IVF
     probing scans ~n_probe/n_centroids of the corpus, and PQ reads each
     scanned vector as m bytes of codes instead of dim floats -- the
     standard billion-vector operating point (scan 3/16 of a 64x-smaller
     table here).  Both stages reuse their standalone implementations:
-    the IVF routing is the same broadcast-centroid assignment as
-    :func:`cosine_topk_ivf` (1-nearest per corpus vector, ``n_probe``
-    nearest per query, deterministic rounded-cosine + cent_id
-    tie-break), and the scoring is :func:`cosine_topk_pq` with the
-    probed-list membership passed as its ``allowed_pairs`` pre-filter
-    so the ADC join fans out over probed candidates only.  Exact
-    re-rank on the raw vectors, as in the PQ leg, so returned cosines
-    are exact and recall is the only approximation (pytest-gated vs the
-    brute-force baseline alongside ivf and pq).
+    the IVF routing is the same broadcast-centroid routing as
+    :func:`cosine_topk_ivf` (the index's 1-nearest corpus assignment,
+    ``n_probe`` nearest per query, deterministic rounded-cosine +
+    cent_id tie-break), and the scoring is :func:`cosine_topk_pq` with
+    the probed-list membership passed as its ``allowed_pairs``
+    pre-filter so the ADC join fans out over probed candidates only.
+    Exact re-rank on the raw vectors, as in the PQ leg, so returned
+    cosines are exact and recall is the only approximation
+    (pytest-gated vs the brute-force baseline alongside ivf and pq).
     """
-    emb = embeddings.select("vec_id", "embedding")
-    if index is not None:
-        if (
-            n_centroids is not _UNSET
-            or centroid_offset is not _UNSET
-            or centroids is not _UNSET
-        ):
-            raise ValueError(
-                "index= already fixes n_centroids/centroid_offset/"
-                "centroids; pass either index= or the raw inputs, not both"
-            )
-        cents = index.cents
-    else:
-        cents = default_centroids(
-            emb,
-            100 if centroid_offset is _UNSET else centroid_offset,
-            16 if n_centroids is _UNSET else n_centroids,
-            None if centroids is _UNSET else centroids,
-        )
-
-    def nearest(side: DataFrame, id_col: str, emb_col: str, top: int):
-        cand = side.crossJoin(F.broadcast(cents)).select(
-            id_col,
-            "cent_id",
-            F.round(cosine(emb_col, "cent_emb"), 6).alias("cent_sim"),
-        )
-        if top == 1:
-            # max_by assignment (r14): see cosine_topk_ivf -- one
-            # combined aggregate instead of the window sort-shuffle,
-            # identical election including NULLS-LAST degenerates.
-            # No payload key here (r15): the elected VALUE is only
-            # cent_id, and (cent_sim, -cent_id) ties imply the same
-            # cent_id -- there is no payload whose election could be
-            # plan-dependent (contrast cosine_topk_ivf, where c_emb
-            # rides the value and therefore the ordering).
-            return cand.groupBy(id_col).agg(
-                F.max_by(
-                    F.col("cent_id"),
-                    F.struct(
-                        F.col("cent_sim"), (-F.col("cent_id")).alias("nc")
-                    ),
-                ).alias("cent_id")
-            )
-        w = Window.partitionBy(id_col).orderBy(
-            F.col("cent_sim").desc(), F.col("cent_id").asc()
-        )
-        return (
-            cand.withColumn("crank", F.row_number().over(w))
-            .filter(F.col("crank") <= top)
-            .select(id_col, "cent_id")
-        )
-
-    # shared-routing path (r15): project (vec_id, cent_id) from the
-    # payload-riding shared assignment -- the elected cent_id is
-    # identical to the local no-payload election (the payload key only
-    # breaks ties that already fix cent_id), so this is a plan change,
-    # never a result change (pinned in tests/test_pq.py).
-    assigned = (
-        index.assigned.select("vec_id", "cent_id")
-        if index is not None
-        else nearest(emb, "vec_id", "embedding", 1)
-    )
-    probes = nearest(
-        emb.filter(F.col("vec_id") < n_queries).select(
+    cand = (
+        embeddings.filter(F.col("vec_id") < n_queries)
+        .crossJoin(F.broadcast(index.cents))
+        .select(
             F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-        ),
-        "query_id",
-        "q_emb",
-        n_probe,
-    )
-    allowed = probes.join(assigned, "cent_id").select("query_id", "vec_id")
-    if encoding is not None:
-        # shared-encode path (r15): the PQ stage reuses the SAME encode
-        # artifacts as the direct PQ leg (cosine_topk_pq validates that
-        # no conflicting geometry was passed alongside); only the IVF
-        # routing above is ivfpq-specific work.
-        return cosine_topk_pq(
-            k=k,
-            n_queries=n_queries,
-            m=m,
-            k_sub=k_sub,
-            codebook_offset=codebook_offset,
-            n_candidates=n_candidates,
-            dim=dim,
-            codebook=codebook,
-            allowed_pairs=allowed,
-            codebook_prenormalized=codebook_prenormalized,
-            encoding=encoding,
+            "cent_id",
+            F.round(cosine("embedding", "cent_emb"), 6).alias("cent_sim"),
         )
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cent_sim").desc(), F.col("cent_id").asc()
+    )
+    probes = (
+        cand.withColumn("crank", F.row_number().over(w))
+        .filter(F.col("crank") <= n_probe)
+        .select("query_id", "cent_id")
+    )
+    # the corpus side projects (vec_id, cent_id) from the
+    # payload-riding assignment: the payload key only breaks ties that
+    # already fix cent_id, so the elected cells are those of a
+    # cent_id-only election
+    allowed = probes.join(index.assigned, "cent_id").select(
+        "query_id", "vec_id"
+    )
     return cosine_topk_pq(
-        embeddings,
+        encoding,
         k=k,
         n_queries=n_queries,
-        m=m,
-        k_sub=k_sub,
-        codebook_offset=codebook_offset,
         n_candidates=n_candidates,
-        dim=dim,
-        codebook=codebook,
         allowed_pairs=allowed,
-        codebook_prenormalized=codebook_prenormalized,
     )
 
 
@@ -2371,12 +2112,12 @@ def pq_train_codebook(
     recipe): an independent L2 k-means over each subspace's subvectors,
     returned as ``(code_id, cb_emb)`` where ``cb_emb`` concatenates code
     ``code_id``'s centroid across all ``m`` subspaces -- so the trained
-    codebook drops straight into :func:`cosine_topk_pq`'s ``codebook=``
+    codebook drops straight into :func:`pq_encode`'s ``codebook=``
     (which slices per subspace again, recovering exactly the
     per-subspace centroids).  Pass ``codebook_prenormalized=True`` with
     it: the centroids already live in the normalized space, and the
     default renormalization would rescale each code by its own
-    concatenated norm (see cosine_topk_pq's docstring).
+    concatenated norm (see pq_encode's docstring).
 
     This fixes what full-vector k-means gets wrong for PQ (measured
     0.825 recall vs the corpus slice's 0.90 at sf0.1): clustering whole
@@ -2404,7 +2145,7 @@ def pq_train_codebook(
         "vec_id", as_double_array("embedding").alias("emb_raw")
     )
     step1 = raw.select("vec_id", "emb_raw", l2_norm("emb_raw").alias("_nrm"))
-    # same zero-norm drop-out as cosine_topk_pq's encode path: NULL
+    # same zero-norm drop-out as pq_encode: NULL
     # normalized elements would make every per-subspace distance NULL,
     # and NULLS-FIRST window ordering would then assign code 0 -- or,
     # if a zero-norm vector fell inside the init slice, poison that

@@ -23,7 +23,6 @@ from ..functions.text import (
     token_count_ws,
     tokens,
 )
-from .dedup import token_table
 
 
 def _composite_quality(n_tok_d, sw_ratio, pr):
@@ -812,18 +811,13 @@ BM25_B = 0.75
 BM25_QUERY_TERMS = ("dup", "join", "query", "spark")
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: list[str],
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    text_col: str = "text",
-    term_scores: DataFrame | None = None,
-) -> DataFrame:
+def bm25_scores(term_scores: DataFrame, query_terms: list[str]) -> DataFrame:
     """Okapi BM25 relevance of every document to a fixed term set:
     (doc_id, n_match_terms, n_tokens, score) -- the standard retrieval
     scorer a curation pipeline uses to SELECT corpus slices relevant to
     a target task (query-targeted sampling) or to rank dedup survivors.
+    ``term_scores`` is a :func:`bm25_term_scores` relation covering
+    every query term; k1/b are fixed there.
 
     Formula (the Lucene formulation, non-negative idf)::
 
@@ -831,7 +825,7 @@ def bm25_scores(
         s(d, t) = idf(t) * tf * (k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
 
     Cross-engine exactness: the float constants ``k1+1`` / ``k1*(1-b)``
-    / ``k1*b`` are computed ONCE (here, in Python) and reused verbatim
+    / ``k1*b`` are computed ONCE (:func:`bm25_constants`) and reused verbatim
     by the DuckDB oracle, and each per-term partial score is truncated to
     BIGINT micro-units BEFORE the per-document sum (:func:`_micro6` --
     the ngram_lm_scores precedent), so the aggregate is exact integer
@@ -864,17 +858,9 @@ def bm25_scores(
     """
     if not query_terms:
         raise ValueError("bm25_scores needs at least one query term")
-    if term_scores is not None:
-        _validate_term_scores(
-            term_scores, sorted(set(query_terms)), k1, b, "bm25_scores"
-        )
-        scored = term_scores.filter(
-            F.col("token").isin(sorted(set(query_terms)))
-        )
-    else:
-        scored = bm25_term_scores(
-            token_table(docs, text_col), query_terms, k1, b
-        )
+    terms = sorted(set(query_terms))
+    _validate_term_scores(term_scores, terms, "bm25_scores")
+    scored = term_scores.filter(F.col("token").isin(terms))
     return (
         scored.groupBy("doc_id", "dl")
         .agg(
@@ -893,17 +879,12 @@ def bm25_scores(
 
 
 def _validate_term_scores(
-    term_scores: DataFrame,
-    requested_terms: list[str],
-    k1: float,
-    b: float,
-    caller: str,
+    term_scores: DataFrame, requested_terms: list[str], caller: str
 ) -> None:
-    """Guard the ``term_scores=`` shared-pass contract: the precomputed
-    relation must carry :func:`bm25_term_scores`' provenance metadata
-    (its term UNIVERSE and k1/b) covering every requested term at the
-    same constants.  Without this, a stale shared pass -- built before a
-    query gained a term, or at different k1/b -- would be silently
+    """Guard the ``term_scores`` contract: the relation must carry
+    :func:`bm25_term_scores`' provenance metadata (its term UNIVERSE)
+    covering every requested term.  Without this, a stale shared pass
+    -- built before a query gained a term -- would be silently
     filtered down and score documents WITHOUT the missing terms (the
     ``isin`` keeps only what exists; nothing errors).  Closed by
     raising loudly here.
@@ -916,29 +897,19 @@ def _validate_term_scores(
     meta = dict(field.metadata) if field is not None else {}
     if "bm25_terms" not in meta:
         raise ValueError(
-            f"{caller}: term_scores= relation carries no bm25_term_scores "
+            f"{caller}: term_scores relation carries no bm25_term_scores "
             "provenance metadata -- build it with bm25_term_scores() (the "
-            "term universe and k1/b ride the s_micro column's metadata so "
+            "term universe rides the s_micro column's metadata so "
             "coverage is checkable); an unattributed relation cannot be "
             "verified to cover the requested terms"
         )
     missing = sorted(set(requested_terms) - set(meta["bm25_terms"]))
     if missing:
         raise ValueError(
-            f"{caller}: term_scores= relation was built over terms "
+            f"{caller}: term_scores relation was built over terms "
             f"{sorted(meta['bm25_terms'])} and does not cover requested "
             f"term(s) {missing}; rebuild the shared pass over the union "
             "of every caller's terms"
-        )
-    if (float(meta["bm25_k1"]), float(meta["bm25_b"])) != (
-        float(k1),
-        float(b),
-    ):
-        raise ValueError(
-            f"{caller}: term_scores= relation was built at "
-            f"k1={meta['bm25_k1']}, b={meta['bm25_b']} but this call "
-            f"requests k1={float(k1)}, b={float(b)}; the partial scores "
-            "fold the constants in and cannot be rescaled"
         )
 
 
@@ -955,13 +926,12 @@ def bm25_term_scores(
     query-term map and sums it per (query, document).  The scale shape
     documented on bm25_scores lives here.
 
-    Public because it is the compute-once surface (the k2 ``codebook=``
-    / probe ``weights=`` precedent): a caller scoring SEVERAL term sets
-    over one corpus computes this relation once over the UNION of all
-    terms -- it is tiny (matched (doc, term) rows only), so
-    ``localCheckpoint`` it and pass it back via ``term_scores=``, and
-    the corpus is tokenized exactly twice total instead of twice per
-    term set.  Value-identical to per-set runs: df is per-token
+    It is the one input both scorers take: a caller scoring SEVERAL
+    term sets over one corpus computes this relation once over the
+    UNION of all terms -- it is tiny (matched (doc, term) rows only),
+    so ``localCheckpoint`` it and pass it to each, and the corpus is
+    tokenized exactly twice total instead of twice per term set.
+    Value-identical to per-set runs: df is per-token
     (independent of which other tokens the filter kept) and (N, avgdl)
     are corpus-level."""
     terms = sorted(set(query_terms))
@@ -1012,12 +982,8 @@ def bm25_term_scores(
     # provenance rides the s_micro FIELD METADATA (not a payload column:
     # an empty match set must still carry its universe, and metadata
     # survives select/filter/localCheckpoint) -- bm25_scores/bm25_topk
-    # validate coverage + constants against it before filtering
-    provenance = {
-        "bm25_terms": list(terms),
-        "bm25_k1": float(k1),
-        "bm25_b": float(b),
-    }
+    # validate coverage against it before filtering
+    provenance = {"bm25_terms": list(terms)}
     return with_df.crossJoin(F.broadcast(stats)).select(
         "doc_id",
         "dl",
@@ -1041,13 +1007,9 @@ BM25_TOPK_K = 10
 
 
 def bm25_topk(
-    docs: DataFrame,
+    term_scores: DataFrame,
     queries: dict[str, tuple[str, ...]] | None = None,
     k: int = BM25_TOPK_K,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    text_col: str = "text",
-    term_scores: DataFrame | None = None,
 ) -> DataFrame:
     """Multi-query BM25 retrieval: the top-``k`` documents for EACH of a
     small set of named term queries -- (query, doc_id, rank,
@@ -1056,9 +1018,9 @@ def bm25_topk(
     tasks in one pass (k1's broadcast-queries ANN pattern, re-expressed
     for lexical relevance).
 
-    One corpus pass scores every (document, term) partial over the
-    UNION of all query terms (:func:`_bm25_term_scores` -- idf/df/dl are
-    query-independent, so sharing them across queries is free); the
+    ``term_scores`` is a :func:`bm25_term_scores` relation over (at
+    least) the UNION of all query terms -- idf/df/dl are
+    query-independent, so sharing one pass across queries is free; the
     tiny (query, term) map is broadcast-joined on the term, per-(query,
     doc) scores are exact BIGINT micro-unit sums, and the per-query
     top-k ranks on the RAW micro sum (engine-exact; the displayed score
@@ -1079,18 +1041,13 @@ def bm25_topk(
     if not queries or any(not ts for ts in queries.values()):
         raise ValueError("bm25_topk needs >= 1 term per named query")
     universe = sorted({t for ts in queries.values() for t in ts})
-    if term_scores is not None:
-        _validate_term_scores(term_scores, universe, k1, b, "bm25_topk")
-        per_term = term_scores.filter(F.col("token").isin(universe))
-    else:
-        per_term = bm25_term_scores(
-            token_table(docs, text_col), universe, k1, b
-        )
+    _validate_term_scores(term_scores, universe, "bm25_topk")
+    per_term = term_scores.filter(F.col("token").isin(universe))
     # JVM literal, not createDataFrame: a python-backed local relation
     # would put a 32-task python stage inside every tv1 build job
     # (see functions/localrel.py)
     qt = inline_rows(
-        docs.sparkSession,
+        term_scores.sparkSession,
         ("query", "token"),
         [(q, t) for q, ts in sorted(queries.items()) for t in sorted(set(ts))],
     )

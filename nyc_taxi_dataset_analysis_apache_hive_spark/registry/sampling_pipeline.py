@@ -1874,9 +1874,7 @@ def tv1_text_stats(spark, sf):
             # rows and the hybrid legs' lexical side: materialize it
             # (30 rows) so the fusion subtrees never recompute the
             # lexical retrieval
-            tk_ = textops.bm25_topk(docs, term_scores=ts_).localCheckpoint(
-                eager=True
-            )
+            tk_ = textops.bm25_topk(ts_).localCheckpoint(eager=True)
             return w_, ts_, tk_
 
         def _colloc_chain():
@@ -1984,9 +1982,7 @@ def tv1_text_stats(spark, sf):
     # each leg's subtree would scan+explode documents twice (measured
     # +2.3 s on the tv1 fold at sf0.1)
     bm25 = textops.bm25_scores(
-        docs,
-        query_terms=list(textops.BM25_QUERY_TERMS),
-        term_scores=shared_ts,
+        shared_ts, list(textops.BM25_QUERY_TERMS)
     ).select(
         F.lit("bm25").alias("op"),
         "doc_id",
@@ -2030,7 +2026,7 @@ def tv1_text_stats(spark, sf):
         nulll.alias("m"),
         F.col("cosine").alias("score"),
     )
-    hybrid = retrieval.hybrid_topk(lexical=topk_tbl, dense=dense_tbl).select(
+    hybrid = retrieval.hybrid_topk(topk_tbl, dense_tbl).select(
         F.lit("hybrid").alias("op"),
         "doc_id",
         F.col("query").alias("token"),
@@ -2043,9 +2039,7 @@ def tv1_text_stats(spark, sf):
     # pair (bm25_topk + dense_topk(method='ivf')) is what actually
     # serves; both rank tables above are checkpointed, so the fusion
     # touches only 30-row inputs
-    hybrid_ivf = retrieval.hybrid_topk(
-        lexical=topk_tbl, dense=dense_ivf_tbl
-    ).select(
+    hybrid_ivf = retrieval.hybrid_topk(topk_tbl, dense_ivf_tbl).select(
         F.lit("hybrid_ivf").alias("op"),
         "doc_id",
         F.col("query").alias("token"),

@@ -47,7 +47,7 @@ _RRF_MICRO_F = float(similarity.RRF_MICRO)
 #: fused top-k depth of the k2 ``rrf`` leg (the same k the ANN legs use)
 K2_RRF_K = 5
 
-#: label rides along since r15 (the k1 mining legs read it; the other
+#: label rides along (the k1 mining legs read it; the other
 #: consumers ignore it) so ONE normalization CTE serves every embedding
 #: oracle -- forking it per-entry is how a NULL-guard change would
 #: silently miss a surface.
@@ -63,8 +63,8 @@ _NORM_CTE = """e0 AS (
 _MINING_MARGIN_F = float(similarity.MINING_MARGIN)
 
 #: raw-embedding cosine spellings shared by every IVF routing CTE (the
-#: k2 ivf leg, the k2 ivfpq router, and the k1 routed-mining legs since
-#: r16) -- defined ABOVE the k1 entry because its oracle f-string
+#: k2 ivf leg, the k2 ivfpq router, and the k1 routed-mining legs) --
+#: defined ABOVE the k1 entry because its oracle f-string
 #: interpolates them at registration time.
 _IVF_COS_VC = (
     "round(list_dot_product(v.emb, c.cent_emb) /"
@@ -196,7 +196,7 @@ def k1_knn_bruteforce(spark, sf):
     * ``op='knn'``: exact top-5 cosine neighbours -- the ANN baseline
       every k2 recall gate measures against.  Query side broadcast;
       corpus never shuffled.
-    * ``op='hard_neg'`` / ``op='hard_pos'`` / ``op='semi_hard'`` (r15):
+    * ``op='hard_neg'`` / ``op='hard_pos'`` / ``op='semi_hard'``:
       similarity.contrastive_mining -- batch-hard triplet mining
       (Hermans et al. 2017) + the FaceNet semi-hard band (Schroff et
       al. 2015) over the labeled corpus, the selection stage of
@@ -206,7 +206,7 @@ def k1_knn_bruteforce(spark, sf):
       positive's cosine minus MINING_MARGIN (repr-roundtripped from
       its one definition).
     * ``op='hard_neg_ivf'`` / ``op='hard_pos_ivf'`` /
-      ``op='semi_hard_ivf'`` (r16): the ROUTED mining legs -- anchors
+      ``op='semi_hard_ivf'``: the ROUTED mining legs -- anchors
       probe their 3 nearest of the 16 fixed centroids through a
       precomputed ivf_assign index and mine only those cells' members,
       the deployment path when EVERY document is an anchor (the brute
@@ -231,7 +231,7 @@ def k1_knn_bruteforce(spark, sf):
         emb,
         k=5,
         n_queries=8,
-        index=similarity.ivf_assign(emb, n_centroids=16, centroid_offset=100),
+        index=similarity.ivf_assign(emb, similarity.default_centroids(emb)),
         n_probe=3,
         tag_suffix="_ivf",
     )
@@ -272,7 +272,7 @@ def _k3_trained_cents_ctes() -> str:
     cent_id then the greatest payload (emb DESC = the operator's max_by
     struct tail, and the elected emb rides THROUGH the election so a
     duplicated training vec_id contributes exactly one payload to the
-    mean -- r14), (b) element-wise means per cluster over ta{{i}}'s own
+    mean), (b) element-wise means per cluster over ta{{i}}'s own
     elected emb
     (generate_subscripts/unnest mirror posexplode; list(... ORDER BY pos)
     mirrors the array_sort re-assembly), (c) coalesce empty clusters to
@@ -307,7 +307,7 @@ def _k3_trained_cents_ctes() -> str:
     )"""
         )
         ctes.append(
-            # the elected emb PAYLOAD rides the election (r14, mirroring
+            # the elected emb PAYLOAD rides the election (mirroring
             # the operator's max_by over (sim, -cent_id, v)): a
             # duplicated training vec_id with two payloads must
             # contribute exactly the ONE elected vector to its cluster
@@ -496,7 +496,7 @@ _PQ_SQL = f"""
       FROM pq_scored) WHERE rank <= 5
 """
 
-#: IVFPQ (r7): the FAISS composition -- the IVF fragment's routing CTEs
+#: IVFPQ: the FAISS composition -- the IVF fragment's routing CTEs
 #: (raw-vector cosines, same rounding/tie-break) gate which (query, vec)
 #: pairs the PQ fragment's ADC may score.
 _IVFPQ_COS_VC = (
@@ -596,7 +596,7 @@ _IVFPQ_SQL = f"""
 """
 
 
-#: IVF over the TRAINED index (r14): the same list-probing search as
+#: IVF over the TRAINED index: the same list-probing search as
 #: _K4_IVF_SQL, but the centroid table is kmeans_train's unrolled-Lloyd
 #: replay (the k3 CTE block verbatim -- ONE definition of the trained
 #: index across both entries) instead of the fixed corpus slice.  This
@@ -686,7 +686,7 @@ def k2_ann_lsh_ivf(spark, sf):
     * ``ivf`` -- IVF list-probing: corpus assigned to 16 fixed centroids
       (narrow broadcast pass), queries probe their 3 nearest lists, so
       candidate generation scans ~3/16 of the corpus via an equi-join.
-    * ``ivf_trained`` (r14) -- the SAME list-probing search over a
+    * ``ivf_trained`` -- the SAME list-probing search over a
       TRAINED index: ``similarity.kmeans_train`` at the shared k3 gate
       constants (16 centroids, 5 Lloyd iterations, quantize=6 -- the
       cross-engine replay barrier), sample-bounded training (vec_id <
@@ -698,13 +698,13 @@ def k2_ann_lsh_ivf(spark, sf):
       completing the retrieval half of the trained-index story the k3
       ``semdedup_trained`` leg opened for dedup.  Trained-vs-seed
       recall stays pytest-gated (tests/test_asof_skew.py).
-    * ``pq`` (r7) -- product quantization (Jegou et al., TPAMI 2011):
+    * ``pq`` -- product quantization (Jegou et al., TPAMI 2011):
       vectors encoded as 16 codes over 4-dim subspaces (the FAISS
       billion-vector memory format -- the candidate scan reads a
       16x-smaller code table), searched by fixed-order ADC with a
       128-candidate exact re-rank; recall@5 0.975/0.90
       (sf0.001/sf0.1) vs brute force.
-    * ``ivfpq`` (r7) -- the two composed (FAISS IVFPQ): IVF routing
+    * ``ivfpq`` -- the two composed (FAISS IVFPQ): IVF routing
       gates which (query, vec) pairs PQ's ADC scores, so the approximate
       scan covers ~3/16 of the corpus AND reads it 16x smaller.  Recall
       is bounded by the coarse router (measured: ivfpq 0.525/0.35
@@ -712,7 +712,7 @@ def k2_ann_lsh_ivf(spark, sf):
       stage loses almost nothing on top, which is the composition
       property tests/test_pq.py gates).
 
-    * ``rrf`` (r10) -- reciprocal-rank fusion of the five method
+    * ``rrf`` -- reciprocal-rank fusion of the five method
       rankings (similarity.rrf_fuse, Cormack et al. 2009): the
       ensemble-retrieval combiner over approximate indexes.  Each
       (method, rank) row contributes floor(1e6/(60+rank)) micro-units;
@@ -731,7 +731,7 @@ def k2_ann_lsh_ivf(spark, sf):
     # the 5 method rank tables feed the output AND the rrf ensemble:
     # materialize once (200 rows) so the fusion subtree does not re-run
     # the whole ANN suite (the tv1 shared-pass discipline).  Thunk CALLS
-    # run overlapped (r17, guide §2.6): each owns its eager work
+    # run overlapped: each owns its eager work
     # (ivf_trained's driver-side training collect, pq's shared encode
     # checkpoint -- lock-guarded in _k2_method_thunks), which used to
     # serialize ahead of the union job
@@ -744,7 +744,7 @@ def k2_ann_lsh_ivf(spark, sf):
 
 def _k2_method_thunks(spark, sf):
     """The five k2 ANN method tables as LAZY thunks (ONE construction
-    serving the registry entry and bench.py's per-leg timing -- r15):
+    serving the registry entry and bench.py's per-leg timing):
     each thunk builds its tagged (method, query_id, neighbor_id,
     cosine, rank) table from scratch, including any eager work the
     method owns (``ivf_trained`` trains its index INSIDE the thunk, so
@@ -761,14 +761,17 @@ def _k2_method_thunks(spark, sf):
             "rank",
         )
 
-    # IVF routing stays UNSHARED here (r15 measured negative result):
-    # sharing one checkpointed ivf_assign between the ivf and ivfpq
-    # legs ran 7.5-8.6 s vs 7.2-8.0 s unshared over 3 interleaved reps
-    # at sf0.1 -- materializing 2k payload-carrying assignment rows
-    # plus the extra stage costs more than the ~0.5 s recompute it
-    # saves at gate scale.  The `index=` overload exists for deployment
-    # (where the assignment is a full corpus scan worth paying once);
-    # minhash_lsh_pairs' shingle-recompute posture applies.
+    # IVF routing stays UNCHECKPOINTED here (measured negative result):
+    # each IVF leg builds its own lazy ivf_assign index (the ivf and
+    # ivfpq ones are the same plan, so exchange reuse runs their
+    # assignment shuffle once inside the union checkpoint).  Sharing one
+    # checkpointed index between the ivf and ivfpq legs ran 7.5-8.6 s
+    # vs 7.2-8.0 s unshared over 3 interleaved reps at sf0.1 --
+    # materializing 2k payload-carrying assignment rows plus the extra
+    # stage costs more than the ~0.5 s recompute it saves at gate
+    # scale.  Sharing pays at deployment (where the assignment is a
+    # full corpus scan worth paying once); minhash_lsh_pairs'
+    # shingle-recompute posture applies.
     def lsh():
         return tag(
             similarity.cosine_topk_lsh(emb, k=5, n_queries=8, n_bits=4), "lsh"
@@ -778,17 +781,16 @@ def _k2_method_thunks(spark, sf):
         return tag(
             similarity.cosine_topk_ivf(
                 emb,
+                similarity.ivf_assign(emb, similarity.default_centroids(emb)),
                 k=5,
                 n_queries=8,
-                n_centroids=16,
                 n_probe=3,
-                centroid_offset=100,
             ),
             "ivf",
         )
 
     def ivf_trained():
-        # trained index at the shared k3 gate constants (r14): training
+        # trained index at the shared k3 gate constants: training
         # is sample-bounded (SF-invariant), the per-iteration
         # localCheckpoints leave the 16-row centroid table materialized
         # for the probe pass
@@ -800,14 +802,18 @@ def _k2_method_thunks(spark, sf):
         )
         return tag(
             similarity.cosine_topk_ivf(
-                emb, k=5, n_queries=8, n_probe=3, centroids=trained_cents
+                emb,
+                similarity.ivf_assign(emb, trained_cents),
+                k=5,
+                n_queries=8,
+                n_probe=3,
             ),
             "ivf_trained",
         )
 
-    # shared PQ encode (r15): pq and ivfpq used to encode the corpus
-    # twice with identical parameters; one pq_encode(checkpoint=True)
-    # now serves both (geometry rides the artifact).  Lazily built so
+    # shared PQ encode: one pq_encode(checkpoint=True) serves both pq
+    # and ivfpq instead of encoding the corpus twice with identical
+    # parameters (geometry rides the artifact).  Lazily built so
     # the FIRST consumer pays it -- in entry/leg order that is the pq
     # leg, and ivfpq's number becomes its true marginal (IVF routing +
     # the restricted ADC join).
@@ -816,7 +822,7 @@ def _k2_method_thunks(spark, sf):
 
     def _enc():
         # lock-guarded: the entry calls the pq and ivfpq thunks
-        # overlapped (r17), and an unguarded check-then-set would encode
+        # overlapped, and an unguarded check-then-set would encode
         # the corpus twice under that concurrency; bench.py's per-leg
         # path still calls sequentially (pq first), so leg attribution
         # is unchanged
@@ -827,7 +833,7 @@ def _k2_method_thunks(spark, sf):
 
     def pq():
         return tag(
-            similarity.cosine_topk_pq(k=5, n_queries=8, encoding=_enc()),
+            similarity.cosine_topk_pq(_enc(), k=5, n_queries=8),
             "pq",
         )
 
@@ -835,12 +841,11 @@ def _k2_method_thunks(spark, sf):
         return tag(
             similarity.cosine_topk_ivfpq(
                 emb,
+                similarity.ivf_assign(emb, similarity.default_centroids(emb)),
+                _enc(),
                 k=5,
                 n_queries=8,
-                n_centroids=16,
                 n_probe=3,
-                centroid_offset=100,
-                encoding=_enc(),
             ),
             "ivfpq",
         )
@@ -1064,7 +1069,7 @@ def k3_embedding_near_pairs(spark, sf):
       connected components -> min-id keep-list.  ``id_b`` carries the
       elected cluster; the oracle recomputes the components with a
       recursive CTE (the d6 precedent).
-    - ``op='admit'`` (r12): incremental semantic admission
+    - ``op='admit'``: incremental semantic admission
       (``similarity.semantic_admit_batch``) -- history = even vec_ids
       (the persisted corpus state), batch = odd (the d7 parity-split
       precedent), the SAME fixed centroid index.  Each batch vector
@@ -1072,7 +1077,7 @@ def k3_embedding_near_pairs(spark, sf):
       ``id_b``/``cosine`` carry the best match, ``keep`` the admission
       verdict.  At 100 TB this is the operation that replaces
       semdedup-from-scratch per ingest batch.
-    - ``op='semdedup_trained'`` (r13): the SAME semdedup election over
+    - ``op='semdedup_trained'``: the SAME semdedup election over
       a TRAINED centroid index -- ``similarity.kmeans_train`` at the
       K3_KMEANS_N/ITER/Q gate constants (16 centroids, 5 Lloyd
       iterations, quantize=6), replayed in the oracle as unrolled-Lloyd
@@ -1097,10 +1102,10 @@ def k3_embedding_near_pairs(spark, sf):
     # and without the checkpoint each consumer would re-run the
     # broadcast-argmax corpus pass
     cents = similarity.default_centroids(emb)
-    # trained-centroid index (r13): kmeans_train on the deterministic
+    # trained-centroid index: kmeans_train on the deterministic
     # id-prefix SAMPLE (the FAISS posture -- train bounded, assign
     # full); quantize=6 is the cross-engine replay barrier (see
-    # kmeans_train's docstring).  Since r17 the bounded sample trains
+    # kmeans_train's docstring).  The bounded sample trains
     # driver-side (one collect, no per-iteration checkpoint jobs) and
     # the 16-row table is a JVM literal.
     trained = similarity.kmeans_train(
@@ -1110,7 +1115,7 @@ def k3_embedding_near_pairs(spark, sf):
         quantize=K3_KMEANS_Q,
     )
     # the two full-corpus assignment passes are independent: overlap
-    # their checkpoint jobs (r17, guide §2.6) instead of paying two
+    # their checkpoint jobs instead of paying two
     # sequential scheduling round-trips
     assigned_full, assigned_tr = caching.checkpoint_overlapped(
         similarity.assign_to_centroids(emb, cents),
@@ -1146,28 +1151,25 @@ def k3_embedding_near_pairs(spark, sf):
         (F.col("doc_id") - off).alias("doc_id"),
         (F.col("cluster_id") - off).alias("cluster_id"),
     )
-    # components= alone: the labels carry the whole dedup semantics
-    # (built from the 0.35 fixed-slice pair graph above), and
-    # semantic_dedup raises on any other parameter passed alongside
-    sem = similarity.semantic_dedup(emb, components=comp_fixed).select(
+    # the labels carry the whole dedup semantics (built from the 0.35
+    # fixed-slice pair graph above); semantic_dedup is the keep-list
+    # election over them
+    sem = similarity.semantic_dedup(emb, comp_fixed).select(
         F.lit("semdedup").alias("op"),
         F.col("vec_id").alias("id_a"),
         F.col("sem_cluster").alias("id_b"),
         F.lit(None).cast("double").alias("cosine"),
         "keep",
     )
-    # the persisted centroid index is the same fixed corpus slice the
-    # semdedup leg assigns under (similarity.default_centroids, ONE
-    # definition), passed EXPLICITLY (an admission index must be stable
-    # across batches -- deriving it from the even-id history would
-    # silently re-index)
+    # both admission states are slices of the fixed-slice assignment
+    # the semdedup leg uses (similarity.default_centroids, ONE
+    # definition): an admission index must be stable across batches --
+    # deriving it from the even-id history would silently re-index
     adm = similarity.semantic_admit_batch(
-        history=None,
-        batch=emb.filter(F.col("vec_id") % 2 == 1),
+        emb.filter(F.col("vec_id") % 2 == 1),
+        assigned_full.filter(F.col("vec_id") % 2 == 0),
+        assigned_full.filter(F.col("vec_id") % 2 == 1),
         threshold=0.35,
-        centroids=cents,
-        history_state=assigned_full.filter(F.col("vec_id") % 2 == 0),
-        batch_state=assigned_full.filter(F.col("vec_id") % 2 == 1),
     ).report.select(
         F.lit("admit").alias("op"),
         F.col("vec_id").alias("id_a"),
@@ -1175,7 +1177,7 @@ def k3_embedding_near_pairs(spark, sf):
         "cosine",
         F.col("admitted").alias("keep"),
     )
-    sem_tr = similarity.semantic_dedup(emb, components=comp_tr).select(
+    sem_tr = similarity.semantic_dedup(emb, comp_tr).select(
         F.lit("semdedup_trained").alias("op"),
         F.col("vec_id").alias("id_a"),
         F.col("sem_cluster").alias("id_b"),
@@ -1203,8 +1205,8 @@ def _hits_from_t_sql(lang: str) -> str:
 
 _LANG_CASE = " ".join(f"WHEN hits_{lang} = best THEN '{lang}'" for lang in _LANGS)
 
-#: PII patterns shared with the operator (ONE pattern source).  Since r8
-#: the phone pattern is RE2-compatible (boundary capture group instead of
+#: PII patterns shared with the operator (ONE pattern source).  The
+#: phone pattern is RE2-compatible (boundary capture group instead of
 #: lookarounds), so ALL three staged counts run on the DuckDB oracle:
 #: n_phone counts occurrences of the pattern's capture group
 #: (``_PHONE_GRP``) on the email+ip-redacted text, exactly as the Spark
@@ -1302,8 +1304,8 @@ def t1_text_profile(spark, sf):
     the hygiene family (C4/Gopher repetition fractions + staged PII
     counts) -- all from ONE corpus scan
     (operators/textops.text_profile(include_hygiene=True)).  All THREE
-    staged PII counts are driver-oracled since r8 (the phone pattern is
-    RE2-compatible now -- boundary capture group instead of lookarounds);
+    staged PII counts are driver-oracled (the phone pattern is
+    RE2-compatible -- boundary capture group instead of lookarounds);
     only ``text_redacted`` stays out of the projection (the oracle
     counts, it does not rewrite text).  Redaction output remains
     hand-golden + property gated in tests/test_text_hygiene.py.  The
@@ -1429,7 +1431,7 @@ def m3_frame_sample(spark, sf):
         "media_id", "frame_idx", "n_bytes"
     )
 # ---------------------------------------------------------------------------
-# Leg declarations (r15): tagged-union entries, for bench.py's per-leg
+# Leg declarations: tagged-union entries, for bench.py's per-leg
 # timing breakdown (pinned by tests/test_bench_legs.py).
 # k2 materializes its method union at build time, so its legs are timed
 # through the explicit builder (rrf last -- it fuses the five tables the

@@ -108,6 +108,36 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: driver heap bounds (MiB) for the default ``spark.driver.memory``
+DRIVER_MEMORY_MAX_MB = 8 * 1024
+DRIVER_MEMORY_MIN_MB = 1024
+
+
+def default_driver_memory(meminfo: str) -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset: a
+    quarter of the machine's memory, capped at 8g, from the text of
+    ``/proc/meminfo``.  A fixed 8g let two local sessions (a test run
+    plus one script) reserve more heap than a 16 GB machine has, and
+    the kernel killed a JVM.  Text without a ``MemTotal`` line (no
+    /proc) gets the cap; the 1g floor keeps the JVM above Spark's
+    minimum on very small machines."""
+    for line in meminfo.splitlines():
+        fields = line.split()
+        if fields[:1] == ["MemTotal:"]:
+            quarter_mb = int(fields[1]) // 4 // 1024
+            mb = max(DRIVER_MEMORY_MIN_MB, min(DRIVER_MEMORY_MAX_MB, quarter_mb))
+            return f"{mb}m"
+    return f"{DRIVER_MEMORY_MAX_MB}m"
+
+
+def _read_meminfo() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            return f.read()
+    except OSError:
+        return ""
+
+
 def get_spark(
     app_name: str = "nyc-taxi-spark",
     master: str | None = None,
@@ -132,7 +162,11 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or default_driver_memory(_read_meminfo()),
+        )
         # Arrow for the (rare) Pandas-UDF extension path and fast toPandas.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -25,15 +25,15 @@ def test_ivf_index_roundtrip(spark, tmp_path):
     consumers (search and routed mining) with results identical to the
     fresh build -- a restart never re-pays the full-corpus assignment."""
     emb = load_table(spark, SF, "embeddings")
-    fresh = similarity.ivf_assign(emb, n_centroids=16, centroid_offset=100)
+    fresh = similarity.ivf_assign(emb, similarity.default_centroids(emb))
     path = str(tmp_path / "ivf")
     similarity.save_ivf_index(fresh, path)
     loaded = similarity.load_ivf_index(spark, path)
     assert _rows(loaded.cents) == _rows(fresh.cents)
     assert _rows(loaded.assigned) == _rows(fresh.assigned)
     assert _rows(
-        similarity.cosine_topk_ivf(emb, k=5, n_queries=8, index=loaded)
-    ) == _rows(similarity.cosine_topk_ivf(emb, k=5, n_queries=8, index=fresh))
+        similarity.cosine_topk_ivf(emb, loaded, k=5, n_queries=8)
+    ) == _rows(similarity.cosine_topk_ivf(emb, fresh, k=5, n_queries=8))
     assert _rows(
         similarity.contrastive_mining(
             emb, k=5, n_queries=8, index=loaded, tag_suffix="_ivf"
@@ -62,14 +62,13 @@ def test_pq_encoding_roundtrip(spark, tmp_path):
     )
     assert _rows(loaded.codes_long) == _rows(fresh.codes_long)
     assert _rows(
-        similarity.cosine_topk_pq(k=5, n_queries=8, encoding=loaded)
-    ) == _rows(similarity.cosine_topk_pq(k=5, n_queries=8, encoding=fresh))
+        similarity.cosine_topk_pq(loaded, k=5, n_queries=8)
+    ) == _rows(similarity.cosine_topk_pq(fresh, k=5, n_queries=8))
+    index = similarity.ivf_assign(emb, similarity.default_centroids(emb))
     assert _rows(
-        similarity.cosine_topk_ivfpq(
-            emb, k=5, n_queries=8, encoding=loaded
-        )
+        similarity.cosine_topk_ivfpq(emb, index, loaded, k=5, n_queries=8)
     ) == _rows(
-        similarity.cosine_topk_ivfpq(emb, k=5, n_queries=8, encoding=fresh)
+        similarity.cosine_topk_ivfpq(emb, index, fresh, k=5, n_queries=8)
     )
 
 

@@ -272,7 +272,11 @@ def test_ivf_recall_vs_bruteforce(spark):
     recalls = {}
     for probe in (3, 8):
         rows = similarity.cosine_topk_ivf(
-            emb, 5, 8, n_centroids=16, n_probe=probe, centroid_offset=100
+            emb,
+            similarity.ivf_assign(emb, similarity.default_centroids(emb)),
+            5,
+            8,
+            n_probe=probe,
         ).collect()
         ivf_sets: dict[int, set] = {}
         for r in rows:
@@ -431,15 +435,14 @@ def test_ivf_with_trained_centroids_beats_seed_slice(spark):
         got = {(r["query_id"], r["neighbor_id"]) for r in ivf_df.collect()}
         return len(exact & got) / len(exact)
 
-    seed_recall = recall(
-        similarity.cosine_topk_ivf(emb, k=5, n_queries=8, n_probe=3)
-    )
-    trained = similarity.kmeans_train(emb, n_centroids=16, n_iter=3)
-    trained_recall = recall(
-        similarity.cosine_topk_ivf(
-            emb, k=5, n_queries=8, n_probe=3, centroids=trained
+    def ivf(cents):
+        return similarity.cosine_topk_ivf(
+            emb, similarity.ivf_assign(emb, cents), k=5, n_queries=8, n_probe=3
         )
-    )
+
+    seed_recall = recall(ivf(similarity.default_centroids(emb)))
+    trained = similarity.kmeans_train(emb, n_centroids=16, n_iter=3)
+    trained_recall = recall(ivf(trained))
     assert trained_recall >= seed_recall - 0.05  # never meaningfully worse
     assert trained_recall > 3 / 16  # beats the probed-fraction floor
 

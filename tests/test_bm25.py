@@ -25,6 +25,21 @@ def _docs(spark, texts):
     )
 
 
+def _scores(docs, query_terms):
+    """bm25_scores over a term relation built for exactly these terms."""
+    ts = textops.bm25_term_scores(dedup.token_table(docs), query_terms)
+    return textops.bm25_scores(ts, query_terms)
+
+
+def _topk(docs, queries=None, k=textops.BM25_TOPK_K):
+    """bm25_topk over a term relation built for the union of the
+    queries' terms."""
+    qs = textops.BM25_TOPK_QUERIES if queries is None else queries
+    terms = sorted({t for ts in qs.values() for t in ts})
+    ts = textops.bm25_term_scores(dedup.token_table(docs), terms)
+    return textops.bm25_topk(ts, queries, k)
+
+
 def _micro(x: float) -> int:
     return math.floor(x * 1_000_000.0 + 1e-9)
 
@@ -51,9 +66,8 @@ def test_hand_computed_tiny_corpus(spark):
     # tf: d0:a=2, d1:x=1, d4:a=1, d4:x=1 -> df: a=2, x=2
     out = {
         r["doc_id"]: r
-        for r in textops.bm25_scores(
-            _docs(spark, ["a b a", "x y", "b c", None, "a x"]),
-            query_terms=["a", "x"],
+        for r in _scores(
+            _docs(spark, ["a b a", "x y", "b c", None, "a x"]), ["a", "x"]
         ).collect()
     }
     # no-match and NULL-text docs are absent (score 0 by definition) ...
@@ -73,9 +87,7 @@ def test_rare_term_outscores_common_term(spark):
     texts = ["rare common", "common zz", "common yy", "common ww"]
     out = {
         r["doc_id"]: r["score"]
-        for r in textops.bm25_scores(
-            _docs(spark, texts), query_terms=["rare", "common"]
-        ).collect()
+        for r in _scores(_docs(spark, texts), ["rare", "common"]).collect()
     }
     # d0 carries rare+common, d1-d3 only common; all dl identical
     assert out[0] > out[1] == out[2] == out[3] > 0
@@ -85,40 +97,25 @@ def test_duplicate_and_unknown_query_terms(spark):
     """Term list is deduplicated; terms absent from the corpus contribute
     nothing (no NULL poisoning via the df join)."""
     docs = _docs(spark, ["a b", "b c"])
-    base = sorted(
-        map(tuple, textops.bm25_scores(docs, query_terms=["a"]).collect())
-    )
+    base = sorted(map(tuple, _scores(docs, ["a"]).collect()))
     noisy = sorted(
-        map(
-            tuple,
-            textops.bm25_scores(
-                docs, query_terms=["a", "a", "zzz_never_seen"]
-            ).collect(),
-        )
+        map(tuple, _scores(docs, ["a", "a", "zzz_never_seen"]).collect())
     )
     assert base == noisy
 
 
 def test_empty_query_raises(spark):
+    ts = textops.bm25_term_scores(dedup.token_table(_docs(spark, ["a"])), ["a"])
     with pytest.raises(ValueError):
-        textops.bm25_scores(_docs(spark, ["a"]), query_terms=[])
+        textops.bm25_scores(ts, [])
 
 
 def test_partitioning_invariance(spark, sf0001_dir):
     """Exact integer per-doc sums -> identical doubles at any partitioning."""
     docs = spark.read.parquet(f"{sf0001_dir}/documents.parquet")
     terms = list(textops.BM25_QUERY_TERMS)
-    base = sorted(
-        map(tuple, textops.bm25_scores(docs, query_terms=terms).collect())
-    )
-    repart = sorted(
-        map(
-            tuple,
-            textops.bm25_scores(
-                docs.repartition(13), query_terms=terms
-            ).collect(),
-        )
-    )
+    base = sorted(map(tuple, _scores(docs, terms).collect()))
+    repart = sorted(map(tuple, _scores(docs.repartition(13), terms).collect()))
     assert base == repart
     assert len(base) > 0
 
@@ -127,9 +124,7 @@ def test_driver_terms_hit_the_corpus(spark, sf0001_dir):
     """The registry's fixed term set must keep exercising both idf ends:
     every term present, and 'dup' genuinely rare (df < 20% of docs)."""
     docs = spark.read.parquet(f"{sf0001_dir}/documents.parquet")
-    rows = textops.bm25_scores(
-        docs, query_terms=list(textops.BM25_QUERY_TERMS)
-    ).collect()
+    rows = _scores(docs, list(textops.BM25_QUERY_TERMS)).collect()
     n_docs = docs.count()
     matched = {r["doc_id"] for r in rows}
     assert len(matched) > 0.5 * n_docs  # common terms reach most docs
@@ -211,7 +206,7 @@ def test_bm25_matches_independent_reference(spark, texts, terms):
     )
     got = {
         r["doc_id"]: r
-        for r in textops.bm25_scores(docs, query_terms=list(terms)).collect()
+        for r in _scores(docs, list(terms)).collect()
     }
     assert set(got) == set(expect)
     for i, (match, dl, score) in expect.items():
@@ -233,11 +228,9 @@ def test_bm25_topk_ranks_consistent_with_scores(spark, sf0001_dir):
     terms = list(textops.BM25_QUERY_TERMS)
     single = {
         r["doc_id"]: r
-        for r in textops.bm25_topk(
-            docs, queries={"q": tuple(terms)}, k=7
-        ).collect()
+        for r in _topk(docs, queries={"q": tuple(terms)}, k=7).collect()
     }
-    scores = textops.bm25_scores(docs, query_terms=terms).collect()
+    scores = _scores(docs, terms).collect()
     expect = sorted(scores, key=lambda r: (-r["score"], r["doc_id"]))[:7]
     assert [r["doc_id"] for r in sorted(single.values(), key=lambda r: r["rank"])] == [
         r["doc_id"] for r in expect
@@ -247,13 +240,11 @@ def test_bm25_topk_ranks_consistent_with_scores(spark, sf0001_dir):
         assert got["score"] == r["score"]
         assert got["n_match_terms"] == r["n_match_terms"]
 
-    multi = textops.bm25_topk(docs, k=5).collect()
+    multi = _topk(docs, k=5).collect()
     for qname, qterms in textops.BM25_TOPK_QUERIES.items():
         alone = {
             (r["doc_id"], r["rank"], r["score"])
-            for r in textops.bm25_topk(
-                docs, queries={qname: qterms}, k=5
-            ).collect()
+            for r in _topk(docs, queries={qname: qterms}, k=5).collect()
         }
         together = {
             (r["doc_id"], r["rank"], r["score"])
@@ -273,23 +264,23 @@ def test_bm25_topk_plan_pre_prunes_topk_map_side(spark, sf0001_dir):
     )
 
     docs = spark.read.parquet(f"{sf0001_dir}/documents.parquet")
-    plan = explain_str(textops.bm25_topk(docs), "simple")
+    plan = explain_str(_topk(docs), "simple")
     assert "WindowGroupLimit" in plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
 def test_bm25_topk_validates_queries(spark):
-    docs = _docs(spark, ["a b"])
+    ts = textops.bm25_term_scores(dedup.token_table(_docs(spark, ["a b"])), ["a"])
     with pytest.raises(ValueError):
-        textops.bm25_topk(docs, queries={})
+        textops.bm25_topk(ts, queries={})
     with pytest.raises(ValueError):
-        textops.bm25_topk(docs, queries={"q": ()})
+        textops.bm25_topk(ts, queries={"q": ()})
 
 
 def test_shared_term_scores_pass_is_value_identical(spark, sf0001_dir):
-    """The compute-once surface (term_scores=): scoring and retrieval
-    legs fed one shared relation over the UNION of their terms must
-    equal the standalone runs -- df is per-token and (N, avgdl) are
+    """Scoring and retrieval legs fed one shared term relation over the
+    UNION of their terms must equal runs over a relation built for
+    each leg's own terms -- df is per-token and (N, avgdl) are
     corpus-level, so extra tokens in the relation cannot leak into
     either result."""
     docs = spark.read.parquet(f"{sf0001_dir}/documents.parquet")
@@ -300,59 +291,38 @@ def test_shared_term_scores_pass_is_value_identical(spark, sf0001_dir):
     shared = textops.bm25_term_scores(
         dedup.token_table(docs), union_terms
     ).localCheckpoint(eager=True)
-    base_scores = sorted(
-        map(
-            tuple,
-            textops.bm25_scores(
-                docs, query_terms=list(textops.BM25_QUERY_TERMS)
-            ).collect(),
-        )
-    )
+    terms = list(textops.BM25_QUERY_TERMS)
+    base_scores = sorted(map(tuple, _scores(docs, terms).collect()))
     shared_scores = sorted(
-        map(
-            tuple,
-            textops.bm25_scores(
-                docs,
-                query_terms=list(textops.BM25_QUERY_TERMS),
-                term_scores=shared,
-            ).collect(),
-        )
+        map(tuple, textops.bm25_scores(shared, terms).collect())
     )
     assert base_scores == shared_scores
-    base_topk = sorted(map(tuple, textops.bm25_topk(docs).collect()))
-    shared_topk = sorted(
-        map(tuple, textops.bm25_topk(docs, term_scores=shared).collect())
-    )
+    base_topk = sorted(map(tuple, _topk(docs).collect()))
+    shared_topk = sorted(map(tuple, textops.bm25_topk(shared).collect()))
     assert base_topk == shared_topk
 
 
 def test_stale_or_mismatched_term_scores_raise(spark):
-    """The term_scores= contract guard (r10 verdict nit 1): a shared
-    relation built over TOO FEW terms, or at different k1/b, or with no
-    provenance at all must raise loudly instead of silently scoring
-    queries without their missing terms.  Schema-metadata only -- no
-    job runs for the check, and the provenance survives
-    localCheckpoint (the shared-pass materialization path)."""
+    """The term_scores contract guard: a relation built over TOO FEW
+    terms, or with no provenance at all, must raise loudly instead of
+    silently scoring queries without their missing terms.
+    Schema-metadata only -- no job runs for the check, and the
+    provenance survives localCheckpoint (the shared-pass
+    materialization path)."""
     docs = _docs(spark, ["a b dup", "b c", "a x"])
     small = textops.bm25_term_scores(
         dedup.token_table(docs), ["a"]
     ).localCheckpoint(eager=True)
     with pytest.raises(ValueError, match="does not cover"):
-        textops.bm25_scores(docs, query_terms=["a", "b"], term_scores=small)
+        textops.bm25_scores(small, ["a", "b"])
     with pytest.raises(ValueError, match="does not cover"):
-        textops.bm25_topk(
-            docs, queries={"q": ("a", "b")}, term_scores=small
-        )
+        textops.bm25_topk(small, queries={"q": ("a", "b")})
     full = textops.bm25_term_scores(dedup.token_table(docs), ["a", "b"])
-    with pytest.raises(ValueError, match="k1="):
-        textops.bm25_scores(
-            docs, query_terms=["a"], k1=2.0, term_scores=full
-        )
     stripped = full.select(
         "doc_id", "dl", "token", F.col("s_micro").cast("long").alias("s_micro")
     )
     with pytest.raises(ValueError, match="provenance"):
-        textops.bm25_scores(docs, query_terms=["a"], term_scores=stripped)
+        textops.bm25_scores(stripped, ["a"])
     # and the guarded happy path still works
-    ok = textops.bm25_scores(docs, query_terms=["a"], term_scores=full)
+    ok = textops.bm25_scores(full, ["a"])
     assert ok.count() > 0

@@ -122,7 +122,7 @@ def test_mining_plan_broadcasts_and_never_sort_merges(spark):
 
 
 def _routed(emb, n_probe=3):
-    idx = similarity.ivf_assign(emb, n_centroids=16, centroid_offset=100)
+    idx = similarity.ivf_assign(emb, similarity.default_centroids(emb))
     return similarity.contrastive_mining(
         emb, k=K, n_queries=NQ, index=idx, n_probe=n_probe,
         tag_suffix="_ivf",
@@ -176,7 +176,7 @@ def test_routed_legs_obey_mining_laws_within_cells(spark):
     anchor, and every mined neighbor lives in one of the anchor's
     probed cells."""
     emb = load_table(spark, SF, "embeddings")
-    idx = similarity.ivf_assign(emb, n_centroids=16, centroid_offset=100)
+    idx = similarity.ivf_assign(emb, similarity.default_centroids(emb))
     rows = similarity.contrastive_mining(
         emb, k=K, n_queries=NQ, index=idx, n_probe=3, tag_suffix="_ivf"
     ).collect()
@@ -217,7 +217,7 @@ def test_routed_plan_shape_and_probe_validation(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
-    idx = similarity.ivf_assign(emb)
+    idx = similarity.ivf_assign(emb, similarity.default_centroids(emb))
     import pytest
 
     with pytest.raises(ValueError, match="n_probe"):

@@ -21,6 +21,7 @@ from pyspark.sql.types import (
 )
 
 from nyc_taxi_dataset_analysis_apache_hive_spark.operators import (
+    dedup,
     retrieval,
     textops,
 )
@@ -110,9 +111,8 @@ def _rank_table(spark, rows, score_col):
 
 
 def test_hybrid_topk_matches_python_recompute(spark):
-    """Feed precomputed lexical/dense rank tables (the lexical=/dense=
-    compute-once hooks) and compare the fused top-k to a from-scratch
-    Python RRF over the same (query, doc_id, rank) rows."""
+    """Feed lexical/dense rank tables and compare the fused top-k to a
+    from-scratch Python RRF over the same (query, doc_id, rank) rows."""
     lex_rows = [
         ("qa", 10, 1),
         ("qa", 11, 2),
@@ -131,7 +131,7 @@ def test_hybrid_topk_matches_python_recompute(spark):
     dense = _rank_table(spark, den_rows, "cosine")
     got = {
         (r["query"], r["doc_id"]): (r["rank"], r["rrf_score"])
-        for r in retrieval.hybrid_topk(lexical=lexical, dense=dense, k=3).collect()
+        for r in retrieval.hybrid_topk(lexical, dense, k=3).collect()
     }
     acc: dict = {}
     for q, d, r in lex_rows + den_rows:
@@ -159,7 +159,7 @@ def test_hybrid_topk_degrades_to_surviving_leg(spark):
     dense = _rank_table(spark, [("qa", 30, 1)], "cosine")
     out = [
         (r["rank"], r["doc_id"], r["rrf_score"])
-        for r in retrieval.hybrid_topk(lexical=lexical, dense=dense, k=10)
+        for r in retrieval.hybrid_topk(lexical, dense, k=10)
         .filter(F.col("query") == "qz")
         .collect()
     ]
@@ -167,13 +167,6 @@ def test_hybrid_topk_degrades_to_surviving_leg(spark):
         (i, d, _micro(i) / 1_000_000.0) for i, (_, d, _r) in enumerate(lex_rows, 1)
     ]
     assert sorted(out) == expect
-
-
-def test_hybrid_topk_requires_inputs(spark):
-    with pytest.raises(ValueError):
-        retrieval.hybrid_topk()
-    with pytest.raises(ValueError):
-        retrieval.hybrid_topk(lexical=None, dense=None, docs=None, embeddings=None)
 
 
 def test_dense_topk_plan_pre_prunes_topk_map_side(spark, sf0001_dir):
@@ -266,14 +259,17 @@ def test_dense_topk_rejects_unknown_method(spark, toy_emb):
 
 
 def test_hybrid_topk_accepts_ivf_dense_leg(spark, sf0001_dir):
-    """The dense= hook composes with the scale path: fusing bm25_topk
-    with the IVF ranking yields a valid fused ranking whose non-dense
+    """The fusion composes with the scale path: fusing bm25_topk with
+    the IVF ranking yields a valid fused ranking whose non-dense
     evidence is unchanged (lexical-only queries rank identically)."""
     docs = spark.read.parquet(f"{sf0001_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf0001_dir}/embeddings.parquet")
-    lex = textops.bm25_topk(docs)
+    terms = sorted({t for ts in textops.BM25_TOPK_QUERIES.values() for t in ts})
+    lex = textops.bm25_topk(
+        textops.bm25_term_scores(dedup.token_table(docs), terms)
+    )
     ivf = retrieval.dense_topk(emb, method="ivf")
-    fused = retrieval.hybrid_topk(lexical=lex, dense=ivf)
+    fused = retrieval.hybrid_topk(lex, ivf)
     rows = fused.collect()
     assert rows
     for q, rs in _group(rows).items():
@@ -286,27 +282,3 @@ def _group(rows):
     for r in rows:
         out.setdefault(r["query"], []).append(r)
     return out
-
-
-def test_dense_topk_ivf_assigned_hook_is_equivalent(spark, sf0001_dir):
-    """The assigned= compute-once hook (the persisted admission state)
-    must produce the identical IVF ranking as on-the-fly assignment."""
-    from nyc_taxi_dataset_analysis_apache_hive_spark.operators import (
-        similarity,
-    )
-
-    emb = spark.read.parquet(f"{sf0001_dir}/embeddings.parquet")
-    cents = similarity.default_centroids(emb)
-    state = similarity.assign_to_centroids(emb, cents).localCheckpoint(
-        eager=True
-    )
-    on_the_fly = sorted(
-        map(tuple, retrieval.dense_topk(emb, method="ivf").collect())
-    )
-    via_state = sorted(
-        map(
-            tuple,
-            retrieval.dense_topk(emb, method="ivf", assigned=state).collect(),
-        )
-    )
-    assert on_the_fly == via_state

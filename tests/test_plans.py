@@ -271,11 +271,17 @@ def test_bm25_has_no_corpus_sized_join_side(spark):
     verdict item: the old dl join broadcast the CORPUS side below
     threshold and would have shuffled it above; a separate
     tf.groupBy(token) branch re-scanned the corpus a third time)."""
-    from nyc_taxi_dataset_analysis_apache_hive_spark.operators import textops
+    from nyc_taxi_dataset_analysis_apache_hive_spark.operators import (
+        dedup,
+        textops,
+    )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
+    terms = list(textops.BM25_QUERY_TERMS)
     plan = explain_str(
-        textops.bm25_scores(docs, query_terms=list(textops.BM25_QUERY_TERMS))
+        textops.bm25_scores(
+            textops.bm25_term_scores(dedup.token_table(docs), terms), terms
+        )
     )
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan

@@ -10,6 +10,26 @@ from nyc_taxi_dataset_analysis_apache_hive_spark.plans.explain import explain_st
 from nyc_taxi_dataset_analysis_apache_hive_spark.sources.readers import load_table
 
 
+def _pq(emb, **geometry):
+    return similarity.cosine_topk_pq(
+        similarity.pq_encode(emb, **geometry), k=5, n_queries=8
+    )
+
+
+def _ivf_index(emb):
+    return similarity.ivf_assign(emb, similarity.default_centroids(emb))
+
+
+def _ivfpq(emb, index=None, encoding=None):
+    return similarity.cosine_topk_ivfpq(
+        emb,
+        _ivf_index(emb) if index is None else index,
+        similarity.pq_encode(emb) if encoding is None else encoding,
+        k=5,
+        n_queries=8,
+    )
+
+
 def test_pq_recall_vs_bruteforce(spark, sf0001_dir):
     """Measured 0.975 at sf0.001 with the pinned defaults (m=16 x 4-dim
     subspaces, 32 codes, 128-candidate re-rank); gate at 0.8 to absorb
@@ -21,7 +41,7 @@ def test_pq_recall_vs_bruteforce(spark, sf0001_dir):
     }
     pq = {
         (r["query_id"], r["neighbor_id"])
-        for r in similarity.cosine_topk_pq(emb, k=5, n_queries=8).collect()
+        for r in _pq(emb).collect()
     }
     assert len(bf & pq) / len(bf) >= 0.8
 
@@ -37,7 +57,7 @@ def test_pq_cosines_are_exact(spark, sf0001_dir):
             emb, k=500, n_queries=8
         ).collect()
     }
-    for r in similarity.cosine_topk_pq(emb, k=5, n_queries=8).collect():
+    for r in _pq(emb).collect():
         assert exact[(r["query_id"], r["neighbor_id"])] == r["cosine"]
 
 
@@ -46,8 +66,8 @@ def test_pq_deterministic_and_shaped(spark, sf0001_dir):
     fixed-order ADC chain + id tie-breaks leave nothing order-dependent);
     every query returns exactly k rows ranked 1..k."""
     emb = load_table(spark, sf0001_dir, "embeddings")
-    a = sorted(map(tuple, similarity.cosine_topk_pq(emb, k=5, n_queries=8).collect()))
-    b = sorted(map(tuple, similarity.cosine_topk_pq(emb, k=5, n_queries=8).collect()))
+    a = sorted(map(tuple, _pq(emb).collect()))
+    b = sorted(map(tuple, _pq(emb).collect()))
     assert a == b
     per_q = {}
     for q, _, _, rank in a:
@@ -61,13 +81,13 @@ def test_pq_plan_shape(spark, sf0001_dir):
     broadcast hash join on (subspace, code) -- the corpus code table is
     never shuffled for candidate generation; no cartesian product."""
     emb = load_table(spark, sf0001_dir, "embeddings")
-    plan = explain_str(similarity.cosine_topk_pq(emb, k=5, n_queries=8))
+    plan = explain_str(_pq(emb))
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
 
 
 def test_pq_trained_codebook_plumbing(spark, sf0001_dir):
-    """A kmeans_train codebook drops in via ``codebook=``: output keeps
+    """A kmeans_train codebook drops into pq_encode's ``codebook=``: output keeps
     the k-per-query contract and recall stays useful (0.975 measured at
     sf0.001 -- equal to the slice codebook there; the sf0.1 comparison
     where k-means measured WORSE is documented in the operator)."""
@@ -82,7 +102,7 @@ def test_pq_trained_codebook_plumbing(spark, sf0001_dir):
         (r["query_id"], r["neighbor_id"])
         for r in similarity.cosine_topk_bruteforce(emb, k=5, n_queries=8).collect()
     }
-    got = similarity.cosine_topk_pq(emb, k=5, n_queries=8, codebook=cents).collect()
+    got = _pq(emb, codebook=cents).collect()
     pq = {(r["query_id"], r["neighbor_id"]) for r in got}
     assert len(bf & pq) / len(bf) >= 0.8
     assert len(got) == 40
@@ -102,9 +122,7 @@ def test_pq_per_subspace_training_beats_full_vector(spark, sf0001_dir):
     }
 
     def recall(codebook=None, **kw):
-        pq = similarity.cosine_topk_pq(
-            emb, k=5, n_queries=8, codebook=codebook, **kw
-        ).collect()
+        pq = _pq(emb, codebook=codebook, **kw).collect()
         return len(bf & {(r["query_id"], r["neighbor_id"]) for r in pq}) / len(bf)
 
     # trained codebooks live in the normalized space already -- the
@@ -139,11 +157,10 @@ def test_ivfpq_composition_tracks_ivf_recall(spark, sf0001_dir):
 
     ivf_r = rec(
         similarity.cosine_topk_ivf(
-            emb, k=5, n_queries=8, n_centroids=16, n_probe=3,
-            centroid_offset=100,
+            emb, _ivf_index(emb), k=5, n_queries=8, n_probe=3
         ).collect()
     )
-    ivfpq_rows = similarity.cosine_topk_ivfpq(emb, k=5, n_queries=8).collect()
+    ivfpq_rows = _ivfpq(emb).collect()
     assert rec(ivfpq_rows) >= ivf_r - 0.1
     # every returned neighbour must come from a probed list: ivfpq's
     # result set is a subset of what scoring the probed lists exactly
@@ -155,7 +172,7 @@ def test_ivfpq_neighbors_lie_in_probed_lists(spark, sf0001_dir):
     """Structural invariant of the routing: each returned neighbour's
     assigned centroid is one of its query's probed centroids."""
     emb = load_table(spark, sf0001_dir, "embeddings")
-    got = similarity.cosine_topk_ivfpq(emb, k=5, n_queries=8).collect()
+    got = _ivfpq(emb).collect()
     assert got
     # recompute routing exactly as the operator does
     cents = {
@@ -186,76 +203,40 @@ def test_ivfpq_neighbors_lie_in_probed_lists(spark, sf0001_dir):
 
 
 def test_shared_encoding_equals_standalone(spark, sf0001_dir):
-    """The r15 shared-encode path (pq_encode -> encoding=) reproduces the
-    standalone results exactly, for BOTH consumers -- one encode pass
-    serving pq and ivfpq is a plan change, never a result change."""
+    """One checkpointed pq_encode artifact serving BOTH consumers
+    reproduces each consumer's results over its own lazy encoding --
+    sharing the encode pass is a plan change, never a result change."""
     emb = load_table(spark, sf0001_dir, "embeddings")
     enc = similarity.pq_encode(emb, checkpoint=True)
-    a = sorted(
-        map(tuple, similarity.cosine_topk_pq(emb, k=5, n_queries=8).collect())
-    )
+    a = sorted(map(tuple, _pq(emb).collect()))
     b = sorted(
         map(
             tuple,
-            similarity.cosine_topk_pq(
-                k=5, n_queries=8, encoding=enc
-            ).collect(),
+            similarity.cosine_topk_pq(enc, k=5, n_queries=8).collect(),
         )
     )
     assert a == b
-    c = sorted(
-        map(
-            tuple, similarity.cosine_topk_ivfpq(emb, k=5, n_queries=8).collect()
-        )
-    )
-    d = sorted(
-        map(
-            tuple,
-            similarity.cosine_topk_ivfpq(
-                emb, k=5, n_queries=8, encoding=enc
-            ).collect(),
-        )
-    )
+    c = sorted(map(tuple, _ivfpq(emb).collect()))
+    d = sorted(map(tuple, _ivfpq(emb, encoding=enc).collect()))
     assert c == d
-
-
-def test_encoding_overload_guard_discipline(spark, sf0001_dir):
-    """encoding= fixes embeddings and every geometry parameter: passing
-    any of them alongside raises (the _UNSET discipline); passing
-    neither embeddings nor encoding raises too.  Geometry riding the
-    artifact means a consumer can never probe codes with a mismatched
-    (m, k_sub, dim) layout."""
-    import pytest
-
-    emb = load_table(spark, sf0001_dir, "embeddings")
-    enc = similarity.pq_encode(emb)
-    with pytest.raises(ValueError):
-        similarity.cosine_topk_pq(emb, encoding=enc)
-    with pytest.raises(ValueError):
-        similarity.cosine_topk_pq(k=5, n_queries=8, m=16, encoding=enc)
-    with pytest.raises(ValueError):
-        similarity.cosine_topk_pq(codebook=None, encoding=enc)
-    with pytest.raises(ValueError):
-        similarity.cosine_topk_pq()
-    assert enc.m == 16 and enc.k_sub == 32 and enc.dim == 64
 
 
 def test_shared_ivf_index_equals_standalone(spark, sf0001_dir):
-    """The r15 shared IVF routing (ivf_assign -> index=) reproduces the
-    standalone results exactly for BOTH consumers -- including ivfpq,
-    whose local election omits the payload key (the payload only breaks
-    ties that already fix cent_id, so projecting (vec_id, cent_id) from
-    the payload-riding shared assignment elects identical cells)."""
+    """One ivf_assign index with its assignment materialized, shared by
+    BOTH consumers, reproduces each consumer's results over its own
+    lazy index -- including ivfpq, which projects (vec_id, cent_id) from
+    the payload-riding assignment (the payload only breaks ties that
+    already fix cent_id)."""
     emb = load_table(spark, sf0001_dir, "embeddings")
-    idx = similarity.ivf_assign(
-        emb, n_centroids=16, centroid_offset=100, checkpoint=True
+    lazy = _ivf_index(emb)
+    idx = similarity.IVFIndex(
+        lazy.cents, lazy.assigned.localCheckpoint(eager=True)
     )
     a = sorted(
         map(
             tuple,
             similarity.cosine_topk_ivf(
-                emb, k=5, n_queries=8, n_centroids=16, n_probe=3,
-                centroid_offset=100,
+                emb, _ivf_index(emb), k=5, n_queries=8, n_probe=3
             ).collect(),
         )
     )
@@ -263,28 +244,11 @@ def test_shared_ivf_index_equals_standalone(spark, sf0001_dir):
         map(
             tuple,
             similarity.cosine_topk_ivf(
-                emb, k=5, n_queries=8, n_probe=3, index=idx
+                emb, idx, k=5, n_queries=8, n_probe=3
             ).collect(),
         )
     )
     assert a == b
-    c = sorted(
-        map(
-            tuple, similarity.cosine_topk_ivfpq(emb, k=5, n_queries=8).collect()
-        )
-    )
-    d = sorted(
-        map(
-            tuple,
-            similarity.cosine_topk_ivfpq(
-                emb, k=5, n_queries=8, index=idx
-            ).collect(),
-        )
-    )
+    c = sorted(map(tuple, _ivfpq(emb).collect()))
+    d = sorted(map(tuple, _ivfpq(emb, index=idx).collect()))
     assert c == d
-    import pytest
-
-    with pytest.raises(ValueError):
-        similarity.cosine_topk_ivf(emb, n_centroids=16, index=idx)
-    with pytest.raises(ValueError):
-        similarity.cosine_topk_ivfpq(emb, centroids=None, index=idx)

@@ -61,7 +61,11 @@ def test_fusion_matches_python_recompute_on_k2_shape(spark, sf0001_dir):
     emb = spark.read.parquet(f"{sf0001_dir}/embeddings.parquet")
     lsh = similarity.cosine_topk_lsh(emb, k=5, n_queries=8, n_bits=4)
     ivf = similarity.cosine_topk_ivf(
-        emb, k=5, n_queries=8, n_centroids=16, n_probe=3, centroid_offset=100
+        emb,
+        similarity.ivf_assign(emb, similarity.default_centroids(emb)),
+        k=5,
+        n_queries=8,
+        n_probe=3,
     )
     allm = lsh.select("query_id", "neighbor_id", "rank").unionByName(
         ivf.select("query_id", "neighbor_id", "rank")

@@ -1,7 +1,7 @@
 """Incremental SemDeDup admission (similarity.semantic_admit_batch):
 hand-computed golden verdicts, zero-norm/NULL/empty-cell policies,
-state extension, tie-break determinism, and history_state-path
-equivalence (the admit_batch_neardup persisted-signatures precedent)."""
+state extension through persisted states (the admit_batch_neardup
+persisted-signatures precedent), and tie-break determinism."""
 
 from __future__ import annotations
 
@@ -67,6 +67,23 @@ def batch(spark):
     )
 
 
+def _admit(history_state, batch, cents, threshold=0.9):
+    """Admit ``batch`` against an assignment state under ``cents``."""
+    return similarity.semantic_admit_batch(
+        batch,
+        history_state,
+        similarity.assign_to_centroids(batch, cents),
+        threshold,
+    )
+
+
+def _admit_raw(history, batch, cents, threshold=0.9):
+    """Admit ``batch`` against raw ``history`` embeddings."""
+    return _admit(
+        similarity.assign_to_centroids(history, cents), batch, cents, threshold
+    )
+
+
 def _cos(a, b):
     na = math.sqrt(sum(x * x for x in a))
     nb = math.sqrt(sum(x * x for x in b))
@@ -74,9 +91,7 @@ def _cos(a, b):
 
 
 def test_admission_golden(spark, cents, history, batch):
-    res = similarity.semantic_admit_batch(
-        history, batch, threshold=0.9, centroids=cents
-    )
+    res = _admit_raw(history, batch, cents)
     rep = {r["vec_id"]: r for r in res.report.collect()}
     assert set(rep) == {20, 21, 22, 23, 24}
     # 20: best match 10 at cosine ~0.9998 >= 0.9 -> rejected
@@ -109,54 +124,36 @@ def test_admission_golden(spark, cents, history, batch):
 def test_ties_break_to_lowest_history_id(spark, cents):
     history = _emb(spark, [(31, [0.0, 1.0]), (30, [0.0, 1.0])])
     batch = _emb(spark, [(40, [0.0, 2.0])])
-    res = similarity.semantic_admit_batch(
-        history, batch, threshold=0.999, centroids=cents
-    )
+    res = _admit_raw(history, batch, cents, 0.999)
     r = res.report.collect()[0]
     assert (r["match_id"], r["admitted"]) == (30, False)
 
 
 def test_history_state_path_is_equivalent(spark, cents, history, batch):
-    """Persisted-state admission (history_state=) must produce the
-    identical report and state as on-the-fly history assignment."""
-    via_raw = similarity.semantic_admit_batch(
-        history, batch, threshold=0.9, centroids=cents
+    """A materialized (checkpointed) history state -- the persisted
+    posture the k3 entry runs -- must produce the identical report and
+    state as the lazy assignment plan."""
+    lazy = _admit_raw(history, batch, cents)
+    persisted = similarity.assign_to_centroids(history, cents).localCheckpoint(
+        eager=True
     )
-    persisted = similarity.assign_to_centroids(history, cents)
-    via_state = similarity.semantic_admit_batch(
-        None, batch, threshold=0.9, centroids=cents, history_state=persisted
-    )
+    via_state = _admit(persisted, batch, cents)
     key = lambda r: r["vec_id"]  # noqa: E731
-    assert sorted(via_raw.report.collect(), key=key) == sorted(
+    assert sorted(lazy.report.collect(), key=key) == sorted(
         via_state.report.collect(), key=key
     )
-    assert {tuple(r[:2]) for r in via_raw.state.select("vec_id", "cent_id").collect()} == {
+    assert {tuple(r[:2]) for r in lazy.state.select("vec_id", "cent_id").collect()} == {
         tuple(r[:2]) for r in via_state.state.select("vec_id", "cent_id").collect()
     }
-
-
-def test_requires_history_or_state_and_centroid_source(spark, cents, batch):
-    with pytest.raises(ValueError, match="history"):
-        similarity.semantic_admit_batch(None, batch, centroids=cents)
-    with pytest.raises(ValueError, match="centroids"):
-        similarity.semantic_admit_batch(None, batch, history_state=batch)
 
 
 def test_admitted_state_feeds_next_batch(spark, cents, history):
     """Sequential admissions: a vector rejected ONLY because batch 1
     admitted its near-copy proves the state actually extends."""
     b1 = _emb(spark, [(21, [1.0, -1.0])])
-    res1 = similarity.semantic_admit_batch(
-        history, b1, threshold=0.9, centroids=cents
-    )
+    res1 = _admit_raw(history, b1, cents)
     b2 = _emb(spark, [(50, [1.0, -1.01])])
-    res2 = similarity.semantic_admit_batch(
-        None,
-        b2,
-        threshold=0.9,
-        centroids=cents,
-        history_state=res1.state,
-    )
+    res2 = _admit(res1.state, b2, cents)
     r = res2.report.collect()[0]
     assert r["admitted"] is False and r["match_id"] == 21
 
@@ -168,9 +165,7 @@ def test_duplicate_batch_ids_keep_multiset_semantics(spark, cents, history):
     distinct id (assignment collapses duplicates -- a second identical
     row would only double downstream join work)."""
     batch = _emb(spark, [(21, [1.0, -1.0]), (21, [1.0, -1.0])])
-    res = similarity.semantic_admit_batch(
-        history, batch, threshold=0.9, centroids=cents
-    )
+    res = _admit_raw(history, batch, cents)
     rows = res.report.collect()
     assert len(rows) == 2
     assert rows[0] == rows[1]
@@ -284,12 +279,7 @@ def test_admission_matches_python_reference(
         [(c, None if v is None else [float(x) for x in v]) for c, v in cents],
         "cent_id long, cent_emb array<double>",
     )
-    res = similarity.semantic_admit_batch(
-        _emb(spark, history),
-        _emb(spark, batch),
-        threshold=threshold,
-        centroids=cents_df,
-    )
+    res = _admit_raw(_emb(spark, history), _emb(spark, batch), cents_df, threshold)
     got = {
         r["vec_id"]: (r["cent_id"], r["match_id"], r["cosine"], r["admitted"])
         for r in res.report.collect()
@@ -298,47 +288,24 @@ def test_admission_matches_python_reference(
 
 
 def test_batch_state_hook_is_equivalent(spark, cents, history, batch):
-    """batch_state= (a pre-sliced shared assignment pass, the k3 entry's
-    posture) must produce the identical report/state as on-the-fly
-    batch assignment."""
-    direct = similarity.semantic_admit_batch(
-        history, batch, threshold=0.9, centroids=cents
-    )
-    pre = similarity.assign_to_centroids(batch, cents)
-    via_hook = similarity.semantic_admit_batch(
-        history, batch, threshold=0.9, centroids=cents, batch_state=pre
+    """batch_state sliced from ONE shared assignment pass over history
+    and batch together (the k3 entry's posture) must produce the
+    identical report/state as the batch's own assignment."""
+    direct = _admit_raw(history, batch, cents)
+    shared = similarity.assign_to_centroids(
+        history.unionByName(batch), cents
+    ).localCheckpoint(eager=True)
+    batch_ids = [r["vec_id"] for r in batch.select("vec_id").collect()]
+    via_slices = similarity.semantic_admit_batch(
+        batch,
+        shared.filter(~F.col("vec_id").isin(batch_ids)),
+        shared.filter(F.col("vec_id").isin(batch_ids)),
+        0.9,
     )
     key = lambda r: r["vec_id"]  # noqa: E731
     assert sorted(direct.report.collect(), key=key) == sorted(
-        via_hook.report.collect(), key=key
+        via_slices.report.collect(), key=key
     )
-
-
-def test_semantic_dedup_assigned_hook_is_equivalent(spark, cents, history):
-    """semantic_dedup's assigned= compute-once hook: identical clusters
-    and keep-list with and without the precomputed assignment."""
-    emb = _emb(
-        spark,
-        [
-            (10, [1.0, 0.1]),
-            (11, [1.0, 0.11]),
-            (12, [0.1, 1.0]),
-            (13, [0.0, 0.0]),
-        ],
-    )
-    direct = sorted(
-        map(tuple, similarity.semantic_dedup(emb, 0.9, centroids=cents).collect())
-    )
-    pre = similarity.assign_to_centroids(emb, cents)
-    via_hook = sorted(
-        map(
-            tuple,
-            similarity.semantic_dedup(
-                emb, 0.9, centroids=cents, assigned=pre
-            ).collect(),
-        )
-    )
-    assert direct == via_hook and direct
 
 
 def test_duplicate_ids_with_different_payloads_are_deterministic(
@@ -363,14 +330,10 @@ def test_readmitted_id_does_not_duplicate_state(spark, cents, history):
     create a second state row: the corpus state is append-only keyed by
     vec_id, first admission wins."""
     b1 = _emb(spark, [(60, [1.0, -1.0])])
-    res1 = similarity.semantic_admit_batch(
-        history, b1, threshold=0.9, centroids=cents
-    )
+    res1 = _admit_raw(history, b1, cents)
     # same id re-arrives pointing elsewhere (cell 101, far from 11)
     b2 = _emb(spark, [(60, [-0.9, 1.0])])
-    res2 = similarity.semantic_admit_batch(
-        None, b2, threshold=0.9, centroids=cents, history_state=res1.state
-    )
+    res2 = _admit(res1.state, b2, cents)
     rep = res2.report.collect()[0]
     assert rep["admitted"] is True
     rows = [r for r in res2.state.collect() if r["vec_id"] == 60]
@@ -386,25 +349,15 @@ def test_persisted_state_lifecycle_roundtrip(spark, cents, history, tmp_path):
     batch-1 ADMISSION -- must reject it based on what the files say."""
     b1 = _emb(spark, [(20, [1.0, 0.12]), (21, [1.0, -1.0])])
     b2 = _emb(spark, [(30, [1.0, -0.98]), (31, [0.3, 1.0])])
-    r1 = similarity.semantic_admit_batch(
-        history, b1, threshold=0.9, centroids=cents
-    )
-    mem = similarity.semantic_admit_batch(
-        None, b2, threshold=0.9, centroids=cents, history_state=r1.state
-    )
+    r1 = _admit_raw(history, b1, cents)
+    mem = _admit(r1.state, b2, cents)
     want = {
         (r["vec_id"], r["admitted"], r["match_id"], r["cosine"])
         for r in mem.report.collect()
     }
     path = str(tmp_path / "admit_state")
     r1.state.write.parquet(path)
-    filed = similarity.semantic_admit_batch(
-        None,
-        b2,
-        threshold=0.9,
-        centroids=cents,
-        history_state=spark.read.parquet(path),
-    )
+    filed = _admit(spark.read.parquet(path), b2, cents)
     got = {
         (r["vec_id"], r["admitted"], r["match_id"], r["cosine"])
         for r in filed.report.collect()
@@ -438,25 +391,15 @@ def test_persisted_state_lifecycle_at_sf01(spark, tmp_path):
     hist = emb.filter(F.col("vec_id") % 4 == 0)
     b1 = emb.filter(F.col("vec_id") % 4 == 1)
     b2 = emb.filter(F.col("vec_id") % 4 == 2)
-    r1 = similarity.semantic_admit_batch(
-        hist, b1, threshold=0.35, centroids=cents
-    )
-    mem = similarity.semantic_admit_batch(
-        None, b2, threshold=0.35, centroids=cents, history_state=r1.state
-    )
+    r1 = _admit_raw(hist, b1, cents, 0.35)
+    mem = _admit(r1.state, b2, cents, 0.35)
     want = {
         (r["vec_id"], r["admitted"], r["match_id"], r["cosine"])
         for r in mem.report.collect()
     }
     path = str(tmp_path / "admit_state01")
     r1.state.write.parquet(path)
-    filed = similarity.semantic_admit_batch(
-        None,
-        b2,
-        threshold=0.35,
-        centroids=cents,
-        history_state=spark.read.parquet(path),
-    )
+    filed = _admit(spark.read.parquet(path), b2, cents, 0.35)
     got = {
         (r["vec_id"], r["admitted"], r["match_id"], r["cosine"])
         for r in filed.report.collect()
@@ -479,12 +422,7 @@ def test_all_hot_cell_admission_exact_and_equijoin(spark):
         [(c, [float(x) for x in v]) for c, v in cents],
         "cent_id long, cent_emb array<double>",
     )
-    res = similarity.semantic_admit_batch(
-        _emb(spark, history),
-        _emb(spark, batch),
-        threshold=0.9,
-        centroids=cents_df,
-    )
+    res = _admit_raw(_emb(spark, history), _emb(spark, batch), cents_df)
     rows = res.report.collect()
     got = {
         r["vec_id"]: (r["cent_id"], r["match_id"], r["cosine"], r["admitted"])

@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from nyc_taxi_dataset_analysis_apache_hive_spark.operators import similarity
+from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup, similarity
 from nyc_taxi_dataset_analysis_apache_hive_spark.sources.readers import load_table
 from tests.parity import compare, duckdb_conn
 
@@ -18,7 +18,7 @@ _COS_VC = (
     " * sqrt(list_dot_product(c.cent_emb, c.cent_emb)), 0), 6)"
 )
 
-# Same stages as similarity.semantic_dedup, replayed in DuckDB: fixed-slice
+# Same stages as _semantic_dedup below, replayed in DuckDB: fixed-slice
 # centroids -> max-cosine assignment -> within-cell pairs -> recursive-CTE
 # connected components -> keep-list.
 _ORACLE = f"""
@@ -70,16 +70,30 @@ _ORACLE = f"""
 """
 
 
+def _semantic_dedup(emb, threshold, cents=None):
+    """The full SemDeDup pipeline: assign -> within-cell near pairs ->
+    connected components -> keep-list election."""
+    if cents is None:
+        cents = similarity.default_centroids(emb)
+    assigned = similarity.assign_to_centroids(emb, cents)
+    comp = dedup.connected_components(
+        similarity.semantic_near_pairs(assigned, threshold),
+        a_col="id_a",
+        b_col="id_b",
+    )
+    return similarity.semantic_dedup(emb, comp)
+
+
 def test_semantic_dedup_oracle_parity(spark, sf0001_dir):
     emb = load_table(spark, sf0001_dir, "embeddings")
-    got = similarity.semantic_dedup(emb, threshold=0.35)
+    got = _semantic_dedup(emb, 0.35)
     con = duckdb_conn(sf0001_dir)
     assert compare(got, con, _ORACLE, "semantic_dedup") == []
 
 
 def test_semantic_dedup_covers_every_vector_and_finds_dups(spark, sf0001_dir):
     emb = load_table(spark, sf0001_dir, "embeddings")
-    got = similarity.semantic_dedup(emb, threshold=0.35)
+    got = _semantic_dedup(emb, 0.35)
     rows = {r["vec_id"]: r for r in got.toLocalIterator()}
     assert len(rows) == emb.count()  # every vector classified
     dropped = [r for r in rows.values() if not r["keep"]]
@@ -107,9 +121,7 @@ def test_semantic_dedup_planted_clique(spark):
     )
     got = {
         r["vec_id"]: (r["sem_cluster"], r["keep"])
-        for r in similarity.semantic_dedup(
-            emb, threshold=0.99, centroids=cents
-        ).collect()
+        for r in _semantic_dedup(emb, 0.99, cents).collect()
     }
     assert got == {0: (0, True), 1: (0, False), 2: (0, False), 3: (3, True)}
 
@@ -120,7 +132,7 @@ def test_semantic_dedup_pair_join_is_equi_join(spark, sf0001_dir):
     cell key -- never a corpus-x-corpus cartesian."""
     emb = load_table(spark, sf0001_dir, "embeddings")
     plan = (
-        similarity.semantic_dedup(emb, threshold=0.35)
+        _semantic_dedup(emb, 0.35)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -221,36 +233,6 @@ def test_partitioned_components_long_chain_and_isolation(spark):
     assert all(lbl[i] == 100 for i in range(100, 161))
     assert lbl[500] == lbl[501] == lbl[502] == 500
     assert len(lbl) == 64
-
-
-def test_components_with_threshold_or_ckdir_raises(spark, sf001_dir):
-    """components= supplies precomputed labels, so stating a threshold
-    or a stage-1 parameter alongside must raise instead of being
-    silently ignored (the curate_corpus pairs= guard, r13)."""
-    from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup
-
-    emb = load_table(spark, sf001_dir, "embeddings")
-    assigned = similarity.assign_to_centroids(
-        emb, similarity.default_centroids(emb)
-    ).localCheckpoint(eager=True)
-    comp = dedup.partitioned_components(
-        similarity.semantic_near_pairs(assigned, threshold=0.35)
-    )
-    with pytest.raises(ValueError, match="components="):
-        similarity.semantic_dedup(emb, threshold=0.35, components=comp)
-    with pytest.raises(ValueError, match="components="):
-        # stage-1 parameters are dead with components= too
-        similarity.semantic_dedup(emb, assigned=assigned, components=comp)
-    # components= alone: equal to the self-computed pipeline
-    via_hook = {
-        tuple(r)
-        for r in similarity.semantic_dedup(emb, components=comp).collect()
-    }
-    direct = {
-        tuple(r)
-        for r in similarity.semantic_dedup(emb, threshold=0.35).collect()
-    }
-    assert via_hook == direct and direct
 
 
 def test_partitioned_components_hot_group_raises(spark):

@@ -118,11 +118,10 @@ def _three_way_verdicts(spark, history, batch, cents, vecs_dir, sink_name):
     )
     operator = _verdict_map(
         similarity.semantic_admit_batch(
-            None,
             batch,
+            state,
+            similarity.assign_to_centroids(batch, cents),
             threshold=THRESH,
-            centroids=cents,
-            history_state=state,
         ).report.collect()
     )
     return got, analog, operator
@@ -231,7 +230,7 @@ def test_null_element_centroid_is_skipped_not_crashed(spark):
         batch, state, cents, threshold=0.99
     ).collect()[0]
     op = similarity.semantic_admit_batch(
-        None, batch, threshold=0.99, centroids=cents, history_state=state
+        batch, state, similarity.assign_to_centroids(batch, cents), 0.99
     ).report.collect()[0]
     assert (got["cent_id"], got["match_id"], got["admitted"]) == (
         op["cent_id"],
@@ -254,7 +253,7 @@ def test_duplicate_arrivals_collapse_to_one_verdict(spark, emb_split):
     analog = curation.semantic_admission_batch(dup, state, cents).collect()
     assert len(analog) == 1
     op = similarity.semantic_admit_batch(
-        None, dup, centroids=cents, history_state=state
+        dup, state, similarity.assign_to_centroids(dup, cents)
     ).report.collect()
     assert len(op) == 2
 

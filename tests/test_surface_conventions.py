@@ -369,29 +369,44 @@ def test_optional_import_checker_catches_each_spelling():
 
 
 # ---------------------------------------------------------------------------
-# Rule 6: one input per text operator.  A word-token operator takes the
+# Rule 6: one input per operator.  A word-token operator takes the
 # token table (or a frame derived from it); the caller that holds raw
-# documents builds it with dedup.token_table.  A signature carrying both
-# a raw-text input and a precomputed one is the two-spellings overload,
-# with its raise-if-both guard.
+# documents builds it with dedup.token_table.  A search or election takes
+# the artifact a builder returns (ivf_assign, pq_encode, an
+# assign_to_centroids state, a component table); raw geometry is spelled
+# only in the builders.  A signature carrying both spellings is the
+# two-spellings overload, with its raise-if-both guard.
 # ---------------------------------------------------------------------------
 
 _RAW_INPUTS = {"docs", "corpus", "probes", "text_col"}
 _PRECOMPUTED_INPUTS = {
-    "toks", "corpus_toks", "probe_toks", "grams", "runs", "counts", "per_doc"
+    "toks", "corpus_toks", "probe_toks", "grams", "runs", "counts", "per_doc",
+    "term_scores", "lexical", "dense",
+}
+_GEOMETRY_INPUTS = {
+    "n_centroids", "centroid_offset", "centroids", "m", "k_sub",
+    "codebook_offset", "dim", "codebook", "codebook_prenormalized", "history",
+}
+_ARTIFACT_INPUTS = {
+    "index", "encoding", "assigned", "components", "history_state",
+    "batch_state",
 }
 
 
 def dual_input_signatures(source: str, filename: str) -> list[str]:
     """``file:line name`` for every function in ``source`` whose
-    parameters include both a raw-text input and a precomputed one."""
+    parameters include both a raw input and a precomputed one: raw text
+    next to a token-derived frame, or raw geometry next to a built
+    artifact."""
     hits = []
     for node in ast.walk(ast.parse(source)):
         if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             continue
         a = node.args
         names = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
-        if names & _RAW_INPUTS and names & _PRECOMPUTED_INPUTS:
+        if (names & _RAW_INPUTS and names & _PRECOMPUTED_INPUTS) or (
+            names & _GEOMETRY_INPUTS and names & _ARTIFACT_INPUTS
+        ):
             hits.append(f"{filename}:{node.lineno} {node.name}")
     return hits
 
@@ -401,8 +416,8 @@ def test_text_operators_take_one_input():
     for p in sorted(_PKG.rglob("*.py")):
         bad += dual_input_signatures(p.read_text(), p.relative_to(_PKG).as_posix())
     assert not bad, (
-        f"raw-text and precomputed inputs on one signature (build the "
-        f"input with dedup.token_table instead): {bad}"
+        f"raw and precomputed inputs on one signature (build the input "
+        f"with dedup.token_table or the artifact's builder instead): {bad}"
     )
 
 
@@ -427,3 +442,29 @@ def test_dual_input_checker_catches_each_pairing():
     ]
     assert dual_input_signatures("def k(toks, runs, n=1):\n    pass\n", "m.py") == []
     assert dual_input_signatures("def k(docs, text_col='t'):\n    pass\n", "m.py") == []
+    hooks = "def b(docs, query_terms, *, term_scores=None):\n    pass\n"
+    assert dual_input_signatures(hooks, "m.py") == ["m.py:1 b"]
+    fusion = "def f(docs=None, lexical=None, dense=None):\n    pass\n"
+    assert dual_input_signatures(fusion, "m.py") == ["m.py:1 f"]
+
+
+def test_dual_input_checker_catches_geometry_next_to_artifact():
+    """Self-test for the geometry half: each raw-geometry parameter next
+    to a built artifact trips the checker; a builder (geometry only) and
+    a search (artifact only) do not."""
+    ivf = "def s(emb, k=5, n_centroids=16, *, index=None):\n    pass\n"
+    assert dual_input_signatures(ivf, "operators/m.py") == ["operators/m.py:1 s"]
+    pq = "def s(k=5, m=16, codebook=None, *, encoding=None):\n    pass\n"
+    assert dual_input_signatures(pq, "m.py") == ["m.py:1 s"]
+    admit = "def a(history, batch, history_state=None):\n    pass\n"
+    assert dual_input_signatures(admit, "m.py") == ["m.py:1 a"]
+    dedup = "def d(emb, centroids=None, components=None):\n    pass\n"
+    assert dual_input_signatures(dedup, "m.py") == ["m.py:1 d"]
+    state = "def r(emb, centroid_offset=100, assigned=None):\n    pass\n"
+    assert dual_input_signatures(state, "m.py") == ["m.py:1 r"]
+    assert dual_input_signatures(
+        "def b(emb, m=16, k_sub=32, dim=64, codebook=None):\n    pass\n", "m.py"
+    ) == []
+    assert dual_input_signatures(
+        "def s(emb, index, encoding, k=5):\n    pass\n", "m.py"
+    ) == []

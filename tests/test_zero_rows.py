@@ -1,7 +1,9 @@
 """Degenerate input: entries on zero-row tables must still match their
 DuckDB oracles (j5's Z-order leg once took min() over the footer stats of
 an empty lineitem slice; a10's KLL leg once read a rank off the empty
-merged sketch, and its theta leg dropped its exact rows)."""
+merged sketch, and its theta leg dropped its exact rows).  k1, k2, k3 and
+tv1 build the IVF/PQ indexes, semantic-dedup labels and BM25/hybrid
+retrieval tables, so an empty corpus exercises every artifact builder."""
 
 from __future__ import annotations
 
@@ -17,7 +19,17 @@ from nyc_taxi_dataset_analysis_apache_hive_spark.schema import TESTDATA_TABLES
 from tests.parity import compare, duckdb_conn
 
 
-@pytest.mark.parametrize("name", ["j5_join_surface", "a10_distinct_counts"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "j5_join_surface",
+        "a10_distinct_counts",
+        "k1_knn_bruteforce",
+        "k2_ann_lsh_ivf",
+        "k3_embedding_near_pairs",
+        "tv1_text_stats",
+    ],
+)
 def test_entry_on_zero_row_tables(spark, sf0001_dir, tmp_path, name):
     # every table, so the DuckDB views resolve
     for t in TESTDATA_TABLES:
