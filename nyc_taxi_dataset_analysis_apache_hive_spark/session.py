@@ -31,10 +31,6 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.ansi.enabled": "false",
-    # Some feeds (events) write parquet TIMESTAMP(NANOS), which the Spark
-    # reader rejects; read as epoch-nanos long and convert in the reader
-    # (lossless: values are microsecond-aligned; verified in testdata).
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Read parquet naive timestamps as TimestampType (session-TZ UTC), not
     # TIMESTAMP_NTZ, so parquet and schema'd CSV scans of the same data get
     # identical schemas (values agree because the session TZ is pinned UTC).
@@ -170,6 +166,13 @@ def get_spark(
         # Arrow for the (rare) Pandas-UDF extension path and fast toPandas.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # Static, so builder-only (spark.conf.set raises
+        # CANNOT_MODIFY_STATIC_CONFIG) and read once per process by
+        # PySpark: with it on, every functions.* call and Column operator
+        # also walks the Python stack and sets/clears the JVM's
+        # PySparkCurrentOrigin, about 7 extra py4j round trips each, to put
+        # the Python call site into runtime errors' query context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

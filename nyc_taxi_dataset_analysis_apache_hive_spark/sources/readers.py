@@ -13,9 +13,9 @@ cleaned-table round trip.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
-from ..schema import TESTDATA_TABLES, TRIP_SCHEMA
+from ..schema import TESTDATA_SCHEMAS, TESTDATA_TABLES, TRIP_SCHEMA
 
 
 def read_trips_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -42,43 +42,20 @@ def read_trips_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-#: Columns written as parquet TIMESTAMP(NANOS): read via nanosAsLong and
-#: rebuilt as micro-precision timestamps (``ts div 1000`` is exact -- long
-#: integer division; a double division would lose bits above 2^53).
-_NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver testdata table (``{sf_dir}/{name}.parquet``)."""
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
-    for col in _NANOS_TS_COLS.get(name, ()):
-        if col in df.columns and dict(df.dtypes)[col] == "bigint":
-            df = df.withColumn(
-                col, F.timestamp_micros(F.expr(f"`{col}` div 1000"))
-            )
-    return df
+    """Load one testdata table (``{sf_dir}/{name}.parquet``) with its
+    declared schema, so the read runs no footer-inference job."""
+    return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(
+        f"{sf_dir.rstrip('/')}/{name}.parquet"
+    )
 
 
 #: documents-table schema for JSONL ingest, with the named corrupt-record
 #: column appended (PERMISSIVE mode routes unparseable lines there).
-def _documents_jsonl_schema():
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    return StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("n_chars", LongType()),
-            StructField("_corrupt_record", StringType()),
-        ]
-    )
+_DOCUMENTS_JSONL_SCHEMA = StructType(
+    TESTDATA_SCHEMAS["documents"].fields
+    + [StructField("_corrupt_record", StringType())]
+)
 
 
 def read_documents_jsonl(
@@ -107,7 +84,7 @@ def read_documents_jsonl(
     before a corrupt-only count, or reference a data column alongside.
     """
     if schema is None:
-        schema = _documents_jsonl_schema()
+        schema = _DOCUMENTS_JSONL_SCHEMA
     return (
         spark.read.schema(schema)
         .option("mode", "PERMISSIVE")

@@ -14,18 +14,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..schema import TESTDATA_SCHEMAS
+
 
 def read_events_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    """File-based stream over an events parquet directory.
+    """File-based stream over a directory of events-table parquet files.
 
-    In production this is the Kafka/file drop-zone reader; the parquet
-    schema is taken from the static table (readStream requires a schema).
+    In production this is the Kafka/file drop-zone reader.  readStream
+    requires a schema: the events table's declared one, so opening the
+    stream runs no inference job over the directory.
     """
-    schema = spark.read.parquet(path).schema
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(TESTDATA_SCHEMAS["events"])
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(path)
     )

@@ -136,8 +136,8 @@ def _build_adversarial_corpus(src_dir: str, dst_dir: str) -> None:
         )
         for e, ts, u, et, v, p in ADV_EVENTS
     )
-    # CAST(ts AS TIMESTAMP) converts the source TIMESTAMP(NANOS) to
-    # micros, exercising load_table's non-nanos branch as a bonus
+    # CAST(ts AS TIMESTAMP) keeps the written ts TIMESTAMP (micros), the
+    # type load_table declares for events
     con.execute(
         f"""
         COPY (
