@@ -568,17 +568,22 @@ def run_vec_streams(spark, sf_dir: str, n_slices: int):
                 ),
                 vecs_dir,
                 "semantic_admission",
+                table="embeddings",
             )
         }
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def drain_and_measure_docs(spark, make_stream, docs_dir: str, name: str):
-    """drain_and_measure over the documents drop zone: the same drain,
+def drain_and_measure_docs(
+    spark, make_stream, docs_dir: str, name: str, table: str = "documents"
+):
+    """drain_and_measure over a ``table``-rows drop zone: the same drain,
     trigger, and stats path, just a different source reader."""
+    from nyc_taxi_dataset_analysis_apache_hive_spark.schema import TESTDATA_SCHEMAS
     from nyc_taxi_dataset_analysis_apache_hive_spark.streaming import curation
 
+    zone = curation.drop_zone_schema(TESTDATA_SCHEMAS[table])
     return drain_and_measure(
         spark,
         make_stream,
@@ -586,7 +591,7 @@ def drain_and_measure_docs(spark, make_stream, docs_dir: str, name: str):
         name,
         "append",
         read_stream=lambda sp, d: curation.read_docs_stream(
-            sp, d, max_files_per_trigger=1
+            sp, d, zone, max_files_per_trigger=1
         ),
     )
 

@@ -1,24 +1,12 @@
-"""Cache-lifecycle management for operators that ``persist()`` intermediates.
+"""Overlapped materialization of independent build artifacts.
 
-Several operators cache an intermediate frame that their plan references
-twice (SimHash signatures, the TF relation in TF-IDF, the scored relation
-of contrastive mining).  ``DataFrame.persist`` is lazy and session-global:
-nothing can be unpersisted *inside* the operator (the returned DataFrame
-has not run yet), so without lifecycle help a long-lived session running
-many corpora accumulates cache entries until ``spark.catalog.clearCache()``.
-
-:class:`CacheScope` closes that gap: operators register every frame they
-persist with the caller's scope, and the scope unpersists them all when it
-exits -- after the caller's terminal action, which is the earliest moment
-unpersisting is safe::
-
-    with CacheScope() as cs:
-        top = tfidf_top_terms(token_table(docs), k=3, cache=cs)
-        top.write.parquet(out)            # terminal action runs cached
-    # <- every intermediate unpersisted here (blocking)
-
-Passing no scope keeps the round-2 behaviour (persist and leave to the
-session), which is fine for short-lived jobs and the bench/driver sweeps.
+Operators cut a shared intermediate (one their plan reads twice) with a
+lazy ``localCheckpoint(eager=False)``: the frame materializes inside the
+caller's first action and belongs to that one returned plan, so no call
+leaves a cache entry that a later call could reuse.  Multi-leg builds
+whose independent artifacts must exist before planning use
+:func:`run_overlapped` / :func:`checkpoint_overlapped` to run those
+eager cuts concurrently.
 """
 
 from __future__ import annotations
@@ -27,55 +15,6 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame
-
-
-class CacheScope:
-    """Collects persisted DataFrames and unpersists them on scope exit.
-
-    Reusable as a plain registry too: call :meth:`unpersist_all` directly
-    when the ``with`` form doesn't fit (e.g. async pipelines).
-    """
-
-    def __init__(self) -> None:
-        self._frames: list[DataFrame] = []
-
-    @property
-    def tracked(self) -> tuple[DataFrame, ...]:
-        """Frames currently tracked (not yet unpersisted) -- inspectable so
-        callers/tests can verify cache state without global counters."""
-        return tuple(self._frames)
-
-    def persist(self, df: DataFrame, storage_level=None) -> DataFrame:
-        """Persist ``df`` (default storage level unless given) and track it."""
-        df = df.persist(storage_level) if storage_level is not None else df.persist()
-        self._frames.append(df)
-        return df
-
-    def unpersist_all(self, blocking: bool = False) -> None:
-        """Unpersist every tracked frame (newest first); idempotent."""
-        while self._frames:
-            try:
-                self._frames.pop().unpersist(blocking)
-            except Exception:
-                pass  # a stopped session can't leak cache; nothing to do
-
-    def __enter__(self) -> "CacheScope":
-        return self
-
-    def __exit__(self, *exc) -> bool:
-        # blocking so the executor memory is actually free when the scope
-        # closes -- the deterministic contract tests rely on
-        self.unpersist_all(blocking=True)
-        return False
-
-
-def maybe_persist(df: DataFrame, cache: CacheScope | None) -> DataFrame:
-    """The one persist decision shared by the persisting operators:
-    scope-tracked when a :class:`CacheScope` is given, plain
-    session-lifetime ``persist()`` otherwise."""
-    if cache is not None:
-        return cache.persist(df)
-    return df.persist()
 
 
 #: the caller's job labels that run_overlapped carries into its workers

@@ -26,7 +26,6 @@ import weakref
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import CacheScope, maybe_persist
 from ..functions.text import (
     distinct_tokens,
     fingerprint_md5,
@@ -455,11 +454,7 @@ def simhash_64(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return packed
 
 
-def simhash_near_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    cache: CacheScope | None = None,
-) -> DataFrame:
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs with Hamming distance <= max_hamming.
 
     Candidate generation blocks on ``max_hamming + 1`` near-equal-width
@@ -470,15 +465,14 @@ def simhash_near_pairs(
     means more, narrower chunks -- wider buckets, more candidates: the
     usual recall/cost dial.
 
-    The signature frame is persisted: the chunk self-join references
-    the signature table twice, and recomputing it re-runs the whole
-    tokenize+hash+bit-sum pipeline (measured ~half of d5's runtime at
-    sf0.1).  The signature frame is tiny -- (doc_id, long) per document,
-    ~16 bytes/doc -- so it persists MEMORY_AND_DISK with lineage kept
-    (unlike a checkpoint, an executor loss just recomputes) and the cache
-    footprint stays negligible even unmanaged.  Pass a
-    :class:`~..caching.CacheScope` as ``cache`` to unpersist it
-    deterministically when the caller's scope exits.
+    The signature frame is cut with a lazy ``localCheckpoint``: the
+    chunk self-join references the signature table twice, and
+    recomputing it re-runs the whole tokenize+hash+bit-sum pipeline
+    (measured ~half of d5's runtime at sf0.1).  The cut materializes
+    inside the caller's first action and belongs to the returned plan
+    alone, so a second call recomputes instead of reusing a session
+    cache entry.  The frame is tiny -- (doc_id, long) per document,
+    ~16 bytes/doc.
     """
     n_chunks = max_hamming + 1
     if n_chunks > SIMHASH_BITS:
@@ -490,7 +484,7 @@ def simhash_near_pairs(
     base_w, extra = divmod(SIMHASH_BITS, n_chunks)
     widths = [base_w + (1 if i < extra else 0) for i in range(n_chunks)]
     offsets = [sum(widths[:i]) for i in range(n_chunks)]
-    sh = maybe_persist(simhash_64(docs), cache)
+    sh = simhash_64(docs).localCheckpoint(eager=False)
     chunks = sh.select(
         "doc_id",
         "simhash",

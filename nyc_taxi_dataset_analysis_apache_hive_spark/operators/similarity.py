@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caching import CacheScope, maybe_persist
 from ..functions.vectors import cosine, sign_bucket
 
 
@@ -155,7 +154,6 @@ def contrastive_mining(
     index: IVFIndex | None = None,
     n_probe: int = 3,
     tag_suffix: str = "",
-    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Triplet mining over a labeled embedding corpus -- the selection
     stage of contrastive/metric-learning training data: (op, query_id,
@@ -195,7 +193,7 @@ def contrastive_mining(
     right ONLY while the anchor set is bounded: with every document as
     an anchor the scored relation is |anchors| x |corpus| -- the
     quadratic object itself -- and "scaling" it by raising n_queries
-    (or a bigger cache for the shared pass, see below) just grows that
+    (or a bigger cut for the shared pass, see below) just grows that
     object.  Full-corpus-anchor mining goes through ``index=``.
 
     ``index=`` (the routed variant): a precomputed
@@ -292,23 +290,25 @@ def contrastive_mining(
             .distinct()
         )
     # ONE scoring pass for all four consumers (hard_neg, hard_pos,
-    # semi's neg side, semi's pcos anchor): persist(), NOT a local
-    # checkpoint -- local checkpoints live on executors
-    # with no lineage fallback, so an executor loss mid-query fails the
-    # whole job; a persisted relation recomputes gracefully.  MEASURED
-    # at sf0.1 (4 warm reps each way): 1.3-1.9 s cut vs 1.6-1.8 s
-    # recomputed -- a wash locally (the branches run as concurrent
-    # stages of one job, the a10 hh lesson), adopted because at
-    # deployment scale the corpus scoring pass is the dominant cost and
-    # paying it once is the right default.  MEMORY SHAPE: the cache
-    # pins |queries| x |corpus| scored rows on the brute path -- fine
-    # for a bounded anchor set, the quadratic object itself at
-    # full-corpus anchors.  The answer there is the routed ``index=``
-    # variant (cell-bounded scored relation), never a bigger cache.
-    # Cache LIFETIME follows the house rule (caching.py): pass a
-    # CacheScope to unpersist after the terminal action; no scope =
-    # session-lifetime persist (the bench/driver-sweep posture).
-    scored = maybe_persist(scored, cache)
+    # semi's neg side, semi's pcos anchor), cut with a LAZY
+    # localCheckpoint: it materializes inside the caller's first action
+    # and belongs to the returned plan alone, so a second call rescores
+    # instead of reusing a session cache entry, which a persist() would
+    # leave behind (nothing can unpersist after the caller's action).
+    # The cut gives up persist()'s lineage fallback on executor loss; on
+    # the local[N] deployment an executor loss is a driver loss, the
+    # trade every other shared artifact in the package already makes.
+    # MEASURED at sf0.1 (4 warm reps each way, shared by persist()):
+    # 1.3-1.9 s shared vs 1.6-1.8 s recomputed -- a wash locally (the
+    # branches run as concurrent stages of one job, the a10 hh lesson),
+    # kept because at deployment scale the corpus scoring pass is the
+    # dominant cost and paying it once is the right default.  MEMORY
+    # SHAPE: the cut pins
+    # |queries| x |corpus| scored rows on the brute path -- fine for a
+    # bounded anchor set, the quadratic object itself at full-corpus
+    # anchors.  The answer there is the routed ``index=`` variant
+    # (cell-bounded scored relation), never a bigger cut.
+    scored = scored.localCheckpoint(eager=False)
     neg = scored.filter(F.col("q_label") != F.col("n_label"))
     pos = scored.filter(F.col("q_label") == F.col("n_label"))
     w_desc = Window.partitionBy("query_id").orderBy(

@@ -12,7 +12,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caching import CacheScope, maybe_persist
 from ..functions.localrel import inline_rows
 from ..functions.text import (
     STOPWORDS,
@@ -146,7 +145,7 @@ def term_frequencies(toks: DataFrame) -> DataFrame:
     :func:`~..operators.dedup.token_table` frame -- the input of
     :func:`vocabulary` AND the tf relation of :func:`tfidf_top_terms`
     (identical grouping, one spelling).  A caller running both over one
-    corpus computes this once (persisted) and feeds it to each -- one
+    corpus computes this once (one lazy cut) and feeds it to each -- one
     explode+aggregate instead of two (the tv1 shared pass)."""
     return (
         toks.select("doc_id", F.explode("toks").alias("token"))
@@ -182,7 +181,6 @@ def vocabulary(tf: DataFrame, min_count: int = 1) -> DataFrame:
 def tfidf_top_terms(
     toks: DataFrame,
     k: int = 5,
-    cache: CacheScope | None = None,
     *,
     tf: DataFrame | None = None,
 ) -> DataFrame:
@@ -197,23 +195,21 @@ def tfidf_top_terms(
     join is linear in corpus tokens -- stop-token skew degrades to a large
     (AQE-splittable) hash join, never a product.
 
-    The tf frame is persisted: doc-frequencies derive from it, so the
-    join would otherwise re-run the dominant tokenize + explode +
-    (doc, token) aggregation a second time (column pruning makes the two
-    subtrees non-identical, so exchange reuse does not apply).
-    The tf frame is the compact (doc, token, count) relation -- far
-    smaller than the corpus text.  Pass a :class:`~..caching.CacheScope`
-    as ``cache`` to unpersist it when the caller's scope exits; without a
-    scope the cache lives for the session.
+    The tf frame is cut with a lazy ``localCheckpoint``: doc-frequencies
+    derive from it, so the join would otherwise re-run the dominant
+    tokenize + explode + (doc, token) aggregation a second time (column
+    pruning makes the two subtrees non-identical, so exchange reuse does
+    not apply).  The cut materializes inside the caller's first action
+    and belongs to the returned plan alone; the tf frame is the compact
+    (doc, token, count) relation -- far smaller than the corpus text.
 
     ``toks`` is the :func:`~..operators.dedup.token_table` frame (one
     row per document, so it also gives the corpus size N).  ``tf=``: a
-    precomputed (persisted) :func:`term_frequencies` relation replaces
-    the tf subtree entirely (the caller then owns its persistence --
-    ``cache`` is ignored).
+    precomputed (already cut) :func:`term_frequencies` relation replaces
+    the tf subtree entirely.
     """
     if tf is None:
-        tf = maybe_persist(term_frequencies(toks), cache)
+        tf = term_frequencies(toks).localCheckpoint(eager=False)
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("doc_freq"))
     total = toks.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (

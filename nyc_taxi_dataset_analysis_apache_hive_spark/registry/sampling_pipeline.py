@@ -1776,7 +1776,7 @@ def tv1_text_stats(spark, sf):
     """Corpus token statistics, tagged and stacked (u1/r1 precedent, one
     driver slot).  ``tfidf`` = top-3 characteristic terms per document:
     corpus size via a broadcast 1-row cross join (never a collect),
-    doc-frequencies from the persisted tf relation, per-document window
+    doc-frequencies from the shared tf relation, per-document window
     for the top-k, ranked on the ROUNDED tfidf with a token tie-break so
     both engines produce the identical row set.  ``vocab`` = the corpus
     vocabulary at min_count=20 -- the two-stage aggregate whose first
@@ -1902,9 +1902,9 @@ def tv1_text_stats(spark, sf):
     # ONE (doc_id, token, tf) aggregate feeds BOTH the tfidf leg (its
     # tf relation) and the vocab leg (its stage-1 per-doc counts) --
     # identical grouping, previously computed twice (textops.
-    # term_frequencies); persisted exactly as tfidf_top_terms always
-    # persisted its private copy.
-    tf = caching.maybe_persist(textops.term_frequencies(tt), None)
+    # term_frequencies); cut with the same lazy localCheckpoint
+    # tfidf_top_terms gives its private copy.
+    tf = textops.term_frequencies(tt).localCheckpoint(eager=False)
     tfidf = textops.tfidf_top_terms(tt, k=3, tf=tf).select(
         F.lit("tfidf").alias("op"),
         "doc_id",

@@ -35,27 +35,31 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType, TimestampType
 
 from ..functions.text import ngrams_from_tokens
 from ..operators.dedup import token_table
 
 
+def drop_zone_schema(table_schema: StructType) -> StructType:
+    """A drop-zone file's schema: ``table_schema`` (a
+    ``schema.TESTDATA_SCHEMAS`` entry) followed by the ``ts`` event-time
+    column the stream operators window on.  A table column the files
+    lack reads as NULL."""
+    return StructType([*table_schema.fields, StructField("ts", TimestampType())])
+
+
 def read_docs_stream(
     spark: SparkSession,
     path: str,
+    schema,
     max_files_per_trigger: int = 1,
-    schema=None,
 ) -> DataFrame:
-    """File-based stream over a documents parquet drop zone.
-
-    ``readStream`` requires a schema up front. Pass one explicitly
-    (``StructType`` or DDL string) to start the monitor against an empty
-    or not-yet-created drop zone; when omitted, the schema is inferred
-    from the static files already at ``path`` (which throws if none
-    exist yet -- inference needs at least one footer to read).
-    """
-    if schema is None:
-        schema = spark.read.parquet(path).schema
+    """File-based stream over a parquet drop zone, read with the declared
+    ``schema`` (``StructType`` or DDL string, usually
+    :func:`drop_zone_schema`).  Opening the stream reads no footer and
+    runs no job, and the monitor starts on an empty or not-yet-created
+    drop zone."""
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup
+from nyc_taxi_dataset_analysis_apache_hive_spark.schema import TESTDATA_SCHEMAS
 
 
 def _docs(spark, texts: dict[int, str | None]):
@@ -323,7 +324,13 @@ def test_bloom_stream_matches_batch_and_operator(spark, tmp_path):
     bits = dedup.bloom_filter_build(hist).localCheckpoint(eager=True)
     hist_fps = dedup.history_fingerprints(hist).localCheckpoint(eager=True)
     stream = curation.bloom_admission_stream(
-        curation.read_docs_stream(spark, out), bits, hist_fps
+        curation.read_docs_stream(
+            spark,
+            out,
+            curation.drop_zone_schema(TESTDATA_SCHEMAS["documents"]),
+        ),
+        bits,
+        hist_fps,
     )
     q = (
         stream.writeStream.format("memory")

@@ -1,22 +1,21 @@
-"""Cache-lifecycle gate: operators that persist() intermediates must not
-accumulate session cache entries when driven through a CacheScope (the
-judge-flagged leak: round-2 persist flags cached frames forever).
+"""Cache hygiene: no registry entry leaves a session cache entry that a
+later call can reuse.  An entry returns a lazy DataFrame, so nothing can
+unpersist after the caller's action; the operators therefore cut shared
+intermediates with a lazy ``localCheckpoint``, which belongs to the one
+returned plan.  A persisted intermediate instead survives the call, and a
+repeat call in the same session runs fewer jobs over the cached plan.
 
-Assertions go through the scope's tracked frames (``df.storageLevel``) and
-the session cacheManager, NOT ``getRDDStorageInfo`` counts -- the latter
-shrink nondeterministically when Spark's GC-driven ContextCleaner reaps
-earlier tests' unreferenced caches mid-assertion."""
+Assertions go through the session CacheManager, NOT ``getRDDStorageInfo``
+counts -- the latter shrink nondeterministically when Spark's GC-driven
+ContextCleaner reaps earlier tests' unreferenced blocks mid-assertion."""
 
 from __future__ import annotations
 
-from nyc_taxi_dataset_analysis_apache_hive_spark.caching import CacheScope, run_overlapped
-from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup, textops
-from nyc_taxi_dataset_analysis_apache_hive_spark.sources.readers import load_table
+import pytest
 
-
-def _cached(df) -> bool:
-    lvl = df.storageLevel
-    return lvl.useMemory or lvl.useDisk
+from nyc_taxi_dataset_analysis_apache_hive_spark import registry
+from nyc_taxi_dataset_analysis_apache_hive_spark.caching import run_overlapped
+from perfbench.tracing import SparkCounters
 
 
 def _cache_manager_empty(spark) -> bool:
@@ -25,50 +24,23 @@ def _cache_manager_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_cache_scope_unpersists_and_never_accumulates(spark, sf0001_dir):
-    docs = load_table(spark, sf0001_dir, "documents")
+def _jobs_of_one_call(spark, name: str, sf_dir: str) -> int:
+    jobs = SparkCounters(spark)
+    before = jobs.last_job_id()
+    registry.QUERIES[name](spark, sf_dir).collect()
+    return jobs.window(before, jobs.last_job_id())["jobs"]
+
+
+@pytest.mark.parametrize(
+    "name", ["d5_simhash_pairs", "k1_knn_bruteforce", "tv1_text_stats"]
+)
+def test_repeat_call_reuses_nothing(spark, sf0001_dir, name):
+    """Two calls in one session, no clearCache between them: the second
+    runs every job the first did, and no cache entry is left behind."""
     spark.catalog.clearCache()  # isolate from earlier session tests
-    assert _cache_manager_empty(spark)
-    # run each persisting operator TWICE: frames must be cached while the
-    # scope is open (the persist is real) and gone after each exit
-    ops = [
-        lambda cs: textops.tfidf_top_terms(
-            dedup.token_table(docs), k=3, cache=cs
-        ),
-        lambda cs: dedup.simhash_near_pairs(docs, max_hamming=3, cache=cs),
-    ]
-    for op in ops:
-        for _ in range(2):
-            with CacheScope() as cs:
-                assert op(cs).count() > 0
-                assert cs.tracked and all(_cached(f) for f in cs.tracked)
-                tracked = list(cs.tracked)
-            assert all(not _cached(f) for f in tracked)
-            assert _cache_manager_empty(spark)
-
-
-def test_cache_scope_unpersists_on_error(spark, sf0001_dir):
-    docs = load_table(spark, sf0001_dir, "documents")
-    spark.catalog.clearCache()
-    try:
-        with CacheScope() as cs:
-            out = textops.tfidf_top_terms(dedup.token_table(docs), k=3, cache=cs)
-            out.count()
-            raise RuntimeError("caller failure mid-scope")
-    except RuntimeError:
-        pass
-    assert _cache_manager_empty(spark)
-
-
-def test_no_scope_keeps_round2_behaviour(spark, sf0001_dir):
-    """Without a scope the operator still persists (session lifetime) --
-    the one-shot-job default is unchanged."""
-    docs = load_table(spark, sf0001_dir, "documents")
-    spark.catalog.clearCache()
-    out = textops.tfidf_top_terms(dedup.token_table(docs), k=3)
-    out.count()
-    assert not _cache_manager_empty(spark)
-    spark.catalog.clearCache()
+    first = _jobs_of_one_call(spark, name, sf0001_dir)
+    second = _jobs_of_one_call(spark, name, sf0001_dir)
+    assert second == first
     assert _cache_manager_empty(spark)
 
 

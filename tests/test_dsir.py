@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_dataset_analysis_apache_hive_spark.operators import sampling
 from nyc_taxi_dataset_analysis_apache_hive_spark.plans.explain import explain_str
+from nyc_taxi_dataset_analysis_apache_hive_spark.schema import TESTDATA_SCHEMAS
 from nyc_taxi_dataset_analysis_apache_hive_spark.sources.readers import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -150,7 +151,12 @@ def test_dsir_admission_stream_matches_batch_and_operator(
 
     q = (
         curation.dsir_admission_stream(
-            curation.read_docs_stream(spark, out), model
+            curation.read_docs_stream(
+                spark,
+                out,
+                curation.drop_zone_schema(TESTDATA_SCHEMAS["documents"]),
+            ),
+            model,
         )
         .writeStream.format("memory")
         .queryName("dsir_admission_sink")

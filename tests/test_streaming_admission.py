@@ -14,6 +14,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from nyc_taxi_dataset_analysis_apache_hive_spark.operators import similarity
+from nyc_taxi_dataset_analysis_apache_hive_spark.schema import TESTDATA_SCHEMAS
 from nyc_taxi_dataset_analysis_apache_hive_spark.streaming import curation
 
 SENTINEL_ID = 10**9
@@ -97,7 +98,11 @@ def _three_way_verdicts(spark, history, batch, cents, vecs_dir, sink_name):
         eager=True
     )
     stream = curation.semantic_admission_stream(
-        curation.read_docs_stream(spark, vecs_dir),
+        curation.read_docs_stream(
+            spark,
+            vecs_dir,
+            curation.drop_zone_schema(TESTDATA_SCHEMAS["embeddings"]),
+        ),
         state,
         cents,
         threshold=THRESH,

@@ -12,13 +12,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup
+from nyc_taxi_dataset_analysis_apache_hive_spark.schema import TESTDATA_SCHEMAS
 from nyc_taxi_dataset_analysis_apache_hive_spark.sources.readers import load_table
 from nyc_taxi_dataset_analysis_apache_hive_spark.streaming import curation
+from perfbench.tracing import SparkCounters
 
 #: far-future sentinel document: closes every real window before the
 #: availableNow drain ends (append mode only emits watermark-passed
 #: windows) -- same convention as tests/test_streaming.py
 SENTINEL_ID = 10**9
+
+#: the probe drop zone's files: documents rows plus their ``ts``
+DOCS_ZONE = curation.drop_zone_schema(TESTDATA_SCHEMAS["documents"])
 
 
 @pytest.fixture(scope="module")
@@ -73,7 +78,7 @@ def test_stream_matches_batch_and_operator(spark, docs_split, probes_dir):
     corpus, _ = docs_split
     c_grams = dedup.corpus_gram_set(dedup.token_table(corpus), ngram_n=8)
     stream = curation.decontam_stream(
-        curation.read_docs_stream(spark, probes_dir),
+        curation.read_docs_stream(spark, probes_dir, DOCS_ZONE),
         c_grams,
         ngram_n=8,
         threshold=0.2,
@@ -137,20 +142,21 @@ def test_batch_analog_keeps_gramless_docs(spark, docs_split):
 
 
 def test_read_docs_stream_explicit_schema_starts_on_empty_dropzone(
-    spark, tmp_path_factory
+    spark, probes_dir, tmp_path_factory
 ):
-    """With an explicit schema the monitor can start BEFORE the first file
-    lands (inference would throw on an empty drop zone); the stream then
-    picks up files written after start."""
+    """The declared schema lets the monitor start BEFORE the first file
+    lands, and opening a stream runs no job: no footer is read, on an
+    empty drop zone or a populated one."""
     empty = str(tmp_path_factory.mktemp("empty_dropzone"))
-    stream = curation.read_docs_stream(
-        spark, empty, schema="doc_id bigint, text string, ts timestamp"
-    )
+    jobs = SparkCounters(spark)
+    before = jobs.last_job_id()
+    stream = curation.read_docs_stream(spark, empty, DOCS_ZONE)
+    curation.read_docs_stream(spark, probes_dir, DOCS_ZONE)
+    assert jobs.last_job_id() == before
     assert stream.isStreaming
-    assert [f.name for f in stream.schema.fields] == ["doc_id", "text", "ts"]
-    # inference still throws on the empty zone -- the documented fallback
-    with pytest.raises(Exception):
-        curation.read_docs_stream(spark, empty)
+    assert [f.name for f in stream.schema.fields] == [
+        "doc_id", "text", "lang", "source", "n_chars", "ts",
+    ]
 
 
 def test_span_stream_matches_batch_and_operator(spark, docs_split, probes_dir):
@@ -162,7 +168,7 @@ def test_span_stream_matches_batch_and_operator(spark, docs_split, probes_dir):
     corpus, _ = docs_split
     idx = curation.protected_span_index(corpus)
     stream = curation.span_decontam_stream(
-        curation.read_docs_stream(spark, probes_dir), idx
+        curation.read_docs_stream(spark, probes_dir, DOCS_ZONE), idx
     )
     q = (
         stream.writeStream.format("memory")
@@ -258,7 +264,7 @@ def test_span_quarantine_stream_matches_batch_and_scrub_decision(
     sent.to_parquet(os.path.join(out, "zz_sentinel.parquet"), index=False)
 
     stream = curation.span_quarantine_stream(
-        curation.read_docs_stream(spark, out), idx, quarantine_tokens=12
+        curation.read_docs_stream(spark, out, DOCS_ZONE), idx, quarantine_tokens=12
     )
     q = (
         stream.writeStream.format("memory")
@@ -361,7 +367,7 @@ def test_span_probe_guard_reports_fanout_per_trigger(
     corpus, probes = docs_split
     idx = curation.protected_span_index(corpus)
     stream = curation.span_decontam_stream(
-        curation.read_docs_stream(spark, probes_dir), idx
+        curation.read_docs_stream(spark, probes_dir, DOCS_ZONE), idx
     )
     q = (
         stream.writeStream.format("memory")

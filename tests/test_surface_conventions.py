@@ -468,3 +468,109 @@ def test_dual_input_checker_catches_geometry_next_to_artifact():
     assert dual_input_signatures(
         "def s(emb, index, encoding, k=5):\n    pass\n", "m.py"
     ) == []
+
+
+# ---------------------------------------------------------------------------
+# Rule 7: one materialization primitive.  An operator returns a lazy
+# DataFrame, so a ``persist()``/``cache()`` it makes outlives the call and
+# a later call in the session reuses the cached plan.  Shared
+# intermediates are cut with ``localCheckpoint`` instead; the one
+# allowed persist is a frame the same function unpersists in a
+# ``finally`` before it returns (kmeans_train's training table).
+# ---------------------------------------------------------------------------
+
+_PERSIST_CALLS = {"persist", "cache"}
+
+
+def _unpersisted_in_finally(fn: ast.AST) -> set[str]:
+    """Names ``fn`` calls ``.unpersist(...)`` on inside a ``finally``."""
+    names = set()
+    for node in ast.walk(fn):
+        if not isinstance(node, ast.Try):
+            continue
+        for stmt in node.finalbody:
+            for c in ast.walk(stmt):
+                if (
+                    isinstance(c, ast.Call)
+                    and isinstance(c.func, ast.Attribute)
+                    and c.func.attr == "unpersist"
+                    and isinstance(c.func.value, ast.Name)
+                ):
+                    names.add(c.func.value.id)
+    return names
+
+
+def unscoped_persists(source: str, filename: str) -> list[str]:
+    """``file:line call`` for every ``.persist(``/``.cache()`` in
+    ``source`` whose result is not bound to a name that its enclosing
+    function unpersists in a ``finally``."""
+    tree = ast.parse(source)
+    parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+    hits = []
+    for node in ast.walk(tree):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in _PERSIST_CALLS
+        ):
+            continue
+        fn = parents.get(node)
+        while fn is not None and not isinstance(
+            fn, (ast.FunctionDef, ast.AsyncFunctionDef)
+        ):
+            fn = parents.get(fn)
+        assign = parents.get(node)
+        bound = (
+            assign.targets[0].id
+            if isinstance(assign, ast.Assign)
+            and len(assign.targets) == 1
+            and isinstance(assign.targets[0], ast.Name)
+            else None
+        )
+        if fn is None or bound not in _unpersisted_in_finally(fn):
+            hits.append((node.lineno, f"{filename}:{node.lineno} {node.func.attr}"))
+    return [h for _, h in sorted(hits)]
+
+
+def test_no_persist_outlives_its_call():
+    bad = []
+    for p in sorted(_PKG.rglob("*.py")):
+        bad += unscoped_persists(p.read_text(), p.relative_to(_PKG).as_posix())
+    assert not bad, (
+        f"persist()/cache() that outlives its call (cut with "
+        f"localCheckpoint, or unpersist in a finally): {bad}"
+    )
+
+
+def test_persist_checker_catches_each_spelling():
+    """Self-test: a bare persist, a cache(), a persist unpersisted
+    outside a ``finally`` and one unpersisted under another name trip
+    the checker; the kmeans_train shape does not."""
+    scoped = (
+        "def train(df):\n"
+        "    emb = df.persist()\n"
+        "    try:\n"
+        "        return emb.count()\n"
+        "    finally:\n"
+        "        emb.unpersist()\n"
+    )
+    assert unscoped_persists(scoped, "operators/m.py") == []
+    assert unscoped_persists(
+        scoped.replace("df.persist()", "df.cache()"), "m.py"
+    ) == []
+    bare = "def op(df):\n    return df.persist().filter('x')\n"
+    assert unscoped_persists(bare, "operators/m.py") == ["operators/m.py:2 persist"]
+    cached = "def op(df):\n    sh = df.cache()\n    return sh.join(sh, 'k')\n"
+    assert unscoped_persists(cached, "m.py") == ["m.py:2 cache"]
+    no_finally = (
+        "def op(df):\n"
+        "    emb = df.persist()\n"
+        "    n = emb.count()\n"
+        "    emb.unpersist()\n"
+        "    return n\n"
+    )
+    assert unscoped_persists(no_finally, "m.py") == ["m.py:2 persist"]
+    other_name = scoped.replace("emb.unpersist()", "df.unpersist()")
+    assert unscoped_persists(other_name, "m.py") == ["m.py:2 persist"]
+    module_level = "X = df.persist()\n"
+    assert unscoped_persists(module_level, "m.py") == ["m.py:1 persist"]
