@@ -5,9 +5,9 @@
 ``nyc_taxi_dataset_analysis_apache_hive_spark.registry`` (one entry per
 SURVEY.md §2 operator plus the training-data-pipeline extensions).
 
-The reference's own HiveQL workload also runs as Spark SQL text in
-``taxi_sql``, equality-gated against the DataFrame operators in
-tests/test_taxi_sql_mode.py.
+The reference's own HiveQL workload runs as Spark SQL text in
+``taxi_sql``; tests/test_taxi_golden.py checks each statement against a
+DuckDB oracle or a fixture golden.
 """
 
 from __future__ import annotations

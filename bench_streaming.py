@@ -122,7 +122,7 @@ def main() -> None:
 
 
 def run_anomaly_maintenance(spark, events_dir: str) -> dict:
-    """The anomaly-monitor maintenance stream (r16): foreachBatch folds
+    """The anomaly-monitor maintenance stream: foreachBatch folds
     each micro-batch into the versioned per-(key, day) count ledger, so
     the drain uses the stream's own writer (no memory sink).  Stats come
     from the same recentProgress reduction; ``out_rows`` is the number
@@ -157,12 +157,13 @@ def run_anomaly_maintenance(spark, events_dir: str) -> dict:
 
 
 def run_linkage_maintenance(spark, sf_dir: str, n_slices: int) -> dict:
-    """The entity-dictionary maintenance stream (r16): the part table as
+    """The entity-dictionary maintenance stream: the part table as
     a parquet drop zone, each micro-batch's (name, count, witness-id)
     dictionary folded into the versioned ledger; ``out_rows`` is the
     canonicalization read path's row count over the maintained state
     (every dictionary name gets a canon verdict)."""
     from nyc_taxi_dataset_analysis_apache_hive_spark.operators import linkage
+    from nyc_taxi_dataset_analysis_apache_hive_spark.schema import TESTDATA_SCHEMAS
     from nyc_taxi_dataset_analysis_apache_hive_spark.sources.readers import load_table
     from nyc_taxi_dataset_analysis_apache_hive_spark.streaming import (
         maintenance as mnt,
@@ -181,7 +182,7 @@ def run_linkage_maintenance(spark, sf_dir: str, n_slices: int) -> dict:
         state = os.path.join(tmp, "state")
         ckpt = os.path.join(tmp, "ckpt")
         src = (
-            spark.readStream.schema(spark.read.parquet(parts_dir).schema)
+            spark.readStream.schema(TESTDATA_SCHEMAS["part"])
             .option("maxFilesPerTrigger", 1)
             .parquet(parts_dir)
         )
@@ -207,11 +208,13 @@ def run_linkage_maintenance(spark, sf_dir: str, n_slices: int) -> dict:
 
 
 def run_graph_maintenance(spark, sf_dir: str, n_slices: int) -> dict:
-    """The dup-pair-graph maintenance stream (r17): the d3 MinHash-LSH
+    """The dup-pair-graph maintenance stream: the d3 MinHash-LSH
     pair table as a parquet drop zone, each micro-batch's symmetric
     edges folded into the versioned ledger as a distinct edge set;
     ``out_rows`` is the graph read path's row count over the maintained
     state (every vertex gets a PageRank and a triangle count)."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
     from nyc_taxi_dataset_analysis_apache_hive_spark.operators import dedup, graph
     from nyc_taxi_dataset_analysis_apache_hive_spark.sources.readers import load_table
     from nyc_taxi_dataset_analysis_apache_hive_spark.streaming import (
@@ -236,7 +239,11 @@ def run_graph_maintenance(spark, sf_dir: str, n_slices: int) -> dict:
         state = os.path.join(tmp, "state")
         ckpt = os.path.join(tmp, "ckpt")
         src = (
-            spark.readStream.schema(spark.read.parquet(pairs_dir).schema)
+            spark.readStream.schema(
+                StructType(
+                    [StructField("doc_a", LongType()), StructField("doc_b", LongType())]
+                )
+            )
             .option("maxFilesPerTrigger", 1)
             .parquet(pairs_dir)
         )
@@ -261,12 +268,13 @@ def run_graph_maintenance(spark, sf_dir: str, n_slices: int) -> dict:
 
 
 def run_pca_maintenance(spark, sf_dir: str, n_slices: int) -> dict:
-    """The PCA-moments maintenance stream (r17): the embeddings table
+    """The PCA-moments maintenance stream: the embeddings table
     as a parquet drop zone, each micro-batch's (n, sum, X^T X) partials
     folded into the versioned ledger; ``out_rows`` is the maintained
     vector count and ``model_k`` confirms the read path fits a model
     from the kilobyte-sized state."""
     from nyc_taxi_dataset_analysis_apache_hive_spark.operators import pca
+    from nyc_taxi_dataset_analysis_apache_hive_spark.schema import TESTDATA_SCHEMAS
     from nyc_taxi_dataset_analysis_apache_hive_spark.sources.readers import load_table
     from nyc_taxi_dataset_analysis_apache_hive_spark.streaming import (
         maintenance as mnt,
@@ -285,7 +293,7 @@ def run_pca_maintenance(spark, sf_dir: str, n_slices: int) -> dict:
         state = os.path.join(tmp, "state")
         ckpt = os.path.join(tmp, "ckpt")
         src = (
-            spark.readStream.schema(spark.read.parquet(vecs_dir).schema)
+            spark.readStream.schema(TESTDATA_SCHEMAS["embeddings"])
             .option("maxFilesPerTrigger", 1)
             .parquet(vecs_dir)
         )
@@ -487,7 +495,7 @@ def run_doc_streams(spark, sf_dir: str, n_slices: int):
             docs_dir,
             "bloom_admission",
         )
-        # r15: the quarantine emission over the same protected index --
+        # the quarantine emission over the same protected index --
         # out_rows is the QUARANTINED subset (threshold'd verdicts),
         # not every probe doc, by design
         results["span_quarantine"] = drain_and_measure_docs(
@@ -530,7 +538,7 @@ def write_vec_slices(pdf, out: str, n_slices: int) -> None:
 
 
 def run_vec_streams(spark, sf_dir: str, n_slices: int):
-    """The embedding-drop-zone stream (r12 semantic admission against
+    """The embedding-drop-zone stream (semantic admission against
     the persisted cell-assignment state): even vec_ids are the corpus
     state, odd ids arrive as the stream -- the k3 admit leg's split.
     The state and centroid index are materialized OUTSIDE the measured

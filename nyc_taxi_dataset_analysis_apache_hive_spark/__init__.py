@@ -12,8 +12,9 @@ Layout:
     session.py    SparkSession factory (UTC, AQE, dynamic partition overwrite)
     schema.py     TRIP_SCHEMA / CLEAN_SCHEMA (REF:32-55, REF:251-258)
     sources/      readers (CSV external-table analog, parquet) + writers
-    functions/    column-expression library (hour_diff, speed, pct_share, ...)
-    operators/    quality checks, ETL, analysis, dedup, similarity, text ops
+    taxi_sql.py   the reference's 39 SELECTs as Spark SQL over trips/trips_clean
+    functions/    shared expression builders (epoch_bin, local relations, text)
+    operators/    ETL, dedup, similarity, sketches, sampling, text ops
     plans/        plan-inspection helpers (pushdown / codegen / join checks)
     streaming/    Structured Streaming over the events table
 """

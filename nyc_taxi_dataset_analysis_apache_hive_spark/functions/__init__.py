@@ -1,19 +1,2 @@
-from .exprs import (
-    clean_predicate,
-    dirty_predicate,
-    hour_diff,
-    nonstandard_extra,
-    pct_share,
-    speed_mph,
-    tip_segment,
-)
-
-__all__ = [
-    "clean_predicate",
-    "dirty_predicate",
-    "hour_diff",
-    "nonstandard_extra",
-    "pct_share",
-    "speed_mph",
-    "tip_segment",
-]
+"""Shared expression builders: ``exprs`` (``epoch_bin``), ``localrel``,
+``text`` and ``vectors``."""

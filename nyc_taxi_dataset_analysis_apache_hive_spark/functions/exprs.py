@@ -1,16 +1,13 @@
-"""Column-expression library (SURVEY.md §2.2, §2.5, §2.8).
+"""Shared ``Column`` builders (SURVEY.md §2.2).
 
-Every expression is a pure ``Column`` builder -- Catalyst sees through all of
-them (constant folding, pushdown, codegen); nothing here crosses into Python
-at row level.
+Pure Catalyst expressions -- constant folding, pushdown and codegen see
+through them; nothing here crosses into Python at row level.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import DecimalType
-from pyspark.sql.window import Window
 
 
 def epoch_bin(ts: str | Column, width_seconds: int) -> Column:
@@ -30,138 +27,3 @@ def epoch_bin(ts: str | Column, width_seconds: int) -> Column:
     c = F.col(ts) if isinstance(ts, str) else ts
     sec = F.unix_timestamp(c)
     return sec - F.pmod(sec, F.lit(width_seconds).cast("long"))
-
-
-def hour_diff(
-    pickup: str | Column = "tpep_pickup_datetime",
-    dropoff: str | Column = "tpep_dropoff_datetime",
-) -> Column:
-    """P7: trip duration in (fractional) hours.
-
-    ``(unix_timestamp(dropoff) - unix_timestamp(pickup)) / 3600`` (REF:89,
-    REF:238, REF:266).  long-long difference divided by int -> DOUBLE, the
-    same result type Hive produces (``/`` is always fractional).
-    """
-    p = F.col(pickup) if isinstance(pickup, str) else pickup
-    d = F.col(dropoff) if isinstance(dropoff, str) else dropoff
-    return (F.unix_timestamp(d) - F.unix_timestamp(p)) / F.lit(3600)
-
-
-def speed_mph(
-    distance: str | Column = "trip_distance",
-    pickup: str | Column = "tpep_pickup_datetime",
-    dropoff: str | Column = "tpep_dropoff_datetime",
-) -> Column:
-    """P8: speed = distance / hours (REF:368, REF:377, REF:383).
-
-    Zero-duration trips divide by zero: Hive yields NULL and AVG skips NULLs
-    (REF comment at 367 relies on this).  ``nullif`` makes that explicit and
-    ANSI-mode-proof rather than depending on non-ANSI division semantics.
-    """
-    dist = F.col(distance) if isinstance(distance, str) else distance
-    hours = hour_diff(pickup, dropoff)
-    return dist / F.nullif(hours, F.lit(0.0))
-
-
-def nonstandard_extra(extra: str | Column = "extra") -> Column:
-    """P4: extra charge outside the legal {0, 0.5, 1.0} set.
-
-    The reference writes a ``!=`` chain (REF:124: ``extra != 0.5 AND
-    extra != 1.0 AND extra != 0``); both that and NOT IN drop NULLs under
-    3-valued logic, so ``~isin`` is exactly equivalent.  Doubles 0.0/0.5/1.0
-    are exactly representable, so binary equality is safe (SURVEY §7.4).
-    """
-    e = F.col(extra) if isinstance(extra, str) else extra
-    return ~e.isin(0.0, 0.5, 1.0)
-
-
-def dirty_predicate(df_cols_prefix: str = "") -> Column:
-    """P5: the reference's 12-term OR dirty-row predicate (REF:240-241).
-
-    fare<0 | tip<0 | nonstandard extra | passengers<=0 | tolls<0 |
-    surcharge<0 | mta<0 | total<0 | ratecodeid='99' | hour_diff outside
-    [0,24] | pickup year != 2017 | pickup month not in (11,12).
-    """
-    c = lambda n: F.col(df_cols_prefix + n)  # noqa: E731
-    hd = hour_diff(c("tpep_pickup_datetime"), c("tpep_dropoff_datetime"))
-    return (
-        (c("fare_amount") < 0)
-        | (c("tip_amount") < 0)
-        | nonstandard_extra(c("extra"))
-        | (c("passenger_count") <= 0)
-        | (c("tolls_amount") < 0)
-        | (c("improvement_surcharge") < 0)
-        | (c("mta_tax") < 0)
-        | (c("total_amount") < 0)
-        | (c("ratecodeid") == "99")
-        | (hd < 0)
-        | (hd > 24)
-        | (F.year(c("tpep_pickup_datetime")) != 2017)
-        | ~F.month(c("tpep_pickup_datetime")).isin(11, 12)
-    )
-
-
-def clean_predicate() -> Column:
-    """P5 (clean polarity): the reference's conjunctive keep-filter.
-
-    Written as its own conjunction exactly as REF:268-269 -- NOT as
-    ``~dirty_predicate()`` -- because under 3-valued logic rows with NULLs
-    can fail both predicates, and the reference's ETL keeps only rows that
-    positively satisfy the conjunctive form (SURVEY §7.4).
-    """
-    hd = hour_diff()
-    return (
-        (F.col("fare_amount") >= 0)
-        & (F.col("tip_amount") >= 0)
-        & F.col("extra").isin(0.0, 0.5, 1.0)
-        & (F.col("passenger_count") > 0)
-        & (F.col("tolls_amount") >= 0)
-        & (F.col("improvement_surcharge") >= 0)
-        & (F.col("mta_tax") >= 0)
-        & (F.col("total_amount") >= 0)
-        & (F.col("ratecodeid") != "99")
-        & (F.year("tpep_pickup_datetime") == 2017)
-        & F.month("tpep_pickup_datetime").isin(11, 12)
-        & (hd >= 0)
-        & (hd <= 24)
-    )
-
-
-def tip_segment(tip: str | Column = "tip_amount") -> Column:
-    """F9: CASE segmentation of tip into 5 labelled buckets (REF:352-358)."""
-    t = F.col(tip) if isinstance(tip, str) else tip
-    return (
-        F.when(t < 5, "[0-5)")
-        .when((t >= 5) & (t < 10), "[5-10)")
-        .when((t >= 10) & (t < 15), "[10-15)")
-        .when((t >= 15) & (t < 20), "[15-20)")
-        .otherwise(">=20")
-    )
-
-
-def pct_share(
-    df: DataFrame,
-    keys: list[str],
-    count_alias: str = "cnt",
-    pct_alias: str = "pct",
-    as_decimal: bool = True,
-) -> DataFrame:
-    """W1: the reference's signature operator -- percent share of total.
-
-    ``CAST(COUNT(*)*100 / SUM(COUNT(*)) OVER () AS DECIMAL(10,2))``
-    (REF:71-73, REF:298-300, REF:304-306, REF:349-361): group counts plus a
-    windowed grand total over the aggregated rows, in one pass.
-
-    Scale note: the empty-frame window (``Window.partitionBy()`` with no
-    keys) runs on a single partition -- but only *after* aggregation has
-    collapsed cardinality to the number of groups (a handful of vendors /
-    payment types / segments), so it is O(groups), not O(rows), and is safe
-    at any input scale.  The heavy lifting is the partial+final hash
-    aggregate underneath, which is fully parallel.
-    """
-    w = Window.partitionBy()
-    grouped = df.groupBy(*keys).agg(F.count(F.lit(1)).alias(count_alias))
-    pct = (F.col(count_alias) * 100) / F.sum(count_alias).over(w)
-    if as_decimal:
-        pct = pct.cast(DecimalType(10, 2))
-    return grouped.withColumn(pct_alias, pct)

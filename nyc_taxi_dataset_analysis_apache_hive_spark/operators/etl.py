@@ -12,82 +12,52 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.exprs import clean_predicate, dirty_predicate
 from ..schema import CLEAN_COLUMN_ORDER
+
+#: REF:89 -- trip duration in fractional hours (long difference / int ->
+#: DOUBLE, as in Hive), shared by the keep-filter and the taxi statements.
+HOUR_DIFF = (
+    "(unix_timestamp(tpep_dropoff_datetime)"
+    " - unix_timestamp(tpep_pickup_datetime)) / 3600"
+)
+
+#: REF:268-269 -- the conjunctive keep-filter of the INSERT OVERWRITE.
+#: Written as its own conjunction, not as the negated dirty OR-predicate:
+#: under 3-valued logic a NULL-bearing row fails both, and the reference
+#: keeps only rows that positively satisfy this form (SURVEY §7.4).
+CLEAN_WHERE = f"""
+    fare_amount >= 0 AND tip_amount >= 0
+    AND extra IN (0.0D, 0.5D, 1.0D)
+    AND passenger_count > 0
+    AND tolls_amount >= 0 AND improvement_surcharge >= 0
+    AND mta_tax >= 0 AND total_amount >= 0
+    AND ratecodeid != '99'
+    AND year(tpep_pickup_datetime) = 2017
+    AND month(tpep_pickup_datetime) IN (11, 12)
+    AND {HOUR_DIFF} >= 0 AND {HOUR_DIFF} <= 24
+"""
 
 
 def clean_trips(trips: DataFrame) -> DataFrame:
     """S3 transform: keep-filter + partition-column derivation (REF:261-269).
 
-    Applies the conjunctive clean predicate (REF:268-269) and appends
-    ``yr = year(pickup)``, ``mnth = month(pickup)`` (REF:263), reordering
-    columns per the cleaned DDL (REF:252-254).
+    Applies :data:`CLEAN_WHERE` and appends ``yr = year(pickup)``,
+    ``mnth = month(pickup)`` (REF:263), in the cleaned DDL's column order
+    (REF:252-254).
 
     Scale note: this is a single narrow Project+Filter over the scan -- no
     shuffle.  The date-part derivations are Catalyst expressions, so ORC/
     parquet readers still get column pruning and the filter's sargable
     conjuncts (fare_amount >= 0 etc.) are pushed to the scan.
     """
-    return (
-        trips.filter(clean_predicate())
-        .select(*CLEAN_COLUMN_ORDER)
-        .withColumn("yr", F.year("tpep_pickup_datetime"))
-        .withColumn("mnth", F.month("tpep_pickup_datetime"))
+    return trips.where(CLEAN_WHERE).selectExpr(
+        *CLEAN_COLUMN_ORDER,
+        "year(tpep_pickup_datetime) AS yr",
+        "month(tpep_pickup_datetime) AS mnth",
     )
 
 
-def validate_clean(clean: DataFrame) -> DataFrame:
-    """Post-write validation: dirty rows remaining -- expected empty (REF:272-275).
-
-    The reference re-runs the dirty OR-predicate (minus the hour_diff terms,
-    exactly as REF:274-275 does) against the cleaned table.
-    """
-    hourless_dirty = (
-        (F.col("fare_amount") < 0)
-        | (F.col("tip_amount") < 0)
-        | (~F.col("extra").isin(0.0, 0.5, 1.0))
-        | (F.col("passenger_count") <= 0)
-        | (F.col("tolls_amount") < 0)
-        | (F.col("improvement_surcharge") < 0)
-        | (F.col("mta_tax") < 0)
-        | (F.col("total_amount") < 0)
-        | (F.col("ratecodeid") == "99")
-        | (F.year("tpep_pickup_datetime") != 2017)
-        | (~F.month("tpep_pickup_datetime").isin(11, 12))
-    )
-    return clean.filter(hourless_dirty)
-
-
-def clean_vendor_counts(clean: DataFrame) -> DataFrame:
-    """A1 on the cleaned table: records per vendor (REF:281-283)."""
-    return (
-        clean.groupBy("vendorid").agg(F.count(F.lit(1)).alias("cnt")).orderBy("vendorid")
-    )
-
-
-def removed_row_counts(trips: DataFrame) -> DataFrame:
-    """Convenience: rows the ETL filter drops, per vendor (REF:229 golden).
-
-    Note this equals ``dirty_row_counts`` only on NULL-free data; the ETL
-    keep-filter also drops NULL-bearing rows that the dirty OR-predicate
-    misses (3-valued logic, SURVEY §7.4) -- hence its own operator.
-    """
-    return (
-        trips.filter(~F.coalesce(clean_predicate(), F.lit(False)))
-        .groupBy("vendorid")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy("vendorid")
-    )
-
-
-__all__ = [
-    "clean_trips",
-    "upsert",
-    "validate_clean",
-    "clean_vendor_counts",
-    "removed_row_counts",
-    "dirty_predicate",
-]
+__all__ = ["CLEAN_WHERE", "HOUR_DIFF", "clean_trips", "upsert"]
 
 
 def upsert(base: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:

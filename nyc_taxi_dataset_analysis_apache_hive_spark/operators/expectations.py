@@ -1,7 +1,7 @@
 """Generic row-level data-quality gate (the dead-letter-queue pattern).
 
 The reference audits its taxi table with ~15 standalone DQ SELECTs
-(``operators/quality.py`` reimplements those one-for-one, REF:74-224); a
+(``taxi_sql.TAXI_SQL_RAW`` spells those one-for-one, REF:74-224); a
 production pipeline runs the same idea the other way around: ONE pass
 tags every row with the rules it violates, the clean rows flow on, the
 violating rows land in a quarantine sink with their reasons attached.

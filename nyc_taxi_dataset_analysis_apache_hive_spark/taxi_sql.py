@@ -2,52 +2,28 @@
 
 The reference is one HiveQL script (REF =
 ``Surabhi_Srinath_NYC_Taxi_Assignment_FInal.txt``: 39 SELECTs + 1 INSERT
-OVERWRITE + 2 DDLs).  This module proves SQL-mode parity for the
-reference user's literal workflow: every REF SELECT re-spelled as
-Spark SQL (same subquery shapes, same aliases the DataFrame operators
-emit) over two temp views --
+OVERWRITE + 2 DDLs).  Every REF SELECT is spelled here once, as Spark
+SQL (same subquery shapes and aliases), over two temp views --
 
 * ``trips``       -- the raw table (REF ``ss.ss_nyc``, REF:32-55);
-* ``trips_clean`` -- the cleaned table (REF ``ss_nyc_part_clustered``),
-  defined HERE as a SQL view whose body is the INSERT OVERWRITE's SELECT
-  (REF:261-269), so the ETL transform itself also runs declaratively.
+* ``trips_clean`` -- the cleaned table (REF ``ss_nyc_part_clustered``):
+  ``etl.clean_trips`` over ``trips``, the INSERT OVERWRITE's SELECT
+  (REF:261-269) whose keep-filter is ``etl.CLEAN_WHERE``.
 
 Spark SQL is Hive-heritage: the REF text runs nearly verbatim --
 ``unix_timestamp`` arithmetic, ``percentile_approx``, the
 ``CAST(.. AS DECIMAL(10,2))`` window-share idiom, CASE segmentation all
-parse unchanged.  tests/test_taxi_sql_mode.py asserts each statement's
-result equals the corresponding DataFrame operator
-(quality.ALL_CHECKS / analysis.ALL_ANALYSES / etl.*) on the golden
-fixture, closing the loop: REF text -> Spark SQL -> same rows as the
-API -> same golden values as the reference.
+parse unchanged.  tests/test_taxi_golden.py checks each statement
+directly against an independent DuckDB oracle or a golden value derived
+from the fixture's injection table.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .schema import CLEAN_COLUMN_ORDER
+from .operators.etl import CLEAN_WHERE, HOUR_DIFF, clean_trips
 from .session import apply_runtime_confs
-
-#: REF:89 -- duration in fractional hours, the derived column every
-#: duration check shares.
-_HOUR_DIFF = (
-    "(unix_timestamp(tpep_dropoff_datetime)"
-    " - unix_timestamp(tpep_pickup_datetime)) / 3600"
-)
-
-#: REF:268-269 -- the conjunctive keep-filter of the INSERT OVERWRITE.
-_CLEAN_WHERE = f"""
-    fare_amount >= 0 AND tip_amount >= 0
-    AND (extra = 0.0D OR extra = 0.5D OR extra = 1.0D)
-    AND passenger_count > 0
-    AND tolls_amount >= 0 AND improvement_surcharge >= 0
-    AND mta_tax >= 0 AND total_amount >= 0
-    AND ratecodeid != '99'
-    AND year(tpep_pickup_datetime) = 2017
-    AND month(tpep_pickup_datetime) IN (11, 12)
-    AND {_HOUR_DIFF} >= 0 AND {_HOUR_DIFF} <= 24
-"""
 
 #: REF:240-241 -- the 12-term OR dirty predicate (over the derived
 #: hour_diff projection, exactly the REF:235-243 subquery shape).
@@ -61,19 +37,7 @@ _DIRTY_WHERE = """
     OR NOT (month(tpep_pickup_datetime) IN (11, 12))
 """
 
-#: The cleaned-table view body: the INSERT OVERWRITE's SELECT (REF:261-269)
-#: -- clean filter + yr/mnth partition-column derivation, DDL column order
-#: (REF:252-254).
-CLEAN_VIEW_SQL = f"""
-    SELECT {", ".join(CLEAN_COLUMN_ORDER)},
-           year(tpep_pickup_datetime) AS yr,
-           month(tpep_pickup_datetime) AS mnth
-    FROM trips
-    WHERE {_CLEAN_WHERE}
-"""
-
-#: name -> Spark SQL over the RAW view, keyed by the matching DataFrame
-#: operator in quality.ALL_CHECKS / etl.  REF line cites beside each.
+#: name -> Spark SQL over the RAW view.  REF line cites beside each.
 TAXI_SQL_RAW: dict[str, str] = {
     # REF:58 -- structure peek (LIMIT without ORDER BY: row choice free)
     "peek": "SELECT * FROM trips LIMIT 3",
@@ -102,13 +66,13 @@ TAXI_SQL_RAW: dict[str, str] = {
     "hour_diff_stats": f"""
         SELECT vendorid, min(hour_diff) AS minval, max(hour_diff) AS maxval,
                avg(hour_diff) AS average
-        FROM (SELECT vendorid, {_HOUR_DIFF} AS hour_diff FROM trips) hour_data
+        FROM (SELECT vendorid, {HOUR_DIFF} AS hour_diff FROM trips) hour_data
         GROUP BY vendorid ORDER BY vendorid
     """,
     # REF:93-98
     "invalid_duration_trips": f"""
         SELECT vendorid, hour_diff
-        FROM (SELECT vendorid, {_HOUR_DIFF} AS hour_diff FROM trips) hour_data
+        FROM (SELECT vendorid, {HOUR_DIFF} AS hour_diff FROM trips) hour_data
         WHERE hour_diff < 0 OR hour_diff > 24
     """,
     # REF:102-104
@@ -200,7 +164,7 @@ TAXI_SQL_RAW: dict[str, str] = {
     # REF:235-243 -- the combined dirty count, REF's subquery shape
     "dirty_row_counts": f"""
         SELECT vendorid, count(*) AS cnt
-        FROM (SELECT trips.*, {_HOUR_DIFF} AS hour_diff FROM trips) data_issues
+        FROM (SELECT trips.*, {HOUR_DIFF} AS hour_diff FROM trips) data_issues
         WHERE {_DIRTY_WHERE}
         GROUP BY vendorid ORDER BY vendorid
     """,
@@ -208,7 +172,7 @@ TAXI_SQL_RAW: dict[str, str] = {
     # negated; NULL-bearing rows count as removed -- 3-valued logic)
     "removed_row_counts": f"""
         SELECT vendorid, count(*) AS cnt FROM trips
-        WHERE NOT coalesce(({_CLEAN_WHERE}), false)
+        WHERE NOT coalesce(({CLEAN_WHERE}), false)
         GROUP BY vendorid ORDER BY vendorid
     """,
 }
@@ -256,8 +220,9 @@ TAXI_SQL_CLEAN: dict[str, str] = {
     "avg_tip": """
         SELECT round(avg(tip_amount), 2) AS avg_tip FROM trips_clean
     """,
-    # REF:318 -- percentile_approx, the REF's own function (the engine's
-    # 100-TB default path; the exact variant is the pytest oracle baseline)
+    # REF:318 -- percentile_approx, the REF's own function (one mergeable
+    # sketch pass, no global sort); checked against DuckDB's exact
+    # quantile_cont within the sketch's accuracy
     "tip_percentiles": """
         SELECT percentile_approx(tip_amount, array(0.25D, 0.50D, 0.75D))
                  AS tip_percentiles
@@ -299,20 +264,20 @@ TAXI_SQL_CLEAN: dict[str, str] = {
     # REF:368-371
     "avg_speed_by_month": f"""
         SELECT mnth,
-               round(avg(trip_distance / ({_HOUR_DIFF})), 2)
+               round(avg(trip_distance / ({HOUR_DIFF})), 2)
                  AS avg_speed_per_hour
         FROM trips_clean GROUP BY mnth ORDER BY avg_speed_per_hour
     """,
     # REF:377-379
     "avg_speed_2017": f"""
-        SELECT round(avg(trip_distance / ({_HOUR_DIFF})), 2)
+        SELECT round(avg(trip_distance / ({HOUR_DIFF})), 2)
                  AS avg_speed_in_2017
         FROM trips_clean WHERE year(tpep_pickup_datetime) = 2017
     """,
     # REF:383-386 -- mnth conjunct hits the partition column
     "avg_speed_holidays": f"""
         SELECT CAST(tpep_pickup_datetime AS DATE) AS pickup_date,
-               round(avg(trip_distance / ({_HOUR_DIFF})), 2)
+               round(avg(trip_distance / ({HOUR_DIFF})), 2)
                  AS avg_speed_per_hour
         FROM trips_clean
         WHERE mnth IN (12) AND day(tpep_pickup_datetime) IN (25, 31)
@@ -321,26 +286,23 @@ TAXI_SQL_CLEAN: dict[str, str] = {
 }
 
 #: LIMIT-without-ORDER-BY statements: the REF pattern leaves the row
-#: choice to the engine, so SQL-vs-DataFrame equality is row-COUNT +
-#: schema + predicate membership, not value identity.
+#: choice to the engine, so their check is row COUNT + predicate
+#: membership, not value identity.
 NONDETERMINISTIC_SAMPLES = frozenset(
     {"peek", "negative_mta_sample", "negative_total_sample"}
 )
-
-#: Statements whose correct result on clean data is EMPTY (validation).
-MAY_BE_EMPTY = frozenset({"negative_distances", "validate_clean"})
 
 ALL_TAXI_SQL: dict[str, str] = {**TAXI_SQL_RAW, **TAXI_SQL_CLEAN}
 
 
 def register_taxi_views(spark: SparkSession, trips: DataFrame) -> None:
     """Register the reference's two-table catalog: the raw ``trips`` view
-    and the ``trips_clean`` SQL view (the INSERT OVERWRITE's SELECT --
-    evaluated lazily per query, exactly like querying the materialized
-    table since the transform is deterministic)."""
+    and ``trips_clean``, the lazy ``etl.clean_trips`` plan over it
+    (evaluated per query, which equals querying the materialized table
+    since the transform is deterministic)."""
     apply_runtime_confs(spark)
     trips.createOrReplaceTempView("trips")
-    spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW trips_clean AS {CLEAN_VIEW_SQL}")
+    clean_trips(trips).createOrReplaceTempView("trips_clean")
 
 
 def run_taxi_sql(spark: SparkSession, name: str) -> DataFrame:

@@ -93,11 +93,3 @@ def _close(a: tuple, b: tuple, tol: float) -> bool:
             return False
     return True
 
-
-def canon(df) -> tuple[list[tuple[str, str]], list[tuple]]:
-    """Canonical (schema, sorted repr-rows) form for Spark-vs-Spark equality
-    gates (the SQL-mode parity tests): one definition so the declarative
-    and DataFrame surfaces are always compared the same way."""
-    schema = [(f.name, f.dataType.simpleString()) for f in df.schema]
-    rows = sorted(tuple(repr(v) for v in row) for row in df.collect())
-    return schema, rows

@@ -9,8 +9,9 @@ this fixture -- the synthetic analog of the reference's golden-value comments
 Each dirty row carries exactly ONE defect, so per-check counts equal the
 category counts below.  NULL-bearing rows are dirty to the conjunctive clean
 filter (REF:268-269) but invisible to the OR dirty-predicate (REF:240-241) --
-3-valued logic, SURVEY §7.4 -- which is exactly the distinction
-``etl.removed_row_counts`` vs ``quality.dirty_row_counts`` encodes.
+3-valued logic, SURVEY §7.4 -- which is exactly the distinction the
+``removed_row_counts`` vs ``dirty_row_counts`` statements of ``taxi_sql``
+encode.
 """
 
 from __future__ import annotations

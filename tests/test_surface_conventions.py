@@ -574,3 +574,50 @@ def test_persist_checker_catches_each_spelling():
     assert unscoped_persists(other_name, "m.py") == ["m.py:2 persist"]
     module_level = "X = df.persist()\n"
     assert unscoped_persists(module_level, "m.py") == ["m.py:1 persist"]
+
+
+# ---------------------------------------------------------------------------
+# Rule 8: one spelling of the reference workload.  Each of the reference's
+# SELECTs is a statement in taxi_sql.py, checked directly against a DuckDB
+# oracle or a fixture golden (tests/test_taxi_golden.py).  A package
+# function named after a statement is a second spelling of it that no
+# workload runs and only a chain of equality tests can hold to the first.
+# ---------------------------------------------------------------------------
+
+
+def taxi_statement_twins(source: str, filename: str, names) -> list[str]:
+    """``file:line name`` for every function in ``source`` named after a
+    taxi statement in ``names``."""
+    return [
+        f"{filename}:{node.lineno} {node.name}"
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.name in names
+    ]
+
+
+def test_taxi_statements_are_spelled_once():
+    from nyc_taxi_dataset_analysis_apache_hive_spark import taxi_sql
+
+    bad = []
+    for p in sorted(_PKG.rglob("*.py")):
+        rel = p.relative_to(_PKG).as_posix()
+        if rel != "taxi_sql.py":
+            bad += taxi_statement_twins(p.read_text(), rel, taxi_sql.ALL_TAXI_SQL)
+    assert not bad, f"second spelling of a taxi_sql statement: {bad}"
+
+
+def test_taxi_twin_checker_catches_each_spelling():
+    """Self-test: a module-level function, a method and a nested helper
+    named after a statement trip the checker; other names do not."""
+    names = {"vendor_counts", "tip_percentiles"}
+    assert taxi_statement_twins(
+        "def vendor_counts(trips):\n    pass\n", "operators/quality.py", names
+    ) == ["operators/quality.py:1 vendor_counts"]
+    method = "class A:\n    def tip_percentiles(self, clean, exact=False):\n        pass\n"
+    assert taxi_statement_twins(method, "m.py", names) == ["m.py:2 tip_percentiles"]
+    nested = "def f():\n    def vendor_counts():\n        pass\n"
+    assert taxi_statement_twins(nested, "m.py", names) == ["m.py:2 vendor_counts"]
+    assert taxi_statement_twins(
+        "def vendor_count(t):\n    pass\nvendor_counts = 1\n", "m.py", names
+    ) == []

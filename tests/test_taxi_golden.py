@@ -1,9 +1,13 @@
 """Golden-value + DuckDB-parity tests for the taxi surface (SURVEY.md §5).
 
 Replays the reference's de-facto test corpus (expected-value comments beside
-each query) against the deterministic synthetic fixture: hand-derived counts
-from the fixture's injection table, plus order-insensitive DuckDB parity for
-every DQ check (REF:60-243) and analysis query (REF:286-390).
+each query) against the deterministic synthetic fixture.  Every statement of
+``taxi_sql`` runs as written, over the ``trips`` / ``trips_clean`` views, and
+is checked directly against an independent reference: an order-insensitive
+DuckDB oracle (every DQ check REF:60-243 and analysis query REF:286-390, also
+on a zero-row and a one-row copy of the fixture), a golden value hand-derived
+from the fixture's injection table, or -- for the three LIMIT samples -- row
+count plus membership in the predicate's row set.
 """
 
 from __future__ import annotations
@@ -11,9 +15,11 @@ from __future__ import annotations
 import os
 
 import duckdb
+import pyarrow.parquet as pq
 import pytest
 
-from nyc_taxi_dataset_analysis_apache_hive_spark.operators import analysis, etl, quality
+from nyc_taxi_dataset_analysis_apache_hive_spark import taxi_sql
+from nyc_taxi_dataset_analysis_apache_hive_spark.operators import etl
 from nyc_taxi_dataset_analysis_apache_hive_spark.sources.readers import (
     read_trips_csv,
     read_trips_parquet,
@@ -22,11 +28,10 @@ from nyc_taxi_dataset_analysis_apache_hive_spark.sources.writers import (
     write_clean_partitioned,
 )
 
-from tests.parity import compare
+from tests.parity import compare, rows_from_duckdb, rows_from_spark
 from tests.taxi_fixture import (
     DIRTY,
     N_CLEAN,
-    NULLS,
     dirty_count,
     removed_count,
     total_count,
@@ -50,15 +55,61 @@ CLEAN_WHERE = f"""
     AND {HOUR_DIFF_SQL} >= 0 AND {HOUR_DIFF_SQL} <= 24
 """
 
-
-@pytest.fixture(scope="module")
-def fixture_paths(tmp_path_factory):
-    return write_fixture(str(tmp_path_factory.mktemp("taxi")))
+#: the fixture, plus two degenerate copies of it with the same schema
+INPUTS = {"full": None, "zero_rows": 0, "one_row": 1}
 
 
 @pytest.fixture(scope="module")
-def trips(spark, fixture_paths):
-    return read_trips_parquet(spark, fixture_paths["parquet"])
+def inputs(tmp_path_factory):
+    """label -> trips parquet path; the degenerate copies are written with
+    pyarrow from the fixture's first rows."""
+    full = write_fixture(str(tmp_path_factory.mktemp("taxi")))
+    table = pq.read_table(full["parquet"])
+    paths = {"full": full["parquet"], "csv": full["csv"]}
+    for label, n in INPUTS.items():
+        if n is not None:
+            p = str(tmp_path_factory.mktemp(f"taxi_{label}") / "trips.parquet")
+            pq.write_table(table.slice(0, n), p)
+            paths[label] = p
+    return paths
+
+
+@pytest.fixture(scope="module")
+def cons(inputs):
+    """label -> DuckDB connection with the ``trips`` and ``clean`` views."""
+    out = {}
+    for label in INPUTS:
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW trips AS SELECT * FROM read_parquet('{inputs[label]}')"
+        )
+        con.execute(
+            "CREATE VIEW clean AS SELECT *,"
+            " CAST(year(tpep_pickup_datetime) AS INT) AS yr,"
+            " CAST(month(tpep_pickup_datetime) AS INT) AS mnth"
+            f" FROM trips WHERE {CLEAN_WHERE}"
+        )
+        out[label] = con
+    yield out
+    for con in out.values():
+        con.close()
+
+
+def _register(spark, inputs, label):
+    """Point the ``trips`` / ``trips_clean`` views at one input."""
+    taxi_sql.register_taxi_views(spark, read_trips_parquet(spark, inputs[label]))
+
+
+@pytest.fixture
+def run(spark, inputs):
+    """Run a statement over the full fixture."""
+    _register(spark, inputs, "full")
+    return lambda name: taxi_sql.run_taxi_sql(spark, name)
+
+
+@pytest.fixture(scope="module")
+def trips(spark, inputs):
+    return read_trips_parquet(spark, inputs["full"])
 
 
 @pytest.fixture(scope="module")
@@ -66,59 +117,52 @@ def clean(trips):
     return etl.clean_trips(trips)
 
 
-@pytest.fixture(scope="module")
-def taxi_con(fixture_paths):
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW trips AS SELECT * FROM "
-        f"read_parquet('{fixture_paths['parquet']}')"
-    )
-    con.execute(
-        "CREATE VIEW clean AS SELECT *,"
-        " CAST(year(tpep_pickup_datetime) AS INT) AS yr,"
-        " CAST(month(tpep_pickup_datetime) AS INT) AS mnth"
-        f" FROM trips WHERE {CLEAN_WHERE}"
-    )
-    return con
-
-
 # ---------------------------------------------------------------------------
 # Hand-derived golden counts (the SURVEY §5 corpus shape, fixture values)
 # ---------------------------------------------------------------------------
+
+#: statements checked only by a golden value (no DuckDB oracle below)
+GOLDEN_ONLY = frozenset(
+    {"removed_row_counts", "validate_clean", "clean_vendor_counts", "tip_percentiles"}
+)
 
 
 def _as_map(df, key_col, val_col):
     return {r[key_col]: r[val_col] for r in df.collect()}
 
 
-def test_vendor_counts_golden(trips):
-    got = _as_map(quality.vendor_counts(trips), "vendor", "total")
+def _per_vendor(df):
+    return _as_map(df.groupBy("vendorid").count(), "vendorid", "count")
+
+
+def test_vendor_counts_golden(run):
+    got = _as_map(run("vendor_counts"), "vendor", "total")
     assert got == {v: total_count(v) for v in ("1", "2")}
 
 
-def test_dirty_row_counts_golden(trips):
-    got = _as_map(quality.dirty_row_counts(trips), "vendorid", "cnt")
+def test_dirty_row_counts_golden(run):
+    got = _as_map(run("dirty_row_counts"), "vendorid", "cnt")
     assert got == {v: dirty_count(v) for v in ("1", "2")}
 
 
-def test_removed_vs_dirty_distinguishes_nulls(trips):
+def test_removed_vs_dirty_distinguishes_nulls(run):
     """NULL rows are removed by the clean filter but NOT dirty-matched."""
-    got = _as_map(etl.removed_row_counts(trips), "vendorid", "cnt")
+    got = _as_map(run("removed_row_counts"), "vendorid", "cnt")
     assert got == {v: removed_count(v) for v in ("1", "2")}
     assert any(removed_count(v) != dirty_count(v) for v in ("1", "2"))
 
 
-def test_clean_counts_golden(clean):
-    got = _as_map(etl.clean_vendor_counts(clean), "vendorid", "cnt")
+def test_clean_counts_golden(run):
+    got = _as_map(run("clean_vendor_counts"), "vendorid", "cnt")
     assert got == dict(N_CLEAN)
 
 
-def test_validate_clean_empty(clean):
-    assert etl.validate_clean(clean).count() == 0
+def test_validate_clean_empty(run):
+    assert run("validate_clean").count() == 0
 
 
-def test_negative_distances_empty(trips):
-    assert quality.negative_distances(trips).count() == 0
+def test_negative_distances_empty(run):
+    assert run("negative_distances").count() == 0
 
 
 @pytest.mark.parametrize(
@@ -129,37 +173,99 @@ def test_negative_distances_empty(trips):
         ("nonpositive_passengers", "zero_passenger"),
     ],
 )
-def test_negative_row_checks_golden(trips, check, category):
-    df = getattr(quality, check)(trips)
-    per_vendor = _as_map(df.groupBy("vendorid").count(), "vendorid", "count")
-    assert per_vendor == DIRTY[category]
+def test_negative_row_checks_golden(run, check, category):
+    assert _per_vendor(run(check)) == DIRTY[category]
 
 
-def test_invalid_duration_golden(trips):
-    df = quality.invalid_duration_trips(trips)
-    per_vendor = _as_map(df.groupBy("vendorid").count(), "vendorid", "count")
+def test_invalid_duration_golden(run):
     expected = {
         v: DIRTY["neg_duration"].get(v, 0) + DIRTY["long_duration"].get(v, 0)
         for v in ("1", "2")
     }
-    assert per_vendor == expected
+    assert _per_vendor(run("invalid_duration_trips")) == expected
 
 
-def test_count_col_skips_nulls(trips):
+def test_count_col_skips_nulls(run):
     """A2: COUNT(col) vs COUNT(*) -- null_tolls rows must not be counted."""
     # All negative-toll rows are vendor 2 by construction; the vendor-1
     # NULL-toll row is neither negative nor counted.
-    got = _as_map(
-        quality.negative_toll_counts(trips), "vendorid", "count_negative_tolls"
-    )
+    got = _as_map(run("negative_toll_counts"), "vendorid", "count_negative_tolls")
     assert got == DIRTY["neg_tolls"]
 
 
-def test_samples_respect_limit(trips):
-    assert quality.negative_mta_sample(trips, 5).count() == min(
-        5, sum(DIRTY["neg_mta"].values())
+def test_tip_percentiles_default_is_approx_and_tracks_exact(run, cons):
+    """The statement takes the sketch path (REF:318's percentile_approx:
+    mergeable, one pass, no global sort) and must track DuckDB's exact
+    interpolated percentile within the sketch's accuracy."""
+    [got] = run("tip_percentiles").collect()
+    [exact] = cons["full"].execute(
+        "SELECT [quantile_cont(tip_amount, 0.25), "
+        "quantile_cont(tip_amount, 0.50), "
+        "quantile_cont(tip_amount, 0.75)] FROM clean"
+    ).fetchone()
+    p25, p50, p75 = got["tip_percentiles"]
+    assert 0 <= p25 <= p50 <= p75
+    for a, x in zip(got["tip_percentiles"], exact):
+        assert a == pytest.approx(x, rel=0.02, abs=0.05), (a, x)
+
+
+#: LIMIT sample -> (its LIMIT, the DuckDB query for the rows it may return)
+SAMPLE_SETS = {
+    "peek": (3, "SELECT * FROM trips"),
+    "negative_mta_sample": (5, "SELECT vendorid, mta_tax FROM trips WHERE mta_tax < 0"),
+    "negative_total_sample": (
+        5,
+        "SELECT vendorid, total_amount FROM trips WHERE total_amount < 0",
+    ),
+}
+
+
+def test_samples_respect_limit(spark, inputs, cons):
+    """REF writes LIMIT without ORDER BY, so the engine picks the rows: the
+    deterministic part of the contract is the row count and that every
+    returned row comes FROM the predicate's row set, on every input."""
+    for label in INPUTS:
+        _register(spark, inputs, label)
+        for name, (limit, sql) in SAMPLE_SETS.items():
+            got, got_cols = rows_from_spark(taxi_sql.run_taxi_sql(spark, name))
+            full, full_cols = rows_from_duckdb(cons[label], sql)
+            assert got_cols == full_cols, (label, name)
+            assert len(got) == min(limit, len(full)), (label, name)
+            assert set(got) <= set(full), (label, name)
+
+
+def test_every_statement_has_an_independent_check():
+    """Each of the reference's 39 SELECTs is checked above or below: by a
+    DuckDB oracle, a golden value, or the LIMIT-sample contract.  A new
+    statement without one fails here."""
+    oracled = set(QUALITY_ORACLES) | set(ANALYSIS_ORACLES)
+    assert set(QUALITY_ORACLES) <= set(taxi_sql.TAXI_SQL_RAW)
+    assert set(ANALYSIS_ORACLES) <= set(taxi_sql.TAXI_SQL_CLEAN)
+    assert set(taxi_sql.ALL_TAXI_SQL) == (
+        oracled | GOLDEN_ONLY | taxi_sql.NONDETERMINISTIC_SAMPLES
     )
-    assert quality.peek(trips, 3).count() == 3
+    assert set(SAMPLE_SETS) == taxi_sql.NONDETERMINISTIC_SAMPLES
+    assert len(taxi_sql.ALL_TAXI_SQL) == 39
+
+
+def _cases(oracles):
+    """(input, statement) pairs; the full fixture keeps the bare id."""
+    return [
+        pytest.param(label, name, id=name if label == "full" else f"{label}-{name}")
+        for label in INPUTS
+        for name in sorted(oracles)
+    ]
+
+
+def _check_parity(spark, inputs, cons, label, name, sql):
+    _register(spark, inputs, label)
+    df = taxi_sql.run_taxi_sql(spark, name)
+    problems = compare(df, cons[label], sql, name, float_tol=1e-9)
+    assert not problems, "\n".join(problems)
+    if label == "full" and name != "negative_distances":
+        # every other statement selects rows on the fixture: an empty
+        # match on both engines would prove nothing
+        assert rows_from_duckdb(cons[label], sql)[0], f"{name}: empty on fixture"
 
 
 # ---------------------------------------------------------------------------
@@ -263,11 +369,9 @@ QUALITY_ORACLES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(QUALITY_ORACLES))
-def test_quality_check_parity(name, trips, taxi_con):
-    df = getattr(quality, name)(trips)
-    problems = compare(df, taxi_con, QUALITY_ORACLES[name], name, float_tol=1e-9)
-    assert not problems, "\n".join(problems)
+@pytest.mark.parametrize("label,name", _cases(QUALITY_ORACLES))
+def test_quality_check_parity(spark, inputs, cons, label, name):
+    _check_parity(spark, inputs, cons, label, name, QUALITY_ORACLES[name])
 
 
 # ---------------------------------------------------------------------------
@@ -333,34 +437,9 @@ ANALYSIS_ORACLES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(ANALYSIS_ORACLES))
-def test_analysis_parity(name, clean, taxi_con):
-    df = getattr(analysis, name)(clean)
-    problems = compare(df, taxi_con, ANALYSIS_ORACLES[name], name, float_tol=1e-9)
-    assert not problems, "\n".join(problems)
-
-
-def test_tip_percentiles_exact_parity(clean, taxi_con):
-    df = analysis.tip_percentiles(clean, exact=True)
-    sql = (
-        "SELECT [quantile_cont(tip_amount, 0.25), "
-        "quantile_cont(tip_amount, 0.50), "
-        "quantile_cont(tip_amount, 0.75)] AS tip_percentiles FROM clean"
-    )
-    problems = compare(df, taxi_con, sql, "tip_percentiles", float_tol=1e-9)
-    assert not problems, "\n".join(problems)
-
-
-def test_tip_percentiles_default_is_approx_and_tracks_exact(clean):
-    """The no-arg call takes the sketch path (the 100-TB default: mergeable
-    one-pass percentile_approx, no global sort) and must track the exact
-    interpolated percentile within the sketch's accuracy."""
-    [d] = analysis.tip_percentiles(clean).collect()  # default = approx
-    [e] = analysis.tip_percentiles(clean, exact=True).collect()
-    p25, p50, p75 = d["tip_percentiles"]
-    assert 0 <= p25 <= p50 <= p75
-    for a, x in zip(d["tip_percentiles"], e["tip_percentiles"]):
-        assert a == pytest.approx(x, rel=0.02, abs=0.05), (a, x)
+@pytest.mark.parametrize("label,name", _cases(ANALYSIS_ORACLES))
+def test_analysis_parity(spark, inputs, cons, label, name):
+    _check_parity(spark, inputs, cons, label, name, ANALYSIS_ORACLES[name])
 
 
 # ---------------------------------------------------------------------------
@@ -368,9 +447,9 @@ def test_tip_percentiles_default_is_approx_and_tracks_exact(clean):
 # ---------------------------------------------------------------------------
 
 
-def test_csv_parquet_scan_parity(spark, fixture_paths, trips):
+def test_csv_parquet_scan_parity(spark, inputs, trips):
     """S1: schema'd CSV read reproduces the parquet contents exactly."""
-    csv_df = read_trips_csv(spark, fixture_paths["csv"])
+    csv_df = read_trips_csv(spark, inputs["csv"])
     assert [f.simpleString() for f in csv_df.schema.fields] == [
         f.simpleString() for f in trips.schema.fields
     ]
